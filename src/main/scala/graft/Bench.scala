@@ -3,15 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SessionTuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = SessionTuning.measured()
     spark.sparkContext.setLogLevel("WARN")
     // Untimed warmup: JVM/codegen/first-parquet-footer costs otherwise
     // land entirely on whichever query happens to run first.
@@ -24,46 +16,8 @@ object Bench {
     // spread 163 was the first-use kv-cache fill). The cost is real and
     // amortized-once, so it is reported as ONE "staging" number instead
     // of being charged to whichever query happens to trigger it first.
-    // A failed build MUST complain loudly: its queries would then pay
-    // the build inside the timed runs, silently re-polluting spreads.
     val tStaging = System.nanoTime()
-    for ((what, build) <- Seq[(String, () => Any)](
-        "DedupIndex" -> (() => operators.DedupIndex.ensure(spark, sfDir)),
-        "IvfIndex" -> (() => operators.IvfIndex.ensure(spark, sfDir)),
-        "IvfIndex.indexed" -> (() => operators.IvfIndex.ensureIndexed(spark, sfDir)),
-        "PqIndex" -> (() => operators.PqIndex.ensure(spark, sfDir)),
-        "IvfPqIndex" -> (() => operators.IvfPqIndex.ensure(spark, sfDir)),
-        "PhashIndex" -> (() => operators.PhashIndex.ensure(spark, sfDir)),
-        "KnnIndex" -> (() => operators.KnnIndex.ensure(spark, sfDir)),
-        "KcSeedIndex" -> (() => operators.KcSeedIndex.ensure(spark, sfDir)),
-        "HelixScan.scan" -> (() => operators.HelixScan.ensure(spark, sfDir)),
-        "HelixScan.point" -> (() => operators.HelixScan.ensurePoint(spark, sfDir)),
-        "HelixScan.latest" -> (() => operators.HelixScan.ensureLatest(spark, sfDir)),
-        "HelixScan.outdated" -> (() => operators.HelixScan.ensureOutdated(spark, sfDir)),
-        "HelixScan.stream" -> (() => operators.HelixScan.ensureStream(spark, sfDir)),
-        "TextIndex" -> (() => operators.TextIndex.ensure(spark, sfDir)),
-        "OldClusterIndex" -> (() => operators.OldClusterIndex.ensure(spark, sfDir)),
-        "BqIndex" -> (() => operators.BqIndex.ensure(spark, sfDir)),
-        "BloomIndex" -> (() => operators.BloomIndex.ensure(spark, sfDir)),
-        "SetGroupIndex" -> (() => operators.SetGroupIndex.ensure(spark, sfDir)),
-        "VecGroupIndex" -> (() => operators.VecGroupIndex.ensure(spark, sfDir)),
-        "CdcIndex" -> (() => operators.CdcIndex.ensure(spark, sfDir)),
-        "BasketIndex" -> (() => operators.BasketIndex.ensure(spark, sfDir)),
-        "IvfGen.committed" -> (() => operators.IvfGen.ensureCommitted(spark, sfDir)),
-        "IvfGen.committedDeleted" -> (() => operators.IvfGen.ensureCommittedDeleted(spark, sfDir)),
-        "DedupGen.committed" -> (() => operators.DedupGen.ensureCommitted(spark, sfDir)))) {
-      val t0 = System.nanoTime()
-      // one line per build, success XOR failure — a success line after
-      // a failure would let a 'staged' grep conclude all artifacts built
-      try {
-        build()
-        System.err.println(
-          f"[bench] staged $what in ${(System.nanoTime() - t0) / 1e9}%.2f s")
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] STAGING $what FAILED " +
-          s"(its queries will pay the build inside timed runs): $e")
-      }
-    }
+    operators.Staging.stageAll(spark, sfDir, "bench")
     val stagingSec = (System.nanoTime() - tStaging) / 1e9
     // WARMUP, one full untimed suite pass, also its own reported phase:
     // first-use costs that live OUTSIDE the staged artifacts (the
@@ -179,7 +133,7 @@ object Bench {
     val load = loadAvg
     val line = jsonLine(results, errors.toSeq, sfDir, spreads, load,
       stagingSec, warmupSec, stagingColdSec, loadStart, retried.size,
-      cpus = cpus.toIntOption.getOrElse(-1))
+      cpus = SessionTuning.cpus)
     // the COMPLETE map (every query, every spread) beside the run — the
     // stdout line elides to fit the driver's 2000-char tail window
     try java.nio.file.Files.writeString(
@@ -349,7 +303,7 @@ object Bench {
   }
 
   /** JSON-string sanitizer shared by every tool that embeds exception
-    * text (fullJson here, Scale's failed map): EVERY control char must
+    * text (fullJson here, the sweeps' failed maps): EVERY control char must
     * be neutralized, not just CR/LF/TAB — a backspace or a NUL byte in
     * an exception message would otherwise invalidate the whole file. */
   private[graft] def escJson(v: String): String = v.flatMap {

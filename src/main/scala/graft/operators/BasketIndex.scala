@@ -33,7 +33,4 @@ object BasketIndex {
   /** The staged frame as a DataFrame. */
   def frame(s: SparkSession, dir: String): DataFrame =
     s.read.parquet(ensure(s, dir))
-
-  /** Test hook: see [[Staging.clear]]. */
-  def clear(): Unit = Staging.clear()
 }

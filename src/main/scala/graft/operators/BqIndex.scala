@@ -27,7 +27,4 @@ object BqIndex {
     }
     base.resolve("bq").toString
   }
-
-  /** Test hook: see [[Staging.clear]]. */
-  def clear(): Unit = Staging.clear()
 }

@@ -108,9 +108,6 @@ object DedupIndex {
       base.resolve("fpos").toString, base.resolve("wfp").toString,
       base.resolve("sim").toString)
   }
-
-  /** Test hook: see [[Staging.clear]]. */
-  def clear(): Unit = Staging.clear()
 }
 
 /** Staged DISTINCT-set grouping of the corpus (doc_id, n, set, rn,
@@ -132,9 +129,6 @@ object SetGroupIndex {
     }
     base.resolve("gset").toString
   }
-
-  /** Test hook: see [[Staging.clear]]. */
-  def clear(): Unit = Staging.clear()
 }
 
 /** Staged DISTINCT-vector grouping of the embeddings corpus (vec_id,
@@ -160,9 +154,6 @@ object VecGroupIndex {
     }
     base.resolve("vgrp").toString
   }
-
-  /** Test hook: see [[Staging.clear]]. */
-  def clear(): Unit = Staging.clear()
 }
 
 /** Staged cluster assignment of the HISTORICAL corpus: (doc_id,
@@ -196,9 +187,6 @@ object OldClusterIndex {
     }
     base.resolve("clus").toString
   }
-
-  /** Test hook: see [[Staging.clear]]. */
-  def clear(): Unit = Staging.clear()
 }
 
 /** Staged Bloom filter of the HISTORICAL corpus' boilerplate
@@ -235,7 +223,4 @@ object BloomIndex {
     }
     base.resolve("bf").toString
   }
-
-  /** Test hook: see [[Staging.clear]]. */
-  def clear(): Unit = Staging.clear()
 }

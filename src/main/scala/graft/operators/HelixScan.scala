@@ -403,7 +403,4 @@ object HelixScan {
         col("ts").as("ts_us"),
         col("value").cast("string").cast("long").as("cents"))
   }
-
-  /** Test hook: close cached stores, then see [[Staging.clear]]. */
-  def clear(): Unit = { closeStores(); Staging.clear() }
 }

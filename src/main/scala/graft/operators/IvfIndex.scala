@@ -93,7 +93,4 @@ object IvfIndex {
     }
     (base.resolve("centroids").toString, base.resolve("assigned").toString)
   }
-
-  /** Test hook: see [[Staging.clear]]. */
-  def clear(): Unit = Staging.clear()
 }

@@ -29,9 +29,6 @@ object KnnIndex {
     }
     base.resolve("g").toString
   }
-
-  /** Test hook: see [[Staging.clear]]. */
-  def clear(): Unit = Staging.clear()
 }
 
 /** Staged farthest-first (kcenter) SEEDS of the embeddings corpus: the
@@ -66,7 +63,4 @@ object KcSeedIndex {
   def seeds(s: SparkSession, dir: String): Seq[Seq[Double]] =
     s.read.parquet(ensure(s, dir))
       .orderBy("rnd").collect().map(_.getSeq[Double](2)).toSeq
-
-  /** Test hook: see [[Staging.clear]]. */
-  def clear(): Unit = Staging.clear()
 }

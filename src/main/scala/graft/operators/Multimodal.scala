@@ -1063,9 +1063,6 @@ object CdcIndex {
     }
     base.resolve("spans").toString
   }
-
-  /** Test hook: see [[Staging.clear]]. */
-  def clear(): Unit = Staging.clear()
 }
 
 object PhashIndex {
@@ -1077,7 +1074,4 @@ object PhashIndex {
     }
     base.resolve("ph").toString
   }
-
-  /** Test hook: see [[Staging.clear]]. */
-  def clear(): Unit = Staging.clear()
 }

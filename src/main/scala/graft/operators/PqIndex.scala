@@ -141,7 +141,4 @@ object PqIndex {
       .select(col("vec_id"),
         (monotonically_increasing_id() + 1).cast("int").as("rnk"))
   }
-
-  /** Test hook: see [[Staging.clear]]. */
-  def clear(): Unit = Staging.clear()
 }

@@ -37,7 +37,4 @@ object TextIndex {
     }
     StagedPaths(base.resolve("bgc").toString, base.resolve("dsir").toString)
   }
-
-  /** Test hook: see [[Staging.clear]]. */
-  def clear(): Unit = Staging.clear()
 }

@@ -85,4 +85,32 @@ class StagingSpec extends AnyFunSuite {
         .forEach(p => Files.deleteIfExists(p): Unit)
     }
   }
+
+  test("restage rebuilds one source dir's artifact; the same prefix staged from another dir stays") {
+    val prefix = "spectest-restage-" + System.nanoTime()
+    val builds = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
+    // distinct lengths, so the two sources can never share a fingerprint
+    val Seq(a, b) = Seq("a", "bb").map { content =>
+      val d = Files.createTempDirectory("graft-restage-spec")
+      Files.writeString(d.resolve("t.parquet"), content)
+      d.toString
+    }
+    val art = Staging.Artifact("Spec", prefix, "t", (_, dir) =>
+      Staging.ensure(prefix, Staging.fingerprint(dir, "t.parquet")) { tmp =>
+        builds(dir) += 1
+        Files.writeString(tmp.resolve("artifact"), dir)
+      })
+    val Seq(baseA, baseB) = Seq(a, b).map(art.ensure(null, _).asInstanceOf[java.nio.file.Path])
+    try {
+      assert(baseA != baseB)
+      Staging.restage(art, null, a)
+      assert(builds(a) == 2, "the restaged dir's artifact must be rebuilt")
+      assert(builds(b) == 1, "another source dir's artifact must not be rebuilt")
+      assert(Files.readString(baseA.resolve("artifact")) == a)
+      assert(Files.exists(baseB.resolve("_GRAFT_READY")),
+        "the same prefix staged from another source dir must stay in place")
+      val never = Staging.Artifact("Never", prefix + "-x", "t", (_, _) => ())
+      intercept[IllegalStateException](Staging.restage(never, null, a))
+    } finally Seq(baseA, baseB).foreach(Staging.deleteRecursively)
+  }
 }
