@@ -3,9 +3,10 @@ package graft.core
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StructField, StructType}
 
 /**
  * Spark-native re-expression of the reference store
@@ -222,6 +223,23 @@ object HelixStore {
   final case class BinBlock(key: Array[Byte], shard: Int, bucket: Long,
       t0: Long, t1: Long, deltas: Array[Long], seqs: Array[Long],
       codec: String, payload: Array[Byte])
+
+  // Every layer is written by the store itself, so its schema is a
+  // constant: reads pass it instead of running a schema-inference job.
+  /** Rick (row) layer: the entry columns as put() casts them, the write
+    * seq, the within-batch tiebreak and the two partition columns. */
+  val RickSchema: StructType = StructType(Seq(
+    StructField("key", BinaryType), StructField("ts", LongType),
+    StructField("value", BinaryType), StructField("seq", LongType),
+    StructField("subseq", LongType),
+    StructField("shard", IntegerType), StructField("bucket", LongType)))
+  /** Block layer: one [[BinBlock]] per row. */
+  val BlockSchema: StructType = Encoders.product[BinBlock].schema
+  /** Block manifest: one min/max-key row per (shard, bucket). */
+  val ManifestSchema: StructType = StructType(Seq(
+    StructField("shard", IntegerType), StructField("bucket", LongType),
+    StructField("min_key", BinaryType), StructField("max_key", BinaryType),
+    StructField("n_blocks", LongType)))
 
   def open(spark: SparkSession, path: String,
       opts: StoreOptions = StoreOptions()): HelixStore =
@@ -707,9 +725,8 @@ final class HelixStore private (
     * the observable effect of [[StoreOptions.putWritersPerPartition]]. */
   private[graft] def rickFileCount(shard: Int, bucket: Long): Int = {
     refreshPointer()
-    val dir = dirOf(ptr.rows).resolve(s"shard=$shard").resolve(s"bucket=$bucket")
-    if (!Files.exists(dir)) 0
-    else listDir(dir).count(_.getFileName.toString.endsWith(".parquet"))
+    partitionDirs(dirOf(ptr.rows), Seq((shard.toLong, bucket))).headOption
+      .fold(0)(listDir(_).count(_.getFileName.toString.endsWith(".parquet")))
   }
   private[graft] def hasBlockLayer: Boolean = { refreshPointer(); hasBlocks }
   private[graft] def hasManifestLayer: Boolean = { refreshPointer(); ptr.manifest.isDefined }
@@ -746,7 +763,7 @@ final class HelixStore private (
       val fromRick =
         if (!hasRows) 0L
         else {
-          val r = spark.read.parquet(rowsPath).agg(max("seq")).head()
+          val r = readLayer(RickSchema, dirOf(ptr.rows)).agg(max("seq")).head()
           if (r.isNullAt(0)) 0L else r.getLong(0)
         }
       seqHw = math.max(math.max(fromFiles, fromPtr), fromRick)
@@ -789,7 +806,7 @@ final class HelixStore private (
           // overflow row, rather than a count() pass followed by a
           // collect() pass.
           val lim = math.min(opts.manifestPruneMaxEntries, Int.MaxValue - 2L).toInt
-          val rows = spark.read.parquet(dirOf(name).toString)
+          val rows = readLayer(ManifestSchema, dirOf(name))
             .limit(lim + 1).collect()
           if (rows.length > lim) ManifestTooBig
           else ManifestLoaded(rows.map { r =>
@@ -805,23 +822,18 @@ final class HelixStore private (
     }
   }
 
-  /** Membership predicate for a batch of (shard, bucket) pairs with
-    * BOUNDED expression depth: an OR-fold over the pairs builds a
-    * Catalyst tree as deep as the batch, which plans slowly and can
-    * overflow the stack on a large multiGet. Packing the pair into one
-    * string and testing isInCollection keeps the tree depth constant
-    * (Catalyst converts a large IN to a hash-set InSet), and because
-    * the expression references only the two prune columns, partition
-    * pruning still evaluates it exactly per partition.
-    *
-    * The packed expression is NOT source-translatable, so on a scan
-    * where shard/bucket are DATA columns (the oversized-manifest probe
-    * — the one consumer this path exists for at cluster scale) it
-    * alone would forfeit parquet row-group stats skipping. The coarse
-    * single-column IN terms below ARE pushable; ANDing them in keeps
-    * pushdown on that scan (a false positive there only admits a row
-    * group the exact packed term then drops) while partition-column
-    * consumers are unaffected. */
+  /** Membership predicate for a batch of (shard, bucket) pairs over
+    * the manifest, where shard and bucket are DATA columns (layer reads
+    * scope to partition dirs instead), with BOUNDED expression depth:
+    * an OR-fold over the pairs builds a Catalyst tree as deep as the
+    * batch, which plans slowly and can overflow the stack on a large
+    * multiGet. Packing the pair into one string and testing
+    * isInCollection keeps the tree depth constant (Catalyst converts a
+    * large IN to a hash-set InSet). The packed expression is NOT
+    * source-translatable, so alone it would forfeit parquet row-group
+    * stats skipping; the coarse single-column IN terms below ARE
+    * pushable, and a false positive there only admits a row group the
+    * exact packed term then drops. */
   private def pairPredicate(pairs: Seq[(Long, Long)]): Column =
     if (pairs.isEmpty) lit(false)
     else col("shard").isInCollection(pairs.map(_._1).distinct) &&
@@ -843,7 +855,7 @@ final class HelixStore private (
         probes.exists(p => blockMayContain(p._1, p._2, p._3))
       case ManifestTooBig =>
         val pairs = probes.map(p => (p._1, p._2)).distinct
-        val ranges = spark.read.parquet(dirOf(ptr.manifest.get).toString)
+        val ranges = readLayer(ManifestSchema, dirOf(ptr.manifest.get))
           .filter(pairPredicate(pairs))
           .select("shard", "bucket", "min_key", "max_key")
           .collect() // bounded by the batch's distinct pair count
@@ -872,7 +884,7 @@ final class HelixStore private (
       // any manifest size (the cluster-scale path; the collected map
       // below is the cheap small-store path).
       case ManifestTooBig =>
-        spark.read.parquet(dirOf(ptr.manifest.get).toString)
+        readLayer(ManifestSchema, dirOf(ptr.manifest.get))
           .filter(col("shard") === shard && col("bucket") === bucket)
           .select("min_key", "max_key")
           .take(1).headOption match {
@@ -908,21 +920,44 @@ final class HelixStore private (
   private def hasBlocks: Boolean = ptr.blocks.exists(b => hasDataDirs(dirOf(b)))
   private def hasData: Boolean = hasRows || hasBlocks
 
-  private def emptyEntriesWithMeta: DataFrame = {
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("key", BinaryType), StructField("ts", LongType),
-        StructField("value", BinaryType), StructField("seq", LongType),
-        StructField("subseq", LongType),
-        StructField("shard", IntegerType), StructField("bucket", LongType))))
+  private def emptyEntriesWithMeta: DataFrame =
+    spark.createDataFrame(java.util.Collections.emptyList[Row](), RickSchema)
+
+  /** The store's one parquet read. The layer's schema is passed, never
+    * inferred (no `parquet at` schema job, no footer reads), and
+    * `paths` (files or partition dirs under `layer`; default: the whole
+    * layer) scope the file listing, with `layer` as basePath so shard
+    * and bucket stay partition columns. Several partition dirs go in as
+    * one brace glob, `layer/{shard=s/bucket=b,...}`: Spark checks every
+    * literal path on a new pool of up to 40 threads per read, so a
+    * multiGet naming 40 dirs started 40 threads and waited for the last
+    * one, while a glob resolves on one thread. File lists (compaction's
+    * snapshot) stay literal, so a vanished file fails the read. */
+  private def readLayer(schema: StructType, layer: Path,
+      paths: Option[Seq[Path]] = None, reader: SparkSession = spark): DataFrame = {
+    val targets = paths.getOrElse(Seq(layer))
+    require(targets.nonEmpty, s"empty read of $layer")
+    val globbable = targets.size > 1 && !layer.toString.exists("{}[]*?\\,".contains(_)) &&
+      targets.forall(t => t.getParent != null && t.getParent.getParent == layer)
+    val args =
+      if (globbable) Seq(targets.map(layer.relativize(_)).mkString(s"$layer/{", ",", "}"))
+      else targets.map(_.toString)
+    reader.read.schema(schema).option("basePath", layer.toString).parquet(args: _*)
   }
+
+  /** The existing (shard, bucket) partition dirs of `layer` among
+    * `pairs` — what a partition-scoped read lists. */
+  private def partitionDirs(layer: Path, pairs: Seq[(Long, Long)]): Seq[Path] =
+    pairs.map { case (s, b) => layer.resolve(s"shard=$s").resolve(s"bucket=$b") }
+      .filter(Files.isDirectory(_))
 
   /** Every raw entry (pre-LWW) from both layers: rick rows + decompressed
     * blocks, all carrying (key, ts, value, seq, shard, bucket). The
     * `decompress` flag mirrors the reference ReadOption: when false the
-    * block layer is skipped (reference: src/option.rs:131). */
+    * block layer is skipped (reference: src/option.rs:131); `rick =
+    * false` skips the rick layer. */
   private def rawEntries(decompress: Boolean = true,
+      rick: Boolean = true,
       rowFilesSnapshot: Option[Seq[Path]] = None,
       partitionPrune: Option[Seq[(Long, Long)]] = None,
       reader: SparkSession = spark,
@@ -930,7 +965,10 @@ final class HelixStore private (
       pruneTsLt: Option[Long] = None,
       pruneTsGe: Option[Long] = None,
       pruneBucket: Option[(Long, Long)] = None): DataFrame = {
-    val cols = Seq("key", "ts", "value", "seq", "subseq", "shard", "bucket")
+    require(rowFilesSnapshot.isEmpty || partitionPrune.isEmpty,
+      "a rick file snapshot is already the exact read set")
+    val p = ptr
+    val cols = RickSchema.fieldNames.toSeq
     // Range pruning BEFORE the block-decode flatMap (r20, reference
     // analogue: SSTable block-meta pruning): Catalyst cannot push a
     // predicate through the typed flatMap, so without these a key- or
@@ -968,37 +1006,36 @@ final class HelixStore private (
     // (shard, bucket) pruning must land ON THE PARQUET SCANS, before
     // the block-decompress flatMap: Catalyst cannot push a predicate
     // through a typed flatMap, so filtering afterwards would decode
-    // EVERY block in the store for one point read. The packed-pair IN
-    // predicate prunes partitions exactly (both columns are partition
-    // columns and the expression references only them, so the file
-    // index evaluates it per partition); multiGet passes the batch's
-    // distinct pairs.
-    def prune(df: DataFrame): DataFrame = partitionPrune match {
-      case Some(pairs) => df.filter(pairPredicate(pairs))
-      case None => df
-    }
-    val rows = rowFilesSnapshot match {
+    // EVERY block in the store for one point read. Scoping the read to
+    // the pairs' partition dirs prunes exactly and lists nothing else
+    // (the Jigsaw rule: touch only the partitions the predicate names);
+    // a layer holding none of them is skipped without building a frame.
+    def layer(dir: Path, schema: StructType, present: => Boolean): Option[DataFrame] =
+      partitionPrune match {
+        case None => if (present) Some(readLayer(schema, dir, reader = reader)) else None
+        case Some(pairs) =>
+          val dirs = partitionDirs(dir, pairs)
+          if (dirs.isEmpty) None else Some(readLayer(schema, dir, Some(dirs), reader))
+      }
+    val rowsDir = dirOf(p.rows)
+    val rows = (rowFilesSnapshot match {
       // explicit file snapshot (compaction): read exactly these files so
       // concurrently-appended entries are excluded (they move to the new
       // generation at commit instead)
       case Some(files) =>
-        if (files.isEmpty) None
-        else Some(pruneRows(prune(reader.read.option("basePath", rowsPath)
-          .parquet(files.map(_.toString): _*))).select(cols.map(col): _*))
-      case None =>
-        if (hasRows)
-          Some(pruneRows(prune(reader.read.parquet(rowsPath))).select(cols.map(col): _*))
-        else None
-    }
-    val blocks =
-      if (decompress && hasBlocks) {
+        if (files.isEmpty) None else Some(readLayer(RickSchema, rowsDir, Some(files), reader))
+      case None => if (rick) layer(rowsDir, RickSchema, hasDataDirs(rowsDir)) else None
+    }).map(df => pruneRows(df).select(cols.map(col): _*))
+    val blocks = p.blocks.filter(_ => decompress)
+      .flatMap(b => layer(dirOf(b), BlockSchema, hasDataDirs(dirOf(b))))
+      .map { df =>
         import spark.implicits._
         // local vals only inside the closure: the task must never
         // capture the store instance (SparkSession isn't serializable)
         val codecsByName = opts.codecs
         // block entries are already LWW winners; their in-block position
         // serves as the subseq tiebreak
-        Some(pruneBlocks(prune(reader.read.parquet(dirOf(ptr.blocks.get).toString)))
+        pruneBlocks(df)
           .as[HelixStore.BinBlock]
           .flatMap { b =>
             val codec = codecsByName.getOrElse(b.codec, throw new IllegalArgumentException(
@@ -1010,14 +1047,14 @@ final class HelixStore private (
               t += b.deltas(i)
               (b.key, t, vals(i), b.seqs(i), i.toLong, b.shard, b.bucket)
             }
-          }.toDF(cols: _*))
-      } else None
+          }.toDF(cols: _*)
+      }
     val all = (rows ++ blocks).reduceOption(_.unionByName(_))
       .getOrElse(emptyEntriesWithMeta)
     // retention is LOGICAL: buckets below the committed cutoff are
     // invisible even while their files await vacuum (bucket is a
     // partition column, so this prunes rather than scans)
-    if (ptr.minb == Long.MinValue) all else all.filter(col("bucket") >= ptr.minb)
+    if (p.minb == Long.MinValue) all else all.filter(col("bucket") >= p.minb)
   }
 
   /** Shard routing expression: custom ShardingKeyFn when registered. */
@@ -1028,7 +1065,10 @@ final class HelixStore private (
     }
 
   /** Append a batch of entries (columns: key BINARY, ts LONG, value
-    * BINARY). Routing = shard/bucket partition columns; one shuffle-free
+    * BINARY; each is cast to that type and other columns are dropped,
+    * so every rick file matches [[HelixStore.RickSchema]]; a batch
+    * missing one fails naming it). Routing = shard/bucket partition
+    * columns; one shuffle-free
     * partitioned write. Synchronized with compactions so a batch can't
     * land in a rows generation that is being swapped out.
     *
@@ -1055,8 +1095,13 @@ final class HelixStore private (
     putWithShard(entries, lit(shard).cast("int"))
   }
 
-  private def putWithShard(entries: DataFrame,
+  private def putWithShard(batch: DataFrame,
       shardCol: org.apache.spark.sql.Column): Unit = withMutex {
+    val missing = EntryColumns.filterNot(c => scala.util.Try(batch.col(c)).isSuccess)
+    require(missing.isEmpty, s"put: entries lack column ${missing.mkString(", ")} " +
+      s"(need key BINARY, ts LONG, value BINARY; got ${batch.columns.mkString(", ")})")
+    val entries = batch.select(
+      EntryColumns.map(c => col(c).cast(RickSchema(c).dataType).as(c)): _*)
     // mutex: excludes other PROCESSES' compaction swaps (reentrant under
     // this instance's own background compaction); putGate: excludes only
     // the brief commit window, during which the target rick generation
@@ -1167,12 +1212,14 @@ final class HelixStore private (
     val pairs = live.map(p => (p._3, p._4)).distinct
     val useBlocks = decompress &&
       blockMayContainAny(live.map(p => (p._3, p._4, p._1)))
-    val src = rawEntries(useBlocks, partitionPrune = Some(pairs))
-    // LWW only when the rick layer can contribute a duplicate (post-
-    // compaction block entries are already unique per (key, ts) — the
-    // toDFWithPartitions fast path)
+    // LWW only when the rick layer can contribute a duplicate: with no
+    // rick partition among the batch's pairs the read is block-only, and
+    // block entries are already unique per (key, ts) — the
+    // toDFWithPartitions fast path, decided per batch
+    val rick = partitionDirs(dirOf(ptr.rows), pairs).nonEmpty
+    val src = rawEntries(useBlocks, rick = rick, partitionPrune = Some(pairs))
     val resolved =
-      if (!hasRows) src
+      if (!rick) src
       else {
         val w = Window.partitionBy("shard", "bucket", "key", "ts")
           .orderBy(col("seq").desc, col("subseq").desc, col("value").desc)
@@ -1268,13 +1315,16 @@ final class HelixStore private (
       // LWW-merge the two candidates with the same (seq, subseq, value)
       // ordering the unioned path sorts by.
       val blockHit = blockPointLookup(kcGet(shard, bucket, key), ts)
-      val rickHit = rawEntries(decompress = false,
-          partitionPrune = Some(Seq((shard, bucket))))
-        .filter(col("key") === lit(key) && col("ts") === ts)
-        .orderBy(col("seq").desc, col("subseq").desc, col("value").desc)
-        .select("seq", "subseq", "value")
-        .take(1).headOption
-        .map(r => (r.getLong(0), r.getLong(1), r.getAs[Array[Byte]](2)))
+      // no rick partition for the pair: no probe, not even a plan
+      val pair = Seq((shard, bucket))
+      val rickHit =
+        if (partitionDirs(dirOf(ptr.rows), pair).isEmpty) None
+        else rawEntries(decompress = false, partitionPrune = Some(pair))
+          .filter(col("key") === lit(key) && col("ts") === ts)
+          .orderBy(col("seq").desc, col("subseq").desc, col("value").desc)
+          .select("seq", "subseq", "value")
+          .take(1).headOption
+          .map(r => (r.getLong(0), r.getLong(1), r.getAs[Array[Byte]](2)))
       (blockHit ++ rickHit)
         .reduceOption((a, b) => if (cmpLww(a, b) >= 0) a else b)
         .map(_._3)
@@ -1320,15 +1370,16 @@ final class HelixStore private (
     import spark.implicits._
     // `p` was captured after the caller's blockMayContain check; a
     // concurrent pointer commit to a generation WITHOUT a block layer
-    // can land in that window. No blocks in this snapshot = no block
-    // candidates — same graceful degradation as the uncached path
-    // (rawEntries re-checks hasBlocks), not an exception.
-    val v = p.blocks match {
+    // can land in that window. No blocks, or no partition dir for the
+    // pair, in this snapshot = no block candidates — the same graceful
+    // degradation as rawEntries, not an exception.
+    val v = p.blocks.map(dirOf) match {
       case None => Seq.empty[BinBlock]
-      case Some(g) =>
-        spark.read.parquet(dirOf(g).toString)
-          .filter(col("shard") === shard && col("bucket") === bucket &&
-            col("key") === lit(key))
+      case Some(blocks) =>
+        val dirs = partitionDirs(blocks, Seq((shard, bucket)))
+        if (dirs.isEmpty) Seq.empty[BinBlock]
+        else readLayer(BlockSchema, blocks, Some(dirs))
+          .filter(col("key") === lit(key))
           .as[BinBlock].collect().toSeq
     }
     kcCache.synchronized {
@@ -1578,15 +1629,14 @@ final class HelixStore private (
     refreshPointer()
     val snapshot0 =
       if (hasRows) listParquetFiles(dirOf(ptr.rows)) else Seq.empty[Path]
-    // bucket dirs can exist with zero part files (e.g. post-outdate);
-    // a zero-path read would fail schema inference — nothing to do
+    // no part file to rewrite (bucket dirs can exist with zero part
+    // files, e.g. post-outdate) — nothing to do
     if (snapshot0.nonEmpty) {
       val cur = ptr
       val g = allocGen(cur)
       val newRows = s"r-$g"
       val snapshot = snapshot0
-      val raw0 = spark.read.option("basePath", dirOf(cur.rows).toString)
-        .parquet(snapshot.map(_.toString): _*)
+      val raw0 = readLayer(RickSchema, dirOf(cur.rows), Some(snapshot))
       // physical reclaim of logically-outdated buckets happens here —
       // the LSM discipline: retention marks, compaction drops
       val raw = if (cur.minb == Long.MinValue) raw0
@@ -1678,7 +1728,7 @@ final class HelixStore private (
     val wroteBlocks = listParquetFiles(dirOf(newBlocks)).nonEmpty
     if (wroteBlocks) {
       // manifest derives from the freshly-written (still uncommitted) blocks
-      spark.read.parquet(dirOf(newBlocks).toString)
+      readLayer(BlockSchema, dirOf(newBlocks))
         .groupBy("shard", "bucket")
         .agg(min("key").as("min_key"), max("key").as("max_key"),
           count(lit(1)).as("n_blocks"))

@@ -1021,6 +1021,121 @@ class HelixStoreSpec extends SparkTestBase {
     assert(store.toDF.count() == 10)
     store.close()
   }
+
+  test("put casts to the documented entry types: an INT ts reads back through get, multiGet and scan") {
+    val store = HelixStore.open(spark, tmpDir("hs-intts"),
+      StoreOptions(numShards = 2, bucketSize = 10))
+    val intTs = StructType(Seq(StructField("key", BinaryType),
+      StructField("ts", IntegerType), StructField("value", BinaryType),
+      StructField("extra", StringType)))
+    def intEntries(rows: Seq[(String, Int, String)]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(
+        rows.map { case (k, t, v) => Row(k.getBytes, t, v.getBytes, "x") }, 2),
+      intTs)
+    store.put(intEntries((0 until 6).map(k => (s"i$k", k, s"b$k"))))
+    store.blockCompact()
+    store.put(intEntries((0 until 6).map(k => (s"i$k", 10 + k, s"r$k"))))
+    for (k <- 0 until 6) {
+      assert(store.get(s"i$k".getBytes, k.toLong).map(new String(_)).contains(s"b$k"))
+      assert(store.get(s"i$k".getBytes, 10L + k).map(new String(_)).contains(s"r$k"))
+    }
+    val probes: Seq[(Array[Byte], Long)] =
+      (0 until 6).flatMap(k => Seq((s"i$k".getBytes: Array[Byte], k.toLong),
+        (s"i$k".getBytes: Array[Byte], 10L + k)))
+    assert(store.multiGet(probes).map(_.map(new String(_))) ==
+      (0 until 6).flatMap(k => Seq(Some(s"b$k"), Some(s"r$k"))))
+    val scanned = store.scan((0L, 20L), ("i".getBytes, "j".getBytes)).collect()
+      .map(r => (new String(r.getAs[Array[Byte]]("key")), r.getAs[Long]("ts")))
+    assert(scanned.toSeq == (0 until 6).flatMap(k => Seq((s"i$k", k.toLong), (s"i$k", 10L + k))))
+    val noValue = intEntries(Seq(("i0", 0, "v"))).drop("value")
+    val err = intercept[IllegalArgumentException] { store.put(noValue) }
+    assert(err.getMessage.contains("value"), err.getMessage)
+    store.close()
+  }
+
+  test("store reads infer no schema: an uncached get is one job, multiGet and scan run no parquet-at job") {
+    val store = HelixStore.open(spark, tmpDir("hs-jobs"),
+      StoreOptions(numShards = 2, bucketSize = 10))
+    store.put(entriesDF((0 until 20).map(k => (f"j$k%02d", k.toLong % 10, s"b$k"))))
+    store.blockCompact()
+    // the rick holds other buckets only
+    store.put(entriesDF((0 until 20).map(k => (f"j$k%02d", 10L + k % 10, s"r$k"))))
+    // (first stage name) per job this test's thread runs
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val tag = "graft.spec.jobs"
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty(tag) != null)
+          jobs.add(j.stageInfos.minBy(_.stageId).name): Unit
+    }
+    def run[T](f: => T): (T, Seq[String]) = {
+      val sc = spark.sparkContext
+      org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc, 10000)
+      jobs.clear()
+      sc.setLocalProperty(tag, "1")
+      val out = try f finally sc.setLocalProperty(tag, null)
+      org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc, 10000)
+      (out, jobs.toArray(Array.empty[String]).toSeq)
+    }
+    def schemaJobs(names: Seq[String]) = names.filter(_.startsWith("parquet at"))
+    // load the block manifest once (cached per committed pointer)
+    assert(store.get("j00".getBytes, 0L).map(new String(_)).contains("b0"))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val (v, getJobs) = run(store.get("j05".getBytes, 5L))
+      assert(v.map(new String(_)).contains("b5"))
+      assert(getJobs.size == 1 && schemaJobs(getJobs).isEmpty,
+        s"an uncached get must be one block probe: $getJobs")
+      val probes: Seq[(Array[Byte], Long)] = Seq(
+        ("j01".getBytes, 1L), ("j02".getBytes, 12L), ("j09".getBytes, 9L))
+      val (mg, mgJobs) = run(store.multiGet(probes))
+      assert(mg.map(_.map(new String(_))) == Seq(Some("b1"), Some("r2"), Some("b9")))
+      assert(schemaJobs(mgJobs).isEmpty, s"multiGet jobs: $mgJobs")
+      val (n, scanJobs) = run(store.scan((0L, 20L), ("j".getBytes, "k".getBytes)).count())
+      assert(n == 40)
+      assert(scanJobs.nonEmpty && schemaJobs(scanJobs).isEmpty, s"scan jobs: $scanJobs")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    // a pair whose rick partition exists: the rick entry still LWW-wins
+    // over the block value
+    store.put(entriesDF(Seq(("j03", 3L, "patched"))))
+    assert(store.get("j03".getBytes, 3L).map(new String(_)).contains("patched"))
+    assert(store.multiGet(Seq(("j03".getBytes, 3L))).head.map(new String(_))
+      .contains("patched"))
+    store.close()
+  }
+
+  test("multi-partition reads agree whether readLayer globs the dirs or passes them literally") {
+    // a comma in the store path rules out the brace glob, so the second
+    // store reads the same partition dirs as literal paths
+    def roundTrip(root: String): Seq[Option[String]] = {
+      val store = HelixStore.open(spark, root, StoreOptions(numShards = 4, bucketSize = 10))
+      store.put(entriesDF((0 until 40).map(k => (f"g$k%02d", k.toLong, s"old$k"))))
+      store.blockCompact()
+      store.put(entriesDF((0 until 40 by 3).map(k => (f"g$k%02d", k.toLong, s"new$k"))))
+      val probes = (0 until 40).map(k => (f"g$k%02d".getBytes: Array[Byte], k.toLong))
+      val got = store.multiGet(probes).map(_.map(new String(_)))
+      assert(got == probes.map { case (k, ts) => store.get(k, ts).map(new String(_)) })
+      store.close()
+      got
+    }
+    val expected = (0 until 40).map(k => Some(if (k % 3 == 0) s"new$k" else s"old$k"))
+    assert(roundTrip(tmpDir("hs-glob")) == expected)
+    val literal = java.nio.file.Paths.get(tmpDir("hs-literal")).resolve("a,b")
+    assert(roundTrip(literal.toString) == expected)
+  }
+
+  test("every parquet read in HelixStore goes through readLayer (fixed schema, scoped listing)") {
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src", "main", "scala", "graft", "core", "HelixStore.scala"))
+    val helper = src.indexOf("private def readLayer(")
+    val helperEnd = src.indexOf("\n  }\n", helper)
+    assert(helper >= 0 && helperEnd > helper, "readLayer not found")
+    val reads = """\.read\s*\.""".r.findAllMatchIn(src).map(_.start).toSeq
+    assert(reads.nonEmpty && reads.forall(i => i > helper && i < helperEnd),
+      s"DataFrameReader use outside readLayer at offsets ${reads.filter(i => i < helper || i > helperEnd)}")
+    assert(!src.contains(".read.parquet("), "a bare .read.parquet( infers the schema")
+  }
 }
 
 /** Test codec: XOR every payload byte with 0x5A — visibly scrambles
