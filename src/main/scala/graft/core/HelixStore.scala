@@ -1,9 +1,14 @@
 package graft.core
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StructField, StructType}
@@ -725,8 +730,7 @@ final class HelixStore private (
     * the observable effect of [[StoreOptions.putWritersPerPartition]]. */
   private[graft] def rickFileCount(shard: Int, bucket: Long): Int = {
     refreshPointer()
-    partitionDirs(dirOf(ptr.rows), Seq((shard.toLong, bucket))).headOption
-      .fold(0)(listDir(_).count(_.getFileName.toString.endsWith(".parquet")))
+    dataFiles(partitionDir(dirOf(ptr.rows), shard, bucket)).size
   }
   private[graft] def hasBlockLayer: Boolean = { refreshPointer(); hasBlocks }
   private[graft] def hasManifestLayer: Boolean = { refreshPointer(); ptr.manifest.isDefined }
@@ -909,6 +913,23 @@ final class HelixStore private (
     try st.iterator().asScala.toList finally st.close()
   }
 
+  /** The data files under `dir` (recursively, sorted for deterministic
+    * snapshots), by Spark's hidden-path rule: a file or dir whose name
+    * starts with `_` or `.` is not data. That skips a put's staging
+    * files under `_temporary/` (in flight, or left by a dead driver),
+    * `_SUCCESS` and `.crc` checksums, so the store's own listings see
+    * exactly what a Spark read of the same dir sees. */
+  private def dataFiles(dir: Path): Seq[Path] = {
+    def walk(d: Path): List[Path] = listDir(d)
+      .filterNot { c => val n = c.getFileName.toString; n.startsWith("_") || n.startsWith(".") }
+      .flatMap { c =>
+        if (Files.isDirectory(c)) walk(c)
+        else if (c.getFileName.toString.endsWith(".parquet")) List(c)
+        else Nil
+      }
+    if (Files.isDirectory(dir)) walk(dir).sortBy(_.toString) else Seq.empty
+  }
+
   /** True when at least one (shard, bucket) partition actually exists —
     * outdate can leave empty shard dirs behind, which must not count. */
   private def hasDataDirs(r: Path): Boolean =
@@ -923,7 +944,9 @@ final class HelixStore private (
   private def emptyEntriesWithMeta: DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[Row](), RickSchema)
 
-  /** The store's one parquet read. The layer's schema is passed, never
+  /** The store's one parquet query: every read that builds a DataFrame
+    * (multiGet, scan, toDF, compaction) goes through here; point gets use
+    * [[PartitionReader]] instead. The layer's schema is passed, never
     * inferred (no `parquet at` schema job, no footer reads), and
     * `paths` (files or partition dirs under `layer`; default: the whole
     * layer) scope the file listing, with `layer` as basePath so shard
@@ -945,11 +968,51 @@ final class HelixStore private (
     reader.read.schema(schema).option("basePath", layer.toString).parquet(args: _*)
   }
 
+  /** The store's one in-process parquet read, for point gets: the rows
+    * of one (shard, bucket) partition dir of a layer, read on the calling
+    * thread by Spark's own parquet reader, one `PartitionedFile` per data
+    * file. A get reads a few KB from one known dir; a query would pay the
+    * planner and a job for it. Row groups are not skipped: a compacted
+    * partition holds its keys in arbitrary order, so every row group's
+    * key range spans the pair's range, which the manifest has already
+    * tested. Output rows are the layer's data columns followed by shard
+    * and bucket, looked up through [[ordinal]]. Built once per store and
+    * layer: building the reader broadcasts the Hadoop conf. */
+  private final class PartitionReader(schema: StructType) {
+    private val partCols = StructType(schema.filter(f => f.name == "shard" || f.name == "bucket"))
+    private val dataCols = StructType(schema.filterNot(partCols.contains))
+    val ordinal: Map[String, Int] = (dataCols ++ partCols).map(_.name).zipWithIndex.toMap
+    private val read = new ParquetFileFormat().buildReaderWithPartitionValues(
+      spark, dataCols, partCols, dataCols, Nil,
+      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
+      spark.sessionState.newHadoopConf())
+
+    /** The rows of `layer`'s (shard, bucket) dir that `keep` accepts,
+      * copied (the reader reuses its row objects); every file is read to
+      * the end and closed. A missing dir has no rows. */
+    def rows(layer: Path, shard: Long, bucket: Long)(
+        keep: InternalRow => Boolean): Seq[InternalRow] = {
+      val values = InternalRow(shard.toInt, bucket)
+      dataFiles(partitionDir(layer, shard, bucket)).flatMap { f =>
+        val attrs = Files.readAttributes(f, classOf[BasicFileAttributes])
+        val it = read(PartitionedFile(values,
+          SparkPath.fromPath(new org.apache.hadoop.fs.Path(f.toUri)), 0L, attrs.size(),
+          Array.empty[String], attrs.lastModifiedTime().toMillis, attrs.size()))
+        try it.filter(keep).map(_.copy()).toList
+        finally it match { case c: AutoCloseable => c.close(); case _ => () }
+      }
+    }
+  }
+  private lazy val rickPartitions = new PartitionReader(RickSchema)
+  private lazy val blockPartitions = new PartitionReader(BlockSchema)
+
   /** The existing (shard, bucket) partition dirs of `layer` among
     * `pairs` — what a partition-scoped read lists. */
   private def partitionDirs(layer: Path, pairs: Seq[(Long, Long)]): Seq[Path] =
-    pairs.map { case (s, b) => layer.resolve(s"shard=$s").resolve(s"bucket=$b") }
-      .filter(Files.isDirectory(_))
+    pairs.map { case (s, b) => partitionDir(layer, s, b) }.filter(Files.isDirectory(_))
+
+  private def partitionDir(layer: Path, shard: Long, bucket: Long): Path =
+    layer.resolve(s"shard=$shard").resolve(s"bucket=$bucket")
 
   /** Every raw entry (pre-LWW) from both layers: rick rows + decompressed
     * blocks, all carrying (key, ts, value, seq, shard, bucket). The
@@ -1158,8 +1221,9 @@ final class HelixStore private (
   def createOrReplaceTempView(name: String): Unit =
     toDF.createOrReplaceTempView(name)
 
-  /** Exact-timestamp point get (reference: src/db.rs:54). Prunes to one
-    * shard + one bucket partition before touching any row group. */
+  /** Exact-timestamp point get (reference: src/db.rs:54). Reads only
+    * the key's (shard, bucket) partition of each layer, in process on
+    * the calling thread, with no Spark job (see [[PartitionReader]]). */
   def get(key: Array[Byte], ts: Long, decompress: Boolean = true): Option[Array[Byte]] = {
     refreshPointer()
     if (!hasData) return None
@@ -1189,8 +1253,9 @@ final class HelixStore private (
 
   /** BATCHED exact-timestamp point get — the reference client's get
     * loop amortized Spark-first: all probes route driver-side, the
-    * union of touched (shard, bucket) partitions is pruned in ONE job
-    * (never one job per key, the scale failure of looping [[get]]),
+    * union of touched (shard, bucket) partitions is read in ONE job
+    * (parallel across partitions, where looping [[get]] reads them one
+    * after another on the calling thread),
     * LWW resolves per (key, ts), and a broadcast join against the
     * probe set cuts the scan to exact hits. The batch-level manifest
     * check skips the block layer entirely when no probe's
@@ -1257,8 +1322,8 @@ final class HelixStore private (
   }
 
   // ---- KV point-read cache (reference cache.rs kv_cache analogue) -----
-  // An exact-timestamp get costs a full Spark job; repeated point reads
-  // are the reference's kv_cache sweet spot. Invalidation epoch =
+  // An uncached get lists and reads a partition dir per layer; repeated
+  // point reads are the reference's kv_cache sweet spot. Invalidation epoch =
   // (committed pointer, max minted write-seq): every mutation moves one
   // of the two — put/directPut mint a seq file, compact/blockCompact/
   // outdate commit the pointer — including mutations by OTHER instances,
@@ -1288,7 +1353,7 @@ final class HelixStore private (
     }
     val v = getInShardUncached(shard, key, ts, decompress)
     kvCache.synchronized {
-      // drop the result if the store moved while the job ran; an
+      // drop the result if the store moved while the read ran; an
       // oversized value is served but never cached (reference
       // kv_cache_threshold, cache.rs:104)
       if (kvEpoch == epoch &&
@@ -1298,6 +1363,11 @@ final class HelixStore private (
     v
   }
 
+  /** One code path for every uncached get, whatever kcCacheSize or
+    * `decompress`: the block candidate (through the kc cache) and the
+    * rick candidate, both read in process from the pair's partition
+    * dirs, LWW-merged by [[cmpLww]]. The only Spark jobs left are the
+    * manifest load (once per commit) and its too-big probe. */
   private def getInShardUncached(shard: Long, key: Array[Byte], ts: Long,
       decompress: Boolean): Option[Array[Byte]] = {
     // Spark SQL `div` truncates toward zero; use the same semantics here
@@ -1305,39 +1375,27 @@ final class HelixStore private (
     // different bucket than put() wrote)
     val bucket = ts / opts.bucketSize
     // logical retention: an outdated bucket is invisible in BOTH layers
-    // (rawEntries applies the same cutoff; short-circuit saves the probe)
+    // (rawEntries applies the same cutoff to queries)
     if (bucket < ptr.minb) return None
     // manifest-proven absence in the block layer → read only rick rows
-    val useBlocks = decompress && blockMayContain(shard, bucket, key)
-    if (useBlocks && opts.kcCacheSize > 0) {
-      // kc path: blocks from the compressed-block cache (decoded driver-
-      // side), rick rows from a Spark probe that skips the block layer;
-      // LWW-merge the two candidates with the same (seq, subseq, value)
-      // ordering the unioned path sorts by.
-      val blockHit = blockPointLookup(kcGet(shard, bucket, key), ts)
-      // no rick partition for the pair: no probe, not even a plan
-      val pair = Seq((shard, bucket))
-      val rickHit =
-        if (partitionDirs(dirOf(ptr.rows), pair).isEmpty) None
-        else rawEntries(decompress = false, partitionPrune = Some(pair))
-          .filter(col("key") === lit(key) && col("ts") === ts)
-          .orderBy(col("seq").desc, col("subseq").desc, col("value").desc)
-          .select("seq", "subseq", "value")
-          .take(1).headOption
-          .map(r => (r.getLong(0), r.getLong(1), r.getAs[Array[Byte]](2)))
-      (blockHit ++ rickHit)
-        .reduceOption((a, b) => if (cmpLww(a, b) >= 0) a else b)
-        .map(_._3)
-    } else {
-      // (shard, bucket) prune INSIDE rawEntries so it reaches the parquet
-      // scans below the block-decompress flatMap
-      val rows = rawEntries(useBlocks, partitionPrune = Some(Seq((shard, bucket))))
-        .filter(col("key") === lit(key) && col("ts") === ts)
-        .orderBy(col("seq").desc, col("subseq").desc, col("value").desc)
-        .select("value")
-        .take(1)
-      rows.headOption.map(_.getAs[Array[Byte]](0))
-    }
+    val blockHit =
+      if (decompress && blockMayContain(shard, bucket, key))
+        blockPointLookup(kcGet(shard, bucket, key), ts)
+      else None
+    (blockHit ++ rickCandidates(shard, bucket, key, ts))
+      .reduceOption((a, b) => if (cmpLww(a, b) >= 0) a else b)
+      .map(_._3)
+  }
+
+  /** (seq, subseq, value) of every rick row at exactly (key, ts) in one
+    * (shard, bucket) partition of the committed rick layer. */
+  private def rickCandidates(shard: Long, bucket: Long, key: Array[Byte],
+      ts: Long): Seq[(Long, Long, Array[Byte])] = {
+    val o = rickPartitions.ordinal
+    val (kO, tsO) = (o("key"), o("ts"))
+    rickPartitions.rows(dirOf(ptr.rows), shard, bucket)(r =>
+        r.getLong(tsO) == ts && java.util.Arrays.equals(r.getBinary(kO), key))
+      .map(r => (r.getLong(o("seq")), r.getLong(o("subseq")), r.getBinary(o("value"))))
   }
 
   // ---- KC compressed-block cache (reference cache.rs kc_cache) --------
@@ -1367,7 +1425,6 @@ final class HelixStore private (
       val hit = kcCache.get(k)
       if (hit != null) { kcHits.incrementAndGet(); return hit }
     }
-    import spark.implicits._
     // `p` was captured after the caller's blockMayContain check; a
     // concurrent pointer commit to a generation WITHOUT a block layer
     // can land in that window. No blocks, or no partition dir for the
@@ -1376,11 +1433,14 @@ final class HelixStore private (
     val v = p.blocks.map(dirOf) match {
       case None => Seq.empty[BinBlock]
       case Some(blocks) =>
-        val dirs = partitionDirs(blocks, Seq((shard, bucket)))
-        if (dirs.isEmpty) Seq.empty[BinBlock]
-        else readLayer(BlockSchema, blocks, Some(dirs))
-          .filter(col("key") === lit(key))
-          .as[BinBlock].collect().toSeq
+        val o = blockPartitions.ordinal
+        val kO = o("key")
+        blockPartitions.rows(blocks, shard, bucket)(r =>
+            java.util.Arrays.equals(r.getBinary(kO), key))
+          .map(r => BinBlock(r.getBinary(kO), r.getInt(o("shard")), r.getLong(o("bucket")),
+            r.getLong(o("t0")), r.getLong(o("t1")), r.getArray(o("deltas")).toLongArray(),
+            r.getArray(o("seqs")).toLongArray(), r.getUTF8String(o("codec")).toString,
+            r.getBinary(o("payload"))))
     }
     kcCache.synchronized {
       // drop the result if a compaction committed while the probe ran;
@@ -1428,8 +1488,8 @@ final class HelixStore private (
     Option(best)
   }
 
-  /** The LWW ordering the Spark point-read path sorts by — (seq desc,
-    * subseq desc, value desc) — as a driver-side comparator. */
+  /** The LWW ordering the Spark reads' rank window sorts by — (seq
+    * desc, subseq desc, value desc) — as a driver-side comparator. */
   private def cmpLww(a: (Long, Long, Array[Byte]),
       b: (Long, Long, Array[Byte])): Int = {
     val c1 = java.lang.Long.compare(a._1, b._1)
@@ -1581,16 +1641,6 @@ final class HelixStore private (
       .select(EntryColumns.map(col): _*)
   }
 
-  /** All parquet part files under a generation dir (sorted for
-    * deterministic snapshots). */
-  private def listParquetFiles(dir: Path): Seq[Path] =
-    if (!Files.exists(dir)) Seq.empty
-    else {
-      val st = Files.walk(dir)
-      try st.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList.sortBy(_.toString)
-      finally st.close()
-    }
-
   /** COPY every parquet file under `from` that is NOT in `snapshot` into
     * the same relative location under `to` — the entries put while a
     * compaction was building its new generation. Runs inside the commit
@@ -1606,7 +1656,7 @@ final class HelixStore private (
     * step leaves one complete generation; the duplicate copies are
     * never visible twice because the pointer selects exactly one dir. */
   private def copyLeftovers(from: Path, snapshot: Set[Path], to: Path): Unit =
-    listParquetFiles(from).filterNot(snapshot).foreach { f =>
+    dataFiles(from).filterNot(snapshot).foreach { f =>
       val dest = to.resolve(from.relativize(f))
       Files.createDirectories(dest.getParent)
       Files.copy(f, dest, StandardCopyOption.REPLACE_EXISTING)
@@ -1628,7 +1678,7 @@ final class HelixStore private (
   def compact(): Unit = compactionMutex.synchronized { withMutex {
     refreshPointer()
     val snapshot0 =
-      if (hasRows) listParquetFiles(dirOf(ptr.rows)) else Seq.empty[Path]
+      if (hasRows) dataFiles(dirOf(ptr.rows)) else Seq.empty[Path]
     // no part file to rewrite (bucket dirs can exist with zero part
     // files, e.g. post-outdate) — nothing to do
     if (snapshot0.nonEmpty) {
@@ -1682,7 +1732,7 @@ final class HelixStore private (
     // snapshot the rick file list: entries put while this compaction
     // builds its output land in files outside the snapshot and are moved
     // into the fresh rick generation at commit
-    val rickSnapshot = listParquetFiles(dirOf(cur.rows))
+    val rickSnapshot = dataFiles(dirOf(cur.rows))
     // UDCF dispatch: registry + fn pulled into locals so the task
     // closure captures plain Serializable values, not `this`. A dispatch
     // to an unregistered codec name fails the compaction loudly
@@ -1725,7 +1775,7 @@ final class HelixStore private (
     // a fully-outdated store compacts to ZERO blocks (logical retention
     // filtered everything): commit an empty store rather than reading a
     // fileless dir for the manifest
-    val wroteBlocks = listParquetFiles(dirOf(newBlocks)).nonEmpty
+    val wroteBlocks = dataFiles(dirOf(newBlocks)).nonEmpty
     if (wroteBlocks) {
       // manifest derives from the freshly-written (still uncommitted) blocks
       readLayer(BlockSchema, dirOf(newBlocks))

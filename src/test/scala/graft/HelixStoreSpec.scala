@@ -1053,55 +1053,139 @@ class HelixStoreSpec extends SparkTestBase {
     store.close()
   }
 
-  test("store reads infer no schema: an uncached get is one job, multiGet and scan run no parquet-at job") {
-    val store = HelixStore.open(spark, tmpDir("hs-jobs"),
-      StoreOptions(numShards = 2, bucketSize = 10))
-    store.put(entriesDF((0 until 20).map(k => (f"j$k%02d", k.toLong % 10, s"b$k"))))
-    store.blockCompact()
-    // the rick holds other buckets only
-    store.put(entriesDF((0 until 20).map(k => (f"j$k%02d", 10L + k % 10, s"r$k"))))
-    // (first stage name) per job this test's thread runs
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** `f`'s result and the first-stage name of every Spark job `f`
+    * started on this thread (the listener bus drained before and after). */
+  private def withJobs[T](f: => T): (T, Seq[String]) = {
+    val sc = spark.sparkContext
     val tag = "graft.spec.jobs"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
           j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         if (j.properties != null && j.properties.getProperty(tag) != null)
           jobs.add(j.stageInfos.minBy(_.stageId).name): Unit
     }
-    def run[T](f: => T): (T, Seq[String]) = {
-      val sc = spark.sparkContext
-      org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc, 10000)
-      jobs.clear()
+    org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc, 10000)
+    sc.addSparkListener(listener)
+    try {
       sc.setLocalProperty(tag, "1")
       val out = try f finally sc.setLocalProperty(tag, null)
       org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc, 10000)
       (out, jobs.toArray(Array.empty[String]).toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  /** The rick generation dir the committed pointer names. */
+  private def rickDir(root: String): java.nio.file.Path = {
+    val rows = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(root, "_current"))).split('\n')
+      .collectFirst { case l if l.startsWith("rows=") => l.stripPrefix("rows=").trim }.get
+    java.nio.file.Paths.get(root, rows)
+  }
+
+  test("store reads infer no schema: an uncached get runs no job, multiGet and scan run no parquet-at job") {
+    // the blocks hold bucket 0, the rick bucket 1 only
+    def filled(name: String, opts: StoreOptions): HelixStore = {
+      val store = HelixStore.open(spark, tmpDir(name), opts)
+      store.put(entriesDF((0 until 20).map(k => (f"j$k%02d", k.toLong % 10, s"b$k"))))
+      store.blockCompact()
+      store.put(entriesDF((0 until 20).map(k => (f"j$k%02d", 10L + k % 10, s"r$k"))))
+      store
     }
+    val opts = StoreOptions(numShards = 2, bucketSize = 10)
+    val store = filled("hs-jobs", opts)
+    val noKc = filled("hs-jobs-nokc", opts.copy(kcCacheSize = 0))
     def schemaJobs(names: Seq[String]) = names.filter(_.startsWith("parquet at"))
-    // load the block manifest once (cached per committed pointer)
+    def jobless(what: String, get: => Option[Array[Byte]], expect: Option[String]): Unit = {
+      val (v, jobs) = withJobs(get)
+      assert(v.map(new String(_)) == expect, what)
+      assert(jobs.isEmpty, s"$what must run no Spark job: $jobs")
+    }
+    // load each block manifest once (cached per committed pointer)
     assert(store.get("j00".getBytes, 0L).map(new String(_)).contains("b0"))
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val (v, getJobs) = run(store.get("j05".getBytes, 5L))
-      assert(v.map(new String(_)).contains("b5"))
-      assert(getJobs.size == 1 && schemaJobs(getJobs).isEmpty,
-        s"an uncached get must be one block probe: $getJobs")
-      val probes: Seq[(Array[Byte], Long)] = Seq(
-        ("j01".getBytes, 1L), ("j02".getBytes, 12L), ("j09".getBytes, 9L))
-      val (mg, mgJobs) = run(store.multiGet(probes))
-      assert(mg.map(_.map(new String(_))) == Seq(Some("b1"), Some("r2"), Some("b9")))
-      assert(schemaJobs(mgJobs).isEmpty, s"multiGet jobs: $mgJobs")
-      val (n, scanJobs) = run(store.scan((0L, 20L), ("j".getBytes, "k".getBytes)).count())
-      assert(n == 40)
-      assert(scanJobs.nonEmpty && schemaJobs(scanJobs).isEmpty, s"scan jobs: $scanJobs")
-    } finally spark.sparkContext.removeSparkListener(listener)
-    // a pair whose rick partition exists: the rick entry still LWW-wins
-    // over the block value
-    store.put(entriesDF(Seq(("j03", 3L, "patched"))))
-    assert(store.get("j03".getBytes, 3L).map(new String(_)).contains("patched"))
-    assert(store.multiGet(Seq(("j03".getBytes, 3L))).head.map(new String(_))
-      .contains("patched"))
+    assert(noKc.get("j00".getBytes, 0L).map(new String(_)).contains("b0"))
+    // every get below is a kv-cache miss: each (key, ts) is new
+    jobless("a block-only pair", store.get("j05".getBytes, 5L), Some("b5"))
+    jobless("a rick-only pair", store.get("j02".getBytes, 12L), Some("r2"))
+    jobless("kcCacheSize = 0", noKc.get("j06".getBytes, 6L), Some("b6"))
+    jobless("decompress = false", store.get("j07".getBytes, 7L, decompress = false), None)
+    jobless("decompress = false on the rick", store.get("j04".getBytes, 14L, decompress = false),
+      Some("r4"))
+    val probes: Seq[(Array[Byte], Long)] = Seq(
+      ("j01".getBytes, 1L), ("j02".getBytes, 12L), ("j09".getBytes, 9L))
+    val (mg, mgJobs) = withJobs(store.multiGet(probes))
+    assert(mg.map(_.map(new String(_))) == Seq(Some("b1"), Some("r2"), Some("b9")))
+    assert(schemaJobs(mgJobs).isEmpty, s"multiGet jobs: $mgJobs")
+    val (n, scanJobs) = withJobs(store.scan((0L, 20L), ("j".getBytes, "k".getBytes)).count())
+    assert(n == 40)
+    assert(scanJobs.nonEmpty && schemaJobs(scanJobs).isEmpty, s"scan jobs: $scanJobs")
+    // a pair whose rick partition exists beside its blocks: the rick
+    // entry still LWW-wins over the block value, with no job
+    for (st <- Seq(store, noKc)) {
+      st.put(entriesDF(Seq(("j03", 3L, "patched"))))
+      jobless("a rick entry over a block entry", st.get("j03".getBytes, 3L), Some("patched"))
+      jobless("its block neighbour", st.get("j13".getBytes, 3L), Some("b13"))
+      assert(st.multiGet(Seq(("j03".getBytes, 3L))).head.map(new String(_))
+        .contains("patched"))
+    }
+    jobless("decompress = false beside blocks",
+      store.get("j03".getBytes, 3L, decompress = false), Some("patched"))
+    store.close(); noKc.close()
+  }
+
+  test("a rick file with an INT32 ts reads through get and orders against blocks by LWW") {
+    val root = tmpDir("hs-int32")
+    val store = HelixStore.open(spark, root, StoreOptions(numShards = 1, bucketSize = 10))
+    store.put(entriesDF(Seq(("w", 1L, "blk1"), ("w", 2L, "blk2"))))
+    store.blockCompact()
+    // a rick file as an older writer could leave it: ts stored as INT32
+    val int32 = StructType(Seq(StructField("key", BinaryType),
+      StructField("ts", IntegerType), StructField("value", BinaryType),
+      StructField("seq", LongType), StructField("subseq", LongType)))
+    val staged = tmpDir("hs-int32-file")
+    spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+        Row("w".getBytes, 1, "rick-newer".getBytes, 1000L, 0L),
+        Row("w".getBytes, 2, "rick-older".getBytes, 0L, 0L),
+        Row("w".getBytes, 3, "rick-only".getBytes, 5L, 0L)), 1), int32)
+      .write.mode("overwrite").parquet(staged)
+    val part = java.nio.file.Files.list(java.nio.file.Paths.get(staged))
+    val file = try {
+      import scala.jdk.CollectionConverters._
+      part.iterator().asScala.filter(_.getFileName.toString.endsWith(".parquet")).toList.head
+    } finally part.close()
+    val dest = rickDir(root).resolve("shard=0").resolve("bucket=0")
+    java.nio.file.Files.createDirectories(dest)
+    java.nio.file.Files.copy(file, dest.resolve("part-int32.parquet"))
+    val expected = Seq(Some("rick-newer"), Some("blk2"), Some("rick-only"), None)
+    val tss = Seq(1L, 2L, 3L, 4L)
+    assert(tss.map(t => store.get("w".getBytes, t).map(new String(_))) == expected)
+    assert(store.multiGet(tss.map(t => ("w".getBytes, t))).map(_.map(new String(_))) == expected)
+    store.close()
+  }
+
+  test("uncached gets leave no file descriptor open and run no Spark job") {
+    val fdDir = java.nio.file.Paths.get("/proc/self/fd")
+    assume(java.nio.file.Files.isDirectory(fdDir), "needs a per-process fd directory")
+    def openFds(): Long = {
+      val s = java.nio.file.Files.list(fdDir)
+      try s.count() finally s.close()
+    }
+    val store = HelixStore.open(spark, tmpDir("hs-fds"),
+      StoreOptions(numShards = 2, bucketSize = 10, kvCacheSize = 0, kcCacheSize = 0))
+    store.put(entriesDF((0 until 20).map(k => (f"f$k%02d", k.toLong, s"b$k"))))
+    store.blockCompact()
+    // every pair then has a block file and a rick file to open
+    store.put(entriesDF((0 until 20 by 2).map(k => (f"f$k%02d", k.toLong, s"r$k"))))
+    def expect(k: Int) = if (k % 2 == 0) s"r$k" else s"b$k"
+    assert(store.get("f00".getBytes, 0L).map(new String(_)).contains(expect(0)))
+    val before = openFds()
+    val (_, jobs) = withJobs((0 until 200).foreach { i =>
+      val k = i % 20
+      assert(store.get(f"f$k%02d".getBytes, k.toLong).map(new String(_)).contains(expect(k)))
+    })
+    val grown = openFds() - before
+    assert(grown < 20, s"200 gets left $grown more descriptors open")
+    assert(jobs.isEmpty, s"uncached gets ran ${jobs.size} Spark jobs: ${jobs.distinct}")
     store.close()
   }
 
@@ -1135,6 +1219,19 @@ class HelixStoreSpec extends SparkTestBase {
     assert(reads.nonEmpty && reads.forall(i => i > helper && i < helperEnd),
       s"DataFrameReader use outside readLayer at offsets ${reads.filter(i => i < helper || i > helperEnd)}")
     assert(!src.contains(".read.parquet("), "a bare .read.parquet( infers the schema")
+    // the one in-process read: the only parquet reader HelixStore builds
+    // itself lives in PartitionReader
+    val inProc = src.indexOf("private final class PartitionReader(")
+    val inProcEnd = src.indexOf("\n  }\n", inProc)
+    assert(inProc >= 0 && inProcEnd > inProc, "PartitionReader not found")
+    assert("class PartitionReader".r.findAllMatchIn(src).size == 1)
+    for (token <- Seq("buildReader", "new ParquetFileFormat", "PartitionedFile(")) {
+      val hits = java.util.regex.Pattern.quote(token).r.findAllMatchIn(src).map(_.start).toSeq
+      assert(hits.size == 1 && hits.forall(i => i > inProc && i < inProcEnd),
+        s"$token outside the one in-process reader at offsets $hits")
+    }
+    for (other <- Seq("ParquetFileReader", "HadoopInputFile", "ParquetReadSupport", "OrcFileFormat"))
+      assert(!src.contains(other), s"a second in-process read path: $other")
   }
 }
 

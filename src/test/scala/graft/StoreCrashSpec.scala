@@ -177,4 +177,65 @@ class StoreCrashSpec extends SparkTestBase {
             s"missing=${withConcurrent -- got}")
     }
   }
+
+  test("a put's leftover staging file never breaks compaction or becomes visible") {
+    // the ghost entry's rick file, as a put of another store wrote it
+    val ghostDir = tmpDir("hs-ghost-src")
+    val ghostStore = HelixStore.open(spark, ghostDir, StoreOptions(numShards = 2, bucketSize = BucketSize))
+    ghostStore.put(entriesDF(Seq(("ghost", 5L, "boo"))))
+    ghostStore.close()
+    val ghostRows = Paths.get(ghostDir, "r-0")
+    val ghostFile = {
+      val s = Files.walk(ghostRows)
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList.head
+      } finally s.close()
+    }
+    val ghostPart = ghostRows.relativize(ghostFile.getParent) // shard=s/bucket=0
+    def rowsDir(dir: String): Path = Paths.get(dir,
+      new String(Files.readAllBytes(Paths.get(dir, "_current"))).split('\n')
+        .collectFirst { case l if l.startsWith("rows=") => l.stripPrefix("rows=").trim }.get)
+    // what a put in flight, or one whose driver died, leaves behind: its
+    // staging file under _temporary/, and a hidden file in the partition
+    def plant(dir: String): Unit = {
+      val rows = rowsDir(dir)
+      val staging = rows.resolve("_temporary/0/_temporary/attempt_0_0000_m_000000_0")
+        .resolve(ghostPart).resolve("part-00000-ghost.snappy.parquet")
+      val hidden = rows.resolve(ghostPart).resolve("_ghost.parquet")
+      for (f <- Seq(staging, hidden)) {
+        Files.createDirectories(f.getParent)
+        Files.copy(ghostFile, f)
+      }
+    }
+
+    val dir = tmpDir("hs-ghost")
+    val st = HelixStore.open(spark, dir, StoreOptions(numShards = 2, bucketSize = BucketSize))
+    genBatches(seed = 0xD00D).foreach(b => st.put(entriesDF(b)))
+    val pre = stateOf(st)
+    def assertInvisible(when: String): Unit = {
+      assert(stateOf(st) == pre, s"$when: visible state changed")
+      assert(st.get("ghost".getBytes, 5L).isEmpty, s"$when: get sees the ghost")
+      assert(st.get("ghost".getBytes, 5L, decompress = false).isEmpty)
+      assert(st.multiGet(Seq(("ghost".getBytes, 5L))) == Seq(None),
+        s"$when: multiGet sees the ghost")
+      assert(st.scan((0L, 100L), ("ghost".getBytes, "ghosu".getBytes)).count() == 0,
+        s"$when: scan sees the ghost")
+    }
+    plant(dir)
+    assertInvisible("before compaction")
+    st.blockCompact()
+    assertInvisible("after blockCompact")
+    st.put(entriesDF(Seq(("k0", 1L, "fresh"))))
+    plant(dir)
+    st.compact()
+    val withFresh = pre.filterNot(e => e._1 == "k0" && e._2 == 1L) + (("k0", 1L, "fresh"))
+    assert(stateOf(st) == withFresh, "compact lost or invented entries")
+    assert(st.get("ghost".getBytes, 5L).isEmpty && st.multiGet(Seq(("ghost".getBytes, 5L))) == Seq(None))
+    // a reopened instance (fresh caches) agrees
+    val re = HelixStore.open(spark, dir, StoreOptions(numShards = 2, bucketSize = BucketSize))
+    assert(stateOf(re) == withFresh)
+    assert(re.get("ghost".getBytes, 5L).isEmpty)
+    st.close(); re.close()
+  }
 }

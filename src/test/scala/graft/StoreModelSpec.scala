@@ -49,6 +49,18 @@ class StoreModelSpec extends SparkTestBase {
     lastPer.foreach { case (k, t, v) => model((k, t)) = v }
   }
 
+  /** Reads `probes` through both multiGet and get; each result must be
+    * `expect` of its probe. */
+  private def assertReads(st: HelixStore, probes: Seq[(String, Long)], where: String)(
+      expect: ((String, Long)) => Option[String]): Unit = {
+    val batched = st.multiGet(probes.map { case (k, ts) => (k.getBytes, ts) })
+    probes.zip(batched).foreach { case (p @ (k, ts), got) =>
+      assert(got.map(new String(_)) == expect(p), s"$where: multiGet diverged at $p")
+      assert(st.get(k.getBytes, ts).map(new String(_)) == expect(p),
+        s"$where: get diverged at $p")
+    }
+  }
+
   private def runScenario(seed: Int, bucketSize: Long): Unit = {
     val rnd = new scala.util.Random(seed)
     val dir = tmpDir(s"hs-model-$seed")
@@ -88,18 +100,12 @@ class StoreModelSpec extends SparkTestBase {
       assert(storeState == visible,
         s"seed=$seed step=$step: store diverged from model " +
           s"(${storeState.size} vs ${visible.size} entries)")
-      // batched-read parity through every store state (rick/blocks mix,
+      // point-read parity through every store state (rick/blocks mix,
       // retention cutoffs, reopens): a random probe batch of present
       // and absent (key, ts) pairs must match the model exactly
-      val probes: Seq[(Array[Byte], Long)] =
-        keys.take(3).map(k =>
-          (k.getBytes: Array[Byte], rnd.nextInt(100).toLong)) :+
-          (("zz".getBytes: Array[Byte], 0L))
-      store.multiGet(probes).zip(probes).foreach { case (got, (kb, ts)) =>
-        val exp = model.get((new String(kb), ts))
-          .filter(_ => ts / bucketSize >= minBucket)
-        assert(got.map(new String(_)) == exp,
-          s"seed=$seed step=$step: multiGet diverged at (${new String(kb)}, $ts)")
+      val probes = keys.take(3).map(k => (k, rnd.nextInt(100).toLong)) :+ (("zz", 0L))
+      assertReads(store, probes, s"seed=$seed step=$step") { case (k, ts) =>
+        model.get((k, ts)).filter(_ => ts / bucketSize >= minBucket)
       }
     }
     store.close()
@@ -119,6 +125,9 @@ class StoreModelSpec extends SparkTestBase {
     val b = HelixStore.open(spark, dir, opts)
     val model = mutable.Map[(String, Long), String]()
     val keys = (0 until 5).map(i => s"m$i")
+    // probes draw from their own generator so the op sequence stays
+    // the same for the seed
+    val probeRnd = new scala.util.Random(seed + 1)
 
     for (step <- 0 until 12) {
       val actor = if (rnd.nextBoolean()) a else b
@@ -134,6 +143,14 @@ class StoreModelSpec extends SparkTestBase {
         s"seed=$seed step=$step: instance A diverged from model")
       assert(stateOf(b) == expected,
         s"seed=$seed step=$step: instance B diverged from model")
+      // point reads through both instances: each must see the other's
+      // puts and commits (cache epochs, pointer refresh)
+      val present = model.keys.toIndexedSeq.sorted
+      val probes =
+        (if (present.isEmpty) Nil else Seq.fill(3)(present(probeRnd.nextInt(present.size)))) ++
+        Seq((keys(probeRnd.nextInt(keys.size)), probeRnd.nextInt(60).toLong), ("zz", 0L))
+      for ((st, name) <- Seq(a -> "A", b -> "B"))
+        assertReads(st, probes, s"seed=$seed step=$step instance $name")(model.get)
     }
     a.close(); b.close()
   }
