@@ -257,8 +257,8 @@ object Probe {
     // misses): measures that the (shard, bucket) prune reaches the
     // scan below the block-decompress flatMap
     val blockGets = pointGets(50 until 100)
-    // batched multiget: fresh keys (kv-cache cold) in ONE pruned job —
-    // the per-batch cost the looped gets above pay per key
+    // batched multiget: fresh keys (kv-cache cold), each touched
+    // (shard, bucket) pair read once in process, outside both caches
     val mgProbes = (100 until 150).map(i => (key(i), ((i * 13) % numTs).toLong))
     val (mgHits, tMultiget) = time(store.multiGet(mgProbes))
     require(mgHits.forall(_.isDefined), "multiget must hit every probe")

@@ -1,5 +1,6 @@
 package graft.core
 
+import java.nio.ByteBuffer
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
@@ -147,9 +148,9 @@ final case class StoreOptions(
     kcCacheThresholdBytes: Long = 8L << 20,
     /** Manifest rows above which the driver-side collected prune map is
       * abandoned (the collect would not be driver-bounded); point reads
-      * then prune through a filtered one-row probe of the manifest
-      * parquet instead — proof of absence survives at any manifest
-      * size, at the cost of one tiny scan per get. */
+      * then skip manifest pruning and read each pair's block dir as a
+      * store without a manifest would — still in process, with no
+      * Spark job, and with the same results. */
     manifestPruneMaxEntries: Long = 100000L,
     /** Ingest fan-out: writer tasks (≈ parquet files) each put spreads
       * one (shard, bucket) partition across — the tuning surface the
@@ -559,15 +560,13 @@ final class HelixStore private (
       gen: Long, rows: String, blocks: Option[String], manifest: Option[String],
       seqhw: Long = -1L, minb: Long = Long.MinValue)
 
-  /** Driver-side manifest pruning state: either the collected index, or
-    * a too-big marker (pruning skipped, reads stay correct). */
-  private sealed trait ManifestState
-  private final case class ManifestLoaded(
-      m: Map[(Int, Long), (Array[Byte], Array[Byte])]) extends ManifestState
-  private case object ManifestTooBig extends ManifestState
+  /** The collected block manifest: (shard, bucket) → (min key, max key). */
+  private type Manifest = Map[(Int, Long), (Array[Byte], Array[Byte])]
 
   @volatile private var ptr: Pointer = initPointer()
-  @volatile private var manifestCache: Option[ManifestState] = None
+  /** The last pointer's manifest, tagged with that pointer, so a read
+    * never prunes one generation's blocks by another's manifest. */
+  @volatile private var manifestCache: (Pointer, Option[Manifest]) = null
   /** High-water mark of claimed write seqs; -1 = not yet initialized. */
   @volatile private var seqHw: Long = -1L
 
@@ -678,7 +677,6 @@ final class HelixStore private (
     writePointer(stamped)
     crashHook("commit:pointer-durable")
     ptr = stamped
-    manifestCache = None
     // Prune the ledger below the stamp (recovery takes max over ledger,
     // stamp, and rick scan, so these files are redundant): unpruned, a
     // long-lived store lists one `_seqs` file per put EVER on every
@@ -701,7 +699,7 @@ final class HelixStore private (
     * Cheap — one tiny driver-side file read per public operation. */
   private def refreshPointer(): Unit = synchronized {
     val onDisk = readPointer()
-    if (onDisk != ptr) { ptr = onDisk; manifestCache = None }
+    if (onDisk != ptr) ptr = onDisk
   }
 
   /** First free generation number strictly above the committed one,
@@ -794,120 +792,47 @@ final class HelixStore private (
     throw new IllegalStateException("unreachable")
   }
 
-  /** Per-(shard, bucket) min/max key manifest for the block layer — the
+  /** Per-(shard, bucket) min/max key manifest of `p`'s block layer — the
     * reference's sstable index block (src/file/sstable.rs
     * IndexBlockBuilder): point reads consult it driver-side and skip
-    * block partitions that cannot contain the key. */
-  private def manifest: ManifestState = {
-    manifestCache.getOrElse {
-      val p0 = ptr // snapshot: a compaction can commit while we load
-      val m: ManifestState = p0.manifest match {
-        case None => ManifestLoaded(Map.empty)
-        case Some(name) =>
-          // size guard: an unbounded collect of a huge manifest would
-          // not be driver-bounded; give up the collected map instead of
-          // crashing. ONE scan: collect limit+1 rows and check the
-          // overflow row, rather than a count() pass followed by a
-          // collect() pass.
-          val lim = math.min(opts.manifestPruneMaxEntries, Int.MaxValue - 2L).toInt
-          val rows = readLayer(ManifestSchema, dirOf(name))
-            .limit(lim + 1).collect()
-          if (rows.length > lim) ManifestTooBig
-          else ManifestLoaded(rows.map { r =>
-            (r.getAs[Number]("shard").intValue(), r.getAs[Number]("bucket").longValue()) ->
-              ((r.getAs[Array[Byte]]("min_key"), r.getAs[Array[Byte]]("max_key")))
-          }.toMap)
-      }
-      // only cache if the pointer didn't move during the load: a stale
-      // manifest cached over a newer commit would prove FALSE absence
-      // for keys the new generation holds (missed reads)
-      if (ptr eq p0) manifestCache = Some(m)
-      m
+    * block partitions that cannot contain the key. None when `p` has no
+    * manifest, or one above [[StoreOptions.manifestPruneMaxEntries]]:
+    * point reads then read the pair without pruning. */
+  private def manifest(p: Pointer): Option[Manifest] = {
+    val cached = manifestCache
+    if (cached != null && cached._1 == p) return cached._2
+    val m = p.manifest.flatMap { name =>
+      // size guard: an unbounded collect of a huge manifest would not
+      // be driver-bounded; give up pruning instead of crashing. ONE
+      // scan: collect limit+1 rows and check the overflow row, rather
+      // than a count() pass followed by a collect() pass.
+      val lim = math.min(opts.manifestPruneMaxEntries, Int.MaxValue - 2L).toInt
+      val rows = readLayer(ManifestSchema, dirOf(name)).limit(lim + 1).collect()
+      if (rows.length > lim) None
+      else Some(rows.map { r =>
+        (r.getAs[Number]("shard").intValue(), r.getAs[Number]("bucket").longValue()) ->
+          ((r.getAs[Array[Byte]]("min_key"), r.getAs[Array[Byte]]("max_key")))
+      }.toMap)
     }
+    // cache only the committed pointer's manifest: a read still on an
+    // older snapshot must not evict the one every later read uses
+    if (ptr == p) manifestCache = (p, m)
+    m
   }
 
-  /** Membership predicate for a batch of (shard, bucket) pairs over
-    * the manifest, where shard and bucket are DATA columns (layer reads
-    * scope to partition dirs instead), with BOUNDED expression depth:
-    * an OR-fold over the pairs builds a Catalyst tree as deep as the
-    * batch, which plans slowly and can overflow the stack on a large
-    * multiGet. Packing the pair into one string and testing
-    * isInCollection keeps the tree depth constant (Catalyst converts a
-    * large IN to a hash-set InSet). The packed expression is NOT
-    * source-translatable, so alone it would forfeit parquet row-group
-    * stats skipping; the coarse single-column IN terms below ARE
-    * pushable, and a false positive there only admits a row group the
-    * exact packed term then drops. */
-  private def pairPredicate(pairs: Seq[(Long, Long)]): Column =
-    if (pairs.isEmpty) lit(false)
-    else col("shard").isInCollection(pairs.map(_._1).distinct) &&
-      col("bucket").isInCollection(pairs.map(_._2).distinct) &&
-      concat_ws(":", col("shard").cast("string"), col("bucket").cast("string"))
-        .isInCollection(pairs.map { case (s, b) => s"$s:$b" })
-
-  /** Batch form of [[blockMayContain]]: true when the block layer might
-    * hold ANY of the probes. With a collected manifest this is the
-    * in-memory check per probe; in ManifestTooBig mode it is ONE
-    * filtered scan over the batch's (shard, bucket) pairs — never a
-    * scan per probe, which would reintroduce the job-per-key cost
-    * multiGet exists to amortize. */
-  private def blockMayContainAny(probes: Seq[(Long, Long, Array[Byte])]): Boolean = {
-    if (!hasBlocks) return false
-    if (ptr.manifest.isEmpty) return true // no manifest: can't prune
-    manifest match {
-      case ManifestLoaded(_) =>
-        probes.exists(p => blockMayContain(p._1, p._2, p._3))
-      case ManifestTooBig =>
-        val pairs = probes.map(p => (p._1, p._2)).distinct
-        val ranges = readLayer(ManifestSchema, dirOf(ptr.manifest.get))
-          .filter(pairPredicate(pairs))
-          .select("shard", "bucket", "min_key", "max_key")
-          .collect() // bounded by the batch's distinct pair count
-          .map(r => (r.getAs[Number]("shard").longValue(),
-            r.getAs[Number]("bucket").longValue()) ->
-            ((r.getAs[Array[Byte]]("min_key"), r.getAs[Array[Byte]]("max_key"))))
-          .toMap
-        probes.exists { case (s, b, k) =>
-          ranges.get((s, b)).exists { case (lo, hi) =>
-            java.util.Arrays.compareUnsigned(k, lo) >= 0 &&
-              java.util.Arrays.compareUnsigned(k, hi) <= 0
-          }
-        }
-    }
-  }
-
-  /** True when the block layer might hold `key` in (shard, bucket) —
+  /** True when `p`'s block layer might hold `key` in (shard, bucket) —
     * false only on manifest proof of absence. */
-  private def blockMayContain(shard: Long, bucket: Long, key: Array[Byte]): Boolean = {
-    if (!hasBlocks) return false
-    if (ptr.manifest.isEmpty) return true // no manifest: can't prune
-    manifest match {
-      // Too big to collect: probe the ONE (shard, bucket) manifest row
-      // through a filtered scan instead — parquet stats prune the read,
-      // the result is a single row, and proof of absence survives at
-      // any manifest size (the cluster-scale path; the collected map
-      // below is the cheap small-store path).
-      case ManifestTooBig =>
-        readLayer(ManifestSchema, dirOf(ptr.manifest.get))
-          .filter(col("shard") === shard && col("bucket") === bucket)
-          .select("min_key", "max_key")
-          .take(1).headOption match {
-          case None => false // manifest is complete: partition absent = no data
-          case Some(r) =>
-            java.util.Arrays.compareUnsigned(key, r.getAs[Array[Byte]]("min_key")) >= 0 &&
-              java.util.Arrays.compareUnsigned(key, r.getAs[Array[Byte]]("max_key")) <= 0
-        }
-      case ManifestLoaded(m) => m.get((shard.toInt, bucket)) match {
-        case None => false // manifest is complete: partition absent = no data
-        case Some((lo, hi)) =>
-          java.util.Arrays.compareUnsigned(key, lo) >= 0 &&
-            java.util.Arrays.compareUnsigned(key, hi) <= 0
-      }
-    }
-  }
+  private def blockMayContain(p: Pointer, shard: Long, bucket: Long,
+      key: Array[Byte]): Boolean =
+    p.blocks.isDefined && manifest(p).forall(_.get((shard.toInt, bucket)) match {
+      case None => false // manifest is complete: partition absent = no data
+      case Some((lo, hi)) =>
+        java.util.Arrays.compareUnsigned(key, lo) >= 0 &&
+          java.util.Arrays.compareUnsigned(key, hi) <= 0
+    })
 
   /** List a directory with the stream closed (Files.list leaks an fd
-    * per call otherwise — hasData runs on every read). */
+    * per call otherwise). */
   private def listDir(p: Path): List[Path] = {
     val st = Files.list(p)
     try st.iterator().asScala.toList finally st.close()
@@ -945,30 +870,22 @@ final class HelixStore private (
     spark.createDataFrame(java.util.Collections.emptyList[Row](), RickSchema)
 
   /** The store's one parquet query: every read that builds a DataFrame
-    * (multiGet, scan, toDF, compaction) goes through here; point gets use
-    * [[PartitionReader]] instead. The layer's schema is passed, never
-    * inferred (no `parquet at` schema job, no footer reads), and
-    * `paths` (files or partition dirs under `layer`; default: the whole
-    * layer) scope the file listing, with `layer` as basePath so shard
-    * and bucket stay partition columns. Several partition dirs go in as
-    * one brace glob, `layer/{shard=s/bucket=b,...}`: Spark checks every
-    * literal path on a new pool of up to 40 threads per read, so a
-    * multiGet naming 40 dirs started 40 threads and waited for the last
-    * one, while a glob resolves on one thread. File lists (compaction's
-    * snapshot) stay literal, so a vanished file fails the read. */
+    * (scan, toDF, latest, compaction, the manifest load) goes through
+    * here; point reads (get, directGet, multiGet) use [[PartitionReader]]
+    * instead. The layer's schema is passed, never inferred (no `parquet
+    * at` schema job, no footer reads), and `files` (default: the whole
+    * layer) scope the file listing to compaction's snapshot, with
+    * `layer` as basePath so shard and bucket stay partition columns. The
+    * files go in literally, so a vanished file fails the read. */
   private def readLayer(schema: StructType, layer: Path,
-      paths: Option[Seq[Path]] = None, reader: SparkSession = spark): DataFrame = {
-    val targets = paths.getOrElse(Seq(layer))
+      files: Option[Seq[Path]] = None, reader: SparkSession = spark): DataFrame = {
+    val targets = files.getOrElse(Seq(layer))
     require(targets.nonEmpty, s"empty read of $layer")
-    val globbable = targets.size > 1 && !layer.toString.exists("{}[]*?\\,".contains(_)) &&
-      targets.forall(t => t.getParent != null && t.getParent.getParent == layer)
-    val args =
-      if (globbable) Seq(targets.map(layer.relativize(_)).mkString(s"$layer/{", ",", "}"))
-      else targets.map(_.toString)
-    reader.read.schema(schema).option("basePath", layer.toString).parquet(args: _*)
+    reader.read.schema(schema).option("basePath", layer.toString)
+      .parquet(targets.map(_.toString): _*)
   }
 
-  /** The store's one in-process parquet read, for point gets: the rows
+  /** The store's one in-process parquet read, for point reads: the rows
     * of one (shard, bucket) partition dir of a layer, read on the calling
     * thread by Spark's own parquet reader, one `PartitionedFile` per data
     * file. A get reads a few KB from one known dir; a query would pay the
@@ -1006,30 +923,20 @@ final class HelixStore private (
   private lazy val rickPartitions = new PartitionReader(RickSchema)
   private lazy val blockPartitions = new PartitionReader(BlockSchema)
 
-  /** The existing (shard, bucket) partition dirs of `layer` among
-    * `pairs` — what a partition-scoped read lists. */
-  private def partitionDirs(layer: Path, pairs: Seq[(Long, Long)]): Seq[Path] =
-    pairs.map { case (s, b) => partitionDir(layer, s, b) }.filter(Files.isDirectory(_))
-
   private def partitionDir(layer: Path, shard: Long, bucket: Long): Path =
     layer.resolve(s"shard=$shard").resolve(s"bucket=$bucket")
 
   /** Every raw entry (pre-LWW) from both layers: rick rows + decompressed
     * blocks, all carrying (key, ts, value, seq, shard, bucket). The
     * `decompress` flag mirrors the reference ReadOption: when false the
-    * block layer is skipped (reference: src/option.rs:131); `rick =
-    * false` skips the rick layer. */
+    * block layer is skipped (reference: src/option.rs:131). */
   private def rawEntries(decompress: Boolean = true,
-      rick: Boolean = true,
       rowFilesSnapshot: Option[Seq[Path]] = None,
-      partitionPrune: Option[Seq[(Long, Long)]] = None,
       reader: SparkSession = spark,
       pruneKey: Option[(Array[Byte], Array[Byte])] = None,
       pruneTsLt: Option[Long] = None,
       pruneTsGe: Option[Long] = None,
       pruneBucket: Option[(Long, Long)] = None): DataFrame = {
-    require(rowFilesSnapshot.isEmpty || partitionPrune.isEmpty,
-      "a rick file snapshot is already the exact read set")
     val p = ptr
     val cols = RickSchema.fieldNames.toSeq
     // Range pruning BEFORE the block-decode flatMap (r20, reference
@@ -1066,20 +973,10 @@ final class HelixStore private (
       val g = pruneTsGe.map(lo => col("t1") >= lo).getOrElse(lit(true))
       df.filter(k && t && g && bucketPred)
     }
-    // (shard, bucket) pruning must land ON THE PARQUET SCANS, before
-    // the block-decompress flatMap: Catalyst cannot push a predicate
-    // through a typed flatMap, so filtering afterwards would decode
-    // EVERY block in the store for one point read. Scoping the read to
-    // the pairs' partition dirs prunes exactly and lists nothing else
-    // (the Jigsaw rule: touch only the partitions the predicate names);
-    // a layer holding none of them is skipped without building a frame.
-    def layer(dir: Path, schema: StructType, present: => Boolean): Option[DataFrame] =
-      partitionPrune match {
-        case None => if (present) Some(readLayer(schema, dir, reader = reader)) else None
-        case Some(pairs) =>
-          val dirs = partitionDirs(dir, pairs)
-          if (dirs.isEmpty) None else Some(readLayer(schema, dir, Some(dirs), reader))
-      }
+    // a layer with no (shard, bucket) partition is skipped without
+    // building a frame
+    def layer(dir: Path, schema: StructType): Option[DataFrame] =
+      if (hasDataDirs(dir)) Some(readLayer(schema, dir, reader = reader)) else None
     val rowsDir = dirOf(p.rows)
     val rows = (rowFilesSnapshot match {
       // explicit file snapshot (compaction): read exactly these files so
@@ -1087,10 +984,10 @@ final class HelixStore private (
       // generation at commit instead)
       case Some(files) =>
         if (files.isEmpty) None else Some(readLayer(RickSchema, rowsDir, Some(files), reader))
-      case None => if (rick) layer(rowsDir, RickSchema, hasDataDirs(rowsDir)) else None
+      case None => layer(rowsDir, RickSchema)
     }).map(df => pruneRows(df).select(cols.map(col): _*))
     val blocks = p.blocks.filter(_ => decompress)
-      .flatMap(b => layer(dirOf(b), BlockSchema, hasDataDirs(dirOf(b))))
+      .flatMap(b => layer(dirOf(b), BlockSchema))
       .map { df =>
         import spark.implicits._
         // local vals only inside the closure: the task must never
@@ -1221,12 +1118,12 @@ final class HelixStore private (
   def createOrReplaceTempView(name: String): Unit =
     toDF.createOrReplaceTempView(name)
 
-  /** Exact-timestamp point get (reference: src/db.rs:54). Reads only
-    * the key's (shard, bucket) partition of each layer, in process on
-    * the calling thread, with no Spark job (see [[PartitionReader]]). */
+  /** Exact-timestamp point get (reference: src/db.rs:54): the one-probe
+    * case of [[pairReads]], behind the kv and kc caches. Reads only the
+    * key's (shard, bucket) partition of each layer, in process on the
+    * calling thread, with no Spark job (see [[PartitionReader]]). */
   def get(key: Array[Byte], ts: Long, decompress: Boolean = true): Option[Array[Byte]] = {
     refreshPointer()
-    if (!hasData) return None
     getInShard(routeShards(Seq(key)).head, key, ts, decompress)
   }
 
@@ -1252,61 +1149,27 @@ final class HelixStore private (
     }
 
   /** BATCHED exact-timestamp point get — the reference client's get
-    * loop amortized Spark-first: all probes route driver-side, the
-    * union of touched (shard, bucket) partitions is read in ONE job
-    * (parallel across partitions, where looping [[get]] reads them one
-    * after another on the calling thread),
-    * LWW resolves per (key, ts), and a broadcast join against the
-    * probe set cuts the scan to exact hits. The batch-level manifest
-    * check skips the block layer entirely when no probe's
-    * (shard, bucket, key) can be present (per-key manifest pruning is
-    * [[get]]'s job; a batch only needs the union decision). Results
-    * align with the probe order; misses are None. */
+    * loop over one pointer snapshot: the probes route driver-side and
+    * group by (shard, bucket), and each pair's block and rick dirs are
+    * read once, in process, by the same [[pairReads]] as [[get]], so a
+    * batch runs no Spark job. A probe only ever sees its routed pair,
+    * so its result never depends on which other probes share its batch
+    * (a foreign-shard directPut entry stays invisible, as for get). The
+    * batch bypasses the kv and kc caches. Results align with the probe
+    * order; misses are None. */
   def multiGet(probes: Seq[(Array[Byte], Long)],
       decompress: Boolean = true): Seq[Option[Array[Byte]]] = {
     refreshPointer()
     if (probes.isEmpty) return Seq.empty
-    if (!hasData) return probes.map(_ => None)
-    val shards = routeShards(probes.map(_._1))
-    val routed = probes.zip(shards).map { case ((k, ts), sh) =>
-      (k, ts, sh, ts / opts.bucketSize)
+    val p = ptr
+    val ps = probes.toIndexedSeq
+    val pairOf = routeShards(ps.map(_._1)).zip(ps)
+      .map { case (shard, (_, ts)) => (shard, ts / opts.bucketSize) }
+    val hits = ps.indices.groupBy(pairOf).flatMap { case ((shard, bucket), at) =>
+      at.zip(pairReads(p, shard, bucket, at.map(ps), decompress)(
+        blockRows(p, shard, bucket, _)))
     }
-    // logical retention, as in getInShardUncached
-    val live = routed.filter(_._4 >= ptr.minb)
-    if (live.isEmpty) return probes.map(_ => None)
-    val pairs = live.map(p => (p._3, p._4)).distinct
-    val useBlocks = decompress &&
-      blockMayContainAny(live.map(p => (p._3, p._4, p._1)))
-    // LWW only when the rick layer can contribute a duplicate: with no
-    // rick partition among the batch's pairs the read is block-only, and
-    // block entries are already unique per (key, ts) — the
-    // toDFWithPartitions fast path, decided per batch
-    val rick = partitionDirs(dirOf(ptr.rows), pairs).nonEmpty
-    val src = rawEntries(useBlocks, rick = rick, partitionPrune = Some(pairs))
-    val resolved =
-      if (!rick) src
-      else {
-        val w = Window.partitionBy("shard", "bucket", "key", "ts")
-          .orderBy(col("seq").desc, col("subseq").desc, col("value").desc)
-        src.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      }
-    import spark.implicits._
-    // the probe join carries the ROUTED shard: without it, an entry
-    // written via directPut into a shard another probe pulled into the
-    // pruned scan could satisfy a key routed elsewhere — get() would
-    // miss it (the documented directPut/directGet contract), so the
-    // batch must too, and a probe's result must never depend on which
-    // other probes share its batch
-    val probeDf = live.map(p => (p._1, p._2, p._3))
-      .toDF("pk", "pts", "pshard")
-    val hits = resolved
-      .join(broadcast(probeDf),
-        col("key") === col("pk") && col("ts") === col("pts") &&
-          col("shard") === col("pshard"))
-      .select("key", "ts", "value").collect()
-      .map(r => (r.getAs[Array[Byte]](0).toSeq, r.getLong(1)) ->
-        r.getAs[Array[Byte]](2)).toMap
-    probes.map { case (k, ts) => hits.get((k.toSeq, ts)) }
+    ps.indices.map(hits)
   }
 
   /** Shard-addressed point get bypassing the sharding function — the
@@ -1317,8 +1180,69 @@ final class HelixStore private (
     require(shard >= 0 && shard < opts.numShards,
       s"shard $shard outside [0, ${opts.numShards})")
     refreshPointer()
-    if (!hasData) return None
     getInShard(shard.toLong, key, ts, decompress)
+  }
+
+  /** The point reads of ONE (shard, bucket) pair in pointer snapshot
+    * `p`, the one path behind get, directGet and multiGet: each probe's
+    * block candidate from the blocks `blocksOf` returns for the keys the
+    * manifest cannot rule out, then the rick rows at exactly the probes'
+    * (key, ts) from one read of the pair's rick dir, LWW-merged by
+    * [[cmpLww]]. Both layers and the retention cutoff come from `p`, so
+    * a compaction committing mid-read cannot pair one generation's
+    * blocks with the next one's emptied rick (superseded dirs stay
+    * readable in the graveyard until vacuum). A missing partition dir
+    * reads as no rows. */
+  private def pairReads(p: Pointer, shard: Long, bucket: Long,
+      probes: Seq[(Array[Byte], Long)], decompress: Boolean)(
+      blocksOf: Seq[Array[Byte]] => Map[ByteBuffer, Seq[BinBlock]]): Seq[Option[Array[Byte]]] = {
+    // logical retention: an outdated bucket is invisible in BOTH layers
+    // (rawEntries applies the same cutoff to queries)
+    if (bucket < p.minb) return probes.map(_ => None)
+    val keys = if (!decompress) Nil
+      else probes.map(_._1).distinctBy(ByteBuffer.wrap).filter(blockMayContain(p, shard, bucket, _))
+    val blocks = if (keys.isEmpty) Map.empty[ByteBuffer, Seq[BinBlock]] else blocksOf(keys)
+    val at = probes.map { case (k, ts) => (ByteBuffer.wrap(k), ts) }
+    val blockHits = at.map { case (k, ts) => blocks.get(k).flatMap(blockPointLookup(_, ts)) }
+    val rick = rickRows(p, shard, bucket, at.toSet)
+    at.zip(blockHits).map { case (kts, blockHit) =>
+      (blockHit ++ rick.getOrElse(kts, Nil))
+        .reduceOption((a, b) => if (cmpLww(a, b) >= 0) a else b)
+        .map(_._3)
+    }
+  }
+
+  /** The blocks of `keys` in `p`'s (shard, bucket) block partition, by
+    * key, from one read of the dir. */
+  private def blockRows(p: Pointer, shard: Long, bucket: Long,
+      keys: Seq[Array[Byte]]): Map[ByteBuffer, Seq[BinBlock]] = p.blocks match {
+    case None => Map.empty
+    case Some(b) =>
+      val want = keys.map(ByteBuffer.wrap).toSet
+      val o = blockPartitions.ordinal
+      val kO = o("key")
+      blockPartitions.rows(dirOf(b), shard, bucket)(r => want(ByteBuffer.wrap(r.getBinary(kO))))
+        .map(r => BinBlock(r.getBinary(kO), r.getInt(o("shard")), r.getLong(o("bucket")),
+          r.getLong(o("t0")), r.getLong(o("t1")), r.getArray(o("deltas")).toLongArray(),
+          r.getArray(o("seqs")).toLongArray(), r.getUTF8String(o("codec")).toString,
+          r.getBinary(o("payload"))))
+        .groupBy(blk => ByteBuffer.wrap(blk.key))
+  }
+
+  /** (seq, subseq, value) of every rick row at one of the `want`ed
+    * (key, ts) in `p`'s (shard, bucket) rick partition, by (key, ts),
+    * from one read of the dir. */
+  private def rickRows(p: Pointer, shard: Long, bucket: Long,
+      want: Set[(ByteBuffer, Long)]): Map[(ByteBuffer, Long), Seq[(Long, Long, Array[Byte])]] = {
+    val o = rickPartitions.ordinal
+    val (kO, tsO) = (o("key"), o("ts"))
+    val wantTs = want.map(_._2)
+    rickPartitions.rows(dirOf(p.rows), shard, bucket) { r =>
+        val ts = r.getLong(tsO)
+        wantTs(ts) && want((ByteBuffer.wrap(r.getBinary(kO)), ts))
+      }
+      .groupMap(r => (ByteBuffer.wrap(r.getBinary(kO)), r.getLong(tsO)))(r =>
+        (r.getLong(o("seq")), r.getLong(o("subseq")), r.getBinary(o("value"))))
   }
 
   // ---- KV point-read cache (reference cache.rs kv_cache analogue) -----
@@ -1341,17 +1265,20 @@ final class HelixStore private (
     }
   private var kvEpoch: (Pointer, Long) = null
 
+  /** A get over ONE pointer snapshot, taken here: the kv epoch, both
+    * layers, the cutoff and the kc cache all read `p`. */
   private def getInShard(shard: Long, key: Array[Byte], ts: Long,
       decompress: Boolean): Option[Array[Byte]] = {
-    if (opts.kvCacheSize <= 0) return getInShardUncached(shard, key, ts, decompress)
-    val epoch = (ptr, scanSeqFiles())
+    val p = ptr
+    if (opts.kvCacheSize <= 0) return getInShardUncached(p, shard, key, ts, decompress)
+    val epoch = (p, scanSeqFiles())
     val k = KvKey(shard, key.toSeq, ts, decompress)
     kvCache.synchronized {
       if (kvEpoch != epoch) { kvCache.clear(); kvEpoch = epoch }
       val hit = kvCache.get(k)
       if (hit != null) return hit
     }
-    val v = getInShardUncached(shard, key, ts, decompress)
+    val v = getInShardUncached(p, shard, key, ts, decompress)
     kvCache.synchronized {
       // drop the result if the store moved while the read ran; an
       // oversized value is served but never cached (reference
@@ -1363,39 +1290,17 @@ final class HelixStore private (
     v
   }
 
-  /** One code path for every uncached get, whatever kcCacheSize or
-    * `decompress`: the block candidate (through the kc cache) and the
-    * rick candidate, both read in process from the pair's partition
-    * dirs, LWW-merged by [[cmpLww]]. The only Spark jobs left are the
-    * manifest load (once per commit) and its too-big probe. */
-  private def getInShardUncached(shard: Long, key: Array[Byte], ts: Long,
+  /** An uncached get: [[pairReads]] with one probe, its block read going
+    * through the kc cache. The only Spark job left is the manifest load
+    * (once per commit). */
+  private def getInShardUncached(p: Pointer, shard: Long, key: Array[Byte], ts: Long,
       decompress: Boolean): Option[Array[Byte]] = {
     // Spark SQL `div` truncates toward zero; use the same semantics here
     // (floorDiv would floor, routing negative logical timestamps to a
     // different bucket than put() wrote)
     val bucket = ts / opts.bucketSize
-    // logical retention: an outdated bucket is invisible in BOTH layers
-    // (rawEntries applies the same cutoff to queries)
-    if (bucket < ptr.minb) return None
-    // manifest-proven absence in the block layer → read only rick rows
-    val blockHit =
-      if (decompress && blockMayContain(shard, bucket, key))
-        blockPointLookup(kcGet(shard, bucket, key), ts)
-      else None
-    (blockHit ++ rickCandidates(shard, bucket, key, ts))
-      .reduceOption((a, b) => if (cmpLww(a, b) >= 0) a else b)
-      .map(_._3)
-  }
-
-  /** (seq, subseq, value) of every rick row at exactly (key, ts) in one
-    * (shard, bucket) partition of the committed rick layer. */
-  private def rickCandidates(shard: Long, bucket: Long, key: Array[Byte],
-      ts: Long): Seq[(Long, Long, Array[Byte])] = {
-    val o = rickPartitions.ordinal
-    val (kO, tsO) = (o("key"), o("ts"))
-    rickPartitions.rows(dirOf(ptr.rows), shard, bucket)(r =>
-        r.getLong(tsO) == ts && java.util.Arrays.equals(r.getBinary(kO), key))
-      .map(r => (r.getLong(o("seq")), r.getLong(o("subseq")), r.getBinary(o("value"))))
+    pairReads(p, shard, bucket, Seq((key, ts)), decompress)(
+      _.map(k => ByteBuffer.wrap(k) -> kcGet(p, shard, bucket, k)).toMap).head
   }
 
   // ---- KC compressed-block cache (reference cache.rs kc_cache) --------
@@ -1417,33 +1322,18 @@ final class HelixStore private (
   /** kc-cache hits (test observability). */
   val kcHits = new java.util.concurrent.atomic.AtomicLong(0)
 
-  private def kcGet(shard: Long, bucket: Long, key: Array[Byte]): Seq[BinBlock] = {
-    val p = ptr
+  /** `key`'s blocks in `p`'s (shard, bucket) block partition, through
+    * the kc cache, which holds the entries of one pointer at a time. */
+  private def kcGet(p: Pointer, shard: Long, bucket: Long, key: Array[Byte]): Seq[BinBlock] = {
     val k = KcKey(shard, bucket, key.toSeq)
     kcCache.synchronized {
       if (kcPtr != p) { kcCache.clear(); kcPtr = p }
       val hit = kcCache.get(k)
       if (hit != null) { kcHits.incrementAndGet(); return hit }
     }
-    // `p` was captured after the caller's blockMayContain check; a
-    // concurrent pointer commit to a generation WITHOUT a block layer
-    // can land in that window. No blocks, or no partition dir for the
-    // pair, in this snapshot = no block candidates — the same graceful
-    // degradation as rawEntries, not an exception.
-    val v = p.blocks.map(dirOf) match {
-      case None => Seq.empty[BinBlock]
-      case Some(blocks) =>
-        val o = blockPartitions.ordinal
-        val kO = o("key")
-        blockPartitions.rows(blocks, shard, bucket)(r =>
-            java.util.Arrays.equals(r.getBinary(kO), key))
-          .map(r => BinBlock(r.getBinary(kO), r.getInt(o("shard")), r.getLong(o("bucket")),
-            r.getLong(o("t0")), r.getLong(o("t1")), r.getArray(o("deltas")).toLongArray(),
-            r.getArray(o("seqs")).toLongArray(), r.getUTF8String(o("codec")).toString,
-            r.getBinary(o("payload"))))
-    }
+    val v = blockRows(p, shard, bucket, Seq(key)).getOrElse(ByteBuffer.wrap(key), Nil)
     kcCache.synchronized {
-      // drop the result if a compaction committed while the probe ran;
+      // drop the result if a compaction committed while the read ran;
       // an oversized entry is served but never cached (reference
       // kc_cache_threshold, cache.rs:25)
       if (kcPtr == p && kcEntryBytes(v) < opts.kcCacheThresholdBytes)

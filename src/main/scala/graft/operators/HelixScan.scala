@@ -173,12 +173,13 @@ object HelixScan {
   }
 
   /** #188 — POINT GETS through the store (reference db.rs:54): each
-    * probe runs the full read path — shard routing, retention cutoff,
-    * per-key manifest check (blockMayContain), kc block-cache decode
-    * for the compacted half, rick probe for the fresh half, kv cache
-    * on repeats. decompress=true, so both layers serve; the oracle is
-    * the same probe predicate on the raw parquet — every probe MUST
-    * come back, byte-exact. */
+    * probe runs the full read path in process, with no Spark job —
+    * shard routing, retention cutoff, per-key manifest check
+    * (blockMayContain), the pair's block dir through the kc cache and
+    * decode for the compacted half, the pair's rick dir for the fresh
+    * half, kv cache on repeats. decompress=true, so both layers serve;
+    * the oracle is the same probe predicate on the raw parquet — every
+    * probe MUST come back, byte-exact. */
   def getPoint(s: SparkSession, dir: String): DataFrame = {
     val st = pointStoreFor(s, dir)
     val hits = probesOf(s, dir, PointMod).flatMap { case (k, ts) =>
@@ -188,11 +189,11 @@ object HelixScan {
   }
 
   /** #189 — BATCHED MULTIGET with decompress=false (reference
-    * ReadOption, option.rs:131): one Spark job for the whole probe
-    * batch (pruned to the touched (shard, bucket) partitions), and the
-    * block layer is skipped — only entries still in the rick (ts ≥
-    * [[PointCutUs]]) are served, which the oracle mirrors with the
-    * same ts predicate on the raw parquet. */
+    * ReadOption, option.rs:131): the probe batch grouped by (shard,
+    * bucket), each touched pair's rick dir read once in process with no
+    * Spark job, and the block layer is skipped — only entries still in
+    * the rick (ts ≥ [[PointCutUs]]) are served, which the oracle
+    * mirrors with the same ts predicate on the raw parquet. */
   def multiget(s: SparkSession, dir: String): DataFrame = {
     val st = pointStoreFor(s, dir)
     val probes = probesOf(s, dir, MultigetMod)

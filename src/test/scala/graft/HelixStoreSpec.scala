@@ -315,7 +315,7 @@ class HelixStoreSpec extends SparkTestBase {
     assert(store.get("aaa".getBytes, 3L).map(new String(_)).contains("fresh"))
   }
 
-  test("oversize manifest still prunes point reads via the filtered one-row probe") {
+  test("oversize manifest: get and multiGet stay correct and run no job") {
     val dir = tmpDir("hs-manifest-big")
     // threshold 0 forces every manifest onto the too-big-to-collect path
     val store = HelixStore.open(spark, dir,
@@ -323,22 +323,30 @@ class HelixStoreSpec extends SparkTestBase {
     store.put(entriesDF(Seq(("mmm", 1L, "v1"), ("nnn", 2L, "v2"))))
     store.blockCompact()
     assert(store.hasManifestLayer)
-    // same contract as the collected map: hits read, absences prune
+    // the first read loads the manifest (one job per commit) and finds
+    // it too big; the reads after it skip pruning and run no job
     assert(store.get("mmm".getBytes, 1L).map(new String(_)).contains("v1"))
-    assert(store.get("nnn".getBytes, 2L).map(new String(_)).contains("v2"))
-    assert(store.get("aaa".getBytes, 1L).isEmpty)
-    assert(store.get("zzz".getBytes, 1L).isEmpty)
-    assert(store.get("mmm".getBytes, 999L).isEmpty)
+    val (_, getJobs) = withJobs {
+      // same results as with the collected map: hits read, absences miss
+      assert(store.get("nnn".getBytes, 2L).map(new String(_)).contains("v2"))
+      assert(store.get("aaa".getBytes, 1L).isEmpty)
+      assert(store.get("zzz".getBytes, 1L).isEmpty)
+      assert(store.get("mmm".getBytes, 999L).isEmpty)
+    }
+    assert(getJobs.isEmpty, s"gets ran Spark jobs: $getJobs")
     store.put(entriesDF(Seq(("aaa", 3L, "fresh"))))
-    assert(store.get("aaa".getBytes, 3L).map(new String(_)).contains("fresh"))
-    // the BATCH path on the same too-big manifest: blockMayContainAny's
-    // filtered manifest scan (pairPredicate over DATA columns) must
-    // admit block hits, serve rick hits, and miss absences in one batch
-    val batch = store.multiGet(Seq[(Array[Byte], Long)](
-      ("mmm".getBytes, 1L), ("nnn".getBytes, 2L),
-      ("aaa".getBytes, 3L), ("zzz".getBytes, 1L), ("mmm".getBytes, 999L)))
+    // the batch path on the same too-big manifest: block hits, rick hits
+    // and absences in one batch
+    val (batch, readJobs) = withJobs {
+      assert(store.get("aaa".getBytes, 3L).map(new String(_)).contains("fresh"))
+      store.multiGet(Seq[(Array[Byte], Long)](
+        ("mmm".getBytes, 1L), ("nnn".getBytes, 2L),
+        ("aaa".getBytes, 3L), ("zzz".getBytes, 1L), ("mmm".getBytes, 999L)))
+    }
     assert(batch.map(_.map(new String(_))) ==
       Seq(Some("v1"), Some("v2"), Some("fresh"), None, None))
+    assert(readJobs.isEmpty, s"get and multiGet ran Spark jobs: $readJobs")
+    store.close()
   }
 
   test("UDCF registry dispatches codecs per key prefix (fn_registry.rs:75-99)") {
@@ -1111,11 +1119,24 @@ class HelixStoreSpec extends SparkTestBase {
     jobless("decompress = false", store.get("j07".getBytes, 7L, decompress = false), None)
     jobless("decompress = false on the rick", store.get("j04".getBytes, 14L, decompress = false),
       Some("r4"))
-    val probes: Seq[(Array[Byte], Long)] = Seq(
-      ("j01".getBytes, 1L), ("j02".getBytes, 12L), ("j09".getBytes, 9L))
-    val (mg, mgJobs) = withJobs(store.multiGet(probes))
-    assert(mg.map(_.map(new String(_))) == Seq(Some("b1"), Some("r2"), Some("b9")))
-    assert(schemaJobs(mgJobs).isEmpty, s"multiGet jobs: $mgJobs")
+    def joblessBatch(what: String, batch: => Seq[Option[Array[Byte]]],
+        expect: Seq[Option[String]]): Unit = {
+      val (v, jobs) = withJobs(batch)
+      assert(v.map(_.map(new String(_))) == expect, what)
+      assert(jobs.isEmpty, s"multiGet on $what must run no Spark job: $jobs")
+    }
+    def probes(ps: (String, Long)*): Seq[(Array[Byte], Long)] =
+      ps.map { case (k, t) => (k.getBytes, t) }
+    joblessBatch("block-only pairs", store.multiGet(probes(("j01", 1L), ("j09", 9L), ("j11", 1L))),
+      Seq(Some("b1"), Some("b9"), Some("b11")))
+    joblessBatch("rick-only pairs", store.multiGet(probes(("j02", 12L), ("j11", 11L))),
+      Seq(Some("r2"), Some("r11")))
+    val mixed = probes(("j01", 1L), ("j02", 12L), ("j09", 9L), ("j11", 1L), ("zz", 5L))
+    val mixedHits = Seq(Some("b1"), Some("r2"), Some("b9"), Some("b11"), None)
+    joblessBatch("mixed pairs", store.multiGet(mixed), mixedHits)
+    joblessBatch("kcCacheSize = 0", noKc.multiGet(mixed), mixedHits)
+    joblessBatch("decompress = false", store.multiGet(mixed, decompress = false),
+      Seq(None, Some("r2"), None, None, None))
     val (n, scanJobs) = withJobs(store.scan((0L, 20L), ("j".getBytes, "k".getBytes)).count())
     assert(n == 40)
     assert(scanJobs.nonEmpty && schemaJobs(scanJobs).isEmpty, s"scan jobs: $scanJobs")
@@ -1125,8 +1146,8 @@ class HelixStoreSpec extends SparkTestBase {
       st.put(entriesDF(Seq(("j03", 3L, "patched"))))
       jobless("a rick entry over a block entry", st.get("j03".getBytes, 3L), Some("patched"))
       jobless("its block neighbour", st.get("j13".getBytes, 3L), Some("b13"))
-      assert(st.multiGet(Seq(("j03".getBytes, 3L))).head.map(new String(_))
-        .contains("patched"))
+      joblessBatch("a rick entry over a block entry",
+        st.multiGet(probes(("j03", 3L), ("j13", 3L))), Seq(Some("patched"), Some("b13")))
     }
     jobless("decompress = false beside blocks",
       store.get("j03".getBytes, 3L, decompress = false), Some("patched"))
@@ -1189,24 +1210,57 @@ class HelixStoreSpec extends SparkTestBase {
     store.close()
   }
 
-  test("multi-partition reads agree whether readLayer globs the dirs or passes them literally") {
-    // a comma in the store path rules out the brace glob, so the second
-    // store reads the same partition dirs as literal paths
-    def roundTrip(root: String): Seq[Option[String]] = {
-      val store = HelixStore.open(spark, root, StoreOptions(numShards = 4, bucketSize = 10))
-      store.put(entriesDF((0 until 40).map(k => (f"g$k%02d", k.toLong, s"old$k"))))
+  test("a 50-probe multiGet leaves the kv and kc caches untouched") {
+    // caches of two entries: a batch going through them would evict the
+    // hot key from both
+    val store = HelixStore.open(spark, tmpDir("hs-mget-caches"),
+      StoreOptions(numShards = 2, bucketSize = 100, kvCacheSize = 2, kcCacheSize = 2))
+    store.put(entriesDF(Seq(("hot", 1L, "h1"), ("hot", 2L, "h2"), ("hot", 3L, "h3")) ++
+      (0 until 50).map(k => (f"m$k%02d", k.toLong, s"m$k"))))
+    store.blockCompact()
+    assert(store.get("hot".getBytes, 1L).map(new String(_)).contains("h1"))
+    assert(store.get("hot".getBytes, 2L).map(new String(_)).contains("h2"))
+    assert(store.kcHits.get() == 1, "the second hot get reuses the key's cached blocks")
+    val got = store.multiGet((0 until 50).map(k => (f"m$k%02d".getBytes: Array[Byte], k.toLong)))
+    assert(got.map(_.map(new String(_))) == (0 until 50).map(k => Some(s"m$k")))
+    assert(store.kcHits.get() == 1, "multiGet must not read through the kc cache")
+    // a kv hit never reaches the kc cache, so kcHits stays put ...
+    assert(store.get("hot".getBytes, 1L).map(new String(_)).contains("h1"))
+    assert(store.kcHits.get() == 1, "the hot (key, ts) must still be a kv hit")
+    // ... and a new timestamp of the hot key still finds its blocks cached
+    assert(store.get("hot".getBytes, 3L).map(new String(_)).contains("h3"))
+    assert(store.kcHits.get() == 2, "the hot key's blocks must still be a kc hit")
+    store.close()
+  }
+
+  test("a get reads both layers from one pointer snapshot while a compaction commits") {
+    val store = HelixStore.open(spark, tmpDir("hs-ptr-snapshot"),
+      StoreOptions(numShards = 1, bucketSize = 10,
+        codecs = Map(PausingCodec.name -> PausingCodec),
+        codecDispatch = Some((_: Array[Byte]) => PausingCodec.name)))
+    store.put(entriesDF(Seq(("k", 1L, "old"))))
+    store.blockCompact()
+    store.put(entriesDF(Seq(("k", 1L, "new"))))
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val result = new java.util.concurrent.atomic.AtomicReference[scala.util.Try[Option[String]]]()
+    val reader = new Thread(() =>
+      result.set(scala.util.Try(store.get("k".getBytes, 1L).map(new String(_)))))
+    PausingCodec.pauseOn = (reader, entered, release)
+    reader.start()
+    try {
+      // the get has read the block generation holding "old" and stops in
+      // its decode; the compaction then absorbs "new" into fresh blocks
+      // and empties the rick
+      assert(entered.await(120, java.util.concurrent.TimeUnit.SECONDS),
+        "the get never decoded a block")
       store.blockCompact()
-      store.put(entriesDF((0 until 40 by 3).map(k => (f"g$k%02d", k.toLong, s"new$k"))))
-      val probes = (0 until 40).map(k => (f"g$k%02d".getBytes: Array[Byte], k.toLong))
-      val got = store.multiGet(probes).map(_.map(new String(_)))
-      assert(got == probes.map { case (k, ts) => store.get(k, ts).map(new String(_)) })
-      store.close()
-      got
-    }
-    val expected = (0 until 40).map(k => Some(if (k % 3 == 0) s"new$k" else s"old$k"))
-    assert(roundTrip(tmpDir("hs-glob")) == expected)
-    val literal = java.nio.file.Paths.get(tmpDir("hs-literal")).resolve("a,b")
-    assert(roundTrip(literal.toString) == expected)
+    } finally release.countDown()
+    reader.join(120000)
+    assert(result.get == scala.util.Success(Some("new")),
+      "the get must read the rick of the generation whose blocks it read")
+    assert(store.get("k".getBytes, 1L).map(new String(_)).contains("new"))
+    store.close()
   }
 
   test("every parquet read in HelixStore goes through readLayer (fixed schema, scoped listing)") {
@@ -1245,4 +1299,25 @@ object XorCodec extends graft.core.BlockCodec {
     x(graft.core.NoopCodec.encode(vals))
   def decode(blob: Array[Byte]): Array[Array[Byte]] =
     graft.core.NoopCodec.decode(x(blob))
+}
+
+/** Test codec: [[graft.core.NoopCodec]] whose decode, on the one thread
+  * `pauseOn` names, counts down its first latch and waits on its second,
+  * once — a hook that holds a point read between its block decode and
+  * its rick read. Compaction tasks decode on other threads and never
+  * wait. */
+object PausingCodec extends graft.core.BlockCodec {
+  val name = "pausing"
+  @transient @volatile var pauseOn: (Thread, java.util.concurrent.CountDownLatch,
+    java.util.concurrent.CountDownLatch) = null
+  def encode(vals: Array[Array[Byte]]): Array[Byte] = graft.core.NoopCodec.encode(vals)
+  def decode(blob: Array[Byte]): Array[Array[Byte]] = {
+    val gate = pauseOn
+    if (gate != null && (gate._1 eq Thread.currentThread())) {
+      pauseOn = null
+      gate._2.countDown()
+      gate._3.await()
+    }
+    graft.core.NoopCodec.decode(blob)
+  }
 }

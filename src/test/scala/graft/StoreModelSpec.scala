@@ -155,19 +155,19 @@ class StoreModelSpec extends SparkTestBase {
     a.close(); b.close()
   }
 
-  /** multiGet drops its LWW window when none of a batch's (shard,
-    * bucket) pairs has a rick partition. One shard makes a pair's rick
-    * presence visible through rickFileCount, so each step probes a
-    * mixed batch (windowed) and its block-only part (window-free); both
-    * must equal the windowed toDF path. */
-  private def runMultiGetWindowScenario(seed: Int): Unit = {
+  /** multiGet on a batch whose pairs all lack a rick partition reads
+    * blocks only. One shard makes a pair's rick presence visible through
+    * rickFileCount, so each step probes a mixed batch and its block-only
+    * part; both must equal the windowed toDF path, which must equal the
+    * model. */
+  private def runMultiGetBatchScenario(seed: Int): Unit = {
     val rnd = new scala.util.Random(seed)
     val bucketSize = 10L
     val store = HelixStore.open(spark, tmpDir(s"hs-mgwin-$seed"),
       StoreOptions(numShards = 1, bucketSize = bucketSize))
     val model = mutable.Map[(String, Long), String]()
     val keys = (0 until 5).map(i => s"w$i")
-    var windowFree = 0
+    var blockOnlyBesideRick = 0
     for (step <- 0 until 10) {
       if (step % 3 == 2) store.blockCompact()
       else putRandomBatch(store, rnd, keys, tsRange = 80, step, model)
@@ -176,7 +176,7 @@ class StoreModelSpec extends SparkTestBase {
         (keys(rnd.nextInt(keys.length)), rnd.nextInt(80).toLong))
       val blockOnly = probes.filter { case (_, t) =>
         store.rickFileCount(0, t / bucketSize) == 0 }
-      if (blockOnly.nonEmpty && store.hasRickRows) windowFree += 1
+      if (blockOnly.nonEmpty && store.hasRickRows) blockOnlyBesideRick += 1
       for (batch <- Seq(probes, blockOnly) if batch.nonEmpty) {
         val got = store.multiGet(batch.map { case (k, t) => (k.getBytes, t) })
         assert(got.map(_.map(new String(_))) == batch.map(windowed.get),
@@ -184,13 +184,13 @@ class StoreModelSpec extends SparkTestBase {
       }
       assert(windowed == model.toMap, s"seed=$seed step=$step: toDF diverged from model")
     }
-    assert(windowFree > 0, s"seed=$seed never probed a block-only batch beside rick rows")
+    assert(blockOnlyBesideRick > 0, s"seed=$seed never probed a block-only batch beside rick rows")
     store.close()
   }
 
-  test("multiGet without the LWW window equals the windowed path (seeds 606, 707)") {
-    runMultiGetWindowScenario(606)
-    runMultiGetWindowScenario(707)
+  test("multiGet on block-only and mixed batches equals toDF and the model (seeds 606, 707)") {
+    runMultiGetBatchScenario(606)
+    runMultiGetBatchScenario(707)
   }
 
   test("random op sequences keep the store equal to the LWW model (seed 101)") {
