@@ -5,10 +5,12 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.paths.SparkPath
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, HadoopFsRelation, PartitionDirectory, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -230,6 +232,19 @@ object HelixStore {
       t0: Long, t1: Long, deltas: Array[Long], seqs: Array[Long],
       codec: String, payload: Array[Byte])
 
+  /** One raw (pre-LWW) entry as the reads emit it, in the column order
+    * of [[RickSchema]]. */
+  private[core] final case class RawEntry(key: Array[Byte], ts: Long, value: Array[Byte],
+      seq: Long, subseq: Long, shard: Int, bucket: Long)
+
+  // Product encoders are derived by Scala reflection; derived once here
+  // rather than by an implicit import on every read of the blocks.
+  private val BinBlockEncoder: Encoder[BinBlock] = Encoders.product[BinBlock]
+  private val RawEntryEncoder: Encoder[RawEntry] = Encoders.product[RawEntry]
+  /** The (key, shard, bucket) a block groups its entries by. */
+  private val BlockKeyEncoder: Encoder[(Array[Byte], Int, Long)] =
+    Encoders.tuple(Encoders.BINARY, Encoders.scalaInt, Encoders.scalaLong)
+
   // Every layer is written by the store itself, so its schema is a
   // constant: reads pass it instead of running a schema-inference job.
   /** Rick (row) layer: the entry columns as put() casts them, the write
@@ -240,12 +255,58 @@ object HelixStore {
     StructField("subseq", LongType),
     StructField("shard", IntegerType), StructField("bucket", LongType)))
   /** Block layer: one [[BinBlock]] per row. */
-  val BlockSchema: StructType = Encoders.product[BinBlock].schema
+  val BlockSchema: StructType = BinBlockEncoder.schema
   /** Block manifest: one min/max-key row per (shard, bucket). */
   val ManifestSchema: StructType = StructType(Seq(
     StructField("shard", IntegerType), StructField("bucket", LongType),
     StructField("min_key", BinaryType), StructField("max_key", BinaryType),
     StructField("n_blocks", LongType)))
+
+  /** The partition columns of the rick and block layers: their
+    * `shard=<s>/bucket=<b>` directories. */
+  private val PartitionSchema: StructType = StructType(Seq(
+    StructField("shard", IntegerType), StructField("bucket", LongType)))
+  /** A partitioned layer's columns stored in its files. */
+  private def dataColumnsOf(schema: StructType): StructType =
+    StructType(schema.filterNot(f => PartitionSchema.fieldNames.contains(f.name)))
+
+  /** One (shard, bucket) partition dir of a layer and its data files. */
+  private final case class LayerPart(shard: Int, bucket: Long, files: Seq[Path])
+
+  /** The file index of one layer read: exactly the partitions the store
+    * listed for it (see `listLayer`), so planning neither lists the
+    * layer again nor infers anything. `listFiles` evaluates the partition
+    * filters Catalyst hands it on each partition's (shard, bucket): Spark
+    * does not re-apply them after the scan. A snapshot: `refresh` keeps
+    * the listing. */
+  private final class LayerIndex(root: Path, parts: Seq[LayerPart]) extends FileIndex {
+    private val dirs: Seq[PartitionDirectory] = parts.map { pt =>
+      PartitionDirectory(InternalRow(pt.shard, pt.bucket), pt.files.map { f =>
+        val a = Files.readAttributes(f, classOf[BasicFileAttributes])
+        new FileStatus(a.size(), false, 1, a.size(), a.lastModifiedTime().toMillis,
+          new HPath(f.toUri))
+      }.toArray)
+    }
+    // the layer dir itself: a directory's URI ends in `/`, which would
+    // leave the path without a name
+    def rootPaths: Seq[HPath] = Seq(new HPath(root.toUri.toString.stripSuffix("/")))
+    def listFiles(partitionFilters: Seq[Expression],
+        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      if (partitionFilters.isEmpty) dirs
+      else {
+        val keep = Predicate.createInterpreted(partitionFilters.reduce(And).transform {
+          case a: AttributeReference =>
+            val i = PartitionSchema.fieldNames.indexWhere(_.equalsIgnoreCase(a.name))
+            BoundReference(i, PartitionSchema(i).dataType, nullable = false)
+        })
+        keep.initialize(0)
+        dirs.filter(d => keep.eval(d.values))
+      }
+    def inputFiles: Array[String] = dirs.flatMap(_.files.map(_.getPath.toString)).toArray
+    def refresh(): Unit = ()
+    def sizeInBytes: Long = dirs.flatMap(_.files).map(_.getLen).sum
+    def partitionSchema: StructType = PartitionSchema
+  }
 
   def open(spark: SparkSession, path: String,
       opts: StoreOptions = StoreOptions()): HelixStore =
@@ -762,10 +823,11 @@ final class HelixStore private (
       // the rick parquet, once per instance, at its first mint.
       val fromFiles = scanSeqFiles()
       val fromPtr = math.max(ptr.seqhw, 0L)
+      val rick = listLayer(dirOf(ptr.rows))
       val fromRick =
-        if (!hasRows) 0L
+        if (rick.isEmpty) 0L
         else {
-          val r = readLayer(RickSchema, dirOf(ptr.rows)).agg(max("seq")).head()
+          val r = readLayer(RickSchema, dirOf(ptr.rows), rick).agg(max("seq")).head()
           if (r.isNullAt(0)) 0L else r.getLong(0)
         }
       seqHw = math.max(math.max(fromFiles, fromPtr), fromRick)
@@ -802,16 +864,16 @@ final class HelixStore private (
     val cached = manifestCache
     if (cached != null && cached._1 == p) return cached._2
     val m = p.manifest.flatMap { name =>
-      // size guard: an unbounded collect of a huge manifest would not
-      // be driver-bounded; give up pruning instead of crashing. ONE
-      // scan: collect limit+1 rows and check the overflow row, rather
-      // than a count() pass followed by a collect() pass.
+      // size guard: an unbounded read of a huge manifest would not be
+      // driver-bounded; give up pruning instead of crashing. The read
+      // stops at limit+1 rows and checks the overflow row.
       val lim = math.min(opts.manifestPruneMaxEntries, Int.MaxValue - 2L).toInt
-      val rows = readLayer(ManifestSchema, dirOf(name)).limit(lim + 1).collect()
+      val o = manifestFiles.ordinal
+      val rows = manifestFiles.rows(dataFiles(dirOf(name)), InternalRow.empty, lim + 1)(_ => true)
       if (rows.length > lim) None
       else Some(rows.map { r =>
-        (r.getAs[Number]("shard").intValue(), r.getAs[Number]("bucket").longValue()) ->
-          ((r.getAs[Array[Byte]]("min_key"), r.getAs[Array[Byte]]("max_key")))
+        (r.getInt(o("shard")), r.getLong(o("bucket"))) ->
+          ((r.getBinary(o("min_key")), r.getBinary(o("max_key"))))
       }.toMap)
     }
     // cache only the committed pointer's manifest: a read still on an
@@ -866,155 +928,159 @@ final class HelixStore private (
   private def hasBlocks: Boolean = ptr.blocks.exists(b => hasDataDirs(dirOf(b)))
   private def hasData: Boolean = hasRows || hasBlocks
 
+  /** The (shard, bucket) partitions of `layer` whose bucket lies in
+    * [b0, b1], with their [[dataFiles]], sorted: one listing of the layer
+    * dir and one of each shard dir, then only the bucket dirs in range
+    * are walked. A bucket dir without a data file is left out, so an
+    * empty result means the range holds no rows of the layer. */
+  private def listLayer(layer: Path, b0: Long = Long.MinValue,
+      b1: Long = Long.MaxValue): Seq[LayerPart] = {
+    // the dirs under `d` named `<name>=<value>`, with the value parsed
+    def valued[T](d: Path, name: String, parse: String => Option[T]): List[(Path, T)] =
+      listDir(d).flatMap { c =>
+        val n = c.getFileName.toString
+        if (!n.startsWith(name + "=") || !Files.isDirectory(c)) None
+        else parse(n.stripPrefix(name + "=")).map(c -> _)
+      }
+    if (!Files.isDirectory(layer)) Nil
+    else (for {
+      (shardDir, shard) <- valued(layer, "shard", _.toIntOption)
+      (bucketDir, bucket) <- valued(shardDir, "bucket", _.toLongOption)
+      if bucket >= b0 && bucket <= b1
+      files = dataFiles(bucketDir) if files.nonEmpty
+    } yield LayerPart(shard, bucket, files)).sortBy(pt => (pt.shard, pt.bucket))
+  }
+
   private def emptyEntriesWithMeta: DataFrame =
     spark.createDataFrame(java.util.Collections.emptyList[Row](), RickSchema)
 
   /** The store's one parquet query: every read that builds a DataFrame
-    * (scan, toDF, latest, compaction, the manifest load) goes through
-    * here; point reads (get, directGet, multiGet) use [[PartitionReader]]
-    * instead. The layer's schema is passed, never inferred (no `parquet
-    * at` schema job, no footer reads), and `files` (default: the whole
-    * layer) scope the file listing to compaction's snapshot, with
-    * `layer` as basePath so shard and bucket stay partition columns. The
-    * files go in literally, so a vanished file fails the read. */
-  private def readLayer(schema: StructType, layer: Path,
-      files: Option[Seq[Path]] = None, reader: SparkSession = spark): DataFrame = {
-    val targets = files.getOrElse(Seq(layer))
-    require(targets.nonEmpty, s"empty read of $layer")
-    reader.read.schema(schema).option("basePath", layer.toString)
-      .parquet(targets.map(_.toString): _*)
-  }
+    * (scan, toDF, latest, compaction, seq recovery) goes through here;
+    * point reads and the manifest load use [[PartitionReader]] instead.
+    * The relation is built directly on a [[LayerIndex]] over `parts`,
+    * the partitions the caller listed from one pointer snapshot, with
+    * the layer's fixed schema: no data source resolution, no listing of
+    * the whole layer and no schema inference. `reader` is the session
+    * whose conf plans the scan (a scan's split sizing). A file that
+    * vanishes after the listing fails the read. */
+  private def readLayer(schema: StructType, layer: Path, parts: Seq[LayerPart],
+      reader: SparkSession = spark): DataFrame =
+    reader.baseRelationToDataFrame(HadoopFsRelation(new LayerIndex(layer, parts),
+      PartitionSchema, dataColumnsOf(schema), None, new ParquetFileFormat, Map.empty)(reader))
 
-  /** The store's one in-process parquet read, for point reads: the rows
-    * of one (shard, bucket) partition dir of a layer, read on the calling
+  /** The store's one in-process parquet read, for point reads and the
+    * manifest load: the rows of a few known files, read on the calling
     * thread by Spark's own parquet reader, one `PartitionedFile` per data
     * file. A get reads a few KB from one known dir; a query would pay the
     * planner and a job for it. Row groups are not skipped: a compacted
     * partition holds its keys in arbitrary order, so every row group's
     * key range spans the pair's range, which the manifest has already
-    * tested. Output rows are the layer's data columns followed by shard
-    * and bucket, looked up through [[ordinal]]. Built once per store and
-    * layer: building the reader broadcasts the Hadoop conf. */
-  private final class PartitionReader(schema: StructType) {
-    private val partCols = StructType(schema.filter(f => f.name == "shard" || f.name == "bucket"))
-    private val dataCols = StructType(schema.filterNot(partCols.contains))
+    * tested. Output rows are `dataCols` followed by `partCols` (filled
+    * from the values a read passes), looked up through [[ordinal]].
+    * Built once per store and file kind: building the reader broadcasts
+    * the Hadoop conf. */
+  private final class PartitionReader(dataCols: StructType, partCols: StructType) {
     val ordinal: Map[String, Int] = (dataCols ++ partCols).map(_.name).zipWithIndex.toMap
     private val read = new ParquetFileFormat().buildReaderWithPartitionValues(
       spark, dataCols, partCols, dataCols, Nil,
       Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
       spark.sessionState.newHadoopConf())
 
-    /** The rows of `layer`'s (shard, bucket) dir that `keep` accepts,
-      * copied (the reader reuses its row objects); every file is read to
-      * the end and closed. A missing dir has no rows. */
-    def rows(layer: Path, shard: Long, bucket: Long)(
+    /** Up to `limit` rows of `files` that `keep` accepts, with partition
+      * values `values`, copied (the reader reuses its row objects); each
+      * file opened is closed. */
+    def rows(files: Seq[Path], values: InternalRow, limit: Int = Int.MaxValue)(
         keep: InternalRow => Boolean): Seq[InternalRow] = {
-      val values = InternalRow(shard.toInt, bucket)
-      dataFiles(partitionDir(layer, shard, bucket)).flatMap { f =>
+      val out = Vector.newBuilder[InternalRow]
+      var n = 0
+      for (f <- files if n < limit) {
         val attrs = Files.readAttributes(f, classOf[BasicFileAttributes])
         val it = read(PartitionedFile(values,
-          SparkPath.fromPath(new org.apache.hadoop.fs.Path(f.toUri)), 0L, attrs.size(),
+          SparkPath.fromPath(new HPath(f.toUri)), 0L, attrs.size(),
           Array.empty[String], attrs.lastModifiedTime().toMillis, attrs.size()))
-        try it.filter(keep).map(_.copy()).toList
-        finally it match { case c: AutoCloseable => c.close(); case _ => () }
+        try {
+          while (n < limit && it.hasNext) {
+            val r = it.next()
+            if (keep(r)) { out += r.copy(); n += 1 }
+          }
+        } finally it match { case c: AutoCloseable => c.close(); case _ => () }
       }
+      out.result()
     }
+
+    /** The rows of `layer`'s (shard, bucket) dir that `keep` accepts. A
+      * missing dir has no rows. */
+    def pair(layer: Path, shard: Long, bucket: Long)(
+        keep: InternalRow => Boolean): Seq[InternalRow] =
+      rows(dataFiles(partitionDir(layer, shard, bucket)), InternalRow(shard.toInt, bucket))(keep)
   }
-  private lazy val rickPartitions = new PartitionReader(RickSchema)
-  private lazy val blockPartitions = new PartitionReader(BlockSchema)
+  private lazy val rickPartitions =
+    new PartitionReader(dataColumnsOf(RickSchema), PartitionSchema)
+  private lazy val blockPartitions =
+    new PartitionReader(dataColumnsOf(BlockSchema), PartitionSchema)
+  /** The manifest is one unpartitioned file: shard and bucket are data. */
+  private lazy val manifestFiles = new PartitionReader(ManifestSchema, StructType(Nil))
 
   private def partitionDir(layer: Path, shard: Long, bucket: Long): Path =
     layer.resolve(s"shard=$shard").resolve(s"bucket=$bucket")
 
-  /** Every raw entry (pre-LWW) from both layers: rick rows + decompressed
-    * blocks, all carrying (key, ts, value, seq, shard, bucket). The
-    * `decompress` flag mirrors the reference ReadOption: when false the
-    * block layer is skipped (reference: src/option.rs:131). */
-  private def rawEntries(decompress: Boolean = true,
-      rowFilesSnapshot: Option[Seq[Path]] = None,
+  /** Every raw entry (pre-LWW) of the listed partitions of `p`'s layers:
+    * rick rows + decompressed blocks, all carrying (key, ts, value, seq,
+    * subseq, shard, bucket). The listings decide the files read: the
+    * callers list only the buckets in their range and at or above the
+    * retention cutoff, so no bucket filter is needed here, and a file put
+    * after the listing is not read (compaction moves such files into its
+    * new generation at commit). */
+  private def rawEntries(p: Pointer, rick: Seq[LayerPart], blocks: Seq[LayerPart],
       reader: SparkSession = spark,
       pruneKey: Option[(Array[Byte], Array[Byte])] = None,
       pruneTsLt: Option[Long] = None,
-      pruneTsGe: Option[Long] = None,
-      pruneBucket: Option[(Long, Long)] = None): DataFrame = {
-    val p = ptr
-    val cols = RickSchema.fieldNames.toSeq
+      pruneTsGe: Option[Long] = None): DataFrame = {
     // Range pruning BEFORE the block-decode flatMap (r20, reference
     // analogue: SSTable block-meta pruning): Catalyst cannot push a
     // predicate through the typed flatMap, so without these a key- or
-    // time-ranged scan decodes EVERY bucket-pruned block and discards
-    // most entries after the fact — and orderBy's range-partitioner
-    // sampling pass pays that decode a second time. A block holds one
-    // key with ascending timestamps from t0 to t1, so [k0, k1) applies
-    // to blocks exactly, `t0 < hi` is a sound upper prune (every entry
-    // of a t0 ≥ hi block is ≥ hi) and `t1 ≥ lo` a sound lower prune
-    // (every entry of a t1 < lo block is < lo). The rick side carries
-    // raw entry rows, so the predicates push to its parquet scan as-is.
-    // Sound
-    // under the LWW window too: it partitions by (…, key, ts), and
-    // pruning never removes a row of a surviving (key, ts) group.
-    // `bucket` is a partition column on BOTH layers, but scan()'s
-    // bucket-range filter cannot push through the flatMap — applied
-    // here it prunes at the file index instead of decoding every
-    // bucket and discarding.
-    val bucketPred = pruneBucket.map { case (b0, b1) =>
-      col("bucket").between(b0, b1) }.getOrElse(lit(true))
-    def pruneRows(df: DataFrame): DataFrame = {
-      val k = pruneKey.map { case (k0, k1) =>
-        col("key") >= lit(k0) && col("key") < lit(k1) }.getOrElse(lit(true))
-      val t = pruneTsLt.map(hi => col("ts") < hi).getOrElse(lit(true))
-      val g = pruneTsGe.map(lo => col("ts") >= lo).getOrElse(lit(true))
-      df.filter(k && t && g && bucketPred)
+    // time-ranged scan decodes EVERY listed block and discards most
+    // entries after the fact — and orderBy's range-partitioner sampling
+    // pass pays that decode a second time. A block holds one key with
+    // ascending timestamps from t0 to t1, so [k0, k1) applies to blocks
+    // exactly, `t0 < hi` is a sound upper prune (every entry of a t0 ≥ hi
+    // block is ≥ hi) and `t1 ≥ lo` a sound lower prune (every entry of a
+    // t1 < lo block is < lo). The rick side carries raw entry rows, so
+    // the predicates push to its parquet scan as-is. Sound under the LWW
+    // window too: it partitions by (…, key, ts), and pruning never
+    // removes a row of a surviving (key, ts) group.
+    // `firstTs`/`lastTs` name the columns holding a row's first and last
+    // entry ts. One filter per layer, and none without a bound: every
+    // Dataset step is analyzed on the driver before the scan's first job.
+    def prune(df: DataFrame, firstTs: String, lastTs: String): DataFrame =
+      (pruneKey.map { case (k0, k1) => col("key") >= lit(k0) && col("key") < lit(k1) } ++
+        pruneTsLt.map(hi => col(firstTs) < hi) ++ pruneTsGe.map(lo => col(lastTs) >= lo))
+        .reduceOption(_ && _).fold(df)(df.filter)
+    // the rick's columns are already in the entry order
+    val rows = Option.when(rick.nonEmpty) {
+      prune(readLayer(RickSchema, dirOf(p.rows), rick, reader), "ts", "ts")
     }
-    def pruneBlocks(df: DataFrame): DataFrame = {
-      val k = pruneKey.map { case (k0, k1) =>
-        col("key") >= lit(k0) && col("key") < lit(k1) }.getOrElse(lit(true))
-      val t = pruneTsLt.map(hi => col("t0") < hi).getOrElse(lit(true))
-      val g = pruneTsGe.map(lo => col("t1") >= lo).getOrElse(lit(true))
-      df.filter(k && t && g && bucketPred)
+    val decoded = p.blocks.filter(_ => blocks.nonEmpty).map { dir =>
+      // local vals only inside the closure: the task must never
+      // capture the store instance (SparkSession isn't serializable)
+      val codecsByName = opts.codecs
+      // block entries are already LWW winners; their in-block position
+      // serves as the subseq tiebreak
+      prune(readLayer(BlockSchema, dirOf(dir), blocks, reader), "t0", "t1")
+        .as(BinBlockEncoder)
+        .flatMap { b =>
+          val codec = codecsByName.getOrElse(b.codec, throw new IllegalArgumentException(
+            s"block encoded with unregistered codec '${b.codec}' " +
+              s"(registered: ${codecsByName.keys.mkString(", ")})"))
+          val vals = codec.decode(b.payload)
+          var t = b.t0
+          (0 until b.deltas.length).iterator.map { i =>
+            t += b.deltas(i)
+            RawEntry(b.key, t, vals(i), b.seqs(i), i.toLong, b.shard, b.bucket)
+          }
+        }(RawEntryEncoder).toDF()
     }
-    // a layer with no (shard, bucket) partition is skipped without
-    // building a frame
-    def layer(dir: Path, schema: StructType): Option[DataFrame] =
-      if (hasDataDirs(dir)) Some(readLayer(schema, dir, reader = reader)) else None
-    val rowsDir = dirOf(p.rows)
-    val rows = (rowFilesSnapshot match {
-      // explicit file snapshot (compaction): read exactly these files so
-      // concurrently-appended entries are excluded (they move to the new
-      // generation at commit instead)
-      case Some(files) =>
-        if (files.isEmpty) None else Some(readLayer(RickSchema, rowsDir, Some(files), reader))
-      case None => layer(rowsDir, RickSchema)
-    }).map(df => pruneRows(df).select(cols.map(col): _*))
-    val blocks = p.blocks.filter(_ => decompress)
-      .flatMap(b => layer(dirOf(b), BlockSchema))
-      .map { df =>
-        import spark.implicits._
-        // local vals only inside the closure: the task must never
-        // capture the store instance (SparkSession isn't serializable)
-        val codecsByName = opts.codecs
-        // block entries are already LWW winners; their in-block position
-        // serves as the subseq tiebreak
-        pruneBlocks(df)
-          .as[HelixStore.BinBlock]
-          .flatMap { b =>
-            val codec = codecsByName.getOrElse(b.codec, throw new IllegalArgumentException(
-              s"block encoded with unregistered codec '${b.codec}' " +
-                s"(registered: ${codecsByName.keys.mkString(", ")})"))
-            val vals = codec.decode(b.payload)
-            var t = b.t0
-            (0 until b.deltas.length).iterator.map { i =>
-              t += b.deltas(i)
-              (b.key, t, vals(i), b.seqs(i), i.toLong, b.shard, b.bucket)
-            }
-          }.toDF(cols: _*)
-      }
-    val all = (rows ++ blocks).reduceOption(_.unionByName(_))
-      .getOrElse(emptyEntriesWithMeta)
-    // retention is LOGICAL: buckets below the committed cutoff are
-    // invisible even while their files await vacuum (bucket is a
-    // partition column, so this prunes rather than scans)
-    if (p.minb == Long.MinValue) all else all.filter(col("bucket") >= p.minb)
+    (rows ++ decoded).reduceOption(_.unionByName(_)).getOrElse(emptyEntriesWithMeta)
   }
 
   /** Shard routing expression: custom ShardingKeyFn when registered. */
@@ -1140,9 +1206,9 @@ final class HelixStore private (
         ((h % opts.numShards) + opts.numShards) % opts.numShards
       }
       case Some(_) =>
-        import spark.implicits._
-        val byKey = keys.zipWithIndex.map { case (k, i) => (i, k) }
-          .toDF("i", "key")
+        val byKey = spark.createDataFrame(
+            keys.zipWithIndex.map { case (k, i) => Row(i, k) }.asJava,
+            StructType(Seq(StructField("i", IntegerType), StructField("key", BinaryType))))
           .select(col("i"), shardExpr(col("key")).as("s"))
           .collect().map(r => r.getInt(0) -> r.getInt(1).toLong).toMap
         keys.indices.map(byKey)
@@ -1221,7 +1287,7 @@ final class HelixStore private (
       val want = keys.map(ByteBuffer.wrap).toSet
       val o = blockPartitions.ordinal
       val kO = o("key")
-      blockPartitions.rows(dirOf(b), shard, bucket)(r => want(ByteBuffer.wrap(r.getBinary(kO))))
+      blockPartitions.pair(dirOf(b), shard, bucket)(r => want(ByteBuffer.wrap(r.getBinary(kO))))
         .map(r => BinBlock(r.getBinary(kO), r.getInt(o("shard")), r.getLong(o("bucket")),
           r.getLong(o("t0")), r.getLong(o("t1")), r.getArray(o("deltas")).toLongArray(),
           r.getArray(o("seqs")).toLongArray(), r.getUTF8String(o("codec")).toString,
@@ -1237,7 +1303,7 @@ final class HelixStore private (
     val o = rickPartitions.ordinal
     val (kO, tsO) = (o("key"), o("ts"))
     val wantTs = want.map(_._2)
-    rickPartitions.rows(dirOf(p.rows), shard, bucket) { r =>
+    rickPartitions.pair(dirOf(p.rows), shard, bucket) { r =>
         val ts = r.getLong(tsO)
         wantTs(ts) && want((ByteBuffer.wrap(r.getBinary(kO)), ts))
       }
@@ -1291,8 +1357,8 @@ final class HelixStore private (
   }
 
   /** An uncached get: [[pairReads]] with one probe, its block read going
-    * through the kc cache. The only Spark job left is the manifest load
-    * (once per commit). */
+    * through the kc cache. Like every point read it runs no Spark job:
+    * the manifest loads in process too (once per commit). */
   private def getInShardUncached(p: Pointer, shard: Long, key: Array[Byte], ts: Long,
       decompress: Boolean): Option[Array[Byte]] = {
     // Spark SQL `div` truncates toward zero; use the same semantics here
@@ -1411,8 +1477,6 @@ final class HelixStore private (
       scanOpts: ScanOptions = ScanOptions()): DataFrame = {
     require(ordered || scanOpts.comparator.isEmpty,
       "comparator requires ordered=true (ordered=false IS the NoOrderComparator scan)")
-    refreshPointer()
-    if (!hasData) return toDF // empty frame with the entry schema
     val (t0, t1) = tsRange
     val (k0, k1) = keyRange
     // truncating division matches put()'s `ts div bucketSize` and is
@@ -1438,17 +1502,15 @@ final class HelixStore private (
         s
       case None => spark
     }
-    // key range + BOTH ts bounds also prune BELOW the block-decode
-    // flatMap (see rawEntries: t0 < hi on the block start, t1 >= lo on
-    // the block max written at compaction) — the per-entry filters
-    // here stay for the entries a surviving block carries outside the
-    // range
-    val filtered = toDFWithPartitions(reader,
-        pruneKey = Some((k0, k1)), pruneTsLt = Some(t1),
-        pruneTsGe = Some(t0), pruneBucket = Some((b0, b1)))
-      .filter(col("bucket").between(b0, b1))
-      .filter(col("ts") >= t0 && col("ts") < t1)
-      .filter(col("key") >= lit(k0) && col("key") < lit(k1))
+    // only the buckets [b0, b1] are listed and read; key range + BOTH ts
+    // bounds also prune BELOW the block-decode flatMap (see rawEntries:
+    // t0 < hi on the block start, t1 >= lo on the block max written at
+    // compaction) — the per-entry filters here stay for the entries a
+    // surviving block carries outside the range
+    val filtered = toDFWithPartitions((b0, b1), reader,
+        pruneKey = Some((k0, k1)), pruneTsLt = Some(t1), pruneTsGe = Some(t0))
+      .filter(col("bucket").between(b0, b1) && col("ts") >= t0 && col("ts") < t1 &&
+        col("key") >= lit(k0) && col("key") < lit(k1))
       .select(EntryColumns.map(col): _*)
     // ordered=false is the reference's NoOrderComparator scan (util.rs):
     // skip the global sort when the consumer doesn't need key order.
@@ -1482,48 +1544,55 @@ final class HelixStore private (
       .foreachBatch { (batch: DataFrame, _: Long) => put(batch) }
       .start()
 
-  private def toDFWithPartitions(reader: SparkSession = spark,
+  /** The live entries of the buckets in `buckets` (inclusive) with
+    * their shard and bucket, from one pointer snapshot: both layers are
+    * listed once, only in that range and at or above the retention
+    * cutoff, and the listings are what the reads scan. */
+  private def toDFWithPartitions(buckets: (Long, Long) = (Long.MinValue, Long.MaxValue),
+      reader: SparkSession = spark,
       pruneKey: Option[(Array[Byte], Array[Byte])] = None,
       pruneTsLt: Option[Long] = None,
-      pruneTsGe: Option[Long] = None,
-      pruneBucket: Option[(Long, Long)] = None): DataFrame = {
+      pruneTsGe: Option[Long] = None): DataFrame = {
     refreshPointer()
-    // Post-compaction fast path: with the rick empty, the block layer is
-    // the only source and blockCompact already resolved LWW per
+    val p = ptr
+    // retention is LOGICAL: buckets below the committed cutoff are
+    // invisible even while their files await vacuum
+    val (b0, b1) = (math.max(buckets._1, p.minb), buckets._2)
+    val rick = listLayer(dirOf(p.rows), b0, b1)
+    val blocks = p.blocks.fold(Seq.empty[LayerPart])(b => listLayer(dirOf(b), b0, b1))
+    val raw = rawEntries(p, rick, blocks, reader, pruneKey, pruneTsLt, pruneTsGe)
+    // Block-only fast path: with no rick file in the range, the block
+    // layer is the only source and blockCompact already resolved LWW per
     // (key, ts) — same key → same shard, same ts → same bucket, so
     // uniqueness is global. Skipping the rank window removes a full
-    // shuffle from every read of a compacted store (the common state —
+    // shuffle from every read of compacted buckets (the common state —
     // at 100 TB the read-amplification win is the whole point of
-    // compacting).
-    if (!hasRows && hasBlocks)
-      rawEntries(reader = reader, pruneKey = pruneKey, pruneTsLt = pruneTsLt,
-        pruneTsGe = pruneTsGe, pruneBucket = pruneBucket)
+    // compacting), also while newer buckets still sit in the rick.
+    if (rick.isEmpty) raw
     else {
       // LWW scoped per shard (like the reference, whose shards are
       // independent trees): for routed writes key determines shard so
       // this equals a global (key, ts) rank, and for shard-addressed
       // directPut data each shard keeps its own winner — exactly what
-      // the compacted fast path above yields, so both paths agree.
-      // `bucket` is redundant in the keys (a pure function of ts) but
-      // REQUIRED for pruning: scan()'s bucket-range filter can only
-      // push below the window when bucket is a partition column, and
-      // without it a time-range scan would shuffle the entire store
-      // for the rank before cutting the range.
+      // the block-only fast path above yields, so both paths agree.
+      // `bucket` is redundant in the keys (a pure function of ts); as a
+      // window key it lets scan()'s bucket-range filter push below the
+      // window, down to the rick's file index.
       val w = Window.partitionBy("shard", "bucket", "key", "ts")
         .orderBy(col("seq").desc, col("subseq").desc, col("value").desc)
-      rawEntries(reader = reader, pruneKey = pruneKey, pruneTsLt = pruneTsLt,
-          pruneTsGe = pruneTsGe, pruneBucket = pruneBucket)
-        .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+      raw.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
     }
   }
 
   /** Latest value per key at or before `asOf` (TimeIterator newest-wins). */
   def latest(asOf: Long): DataFrame = {
     val w = Window.partitionBy("key").orderBy(col("ts").desc)
-    // asOf prunes below the block decode too (t0 ≤ asOf blocks only —
-    // sound: the per-key window only ever KEEPS entries with ts ≤ asOf,
-    // and those live in blocks with t0 ≤ ts ≤ asOf)
-    toDFWithPartitions(
+    // asOf bounds the buckets listed (truncating division is monotone,
+    // so every ts ≤ asOf has bucket ≤ asOf's) and prunes below the block
+    // decode too (t0 ≤ asOf blocks only — sound: the per-key window only
+    // ever KEEPS entries with ts ≤ asOf, and those live in blocks with
+    // t0 ≤ ts ≤ asOf)
+    toDFWithPartitions((Long.MinValue, asOf / opts.bucketSize),
         pruneTsLt = if (asOf == Long.MaxValue) None else Some(asOf + 1))
       .select(EntryColumns.map(col): _*)
       .filter(col("ts") <= asOf)
@@ -1567,20 +1636,17 @@ final class HelixStore private (
     * generation inside the brief put-excluded commit window. */
   def compact(): Unit = compactionMutex.synchronized { withMutex {
     refreshPointer()
-    val snapshot0 =
-      if (hasRows) dataFiles(dirOf(ptr.rows)) else Seq.empty[Path]
+    val cur = ptr
+    val rick = listLayer(dirOf(cur.rows))
     // no part file to rewrite (bucket dirs can exist with zero part
     // files, e.g. post-outdate) — nothing to do
-    if (snapshot0.nonEmpty) {
-      val cur = ptr
+    if (rick.nonEmpty) {
       val g = allocGen(cur)
       val newRows = s"r-$g"
-      val snapshot = snapshot0
-      val raw0 = readLayer(RickSchema, dirOf(cur.rows), Some(snapshot))
+      val snapshot = rick.flatMap(_.files)
       // physical reclaim of logically-outdated buckets happens here —
       // the LSM discipline: retention marks, compaction drops
-      val raw = if (cur.minb == Long.MinValue) raw0
-        else raw0.filter(col("bucket") >= cur.minb)
+      val raw = readLayer(RickSchema, dirOf(cur.rows), rick.filter(_.bucket >= cur.minb))
       // per-shard LWW, matching toDFWithPartitions and blockCompact
       val w = Window.partitionBy("shard", "key", "ts")
         .orderBy(col("seq").desc, col("subseq").desc, col("value").desc)
@@ -1612,52 +1678,54 @@ final class HelixStore private (
   def blockCompact(): Unit = compactionMutex.synchronized { withMutex {
     compactionsRun.incrementAndGet()
     refreshPointer()
-    if (hasData) {
-    import spark.implicits._
     val cur = ptr
+    // snapshot the rick file list: entries put while this compaction
+    // builds its output land in files outside the snapshot and are moved
+    // into the fresh rick generation at commit
+    val rick = listLayer(dirOf(cur.rows))
+    val blocksNow = cur.blocks.fold(Seq.empty[LayerPart])(b => listLayer(dirOf(b)))
+    if (rick.nonEmpty || blocksNow.nonEmpty) {
     val g = allocGen(cur)
     val newBlocks = s"b-$g"
     val newManifest = s"m-$g"
     val newRows = s"r-$g"
-    // snapshot the rick file list: entries put while this compaction
-    // builds its output land in files outside the snapshot and are moved
-    // into the fresh rick generation at commit
-    val rickSnapshot = dataFiles(dirOf(cur.rows))
+    val rickSnapshot = rick.flatMap(_.files)
     // UDCF dispatch: registry + fn pulled into locals so the task
     // closure captures plain Serializable values, not `this`. A dispatch
     // to an unregistered codec name fails the compaction loudly
     // (reference FnRegistry::udcf errors, fn_registry.rs:96).
     val codecsByName = opts.codecs
     val dispatch = opts.codecDispatch.getOrElse((_: Array[Byte]) => NoopCodec.name)
-    val blocks = rawEntries(rowFilesSnapshot = Some(rickSnapshot))
-      .select(col("key"), col("ts"), col("value"), col("seq"), col("subseq"),
-        col("shard"), col("bucket"))
-      .as[(Array[Byte], Long, Array[Byte], Long, Long, Int, Long)]
-      .groupByKey(r => (r._1.toSeq, r._6, r._7))
-      .mapGroups { (k: (Seq[Byte], Int, Long), it: Iterator[(Array[Byte], Long, Array[Byte], Long, Long, Int, Long)]) =>
+    // physical reclaim of logically-outdated buckets happens here: the
+    // reads leave out the buckets below the retention cutoff
+    val live = (pt: LayerPart) => pt.bucket >= cur.minb
+    val blocks = rawEntries(cur, rick.filter(live), blocksNow.filter(live))
+      .as(RawEntryEncoder)
+      .groupByKey(r => (r.key, r.shard, r.bucket))(BlockKeyEncoder)
+      .mapGroups { (k: (Array[Byte], Int, Long), it: Iterator[RawEntry]) =>
         // LWW inside the block: max (seq, subseq, value-bytes) entry per
         // ts — the value tiebreak uses the SAME unsigned-lexicographic
         // order as Spark's BinaryType, so this path picks the identical
         // winner as the window/orderBy LWW sites
-        val byTs = it.toArray.groupBy(_._2).valuesIterator
-          .map(_.maxBy(r => (r._4, r._5, r._3))(
+        val byTs = it.toArray.groupBy(_.ts).valuesIterator
+          .map(_.maxBy(r => (r.seq, r.subseq, r.value))(
             Ordering.Tuple3(Ordering.Long, Ordering.Long, HelixStore.BytesOrdering)))
-          .toArray.sortBy(_._2)
-        val t0 = byTs.head._2
+          .toArray.sortBy(_.ts)
+        val t0 = byTs.head.ts
         val deltas = new Array[Long](byTs.length)
         var prev = t0
         var i = 0
         while (i < byTs.length) {
-          deltas(i) = byTs(i)._2 - prev; prev = byTs(i)._2; i += 1
+          deltas(i) = byTs(i).ts - prev; prev = byTs(i).ts; i += 1
         }
-        val keyBytes = k._1.toArray
+        val keyBytes = k._1
         val codecName = dispatch(keyBytes)
         val codec = codecsByName.getOrElse(codecName, throw new IllegalArgumentException(
           s"codec dispatch returned unregistered name '$codecName' " +
             s"(registered: ${codecsByName.keys.mkString(", ")})"))
-        HelixStore.BinBlock(keyBytes, k._2, k._3, t0, byTs.last._2, deltas,
-          byTs.map(_._4), codecName, codec.encode(byTs.map(_._3)))
-      }
+        HelixStore.BinBlock(keyBytes, k._2, k._3, t0, byTs.last.ts, deltas,
+          byTs.map(_.seq), codecName, codec.encode(byTs.map(_.value)))
+      }(BinBlockEncoder)
       .toDF()
     blocks.repartition(col("shard"), col("bucket"))
       .write.mode("overwrite").partitionBy("shard", "bucket")
@@ -1665,10 +1733,11 @@ final class HelixStore private (
     // a fully-outdated store compacts to ZERO blocks (logical retention
     // filtered everything): commit an empty store rather than reading a
     // fileless dir for the manifest
-    val wroteBlocks = dataFiles(dirOf(newBlocks)).nonEmpty
+    val written = listLayer(dirOf(newBlocks))
+    val wroteBlocks = written.nonEmpty
     if (wroteBlocks) {
       // manifest derives from the freshly-written (still uncommitted) blocks
-      readLayer(BlockSchema, dirOf(newBlocks))
+      readLayer(BlockSchema, dirOf(newBlocks), written)
         .groupBy("shard", "bucket")
         .agg(min("key").as("min_key"), max("key").as("max_key"),
           count(lit(1)).as("n_blocks"))

@@ -323,11 +323,11 @@ class HelixStoreSpec extends SparkTestBase {
     store.put(entriesDF(Seq(("mmm", 1L, "v1"), ("nnn", 2L, "v2"))))
     store.blockCompact()
     assert(store.hasManifestLayer)
-    // the first read loads the manifest (one job per commit) and finds
-    // it too big; the reads after it skip pruning and run no job
-    assert(store.get("mmm".getBytes, 1L).map(new String(_)).contains("v1"))
+    // the first read after the commit loads the manifest in process and
+    // finds it too big; every read skips pruning and runs no job
     val (_, getJobs) = withJobs {
       // same results as with the collected map: hits read, absences miss
+      assert(store.get("mmm".getBytes, 1L).map(new String(_)).contains("v1"))
       assert(store.get("nnn".getBytes, 2L).map(new String(_)).contains("v2"))
       assert(store.get("aaa".getBytes, 1L).isEmpty)
       assert(store.get("zzz".getBytes, 1L).isEmpty)
@@ -1109,10 +1109,11 @@ class HelixStoreSpec extends SparkTestBase {
       assert(v.map(new String(_)) == expect, what)
       assert(jobs.isEmpty, s"$what must run no Spark job: $jobs")
     }
-    // load each block manifest once (cached per committed pointer)
-    assert(store.get("j00".getBytes, 0L).map(new String(_)).contains("b0"))
-    assert(noKc.get("j00".getBytes, 0L).map(new String(_)).contains("b0"))
-    // every get below is a kv-cache miss: each (key, ts) is new
+    // the first get after each compaction loads the block manifest, in
+    // process; every get below is a kv-cache miss: each (key, ts) is new
+    jobless("the first get after a compaction", store.get("j00".getBytes, 0L), Some("b0"))
+    jobless("the first get after a compaction with kcCacheSize = 0",
+      noKc.get("j00".getBytes, 0L), Some("b0"))
     jobless("a block-only pair", store.get("j05".getBytes, 5L), Some("b5"))
     jobless("a rick-only pair", store.get("j02".getBytes, 12L), Some("r2"))
     jobless("kcCacheSize = 0", noKc.get("j06".getBytes, 6L), Some("b6"))
@@ -1152,6 +1153,36 @@ class HelixStoreSpec extends SparkTestBase {
     jobless("decompress = false beside blocks",
       store.get("j03".getBytes, 3L, decompress = false), Some("patched"))
     store.close(); noKc.close()
+  }
+
+  test("a scan of compacted buckets beside a rick in another bucket lists only its buckets, with no LWW window") {
+    val store = HelixStore.open(spark, tmpDir("hs-scan-listing"),
+      StoreOptions(numShards = 2, bucketSize = 10))
+    // blocks in buckets 0-2, then a rick holding bucket 3 only
+    store.put(entriesDF((0 until 12).map(k => (f"s$k%02d", 2L * k, s"b$k"))))
+    store.blockCompact()
+    store.put(entriesDF((0 until 4).map(k => (f"s$k%02d", 30L + k, s"r$k"))))
+    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    def windows(df: org.apache.spark.sql.DataFrame) =
+      Plans.collect(df.queryExecution.executedPlan) {
+        case w: org.apache.spark.sql.execution.window.WindowExec => w }
+    def bucketsRead(df: org.apache.spark.sql.DataFrame): Set[Long] =
+      df.inputFiles.map(f => """/bucket=(-?\d+)/""".r.findFirstMatchIn(f)
+        .getOrElse(fail(s"no bucket dir in $f")).group(1).toLong).toSet
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, String)] =
+      df.collect().toSeq.map(r => (new String(r.getAs[Array[Byte]]("key")), r.getAs[Long]("ts"),
+        new String(r.getAs[Array[Byte]]("value"))))
+    val blockOnly = store.scan((0L, 20L), ("s".getBytes, "t".getBytes))
+    assert(windows(blockOnly).isEmpty, "a block-only range must skip the LWW window")
+    assert(bucketsRead(blockOnly) == Set(0L, 1L), blockOnly.inputFiles.mkString(", "))
+    assert(rows(blockOnly) == (0 until 10).map(k => (f"s$k%02d", 2L * k, s"b$k")))
+    // a range touching the rick keeps the window and reads its bucket
+    val mixed = store.scan((20L, 40L), ("s".getBytes, "t".getBytes))
+    assert(windows(mixed).nonEmpty, "a range holding rick files must rank by LWW")
+    assert(bucketsRead(mixed) == Set(2L, 3L), mixed.inputFiles.mkString(", "))
+    assert(rows(mixed) == (0 until 4).map(k => (f"s$k%02d", 30L + k, s"r$k")) ++
+      Seq(("s10", 20L, "b10"), ("s11", 22L, "b11")))
+    store.close()
   }
 
   test("a rick file with an INT32 ts reads through get and orders against blocks by LWW") {
@@ -1266,26 +1297,47 @@ class HelixStoreSpec extends SparkTestBase {
   test("every parquet read in HelixStore goes through readLayer (fixed schema, scoped listing)") {
     val src = java.nio.file.Files.readString(
       java.nio.file.Paths.get("src", "main", "scala", "graft", "core", "HelixStore.scala"))
-    val helper = src.indexOf("private def readLayer(")
-    val helperEnd = src.indexOf("\n  }\n", helper)
-    assert(helper >= 0 && helperEnd > helper, "readLayer not found")
-    val reads = """\.read\s*\.""".r.findAllMatchIn(src).map(_.start).toSeq
-    assert(reads.nonEmpty && reads.forall(i => i > helper && i < helperEnd),
-      s"DataFrameReader use outside readLayer at offsets ${reads.filter(i => i < helper || i > helperEnd)}")
-    assert(!src.contains(".read.parquet("), "a bare .read.parquet( infers the schema")
+    /** The body of the first definition `head` opens: up to its closing
+      * brace at the member indent. */
+    def body(head: String): (Int, Int) = {
+      val at = src.indexOf(head)
+      val end = src.indexOf("\n  }\n", at)
+      assert(at >= 0 && end > at, s"$head not found")
+      (at, end)
+    }
+    def hits(token: String): Seq[Int] =
+      java.util.regex.Pattern.quote(token).r.findAllMatchIn(src).map(_.start).toSeq
+    def within(token: String, n: Int, spans: (Int, Int)*): Unit = {
+      val at = hits(token)
+      assert(at.size == n && at.forall(i => spans.exists { case (a, b) => i > a && i < b }),
+        s"$token expected $n times inside ${spans.mkString(", ")}, found at $at")
+    }
+    // no DataFrameReader at all: it would resolve a data source and list
+    // or infer what the store already knows
+    assert("""\.read\s*\.""".r.findAllMatchIn(src).isEmpty, "a DataFrameReader read")
+    assert(!src.contains("spark.implicits"), "an encoder derived per call")
+    // the one relation builder: every DataFrame read of a layer is a
+    // HadoopFsRelation over the store's own file index, built in readLayer
+    val helper = body("private def readLayer(")
+    within("HadoopFsRelation(", 1, helper)
+    within("baseRelationToDataFrame", 1, helper)
     // the one in-process read: the only parquet reader HelixStore builds
     // itself lives in PartitionReader
-    val inProc = src.indexOf("private final class PartitionReader(")
-    val inProcEnd = src.indexOf("\n  }\n", inProc)
-    assert(inProc >= 0 && inProcEnd > inProc, "PartitionReader not found")
+    val inProc = body("private final class PartitionReader(")
     assert("class PartitionReader".r.findAllMatchIn(src).size == 1)
-    for (token <- Seq("buildReader", "new ParquetFileFormat", "PartitionedFile(")) {
-      val hits = java.util.regex.Pattern.quote(token).r.findAllMatchIn(src).map(_.start).toSeq
-      assert(hits.size == 1 && hits.forall(i => i > inProc && i < inProcEnd),
-        s"$token outside the one in-process reader at offsets $hits")
+    within("new ParquetFileFormat", 2, helper, inProc)
+    for (token <- Seq("buildReader", "PartitionedFile("))
+      within(token, 1, inProc)
+    for (other <- Seq("ParquetFileReader", "HadoopInputFile", "ParquetReadSupport",
+        "OrcFileFormat", "InMemoryFileIndex", "DataSource("))
+      assert(!src.contains(other), s"a second read path: $other")
+    // the layer listing, not a walk of whole layers, decides what a
+    // scan reads and whether it needs the LWW window
+    for (reader <- Seq("def scan(", "private def toDFWithPartitions(", "private def rawEntries(")) {
+      val (a, b) = body(reader)
+      for (walk <- Seq("hasDataDirs", "hasData", "hasRows", "hasBlocks"))
+        assert(!src.substring(a, b).contains(walk), s"$reader walks a layer through $walk")
     }
-    for (other <- Seq("ParquetFileReader", "HadoopInputFile", "ParquetReadSupport", "OrcFileFormat"))
-      assert(!src.contains(other), s"a second in-process read path: $other")
   }
 }
 

@@ -2,7 +2,9 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.types._
 
 import graft.core.{HelixStore, StoreOptions}
@@ -14,7 +16,7 @@ import graft.core.{HelixStore, StoreOptions}
   * reference's scan scaffold (src/db.rs) generalized to arbitrary
   * interleavings — compaction and retention must be invisible to
   * readers except through the outdate cutoff. */
-class StoreModelSpec extends SparkTestBase {
+class StoreModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
 
   private val entrySchema = StructType(Seq(
     StructField("key", BinaryType), StructField("ts", LongType),
@@ -186,6 +188,105 @@ class StoreModelSpec extends SparkTestBase {
     }
     assert(blockOnlyBesideRick > 0, s"seed=$seed never probed a block-only batch beside rick rows")
     store.close()
+  }
+
+  /** Put `rows` through `st` and mirror them into `model`, the last row
+    * of a repeated (key, ts) winning (see [[putRandomBatch]]). */
+  private def putBatch(st: HelixStore, rows: Seq[(String, Long, String)],
+      model: mutable.Map[(String, Long), String]): Unit = {
+    val lastPer = rows.groupBy(e => (e._1, e._2)).map(_._2.last).toSeq
+    st.put(entriesDF(lastPer))
+    lastPer.foreach { case (k, t, v) => model((k, t)) = v }
+  }
+
+  /** `n` random entries with ts in [lo, hi). */
+  private def randomRows(rnd: scala.util.Random, keys: IndexedSeq[String], lo: Long,
+      hi: Long, n: Int, tag: String): Seq[(String, Long, String)] =
+    Seq.fill(n)((keys(rnd.nextInt(keys.length)), lo + rnd.nextInt((hi - lo).toInt),
+      s"$tag-${rnd.nextInt(1000)}"))
+
+  /** Checks `st.scan` over [t0, t1) × [k0, k1) against `model`'s live
+    * entries in (key, ts) order, and whether its plan ranks by LWW. */
+  private def assertScan(st: HelixStore, model: collection.Map[(String, Long), String],
+      minBucket: Long, bucketSize: Long, t0: Long, t1: Long, window: Boolean,
+      where: String, k0: String = "", k1: String = "~"): Unit = {
+    val df = st.scan((t0, t1), (k0.getBytes, k1.getBytes))
+    val got = df.collect().map(r => (new String(r.getAs[Array[Byte]]("key")),
+      r.getAs[Long]("ts"), new String(r.getAs[Array[Byte]]("value")))).toSeq
+    val expected = model.iterator
+      .collect { case ((k, ts), v) if ts >= t0 && ts < t1 && ts / bucketSize >= minBucket &&
+        k >= k0 && k < k1 => (k, ts, v) }
+      .toSeq.sortBy(e => (e._1, e._2))
+    assert(got == expected, s"$where: scan [$t0, $t1) × [$k0, $k1) diverged from the model")
+    assert(df.schema.map(f => (f.name, f.dataType)) == entrySchema.map(f => (f.name, f.dataType)),
+      s"$where: scan schema ${df.schema}")
+    val windows = collect(df.queryExecution.executedPlan) { case w: WindowExec => w }
+    assert(windows.nonEmpty == window,
+      s"$where: scan [$t0, $t1) expected ${if (window) "an" else "no"} LWW window")
+  }
+
+  /** A scan reads only the listed partitions of its bucket range, and
+    * ranks by LWW only when a rick file lies in that range: blocks in
+    * buckets 0-3, rick files in buckets 4-5 (two puts, so LWW across
+    * them), bucket 0 outdated. Each range must equal the model. */
+  private def runScanRangeScenario(seed: Int): Unit = {
+    val rnd = new scala.util.Random(seed)
+    val bucketSize = 10L
+    val store = HelixStore.open(spark, tmpDir(s"hs-scanrange-$seed"),
+      StoreOptions(numShards = 2, bucketSize = bucketSize))
+    val model = mutable.Map[(String, Long), String]()
+    val keys = (0 until 6).map(i => s"r$i")
+    for (b <- 0 until 3) putBatch(store, randomRows(rnd, keys, 0, 40, 12, s"b$b"), model)
+    store.blockCompact()
+    for (b <- 0 until 2) putBatch(store, randomRows(rnd, keys, 40, 60, 8, s"r$b"), model)
+    store.outdate(10L)
+    val minBucket = 1L
+    def check(t0: Long, t1: Long, window: Boolean, what: String,
+        k0: String = "", k1: String = "~"): Unit =
+      assertScan(store, model, minBucket, bucketSize, t0, t1, window,
+        s"seed=$seed $what", k0, k1)
+    check(10, 40, window = false, "entirely in blocks")
+    check(12, 37, window = false, "entirely in blocks, key range", "r1", "r4")
+    check(30, 50, window = true, "touching the rick")
+    check(5, 55, window = true, "across the cutoff and both layers")
+    check(0, 10, window = false, "wholly below the outdate cutoff")
+    check(100, 200, window = false, "holding no pair")
+    // a put into the block range brings the window back for that range,
+    // and its entries win over the blocks they overwrite
+    putBatch(store, randomRows(rnd, keys, 10, 40, 6, "o"), model)
+    check(10, 40, window = true, "blocks under fresh rick entries")
+    store.blockCompact()
+    check(10, 40, window = false, "re-compacted blocks")
+    check(5, 55, window = false, "all blocks after the second compaction")
+    store.close()
+  }
+
+  test("scan equals the model on block-only, rick, outdated and empty ranges (seeds 808, 909)") {
+    runScanRangeScenario(808)
+    runScanRangeScenario(909)
+  }
+
+  test("a scan sees another instance's puts into its range after its own pointer load") {
+    val dir = tmpDir("hs-scan-fresh")
+    val bucketSize = 10L
+    val opts = StoreOptions(numShards = 2, bucketSize = bucketSize)
+    val a = HelixStore.open(spark, dir, opts)
+    val b = HelixStore.open(spark, dir, opts)
+    val model = mutable.Map[(String, Long), String]()
+    val rnd = new scala.util.Random(42)
+    val keys = (0 until 5).map(i => s"f$i")
+    putBatch(a, randomRows(rnd, keys, 0, 20, 10, "a"), model)
+    a.blockCompact()
+    // A loads the pointer and lists a block-only range
+    assertScan(a, model, Long.MinValue, bucketSize, 0, 20, window = false, "A before B's put")
+    // B's put lands in the rick of that range, overwriting one entry
+    val (k, t) = model.keys.head
+    putBatch(b, Seq((k, t, "from-b"), ("f9", 5L, "new-from-b")), model)
+    assertScan(a, model, Long.MinValue, bucketSize, 0, 20, window = true, "A after B's put")
+    b.blockCompact()
+    assertScan(a, model, Long.MinValue, bucketSize, 0, 20, window = false,
+      "A after B's compaction")
+    a.close(); b.close()
   }
 
   test("multiGet on block-only and mixed batches equals toDF and the model (seeds 606, 707)") {
