@@ -41,17 +41,20 @@ import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StructFiel
  * }}}
  * Compactions write complete NEW generation directories, then commit by
  * atomically replacing `_current` (rows, blocks and manifest flip
- * together), then delete the old generations. A crash at any point
- * leaves either the old pointer (new dirs are unreferenced orphans,
- * rolled back by `open()`) or the new pointer (old dirs are orphans,
- * likewise removed) — committed data is never lost mid-swap, matching
- * the reference's crash-recoverable level swap (src/level.rs).
+ * together), then bury the old generations in `_graveyard`, from which
+ * `vacuum()` deletes them once the retention window has passed. A crash
+ * at any point leaves either the old pointer (new dirs are unreferenced
+ * orphans, rolled back by `open()`) or the new pointer (old dirs not yet
+ * buried are orphans, likewise removed) — committed data is never lost
+ * mid-swap, matching the reference's crash-recoverable level swap
+ * (src/level.rs).
  *
  * Freshly `put` data lands as small append files (the "rick" role);
- * `compact()` rewrites each partition into one file sorted by
- * (key, ts) with last-write-wins applied (the "SSTable" role);
- * `outdate()` drops whole bucket partitions (O(partitions) metadata, no
- * data rewrite) — the Outdate timestamp action.
+ * `blockCompact()` folds both layers into one compressed block per
+ * (key, shard, bucket) with last-write-wins applied (the "SSTable"
+ * role); `outdate()` raises the retention cutoff and buries the bucket
+ * partitions below it (O(partitions) metadata, no data rewrite) — the
+ * Outdate timestamp action.
  *
  * At cluster scale the same layout holds: shards spread writes across
  * executors, buckets bound the data any time-ranged query touches, and
@@ -136,7 +139,7 @@ final case class StoreOptions(
       * of the same key at a DIFFERENT timestamp (which the kv cache
       * misses) decodes driver-side instead of re-scanning the block
       * parquet. 0 disables. Epoch = the committed pointer: blocks only
-      * change on compact/outdate/vacuum, so puts (rick-only mutations)
+      * change on blockCompact/outdate, so puts (rick-only mutations)
       * leave cached blocks valid. (The reference's kp_cache —
       * key → value-log position — has no Spark analogue: there is no
       * value log.) */
@@ -350,7 +353,7 @@ final class HelixStore private (
   private val instanceId: String = java.util.UUID.randomUUID().toString
 
   // ---- cross-process mutation lock ------------------------------------
-  // Every MUTATION (put, compact, blockCompact, outdate, vacuum, open-
+  // Every MUTATION (put, blockCompact, outdate, vacuum, open-
   // time orphan cleanup) runs under an exclusive on-disk lock claimed by
   // atomically creating `_mutex` — so another process's put can never
   // interleave with this process's compaction swap (the lost-write and
@@ -784,14 +787,20 @@ final class HelixStore private (
 
   private def dirOf(name: String): Path = root.resolve(name)
   private def rowsPath: String = dirOf(ptr.rows).toString
-  private[graft] def hasRickRows: Boolean = { refreshPointer(); hasRows }
+  private[graft] def hasRickRows: Boolean = {
+    refreshPointer()
+    listLayer(dirOf(ptr.rows)).nonEmpty
+  }
   /** Parquet files currently in one rick (shard, bucket) partition —
     * the observable effect of [[StoreOptions.putWritersPerPartition]]. */
   private[graft] def rickFileCount(shard: Int, bucket: Long): Int = {
     refreshPointer()
     dataFiles(partitionDir(dirOf(ptr.rows), shard, bucket)).size
   }
-  private[graft] def hasBlockLayer: Boolean = { refreshPointer(); hasBlocks }
+  private[graft] def hasBlockLayer: Boolean = {
+    refreshPointer()
+    ptr.blocks.exists(b => listLayer(dirOf(b)).nonEmpty)
+  }
   private[graft] def hasManifestLayer: Boolean = { refreshPointer(); ptr.manifest.isDefined }
 
   // ---- write sequence (LWW total order) -------------------------------
@@ -916,17 +925,6 @@ final class HelixStore private (
       }
     if (Files.isDirectory(dir)) walk(dir).sortBy(_.toString) else Seq.empty
   }
-
-  /** True when at least one (shard, bucket) partition actually exists —
-    * outdate can leave empty shard dirs behind, which must not count. */
-  private def hasDataDirs(r: Path): Boolean =
-    Files.exists(r) && listDir(r).exists { d =>
-      d.getFileName.toString.startsWith("shard=") &&
-        listDir(d).exists(_.getFileName.toString.startsWith("bucket="))
-    }
-  private def hasRows: Boolean = hasDataDirs(dirOf(ptr.rows))
-  private def hasBlocks: Boolean = ptr.blocks.exists(b => hasDataDirs(dirOf(b)))
-  private def hasData: Boolean = hasRows || hasBlocks
 
   /** The (shard, bucket) partitions of `layer` whose bucket lies in
     * [b0, b1], with their [[dataFiles]], sorted: one listing of the layer
@@ -1093,8 +1091,9 @@ final class HelixStore private (
   /** Append a batch of entries (columns: key BINARY, ts LONG, value
     * BINARY; each is cast to that type and other columns are dropped,
     * so every rick file matches [[HelixStore.RickSchema]]; a batch
-    * missing one fails naming it). Routing = shard/bucket partition
-    * columns; one shuffle-free
+    * missing one fails naming it, and an entry with a NULL key, ts or
+    * value fails the put naming the column, with nothing written).
+    * Routing = shard/bucket partition columns; one shuffle-free
     * partitioned write. Synchronized with compactions so a batch can't
     * land in a rows generation that is being swapped out.
     *
@@ -1126,8 +1125,14 @@ final class HelixStore private (
     val missing = EntryColumns.filterNot(c => scala.util.Try(batch.col(c)).isSuccess)
     require(missing.isEmpty, s"put: entries lack column ${missing.mkString(", ")} " +
       s"(need key BINARY, ts LONG, value BINARY; got ${batch.columns.mkString(", ")})")
-    val entries = batch.select(
-      EntryColumns.map(c => col(c).cast(RickSchema(c).dataType).as(c)): _*)
+    // NULLs fail inside the write's own job: a NULL ts would land in the
+    // `__HIVE_DEFAULT_PARTITION__` bucket dir, which no listing reads,
+    // and a NULL key or value breaks point reads and the block encode
+    val entries = batch.select(EntryColumns.map { c =>
+      val v = col(c).cast(RickSchema(c).dataType)
+      when(v.isNull, raise_error(lit(s"put: an entry has a NULL $c " +
+        "(key, ts and value must all be non-NULL)"))).otherwise(v).as(c)
+    }: _*)
     // mutex: excludes other PROCESSES' compaction swaps (reentrant under
     // this instance's own background compaction); putGate: excludes only
     // the brief commit window, during which the target rick generation
@@ -1263,7 +1268,7 @@ final class HelixStore private (
       probes: Seq[(Array[Byte], Long)], decompress: Boolean)(
       blocksOf: Seq[Array[Byte]] => Map[ByteBuffer, Seq[BinBlock]]): Seq[Option[Array[Byte]]] = {
     // logical retention: an outdated bucket is invisible in BOTH layers
-    // (rawEntries applies the same cutoff to queries)
+    // (toDFWithPartitions lists queries' buckets from the same cutoff)
     if (bucket < p.minb) return probes.map(_ => None)
     val keys = if (!decompress) Nil
       else probes.map(_._1).distinctBy(ByteBuffer.wrap).filter(blockMayContain(p, shard, bucket, _))
@@ -1315,8 +1320,8 @@ final class HelixStore private (
   // An uncached get lists and reads a partition dir per layer; repeated
   // point reads are the reference's kv_cache sweet spot. Invalidation epoch =
   // (committed pointer, max minted write-seq): every mutation moves one
-  // of the two — put/directPut mint a seq file, compact/blockCompact/
-  // outdate commit the pointer — including mutations by OTHER instances,
+  // of the two — put/directPut mint a seq file, blockCompact/outdate
+  // commit the pointer — including mutations by OTHER instances,
   // so a hit can never serve a superseded value. Both epoch components
   // are driver-side metadata reads (`_current` is re-read by
   // refreshPointer already; `_seqs` is one dir listing).
@@ -1372,7 +1377,7 @@ final class HelixStore private (
   // ---- KC compressed-block cache (reference cache.rs kc_cache) --------
   // (shard, bucket, key) → that key's undecoded blocks in the committed
   // block layer. Valid for the lifetime of one committed pointer: puts
-  // mint seqs but never touch blocks, so only compact/outdate/vacuum
+  // mint seqs but never touch blocks, so only blockCompact/outdate
   // (pointer commits) invalidate — strictly fewer invalidations than the
   // kv epoch. Entries are whole compressed blocks, decoded on each hit
   // (the reference's kc cache holds compressed bytes too).
@@ -1626,55 +1631,14 @@ final class HelixStore private (
     * instance compacting concurrently). */
   private val compactionMutex = new Object
 
-  /** Rewrite the rick layer into one file per partition sorted by
-    * (key, ts) with last-write-wins applied — the rick → SSTable
-    * compaction (reference: src/level.rs:356-470). Parallel per
-    * partition; the swap commits via one atomic pointer rename, so a
-    * crash leaves either the old or the new generation intact. Puts of
-    * this instance proceed concurrently: the rewrite works off a file
-    * snapshot, and entries appended meanwhile are moved into the new
-    * generation inside the brief put-excluded commit window. */
-  def compact(): Unit = compactionMutex.synchronized { withMutex {
-    refreshPointer()
-    val cur = ptr
-    val rick = listLayer(dirOf(cur.rows))
-    // no part file to rewrite (bucket dirs can exist with zero part
-    // files, e.g. post-outdate) — nothing to do
-    if (rick.nonEmpty) {
-      val g = allocGen(cur)
-      val newRows = s"r-$g"
-      val snapshot = rick.flatMap(_.files)
-      // physical reclaim of logically-outdated buckets happens here —
-      // the LSM discipline: retention marks, compaction drops
-      val raw = readLayer(RickSchema, dirOf(cur.rows), rick.filter(_.bucket >= cur.minb))
-      // per-shard LWW, matching toDFWithPartitions and blockCompact
-      val w = Window.partitionBy("shard", "key", "ts")
-        .orderBy(col("seq").desc, col("subseq").desc, col("value").desc)
-      raw.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .drop("rn")
-        .repartition(col("shard"), col("bucket"))
-        .sortWithinPartitions("key", "ts")
-        .write.mode("overwrite").partitionBy("shard", "bucket")
-        .parquet(dirOf(newRows).toString)
-      crashHook("compact:staged")
-      withPutsExcluded {
-        copyLeftovers(dirOf(cur.rows), snapshot.toSet, dirOf(newRows))
-        crashHook("compact:leftovers-copied")
-        commit(cur.copy(gen = g, rows = newRows))
-      }
-      crashHook("compact:committed")
-      bury(Seq(cur.rows)) // deferred deletion: in-flight readers drain first
-    }
-  }}
-
   /** Fold BOTH layers into fresh compressed block ("SSTable") files —
     * per (key, shard, bucket) one delta-encoded block (reference:
     * src/level.rs:356-470 + fn_registry.rs compress_entries) — plus a
     * rebuilt min/max-key manifest and an empty rick generation. All
     * three flip in ONE atomic pointer commit; the absorbed old
-    * generations are deleted only after the commit, so a crash
-    * mid-compaction never loses committed entries. One groupByKey
-    * shuffle; block size is bounded by the bucket. */
+    * generations are buried only after the commit (vacuum deletes them
+    * later), so a crash mid-compaction never loses committed entries.
+    * One groupByKey shuffle; block size is bounded by the bucket. */
   def blockCompact(): Unit = compactionMutex.synchronized { withMutex {
     compactionsRun.incrementAndGet()
     refreshPointer()
@@ -1774,32 +1738,25 @@ final class HelixStore private (
     * the cutoff can't move under a running compaction's snapshot. */
   def outdate(ts: Long): Unit = compactionMutex.synchronized { withMutex {
     refreshPointer()
-    if (!hasData) return
-    val cutoff = ts / opts.bucketSize // truncating, matching put()
-    // the commit (gen bump + cutoff) is the visibility point: other
-    // instances' reads and kv-cache epochs observe it on their next
-    // pointer refresh
-    commit(ptr.copy(gen = ptr.gen + 1,
-      minb = math.max(ptr.minb, cutoff)))
-    crashHook("outdate:committed")
-    // graveyard the now-invisible bucket dirs (relative paths) so vacuum
-    // reclaims them once retention has drained in-flight readers
-    val dataRoots = Seq(ptr.rows).filter(_ => hasRows) ++
-      ptr.blocks.filter(_ => hasBlocks)
-    val dropped = dataRoots.flatMap { root0 =>
-      val r = dirOf(root0)
-      listDir(r)
-        .filter(_.getFileName.toString.startsWith("shard="))
-        .flatMap { shardDir =>
-          listDir(shardDir)
-            .filter { p =>
-              val n = p.getFileName.toString
-              n.startsWith("bucket=") && n.stripPrefix("bucket=").toLong < cutoff
-            }
-            .map(p => s"$root0/${shardDir.getFileName}/${p.getFileName}")
-        }
+    val p = ptr
+    // each layer's partitions, listed once from one pointer snapshot: a
+    // store with none has nothing to age out and commits nothing
+    val layers = (Seq(p.rows) ++ p.blocks).map(g => g -> listLayer(dirOf(g)))
+    if (layers.exists(_._2.nonEmpty)) {
+      val cutoff = ts / opts.bucketSize // truncating, matching put()
+      // the commit (gen bump + cutoff) is the visibility point: other
+      // instances' reads and kv-cache epochs observe it on their next
+      // pointer refresh
+      commit(p.copy(gen = p.gen + 1, minb = math.max(p.minb, cutoff)))
+      crashHook("outdate:committed")
+      // graveyard the now-invisible bucket dirs (relative paths) so vacuum
+      // reclaims them once retention has drained in-flight readers
+      val dropped = for {
+        (g, parts) <- layers
+        pt <- parts if pt.bucket < cutoff
+      } yield root.relativize(partitionDir(dirOf(g), pt.shard, pt.bucket)).toString
+      if (dropped.nonEmpty) bury(dropped)
     }
-    if (dropped.nonEmpty) bury(dropped)
   }}
 
   // ---- background compaction scheduling -------------------------------

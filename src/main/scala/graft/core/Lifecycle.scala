@@ -70,11 +70,9 @@ object Lifecycle {
     * path (reference compact_sched.rs — a rick_range boundary must not
     * stall ingestion for a full compaction; `store.awaitCompactions()`
     * is the barrier when the caller needs the result) and Outdate drops
-    * aged buckets. `asyncCompaction = false` restores the inline,
-    * blocking compaction. Returns the actions taken. */
+    * aged buckets. Returns the actions taken. */
   def putReviewed(store: HelixStore, entries: DataFrame,
-      reviewer: TimestampReviewer,
-      asyncCompaction: Boolean = true): Seq[TimestampAction] = {
+      reviewer: TimestampReviewer): Seq[TimestampAction] = {
     // pin the batch so the write and the max-ts probe see the same data
     // (a re-evaluated source could drift between the two passes)
     val pinned = entries.cache()
@@ -84,9 +82,7 @@ object Lifecycle {
       store.put(pinned)
       val actions = reviewer.observe(maxRow.getLong(0))
       actions.foreach {
-        case CompactAction(_, _) =>
-          if (asyncCompaction) store.scheduleBlockCompact()
-          else store.blockCompact()
+        case CompactAction(_, _) => store.scheduleBlockCompact()
         case OutdateAction(before) => store.outdate(before + 1) // drop <= before
       }
       actions

@@ -113,7 +113,7 @@ class HelixStoreSpec extends SparkTestBase {
     store.put(entriesDF(Seq(("k", 7L, "old"))))
     store.put(entriesDF(Seq(("k", 7L, "new"))))
     assert(store.get("k".getBytes, 7L).map(new String(_)).contains("new"))
-    store.compact()
+    store.blockCompact()
     assert(store.get("k".getBytes, 7L).map(new String(_)).contains("new"),
       "LWW must survive compaction")
     assert(store.toDF.count() == 1)
@@ -124,38 +124,78 @@ class HelixStoreSpec extends SparkTestBase {
       val store = HelixStore.open(spark, tmpDir("hs-batchdup"))
       store.put(entriesDF(Seq(("dup", 1L, "first"), ("dup", 1L, "second"))))
       val v = store.get("dup".getBytes, 1L).map(new String(_)).get
-      store.compact() // winner must also survive compaction unchanged
+      store.blockCompact() // winner must also survive compaction unchanged
       assert(store.get("dup".getBytes, 1L).map(new String(_)).contains(v))
       v
     }
     assert(winners.distinct.size == 1, s"nondeterministic LWW: $winners")
   }
 
-  test("compact rewrites each partition into one sorted file") {
+  /** The committed pointer of the store at `dir`: its `name=value` lines
+    * (`rows`, `blocks`, `manifest`, ...). */
+  private def pointerOf(dir: String): Map[String, String] =
+    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, "_current")))
+      .linesIterator.map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
+
+  test("blockCompact writes each partition into one file of ts-ordered blocks") {
     val dir = tmpDir("hs-cmp")
     val store = HelixStore.open(spark, dir, StoreOptions(numShards = 2, bucketSize = 100))
     for (batch <- 0 until 5)
       store.put(entriesDF((0 until 10).map(k => (s"key$k", (batch * 10).toLong, "v"))))
-    store.compact()
+    store.blockCompact()
     import scala.jdk.CollectionConverters._
-    // inspect only the LIVE rows generation: superseded generations stay
+    // inspect only the LIVE generations: superseded generations stay
     // on disk (graveyard retention for in-flight readers) until vacuum
-    val rowsGen = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(dir, "_current")))
-      .linesIterator.find(_.startsWith("rows=")).get.stripPrefix("rows=")
-    val counts = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, rowsGen))
+    val live = pointerOf(dir)
+    val blocksDir = java.nio.file.Paths.get(dir, live("blocks"))
+    val counts = java.nio.file.Files.walk(blocksDir)
       .iterator().asScala
       .filter(_.toString.endsWith(".parquet")).toList
       .groupBy(_.getParent.toString).values.map(_.size)
-    assert(counts.nonEmpty && counts.forall(_ == 1), "one file per partition after compact")
+    assert(counts.nonEmpty && counts.forall(_ == 1), "one file per partition after blockCompact")
+    // one block per key (all ts fall in bucket 0), its five entries in
+    // ascending ts: a zero first delta, then steps of 10
+    val deltas = spark.read.parquet(blocksDir.toString).collect()
+      .map(r => new String(r.getAs[Array[Byte]]("key")) -> r.getAs[Seq[Long]]("deltas"))
+    assert(deltas.map(_._1).sorted.sameElements((0 until 10).map(k => s"key$k").sorted))
+    assert(deltas.forall(_._2 == Seq(0L, 10L, 10L, 10L, 10L)), deltas.mkString(", "))
     assert(store.toDF.count() == 50)
     // vacuum(0) may now physically delete the superseded generation
     store.vacuum(0L)
     val gens = new java.io.File(dir).listFiles().map(_.getName)
       .filter(_.matches("^[rbm]-[0-9]+$")).toSet
-    assert(gens == Set(rowsGen), s"only the live generation survives vacuum(0): $gens")
+    assert(gens == Set(live("rows"), live("blocks"), live("manifest")),
+      s"only the live generations survive vacuum(0): $gens")
     assert(store.toDF.count() == 50, "vacuum must not touch live data")
   }
+
+  /** The cause chain of `t`, outermost first. */
+  private def causes(t: Throwable): Seq[Throwable] =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null).toSeq
+
+  /** A put of one good entry and one entry whose `column` is NULL fails
+    * naming the column, writes nothing, and leaves the store usable. */
+  private def assertPutRejectsNull(column: String): Unit = {
+    val store = HelixStore.open(spark, tmpDir(s"hs-null-$column"),
+      StoreOptions(numShards = 2, bucketSize = 10))
+    val entry = Seq[Any]("nk".getBytes, 3L, "v".getBytes)
+    val bad = spark.createDataFrame(spark.sparkContext.parallelize(Seq(
+        Row("ok".getBytes, 1L, "v".getBytes),
+        Row.fromSeq(entry.updated(HelixStore.EntryColumns.indexOf(column), null))), 2),
+      entrySchema)
+    val err = intercept[Exception](store.put(bad))
+    assert(causes(err).exists(c => Option(c.getMessage).exists(_.contains(s"NULL $column"))),
+      s"put must name the NULL $column: $err")
+    assert(store.toDF.count() == 0, s"a put rejected for a NULL $column wrote rows")
+    store.put(entriesDF(Seq(("ok", 1L, "v"))))
+    assert(store.toDF.count() == 1)
+    assert(store.get("ok".getBytes, 1L).map(new String(_)).contains("v"))
+    store.close()
+  }
+
+  test("put rejects an entry with a NULL key") { assertPutRejectsNull("key") }
+  test("put rejects an entry with a NULL ts") { assertPutRejectsNull("ts") }
+  test("put rejects an entry with a NULL value") { assertPutRejectsNull("value") }
 
   test("unordered scan returns the same rows as ordered scan") {
     val store = HelixStore.open(spark, tmpDir("hs-noord"), StoreOptions(numShards = 2, bucketSize = 10))
@@ -614,7 +654,7 @@ class HelixStoreSpec extends SparkTestBase {
     a.put(entriesDF(Seq(("ia", 1L, "va"))))
     b.blockCompact() // b swaps generations under the cross-process lock
     a.put(entriesDF(Seq(("ib", 2L, "vb")))) // a must land in the NEW generation
-    b.compact()
+    b.blockCompact()
     assert(a.toDF.count() == 2 && b.toDF.count() == 2)
     assert(b.get("ia".getBytes, 1L).map(new String(_)).contains("va"))
     assert(a.get("ib".getBytes, 2L).map(new String(_)).contains("vb"))
@@ -858,14 +898,14 @@ class HelixStoreSpec extends SparkTestBase {
     assert(store.toDF.collect().map(_.getAs[Long]("ts")).toSeq == Seq(25L))
     // compaction physically reclaims: the rewritten generation holds
     // only live buckets, and vacuum removes the graveyarded old dirs
-    store.compact()
+    store.blockCompact()
     store.vacuum(0L)
     val bucketDirs = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
       .iterator()
     val liveBuckets = scala.jdk.CollectionConverters.IteratorHasAsScala(bucketDirs)
       .asScala.map(_.getFileName.toString).filter(_.startsWith("bucket=")).toSet
     assert(liveBuckets == Set("bucket=2"),
-      s"only the surviving bucket dir remains after compact+vacuum: $liveBuckets")
+      s"only the surviving bucket dir remains after blockCompact+vacuum: $liveBuckets")
     assert(store.toDF.count() == 1)
     // fully-outdated store block-compacts to a clean empty state
     store.outdate(1000L)
@@ -917,6 +957,38 @@ class HelixStoreSpec extends SparkTestBase {
     assert(store.get("a".getBytes, 5L).isEmpty)
   }
 
+  test("outdate buries exactly the sub-cutoff bucket dirs of both layers") {
+    import scala.jdk.CollectionConverters._
+    val dir = tmpDir("hs-outbury")
+    val store = HelixStore.open(spark, dir, StoreOptions(numShards = 2, bucketSize = 10))
+    val keys = (0 until 4).map(k => s"ob$k")
+    // buckets 0..3 in the block layer, then buckets 0..3 again in the rick
+    store.put(entriesDF(for (k <- keys; b <- 0 until 4) yield (k, b * 10L + 1, s"old$b")))
+    store.blockCompact()
+    store.put(entriesDF(for (k <- keys; b <- 0 until 4) yield (k, b * 10L + 2, s"new$b")))
+    val live = pointerOf(dir)
+    /** `gen`'s bucket dirs, as (shard dir, bucket). */
+    def bucketDirs(gen: String): Set[(String, Long)] = {
+      val layer = java.nio.file.Paths.get(dir, gen)
+      java.nio.file.Files.walk(layer).iterator().asScala.toSeq
+        .filter(_.getFileName.toString.startsWith("bucket="))
+        .map(d => (d.getParent.getFileName.toString,
+          d.getFileName.toString.stripPrefix("bucket=").toLong))
+        .toSet
+    }
+    val layers = Seq(live("rows"), live("blocks"))
+    val before = layers.map(g => g -> bucketDirs(g)).toMap
+    for (g <- layers)
+      assert(before(g).map(_._2) == Set(0L, 1L, 2L, 3L), s"$g before outdate: ${before(g)}")
+    store.outdate(20L) // cutoff: bucket 2
+    store.vacuum(0L)
+    for (g <- layers)
+      assert(bucketDirs(g) == before(g).filter(_._2 >= 2L),
+        s"$g after outdate + vacuum: ${bucketDirs(g)}, before: ${before(g)}")
+    val left = store.toDF.collect().map(r => (new String(r.getAs[Array[Byte]]("key")), r.getAs[Long]("ts")))
+    assert(left.toSet == (for (k <- keys; b <- 2 until 4; t <- Seq(1L, 2L)) yield (k, b * 10L + t)).toSet)
+  }
+
   test("commit-time ledger pruning cannot let a second instance re-mint seqs") {
     // Instance B caches a low seq counter; instance A then mints higher
     // seqs and COMMITS (a compaction), which prunes the `_seqs` ledger
@@ -930,7 +1002,7 @@ class HelixStoreSpec extends SparkTestBase {
     sB.put(entriesDF(Seq(("k", 1L, "b-seed")))) // B's counter now low
     sA.put(entriesDF(Seq(("k", 1L, "a-mid1"))))
     sA.put(entriesDF(Seq(("k", 1L, "a-mid2"))))
-    sA.compact() // stamps seqhw into the pointer and prunes the ledger
+    sA.blockCompact() // stamps seqhw into the pointer and prunes the ledger
     sB.put(entriesDF(Seq(("k", 1L, "b-new")))) // must mint ABOVE the stamp
     assert(sA.get("k".getBytes, 1L).map(new String(_)).contains("b-new"),
       "B's newer write must win LWW from A's view")
@@ -1301,7 +1373,7 @@ class HelixStoreSpec extends SparkTestBase {
       * brace at the member indent. */
     def body(head: String): (Int, Int) = {
       val at = src.indexOf(head)
-      val end = src.indexOf("\n  }\n", at)
+      val end = src.indexOf("\n  }", at)
       assert(at >= 0 && end > at, s"$head not found")
       (at, end)
     }
@@ -1331,13 +1403,31 @@ class HelixStoreSpec extends SparkTestBase {
     for (other <- Seq("ParquetFileReader", "HadoopInputFile", "ParquetReadSupport",
         "OrcFileFormat", "InMemoryFileIndex", "DataSource("))
       assert(!src.contains(other), s"a second read path: $other")
-    // the layer listing, not a walk of whole layers, decides what a
-    // scan reads and whether it needs the LWW window
-    for (reader <- Seq("def scan(", "private def toDFWithPartitions(", "private def rawEntries(")) {
-      val (a, b) = body(reader)
-      for (walk <- Seq("hasDataDirs", "hasData", "hasRows", "hasBlocks"))
-        assert(!src.substring(a, b).contains(walk), s"$reader walks a layer through $walk")
+    // one compaction path and one listing of the layout: no row-level
+    // rewrite, and no walk of whole layers beside listLayer
+    for (gone <- Seq("def compact(", "hasDataDirs", "hasData", "hasRows", "hasBlocks"))
+      assert(!src.contains(gone), s"HelixStore still has $gone")
+    // a `shard=`/`bucket=` dir name is parsed only inside listLayer;
+    // outside it, code only builds such a name (an interpolated string)
+    val listing = body("private def listLayer(")
+    def inListing(i: Int): Boolean = i > listing._1 && i < listing._2
+    for (parse <- Seq("stripPrefix(", "toIntOption", "toLongOption"))
+      assert(hits(parse).nonEmpty && hits(parse).forall(inListing), s"$parse outside listLayer")
+    def inCode(i: Int): Boolean = {
+      val before = src.substring(src.lastIndexOf('\n', i) + 1, i).trim
+      !(before.startsWith("*") || before.startsWith("/*") || before.contains("//"))
     }
+    for (name <- Seq("shard=", "bucket="); i <- hits(name) if inCode(i) && !inListing(i))
+      assert(src.startsWith("s\"", i - 2), s"$name parsed outside listLayer at $i")
+    // the layer listing, not a walk of the layout, decides what a scan
+    // reads, whether it needs the LWW window, and what outdate buries
+    for (reader <- Seq("def scan(", "private def toDFWithPartitions(", "private def rawEntries(",
+        "def outdate(")) {
+      val (a, b) = body(reader)
+      for (walk <- Seq("listDir(", "dataFiles(", "Files.list", "Files.walk"))
+        assert(!src.substring(a, b).contains(walk), s"$reader lists the layout through $walk")
+    }
+    assert(src.substring(body("def outdate(")._1, body("def outdate(")._2).contains("listLayer("))
   }
 }
 

@@ -11,7 +11,7 @@ import graft.core.{HelixStore, StoreOptions}
 
 /** Crash-point property test for the store's commit protocol (verdict
   * r16 #5): a ScalaCheck-generated workload runs up to each named point
-  * inside compact / blockCompact / outdate, a crash is injected THERE
+  * inside blockCompact / outdate, a crash is injected THERE
   * (the hook throws, simulating process death between two protocol
   * steps), and a FRESH instance reopens the same path. Reference
   * contract: level.rs compaction must never tear — reopen must see
@@ -88,14 +88,9 @@ class StoreCrashSpec extends SparkTestBase {
 
   /** Crash points × the operation that reaches each. */
   private val scenarios: Seq[(String, String)] = Seq(
-    "compact" -> "compact:staged",
-    "compact" -> "compact:leftovers-copied",
-    "compact" -> "pointer:tmp-written",
-    "compact" -> "commit:begin",
-    "compact" -> "commit:pointer-durable",
-    "compact" -> "compact:committed",
     "blockCompact" -> "blockCompact:staged",
     "blockCompact" -> "blockCompact:leftovers-copied",
+    "blockCompact" -> "commit:begin",
     "blockCompact" -> "pointer:tmp-written",
     "blockCompact" -> "commit:pointer-durable",
     "blockCompact" -> "blockCompact:committed",
@@ -119,7 +114,6 @@ class StoreCrashSpec extends SparkTestBase {
       val died =
         try {
           op match {
-            case "compact" => st.compact()
             case "blockCompact" => st.blockCompact()
             case "outdate" => st.outdate(OutdateTs)
           }
@@ -151,7 +145,7 @@ class StoreCrashSpec extends SparkTestBase {
     // was building live in the OLD generation until the commit; a crash
     // between the leftover copy and the pointer swap must lose nothing
     // (a move instead of a copy fails exactly this test)
-    Seq("compact:leftovers-copied", "pointer:tmp-written").zipWithIndex.foreach {
+    Seq("blockCompact:leftovers-copied", "pointer:tmp-written").zipWithIndex.foreach {
       case (point, i) =>
         val dir = tmpDir(s"hs-crash-leftover-$i")
         val opts = StoreOptions(numShards = 2, bucketSize = BucketSize)
@@ -160,14 +154,14 @@ class StoreCrashSpec extends SparkTestBase {
         val concurrent = List(("k9", 42L, "mid-compaction-put"))
         var injected = false
         st.crashHook = {
-          case "compact:staged" if !injected =>
-            injected = true // the put below re-enters compact's mutex
+          case "blockCompact:staged" if !injected =>
+            injected = true // the put below re-enters blockCompact's mutex
             st.put(entriesDF(concurrent))
           case p if p == point => throw Boom(point)
           case _ => ()
         }
         val pre = stateOf(st) // collected BEFORE the hook-driven put
-        val died = try { st.compact(); false } catch { case Boom(_) => true }
+        val died = try { st.blockCompact(); false } catch { case Boom(_) => true }
         assert(died && injected, s"[$point] scenario did not run as staged")
         val re = HelixStore.open(spark, dir, opts)
         val got = stateOf(re)
@@ -228,9 +222,9 @@ class StoreCrashSpec extends SparkTestBase {
     assertInvisible("after blockCompact")
     st.put(entriesDF(Seq(("k0", 1L, "fresh"))))
     plant(dir)
-    st.compact()
+    st.blockCompact()
     val withFresh = pre.filterNot(e => e._1 == "k0" && e._2 == 1L) + (("k0", 1L, "fresh"))
-    assert(stateOf(st) == withFresh, "compact lost or invented entries")
+    assert(stateOf(st) == withFresh, "the second blockCompact lost or invented entries")
     assert(st.get("ghost".getBytes, 5L).isEmpty && st.multiGet(Seq(("ghost".getBytes, 5L))) == Seq(None))
     // a reopened instance (fresh caches) agrees
     val re = HelixStore.open(spark, dir, StoreOptions(numShards = 2, bucketSize = BucketSize))

@@ -10,7 +10,7 @@ import org.apache.spark.sql.types._
 import graft.core.{HelixStore, StoreOptions}
 
 /** Model-based randomized store test: a seeded random sequence of
-  * put / compact / blockCompact / outdate / reopen operations runs
+  * put / blockCompact / outdate / reopen operations runs
   * against the store AND an in-memory last-write-wins model; after
   * every mutation the full visible state must match. This is the
   * reference's scan scaffold (src/db.rs) generalized to arbitrary
@@ -89,8 +89,7 @@ class StoreModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
         case n if n <= 4 => // put a small batch (dup (key,ts) overwrites)
           putRandomBatch(store, rnd, keys, tsRange = 100, step, model)
           everPut = true
-        case 5 | 6 => store.compact()
-        case 7 => store.blockCompact()
+        case 5 | 6 | 7 => store.blockCompact()
         case 8 =>
           val cut = rnd.nextInt(100).toLong
           store.outdate(cut)
@@ -136,8 +135,7 @@ class StoreModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       rnd.nextInt(8) match {
         case n if n <= 4 => // put through a random instance
           putRandomBatch(actor, rnd, keys, tsRange = 60, step, model)
-        case 5 => actor.compact()
-        case 6 | 7 => actor.blockCompact()
+        case 5 | 6 | 7 => actor.blockCompact()
       }
       val expected = model.iterator
         .map { case ((k, ts), v) => (k, ts, v) }.toSet

@@ -56,10 +56,10 @@ class StoreSnapshotSpec extends SparkTestBase {
     val oldFull = store.toDF
     val oldScan = store.scan((0L, 1000L),
       ("".getBytes, "kzz".getBytes), ordered = false)
-    // the full mutation battery: overwriting puts, rick→level compaction,
-    // retention cutoff, block compaction — three generation swaps
+    // the full mutation battery: overwriting puts, block compaction,
+    // retention cutoff, a second block compaction — three generation swaps
     store.put(entriesDF(batchB))
-    store.compact()
+    store.blockCompact()
     store.outdate(30L)
     store.blockCompact()
     // fresh readers see the post-mutation state...
@@ -87,7 +87,7 @@ class StoreSnapshotSpec extends SparkTestBase {
     // consume part of the iteration, mutate the store mid-flight, drain
     val head = (0 until 5).map(_ => it.next()).toList
     store.put(entriesDF(batchB))
-    store.compact()
+    store.blockCompact()
     store.outdate(30L)
     val drained = head ++ Iterator.continually(it)
       .takeWhile(_.hasNext).map(_.next()).toList
@@ -106,7 +106,7 @@ class StoreSnapshotSpec extends SparkTestBase {
     val pre = rowsOf(store.toDF)
     val oldFull = store.toDF
     store.put(entriesDF(batchB))
-    store.compact()
+    store.blockCompact()
     // zero retention: the superseded generation's files are gone NOW —
     // the one state where the stale plan cannot be served
     store.vacuum(0L)
