@@ -6,6 +6,7 @@ import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.hadoop.ParquetInputFormat
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -190,11 +191,14 @@ final case class StoreOptions(
   *  - `maxPartitionBytes`: bytes per scan task for THIS scan only
   *    (smaller → more, smaller read units — the prefetch-buffer dial).
   *    Honored by planning the scan through a cloned session so the
-  *    rest of the session's conf is untouched.
+  *    rest of the session's conf is untouched. Setting it puts the
+  *    scan on the Spark read path whatever the range's size: split
+  *    sizing means nothing to an in-process read (see `HelixStore.scan`).
   *  - `targetPartitions`: output partition count of the scan (0 =
   *    leave to the optimizer/AQE). Ordered scans range-partition on
   *    (key, ts) into exactly this many partitions, preserving global
-  *    order; unordered scans round-robin. */
+  *    order; unordered scans round-robin. It applies on either read
+  *    path. */
 final case class ScanOptions(
     targetPartitions: Int = 0,
     maxPartitionBytes: Option[Long] = None,
@@ -240,6 +244,25 @@ object HelixStore {
   private[core] final case class RawEntry(key: Array[Byte], ts: Long, value: Array[Byte],
       seq: Long, subseq: Long, shard: Int, bucket: Long)
 
+  /** The store's one block decoder: the entries of `b` whose ts
+    * `keepTs` accepts, walked lazily off the delta-encoded timestamps;
+    * the payload is decoded at the first entry kept, so a block with
+    * none is never decoded. Block entries are already LWW winners, so
+    * their in-block position serves as the subseq tiebreak. A member of
+    * the object, so a task closure calling it captures only `codecs`. */
+  private[core] def blockEntries(b: BinBlock, codecs: Map[String, BlockCodec],
+      keepTs: Long => Boolean = _ => true): Iterator[RawEntry] = {
+    lazy val vals = codecs.getOrElse(b.codec, throw new IllegalArgumentException(
+      s"block encoded with unregistered codec '${b.codec}' " +
+        s"(registered: ${codecs.keys.mkString(", ")})")).decode(b.payload)
+    var t = b.t0
+    Iterator.range(0, b.deltas.length).flatMap { i =>
+      t += b.deltas(i)
+      if (keepTs(t)) Some(RawEntry(b.key, t, vals(i), b.seqs(i), i.toLong, b.shard, b.bucket))
+      else None
+    }
+  }
+
   // Product encoders are derived by Scala reflection; derived once here
   // rather than by an implicit import on every read of the blocks.
   private val BinBlockEncoder: Encoder[BinBlock] = Encoders.product[BinBlock]
@@ -257,6 +280,22 @@ object HelixStore {
     StructField("value", BinaryType), StructField("seq", LongType),
     StructField("subseq", LongType),
     StructField("shard", IntegerType), StructField("bucket", LongType)))
+  /** The entry columns, as a scan returns them. */
+  private val EntrySchema: StructType = StructType(EntryColumns.map(RickSchema(_)))
+  /** The largest scan read in process (see `HelixStore.scan`): its
+    * listed files, and the key and value bytes of the entries it
+    * decodes, each total at most this. Measured: single threaded, the
+    * in-process read costs about 5 µs per row plus 1 ms per file, while
+    * the Spark read has a floor of about 100–170 ms, 270–350 ms when the
+    * LWW window runs. On 4 cores, in store_serve's shape (8 shards,
+    * 10-ts buckets, 31 key and value bytes per entry), ranges of 16–24
+    * files holding rick files read in 97–169 ms in process against
+    * 273–346 ms on Spark; block-only ranges of 16–48 files and
+    * 10,000–25,000 rows in 105–154 against 105–134 ms; 64 files
+    * (2.2 MB, 80,000 rows) in 431 against 200 ms, and 320 files (11 MB)
+    * in 2.5 s against 0.4 s. The decoded half also bounds what the
+    * driver holds when the files compress far better than that. */
+  private[graft] val InProcessScanMaxBytes: Long = 1L << 20
   /** Block layer: one [[BinBlock]] per row. */
   val BlockSchema: StructType = BinBlockEncoder.schema
   /** Block manifest: one min/max-key row per (shard, bucket). */
@@ -686,10 +725,14 @@ final class HelixStore private (
   }
 
   /** Record superseded generation dirs for deferred deletion (caller
-    * holds the mutation lock). */
+    * holds the mutation lock). A dir already recorded keeps its entry
+    * and burial time. */
   private def bury(dirs: Seq[String]): Unit = {
     val now = System.currentTimeMillis()
-    writeGraveyard(readGraveyard() ++ dirs.map(_ -> now))
+    val buried = readGraveyard()
+    val known = buried.map(_._1).toSet
+    val fresh = dirs.distinct.filterNot(known)
+    if (fresh.nonEmpty) writeGraveyard(buried ++ fresh.map(_ -> now))
   }
 
   /** Physically delete graveyarded generations older than `olderThanMs`.
@@ -954,7 +997,8 @@ final class HelixStore private (
 
   /** The store's one parquet query: every read that builds a DataFrame
     * (scan, toDF, latest, compaction, seq recovery) goes through here;
-    * point reads and the manifest load use [[PartitionReader]] instead.
+    * point reads, the manifest load and scans under the broadcast
+    * threshold use [[PartitionReader]] instead.
     * The relation is built directly on a [[LayerIndex]] over `parts`,
     * the partitions the caller listed from one pointer snapshot, with
     * the layer's fixed schema: no data source resolution, no listing of
@@ -966,23 +1010,30 @@ final class HelixStore private (
     reader.baseRelationToDataFrame(HadoopFsRelation(new LayerIndex(layer, parts),
       PartitionSchema, dataColumnsOf(schema), None, new ParquetFileFormat, Map.empty)(reader))
 
-  /** The store's one in-process parquet read, for point reads and the
-    * manifest load: the rows of a few known files, read on the calling
-    * thread by Spark's own parquet reader, one `PartitionedFile` per data
-    * file. A get reads a few KB from one known dir; a query would pay the
-    * planner and a job for it. Row groups are not skipped: a compacted
+  /** The store's one in-process parquet read, for point reads, the
+    * manifest load and small scans: the rows of a few known files, read
+    * on the calling thread by Spark's own parquet reader, one
+    * `PartitionedFile` per data file. A get reads a few KB from one known
+    * dir; a query would pay the planner and a job for it. Row groups are
+    * not skipped: a compacted
     * partition holds its keys in arbitrary order, so every row group's
     * key range spans the pair's range, which the manifest has already
     * tested. Output rows are `dataCols` followed by `partCols` (filled
     * from the values a read passes), looked up through [[ordinal]].
     * Built once per store and file kind: building the reader broadcasts
-    * the Hadoop conf. */
+    * the Hadoop conf. That conf turns parquet's vectored IO off, so each
+    * row group is read on the calling thread rather than handed to an
+    * async pool the caller then waits on; Spark tasks keep the session
+    * default. */
   private final class PartitionReader(dataCols: StructType, partCols: StructType) {
     val ordinal: Map[String, Int] = (dataCols ++ partCols).map(_.name).zipWithIndex.toMap
-    private val read = new ParquetFileFormat().buildReaderWithPartitionValues(
-      spark, dataCols, partCols, dataCols, Nil,
-      Map(FileFormat.OPTION_RETURNING_BATCH -> "false"),
-      spark.sessionState.newHadoopConf())
+    private val read = {
+      val conf = spark.sessionState.newHadoopConf()
+      conf.setBoolean(ParquetInputFormat.HADOOP_VECTORED_IO_ENABLED, false)
+      new ParquetFileFormat().buildReaderWithPartitionValues(
+        spark, dataCols, partCols, dataCols, Nil,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
+    }
 
     /** Up to `limit` rows of `files` that `keep` accepts, with partition
       * values `values`, copied (the reader reuses its row objects); each
@@ -1062,21 +1113,9 @@ final class HelixStore private (
       // local vals only inside the closure: the task must never
       // capture the store instance (SparkSession isn't serializable)
       val codecsByName = opts.codecs
-      // block entries are already LWW winners; their in-block position
-      // serves as the subseq tiebreak
       prune(readLayer(BlockSchema, dirOf(dir), blocks, reader), "t0", "t1")
         .as(BinBlockEncoder)
-        .flatMap { b =>
-          val codec = codecsByName.getOrElse(b.codec, throw new IllegalArgumentException(
-            s"block encoded with unregistered codec '${b.codec}' " +
-              s"(registered: ${codecsByName.keys.mkString(", ")})"))
-          val vals = codec.decode(b.payload)
-          var t = b.t0
-          (0 until b.deltas.length).iterator.map { i =>
-            t += b.deltas(i)
-            RawEntry(b.key, t, vals(i), b.seqs(i), i.toLong, b.shard, b.bucket)
-          }
-        }(RawEntryEncoder).toDF()
+        .flatMap(b => HelixStore.blockEntries(b, codecsByName))(RawEntryEncoder).toDF()
     }
     (rows ++ decoded).reduceOption(_.unionByName(_)).getOrElse(emptyEntriesWithMeta)
   }
@@ -1290,14 +1329,19 @@ final class HelixStore private (
     case None => Map.empty
     case Some(b) =>
       val want = keys.map(ByteBuffer.wrap).toSet
-      val o = blockPartitions.ordinal
-      val kO = o("key")
+      val kO = blockPartitions.ordinal("key")
       blockPartitions.pair(dirOf(b), shard, bucket)(r => want(ByteBuffer.wrap(r.getBinary(kO))))
-        .map(r => BinBlock(r.getBinary(kO), r.getInt(o("shard")), r.getLong(o("bucket")),
-          r.getLong(o("t0")), r.getLong(o("t1")), r.getArray(o("deltas")).toLongArray(),
-          r.getArray(o("seqs")).toLongArray(), r.getUTF8String(o("codec")).toString,
-          r.getBinary(o("payload"))))
+        .map(binBlockOf)
         .groupBy(blk => ByteBuffer.wrap(blk.key))
+  }
+
+  /** A row the block reader returned, as a [[BinBlock]]. */
+  private def binBlockOf(r: InternalRow): BinBlock = {
+    val o = blockPartitions.ordinal
+    BinBlock(r.getBinary(o("key")), r.getInt(o("shard")), r.getLong(o("bucket")),
+      r.getLong(o("t0")), r.getLong(o("t1")), r.getArray(o("deltas")).toLongArray(),
+      r.getArray(o("seqs")).toLongArray(), r.getUTF8String(o("codec")).toString,
+      r.getBinary(o("payload")))
   }
 
   /** (seq, subseq, value) of every rick row at one of the `want`ed
@@ -1420,34 +1464,13 @@ final class HelixStore private (
       8L * (b.deltas.length + b.seqs.length))
 
   /** Best (seq, subseq, value) for an exact-ts match across a key's
-    * cached blocks. Walks the delta-encoded timestamps first and decodes
-    * a block's payload only when it actually contains `ts`. */
+    * cached blocks; a block's payload is decoded only when it actually
+    * contains `ts` (see [[HelixStore.blockEntries]]). */
   private def blockPointLookup(blocks: Seq[BinBlock],
-      ts: Long): Option[(Long, Long, Array[Byte])] = {
-    var best: (Long, Long, Array[Byte]) = null
-    blocks.foreach { b =>
-      var vals: Seq[Array[Byte]] = null
-      var t = b.t0
-      var i = 0
-      while (i < b.deltas.length) {
-        t += b.deltas(i)
-        if (t == ts) {
-          if (vals == null) {
-            val codec = opts.codecs.getOrElse(b.codec,
-              throw new IllegalArgumentException(
-                s"block encoded with unregistered codec '${b.codec}' " +
-                  s"(registered: ${opts.codecs.keys.mkString(", ")})"))
-            vals = codec.decode(b.payload)
-          }
-          // in-block position is the subseq tiebreak, as in rawEntries
-          val cand = (b.seqs(i), i.toLong, vals(i))
-          if (best == null || cmpLww(cand, best) > 0) best = cand
-        }
-        i += 1
-      }
-    }
-    Option(best)
-  }
+      ts: Long): Option[(Long, Long, Array[Byte])] =
+    blocks.iterator.flatMap(blockEntries(_, opts.codecs, _ == ts))
+      .map(e => (e.seq, e.subseq, e.value))
+      .reduceOption((a, b) => if (cmpLww(a, b) >= 0) a else b)
 
   /** The LWW ordering the Spark reads' rank window sorts by — (seq
     * desc, subseq desc, value desc) — as a driver-side comparator. */
@@ -1464,6 +1487,21 @@ final class HelixStore private (
     * the reference's mux-merged iterator (src/db.rs:67, iterator.rs),
     * expressed as a range-partitioned sort. Bounds follow the reference
     * TimeRange semantics: [start, end) on ts, [low, high) on key.
+    *
+    * Two read paths, chosen after one listing of the range's partitions
+    * in both layers from one pointer snapshot:
+    *  - in process, when `maxPartitionBytes` is unset and the listed
+    *    (compressed) files total at most [[HelixStore.InProcessScanMaxBytes]]:
+    *    the rows are read and merged last-write-wins on the calling
+    *    thread, here at `scan()`, and the frame is a local relation that
+    *    later mutations and vacuums cannot change (see [[scanInProcess]]).
+    *    If the entries it decodes pass that many key and value bytes,
+    *    the read stops and the range takes the Spark path;
+    *  - otherwise a Spark query over exactly the listed files, read
+    *    when the frame runs; a plan built before a compaction or an
+    *    outdate still reads its generation until vacuum removes it.
+    * The ordering, comparator, `targetPartitions` and `ordered = false`
+    * apply alike to either path.
     *
     * User-defined ordering — the reference's `Comparator` trait
     * (src/util.rs:21; LexicalComparator and NoOrderComparator are the
@@ -1507,16 +1545,22 @@ final class HelixStore private (
         s
       case None => spark
     }
-    // only the buckets [b0, b1] are listed and read; key range + BOTH ts
-    // bounds also prune BELOW the block-decode flatMap (see rawEntries:
-    // t0 < hi on the block start, t1 >= lo on the block max written at
-    // compaction) — the per-entry filters here stay for the entries a
-    // surviving block carries outside the range
-    val filtered = toDFWithPartitions((b0, b1), reader,
+    // only the buckets [b0, b1] are listed and read, from one pointer
+    // snapshot; a small range is read in process
+    val listed = listRange((b0, b1))
+    val inProcess =
+      if (scanOpts.maxPartitionBytes.isEmpty && listed.bytes <= InProcessScanMaxBytes)
+        scanInProcess(listed, t0, t1, k0, k1)
+      else None
+    // key range + BOTH ts bounds also prune BELOW the block-decode
+    // flatMap (see rawEntries: t0 < hi on the block start, t1 >= lo on
+    // the block max written at compaction) — the per-entry filters here
+    // stay for the entries a surviving block carries outside the range
+    val entries = inProcess.getOrElse(toDFWithPartitions(listed, reader,
         pruneKey = Some((k0, k1)), pruneTsLt = Some(t1), pruneTsGe = Some(t0))
       .filter(col("bucket").between(b0, b1) && col("ts") >= t0 && col("ts") < t1 &&
         col("key") >= lit(k0) && col("key") < lit(k1))
-      .select(EntryColumns.map(col): _*)
+      .select(EntryColumns.map(col): _*))
     // ordered=false is the reference's NoOrderComparator scan (util.rs):
     // skip the global sort when the consumer doesn't need key order.
     // A user comparator prepends its sort-key expression; (key, ts)
@@ -1526,16 +1570,67 @@ final class HelixStore private (
       case None => Seq(col("key"), col("ts"))
     }
     (ordered, scanOpts.targetPartitions) match {
-      case (true, 0) => filtered.orderBy(sortCols: _*)
+      case (true, 0) => entries.orderBy(sortCols: _*)
       // explicit parallelism, order preserved: range-partition on the
       // sort key into exactly n partitions, then sort within each —
       // the same physical shape orderBy plans, with the count pinned
-      case (true, n) => filtered
+      case (true, n) => entries
         .repartitionByRange(n, sortCols: _*)
         .sortWithinPartitions(sortCols: _*)
-      case (false, 0) => filtered
-      case (false, n) => filtered.repartition(n)
+      case (false, 0) => entries
+      case (false, n) => entries.repartition(n)
     }
+  }
+
+  /** The live entries of the rectangle [t0, t1) × [k0, k1) in listing
+    * `l`, read in process on the calling thread by the point reads'
+    * [[PartitionReader]], with no Spark job: the rick rows inside the
+    * rectangle, and the entries inside it of the blocks that can hold
+    * one (`t0 < t1`, `t1 >= t0` on the block's bounds, key in range),
+    * merged last-write-wins per (shard, key, ts) by [[cmpLww]], the
+    * rank window's order, into one map as they are read. Returned as a
+    * local relation of the entry columns: the rows are read here, not
+    * when the frame runs. The relation is one partition, as the rows
+    * already sit on the driver: a sort or a count above it then runs as
+    * one task, with no exchange and no range-sampling job. None once
+    * the winners' key and value bytes pass [[InProcessScanMaxBytes]]
+    * (checked after each partition): the caller then reads the range
+    * through Spark, so the merge never holds more than that plus one
+    * partition's rows. */
+  private def scanInProcess(l: Listing, t0: Long, t1: Long, k0: Array[Byte],
+      k1: Array[Byte]): Option[DataFrame] = {
+    def inKeys(k: Array[Byte]): Boolean =
+      BytesOrdering.compare(k, k0) >= 0 && BytesOrdering.compare(k, k1) < 0
+    def lww(e: RawEntry) = (e.seq, e.subseq, e.value)
+    val winners = new java.util.HashMap[(Int, ByteBuffer, Long), RawEntry]()
+    var held = 0L
+    def merge(e: RawEntry): Unit = {
+      val k = (e.shard, ByteBuffer.wrap(e.key), e.ts)
+      val prev = winners.get(k)
+      if (prev == null) { winners.put(k, e); held += e.key.length + e.value.length }
+      else if (cmpLww(lww(e), lww(prev)) > 0) {
+        winners.put(k, e); held += e.value.length - prev.value.length
+      }
+    }
+    val ro = rickPartitions.ordinal
+    val (rKey, rTs) = (ro("key"), ro("ts"))
+    for (pt <- l.rick if held <= InProcessScanMaxBytes)
+      rickPartitions.rows(pt.files, InternalRow(pt.shard, pt.bucket)) { r =>
+        val ts = r.getLong(rTs)
+        ts >= t0 && ts < t1 && inKeys(r.getBinary(rKey))
+      }.foreach(r => merge(RawEntry(r.getBinary(rKey), r.getLong(rTs), r.getBinary(ro("value")),
+        r.getLong(ro("seq")), r.getLong(ro("subseq")), pt.shard, pt.bucket)))
+    val bo = blockPartitions.ordinal
+    val (bKey, bT0, bT1) = (bo("key"), bo("t0"), bo("t1"))
+    for (pt <- l.blocks if held <= InProcessScanMaxBytes)
+      blockPartitions.rows(pt.files, InternalRow(pt.shard, pt.bucket)) { r =>
+        r.getLong(bT0) < t1 && r.getLong(bT1) >= t0 && inKeys(r.getBinary(bKey))
+      }.foreach(r => blockEntries(binBlockOf(r), opts.codecs, ts => ts >= t0 && ts < t1)
+        .foreach(merge))
+    if (held > InProcessScanMaxBytes) None
+    else Some(spark.createDataFrame(
+      winners.values.asScala.map(e => Row(e.key, e.ts, e.value)).toSeq.asJava, EntrySchema)
+      .coalesce(1))
   }
 
   /** Continuous ingestion: attach a streaming entries source (key BINARY,
@@ -1549,22 +1644,33 @@ final class HelixStore private (
       .foreachBatch { (batch: DataFrame, _: Long) => put(batch) }
       .start()
 
-  /** The live entries of the buckets in `buckets` (inclusive) with
-    * their shard and bucket, from one pointer snapshot: both layers are
-    * listed once, only in that range and at or above the retention
-    * cutoff, and the listings are what the reads scan. */
-  private def toDFWithPartitions(buckets: (Long, Long) = (Long.MinValue, Long.MaxValue),
-      reader: SparkSession = spark,
-      pruneKey: Option[(Array[Byte], Array[Byte])] = None,
-      pruneTsLt: Option[Long] = None,
-      pruneTsGe: Option[Long] = None): DataFrame = {
+  /** Both layers' partitions of one bucket range, listed from one
+    * pointer snapshot `p`: what a read of that range scans. */
+  private final case class Listing(p: Pointer, rick: Seq[LayerPart], blocks: Seq[LayerPart]) {
+    def bytes: Long = (rick ++ blocks).iterator.flatMap(_.files).map(Files.size).sum
+  }
+
+  /** The buckets in `buckets` (inclusive) of the committed pointer's
+    * layers, each layer listed once, only in that range and at or above
+    * the retention cutoff. */
+  private def listRange(buckets: (Long, Long) = (Long.MinValue, Long.MaxValue)): Listing = {
     refreshPointer()
     val p = ptr
     // retention is LOGICAL: buckets below the committed cutoff are
     // invisible even while their files await vacuum
     val (b0, b1) = (math.max(buckets._1, p.minb), buckets._2)
-    val rick = listLayer(dirOf(p.rows), b0, b1)
-    val blocks = p.blocks.fold(Seq.empty[LayerPart])(b => listLayer(dirOf(b), b0, b1))
+    Listing(p, listLayer(dirOf(p.rows), b0, b1),
+      p.blocks.fold(Seq.empty[LayerPart])(b => listLayer(dirOf(b), b0, b1)))
+  }
+
+  /** The live entries of listing `l` with their shard and bucket, as a
+    * Spark query over exactly the listed files. */
+  private def toDFWithPartitions(l: Listing = listRange(),
+      reader: SparkSession = spark,
+      pruneKey: Option[(Array[Byte], Array[Byte])] = None,
+      pruneTsLt: Option[Long] = None,
+      pruneTsGe: Option[Long] = None): DataFrame = {
+    val Listing(p, rick, blocks) = l
     val raw = rawEntries(p, rick, blocks, reader, pruneKey, pruneTsLt, pruneTsGe)
     // Block-only fast path: with no rick file in the range, the block
     // layer is the only source and blockCompact already resolved LWW per
@@ -1597,7 +1703,7 @@ final class HelixStore private (
     // decode too (t0 ≤ asOf blocks only — sound: the per-key window only
     // ever KEEPS entries with ts ≤ asOf, and those live in blocks with
     // t0 ≤ ts ≤ asOf)
-    toDFWithPartitions((Long.MinValue, asOf / opts.bucketSize),
+    toDFWithPartitions(listRange((Long.MinValue, asOf / opts.bucketSize)),
         pruneTsLt = if (asOf == Long.MaxValue) None else Some(asOf + 1))
       .select(EntryColumns.map(col): _*)
       .filter(col("ts") <= asOf)
@@ -1731,7 +1837,8 @@ final class HelixStore private (
     * src/level.rs:337) — LOGICALLY: one pointer commit raises the
     * retention cutoff (`minb`), making the buckets invisible to every
     * read immediately, while their files stay on disk for in-flight
-    * reader plans. Physical reclaim is deferred: the dropped bucket
+    * reader plans. A `ts` that does not raise the cutoff commits
+    * nothing. Physical reclaim is deferred: the dropped bucket
     * dirs are graveyarded for age-based vacuum, and the next compaction
     * rewrites without them (the LSM mark-then-compact discipline). No
     * data rewrite here — metadata only. Takes the compaction mutex so
@@ -1743,14 +1850,21 @@ final class HelixStore private (
     // store with none has nothing to age out and commits nothing
     val layers = (Seq(p.rows) ++ p.blocks).map(g => g -> listLayer(dirOf(g)))
     if (layers.exists(_._2.nonEmpty)) {
-      val cutoff = ts / opts.bucketSize // truncating, matching put()
+      // truncating, matching put(); a cutoff never moves back
+      val cutoff = math.max(p.minb, ts / opts.bucketSize)
       // the commit (gen bump + cutoff) is the visibility point: other
       // instances' reads and kv-cache epochs observe it on their next
-      // pointer refresh
-      commit(p.copy(gen = p.gen + 1, minb = math.max(p.minb, cutoff)))
-      crashHook("outdate:committed")
-      // graveyard the now-invisible bucket dirs (relative paths) so vacuum
-      // reclaims them once retention has drained in-flight readers
+      // pointer refresh. A cutoff that does not move commits nothing,
+      // so the caches keep their entries.
+      if (cutoff > p.minb) {
+        commit(p.copy(gen = p.gen + 1, minb = cutoff))
+        crashHook("outdate:committed")
+      }
+      // graveyard the invisible bucket dirs (relative paths) so vacuum
+      // reclaims them once retention has drained in-flight readers.
+      // Every sub-cutoff dir is listed, so a repeated outdate buries
+      // what a crash after the commit left unburied; bury skips the
+      // dirs already recorded.
       val dropped = for {
         (g, parts) <- layers
         pt <- parts if pt.bucket < cutoff

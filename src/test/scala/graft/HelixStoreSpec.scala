@@ -947,6 +947,79 @@ class HelixStoreSpec extends SparkTestBase {
     }
   }
 
+  test("a repeated outdate commits nothing and buries no dir twice; the kv cache survives it") {
+    val dir = tmpDir("hs-outdate-again")
+    val store = HelixStore.open(spark, dir, StoreOptions(numShards = 1, bucketSize = 10))
+    // rick buckets 0-4
+    store.put(entriesDF((0 until 5).map(b => ("k", b * 10L + 1, s"v$b"))))
+    def gen = pointerOf(dir)("gen").toLong
+    def graveyard: Seq[String] =
+      new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, "_graveyard")))
+        .linesIterator.map(_.trim).filter(_.nonEmpty).map(_.split(" ")(0)).toSeq
+    val gen0 = gen
+    store.outdate(20L)
+    store.outdate(30L)
+    val before = pointerOf(dir)
+    store.outdate(30L)
+    // the kv cache's epoch is (pointer, max write seq): a pointer left
+    // as it was keeps the cache
+    assert(pointerOf(dir) == before, "an outdate that raises no cutoff commits nothing")
+    val rick = pointerOf(dir)("rows")
+    assert(graveyard.sorted == (0 until 3).map(b => s"$rick/shard=0/bucket=$b"),
+      s"graveyard: $graveyard")
+    assert(gen - gen0 == 2, "only the two outdates that raise the cutoff commit")
+    assert(store.get("k".getBytes, 41L).map(new String(_)).contains("v4"))
+    assert(store.toDF.collect().map(_.getAs[Long]("ts")).sorted.toSeq == Seq(31L, 41L))
+    store.close()
+  }
+
+  test("an in-process scan taken before blockCompact + outdate returns the pre-mutation rows") {
+    val store = HelixStore.open(spark, tmpDir("hs-scan-inproc-snap"),
+      StoreOptions(numShards = 2, bucketSize = 10))
+    store.put(entriesDF((0 until 12).map(k => (f"p$k%02d", 3L * k, s"v$k"))))
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, String)] =
+      df.collect().toSeq.map(r => (new String(r.getAs[Array[Byte]]("key")), r.getAs[Long]("ts"),
+        new String(r.getAs[Array[Byte]]("value"))))
+    val pre = (0 until 12).map(k => (f"p$k%02d", 3L * k, s"v$k"))
+    val df = store.scan((0L, 40L), ("p".getBytes, "q".getBytes))
+    assert(df.inputFiles.isEmpty, "a small range reads its rows at scan()")
+    store.put(entriesDF(Seq(("p11", 33L, "new"))))
+    store.blockCompact()
+    store.outdate(20L)
+    // the superseded generations are deleted too: the rows are in the frame
+    store.vacuum(0L)
+    assert(rows(df) == pre)
+    assert(rows(store.scan((0L, 40L), ("p".getBytes, "q".getBytes))) ==
+      pre.filter(_._2 >= 20L).map { case (k, t, v) => (k, t, if (k == "p11") "new" else v) })
+    store.close()
+  }
+
+  test("a small listing whose decoded entries pass InProcessScanMaxBytes is read through Spark") {
+    val dir = tmpDir("hs-scan-held")
+    val store = HelixStore.open(spark, dir, StoreOptions(numShards = 2, bucketSize = 1000))
+    // equal 8 KB values: the parquet files stay small, the decoded
+    // entries do not
+    val n = (HelixStore.InProcessScanMaxBytes / 8192 + 10).toInt
+    val value = "x" * 8192
+    store.put(entriesDF((0 until n).map(k => (f"z$k%04d", k.toLong, value))))
+    val fileBytes = {
+      import scala.jdk.CollectionConverters._
+      val w = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try w.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+        .map(java.nio.file.Files.size).sum
+      finally w.close()
+    }
+    assert(fileBytes <= HelixStore.InProcessScanMaxBytes, s"listing of $fileBytes bytes")
+    val all = store.scan((0L, n.toLong), ("z".getBytes, "{".getBytes))
+    assert(all.inputFiles.nonEmpty, "past the decoded-bytes bound the scan reads through Spark")
+    assert(all.count() == n)
+    assert(all.collect().forall(r => new String(r.getAs[Array[Byte]]("value")) == value))
+    // a key range holding fewer entries stays in process
+    val few = store.scan((0L, n.toLong), ("z".getBytes, "z0010".getBytes))
+    assert(few.inputFiles.isEmpty && few.count() == 10)
+    store.close()
+  }
+
   test("outdate drops old buckets without touching recent ones") {
     val store = HelixStore.open(spark, tmpDir("hs-out"), StoreOptions(numShards = 2, bucketSize = 10))
     store.put(entriesDF(Seq(("a", 5L, "old"), ("a", 15L, "mid"), ("a", 25L, "new"))))
@@ -1041,16 +1114,27 @@ class HelixStoreSpec extends SparkTestBase {
     assert(unord.rdd.getNumPartitions == 2)
     // maxPartitionBytes: a tiny per-scan split size must fan the block
     // parquet into more input partitions than the session default (the
-    // block-only read path has no shuffle, so output partitions = splits)
+    // block-only read path has no shuffle, so output partitions = splits).
+    // Setting it takes the Spark read path; the session's default split
+    // size is set explicitly for that reason, as the range would
+    // otherwise read in process.
     store.blockCompact()
-    val p0 = store.scan(full._1, full._2, ordered = false).rdd.getNumPartitions
-    val p1 = store.scan(full._1, full._2, ordered = false,
-      scanOpts = graft.core.ScanOptions(maxPartitionBytes = Some(64L)))
+    val p0 = store.scan(full._1, full._2, ordered = false, scanOpts = sparkScanPath)
       .rdd.getNumPartitions
+    val split = store.scan(full._1, full._2, ordered = false,
+      scanOpts = graft.core.ScanOptions(maxPartitionBytes = Some(64L)))
+    assert(split.inputFiles.nonEmpty, "maxPartitionBytes must take the Spark read path")
+    val p1 = split.rdd.getNumPartitions
     assert(p1 > p0, s"tiny maxPartitionBytes must add splits: $p1 <= $p0")
-    // and rows are identical either way
-    assert(store.scan(full._1, full._2, ordered = false,
-      scanOpts = graft.core.ScanOptions(maxPartitionBytes = Some(64L))).count() == 40)
+    // and rows are identical either way, also read in process
+    assert(split.count() == 40)
+    val inProcess = store.scan(full._1, full._2, ordered = false)
+    assert(inProcess.inputFiles.isEmpty, "a small range reads in process")
+    assert(inProcess.count() == 40)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(r =>
+      (new String(r.getAs[Array[Byte]]("key")), r.getAs[Long]("ts"),
+        new String(r.getAs[Array[Byte]]("value")))).sorted
+    assert(rows(inProcess) == rows(split))
   }
 
   test("StoreOptions rejects a lockStaleMs at or below the heartbeat floor") {
@@ -1244,16 +1328,25 @@ class HelixStoreSpec extends SparkTestBase {
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, String)] =
       df.collect().toSeq.map(r => (new String(r.getAs[Array[Byte]]("key")), r.getAs[Long]("ts"),
         new String(r.getAs[Array[Byte]]("value"))))
-    val blockOnly = store.scan((0L, 20L), ("s".getBytes, "t".getBytes))
+    // the plan shape is the Spark read path's; the in-process twin of
+    // each range must return the same rows
+    def inProcessTwin(df: org.apache.spark.sql.DataFrame, range: (Long, Long)): Unit = {
+      val twin = store.scan(range, ("s".getBytes, "t".getBytes))
+      assert(twin.inputFiles.isEmpty && windows(twin).isEmpty, "a small range reads in process")
+      assert(rows(twin) == rows(df))
+    }
+    val blockOnly = store.scan((0L, 20L), ("s".getBytes, "t".getBytes), scanOpts = sparkScanPath)
     assert(windows(blockOnly).isEmpty, "a block-only range must skip the LWW window")
     assert(bucketsRead(blockOnly) == Set(0L, 1L), blockOnly.inputFiles.mkString(", "))
     assert(rows(blockOnly) == (0 until 10).map(k => (f"s$k%02d", 2L * k, s"b$k")))
+    inProcessTwin(blockOnly, (0L, 20L))
     // a range touching the rick keeps the window and reads its bucket
-    val mixed = store.scan((20L, 40L), ("s".getBytes, "t".getBytes))
+    val mixed = store.scan((20L, 40L), ("s".getBytes, "t".getBytes), scanOpts = sparkScanPath)
     assert(windows(mixed).nonEmpty, "a range holding rick files must rank by LWW")
     assert(bucketsRead(mixed) == Set(2L, 3L), mixed.inputFiles.mkString(", "))
     assert(rows(mixed) == (0 until 4).map(k => (f"s$k%02d", 30L + k, s"r$k")) ++
       Seq(("s10", 20L, "b10"), ("s11", 22L, "b11")))
+    inProcessTwin(mixed, (20L, 40L))
     store.close()
   }
 
@@ -1421,13 +1514,19 @@ class HelixStoreSpec extends SparkTestBase {
       assert(src.startsWith("s\"", i - 2), s"$name parsed outside listLayer at $i")
     // the layer listing, not a walk of the layout, decides what a scan
     // reads, whether it needs the LWW window, and what outdate buries
-    for (reader <- Seq("def scan(", "private def toDFWithPartitions(", "private def rawEntries(",
-        "def outdate(")) {
+    for (reader <- Seq("def scan(", "private def scanInProcess(", "private def listRange(",
+        "private def toDFWithPartitions(", "private def rawEntries(", "def outdate(")) {
       val (a, b) = body(reader)
       for (walk <- Seq("listDir(", "dataFiles(", "Files.list", "Files.walk"))
         assert(!src.substring(a, b).contains(walk), s"$reader lists the layout through $walk")
     }
     assert(src.substring(body("def outdate(")._1, body("def outdate(")._2).contains("listLayer("))
+    assert(src.substring(body("def scan(")._1, body("def scan(")._2).contains("listRange("))
+    // local relations: the empty read, the routing frame of a custom
+    // sharding function, and the in-process scan, the one that holds rows
+    val emptyRead = src.indexOf("private def emptyEntriesWithMeta")
+    within("createDataFrame(", 3, (emptyRead, src.indexOf("\n\n", emptyRead)),
+      body("private def routeShards("), body("private def scanInProcess("))
   }
 }
 

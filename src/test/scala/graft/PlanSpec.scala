@@ -1057,8 +1057,9 @@ class PlanSpec extends SparkTestBase {
     "doc_pack_bins" -> Seq(
       ("agg[chunk]", "bin carry over the chunk-count histogram (two-level pack)")),
     "helix_scan_custom_order" -> Seq(
-      ("scan:rick", "comparator order over the scan's key×time rectangle " +
-        "(range-pushed store scan, a few hundred rows at any corpus scale)")),
+      ("leaf:LocalRelation", "comparator order over the scan's key×time rectangle " +
+        "(range-pushed store scan, a few hundred rows at any corpus scale; " +
+        "a range within HelixStore.InProcessScanMaxBytes is read in process into a local relation)")),
     "q_abc_analysis" -> Seq(
       ("agg[b]", "cumulative-revenue carry over the AbcBucketUnits value " +
         "histogram (range/width bounded — the part dimension itself " +

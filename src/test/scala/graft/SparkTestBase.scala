@@ -20,4 +20,9 @@ trait SparkTestBase extends AnyFunSuite {
 
   def tmpDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Scan options that put a store scan on the Spark read path whatever
+    * its size: any `maxPartitionBytes` does, here the session's own. */
+  def sparkScanPath: graft.core.ScanOptions = graft.core.ScanOptions(
+    maxPartitionBytes = Some(spark.sessionState.conf.filesMaxPartitionBytes))
 }

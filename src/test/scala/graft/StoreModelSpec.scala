@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.window.WindowExec
 import org.apache.spark.sql.types._
 
-import graft.core.{HelixStore, StoreOptions}
+import graft.core.{HelixStore, ScanOptions, StoreOptions}
 
 /** Model-based randomized store test: a seeded random sequence of
   * put / blockCompact / outdate / reopen operations runs
@@ -204,11 +204,14 @@ class StoreModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       s"$tag-${rnd.nextInt(1000)}"))
 
   /** Checks `st.scan` over [t0, t1) × [k0, k1) against `model`'s live
-    * entries in (key, ts) order, and whether its plan ranks by LWW. */
+    * entries in (key, ts) order. On the Spark read path (`sparkPath`)
+    * its plan must rank by LWW exactly when `window`; a scan read in
+    * process reads no file after the call and ranks in no window. */
   private def assertScan(st: HelixStore, model: collection.Map[(String, Long), String],
       minBucket: Long, bucketSize: Long, t0: Long, t1: Long, window: Boolean,
-      where: String, k0: String = "", k1: String = "~"): Unit = {
-    val df = st.scan((t0, t1), (k0.getBytes, k1.getBytes))
+      where: String, k0: String = "", k1: String = "~", sparkPath: Boolean = false): Unit = {
+    val df = st.scan((t0, t1), (k0.getBytes, k1.getBytes),
+      scanOpts = if (sparkPath) sparkScanPath else ScanOptions())
     val got = df.collect().map(r => (new String(r.getAs[Array[Byte]]("key")),
       r.getAs[Long]("ts"), new String(r.getAs[Array[Byte]]("value")))).toSeq
     val expected = model.iterator
@@ -219,15 +222,19 @@ class StoreModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(df.schema.map(f => (f.name, f.dataType)) == entrySchema.map(f => (f.name, f.dataType)),
       s"$where: scan schema ${df.schema}")
     val windows = collect(df.queryExecution.executedPlan) { case w: WindowExec => w }
-    assert(windows.nonEmpty == window,
-      s"$where: scan [$t0, $t1) expected ${if (window) "an" else "no"} LWW window")
+    if (sparkPath)
+      assert(windows.nonEmpty == window,
+        s"$where: scan [$t0, $t1) expected ${if (window) "an" else "no"} LWW window")
+    else
+      assert(windows.isEmpty && df.inputFiles.isEmpty,
+        s"$where: scan [$t0, $t1) must read in process")
   }
 
   /** A scan reads only the listed partitions of its bucket range, and
     * ranks by LWW only when a rick file lies in that range: blocks in
     * buckets 0-3, rick files in buckets 4-5 (two puts, so LWW across
     * them), bucket 0 outdated. Each range must equal the model. */
-  private def runScanRangeScenario(seed: Int): Unit = {
+  private def runScanRangeScenario(seed: Int, sparkPath: Boolean): Unit = {
     val rnd = new scala.util.Random(seed)
     val bucketSize = 10L
     val store = HelixStore.open(spark, tmpDir(s"hs-scanrange-$seed"),
@@ -242,7 +249,7 @@ class StoreModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     def check(t0: Long, t1: Long, window: Boolean, what: String,
         k0: String = "", k1: String = "~"): Unit =
       assertScan(store, model, minBucket, bucketSize, t0, t1, window,
-        s"seed=$seed $what", k0, k1)
+        s"seed=$seed sparkPath=$sparkPath $what", k0, k1, sparkPath)
     check(10, 40, window = false, "entirely in blocks")
     check(12, 37, window = false, "entirely in blocks, key range", "r1", "r4")
     check(30, 50, window = true, "touching the rick")
@@ -260,11 +267,25 @@ class StoreModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   }
 
   test("scan equals the model on block-only, rick, outdated and empty ranges (seeds 808, 909)") {
-    runScanRangeScenario(808)
-    runScanRangeScenario(909)
+    runScanRangeScenario(808, sparkPath = false)
+    runScanRangeScenario(909, sparkPath = false)
+  }
+
+  test("scan equals the model on the Spark read path (seeds 808, 909, maxPartitionBytes set)") {
+    runScanRangeScenario(808, sparkPath = true)
+    runScanRangeScenario(909, sparkPath = true)
+  }
+
+  test("scan equals the model on both read paths (seed 1010)") {
+    runScanRangeScenario(1010, sparkPath = false)
+    runScanRangeScenario(1010, sparkPath = true)
   }
 
   test("a scan sees another instance's puts into its range after its own pointer load") {
+    for (sparkPath <- Seq(false, true)) scanSeesOtherInstance(sparkPath)
+  }
+
+  private def scanSeesOtherInstance(sparkPath: Boolean): Unit = {
     val dir = tmpDir("hs-scan-fresh")
     val bucketSize = 10L
     val opts = StoreOptions(numShards = 2, bucketSize = bucketSize)
@@ -276,14 +297,16 @@ class StoreModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     putBatch(a, randomRows(rnd, keys, 0, 20, 10, "a"), model)
     a.blockCompact()
     // A loads the pointer and lists a block-only range
-    assertScan(a, model, Long.MinValue, bucketSize, 0, 20, window = false, "A before B's put")
+    assertScan(a, model, Long.MinValue, bucketSize, 0, 20, window = false, "A before B's put",
+      sparkPath = sparkPath)
     // B's put lands in the rick of that range, overwriting one entry
     val (k, t) = model.keys.head
     putBatch(b, Seq((k, t, "from-b"), ("f9", 5L, "new-from-b")), model)
-    assertScan(a, model, Long.MinValue, bucketSize, 0, 20, window = true, "A after B's put")
+    assertScan(a, model, Long.MinValue, bucketSize, 0, 20, window = true, "A after B's put",
+      sparkPath = sparkPath)
     b.blockCompact()
     assertScan(a, model, Long.MinValue, bucketSize, 0, 20, window = false,
-      "A after B's compaction")
+      "A after B's compaction", sparkPath = sparkPath)
     a.close(); b.close()
   }
 
