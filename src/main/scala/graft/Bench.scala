@@ -21,7 +21,7 @@ object Bench {
     val stagingSec = (System.nanoTime() - tStaging) / 1e9
     // WARMUP, one full untimed suite pass, also its own reported phase:
     // first-use costs that live OUTSIDE the staged artifacts (the
-    // store's kv/manifest cache fills on point reads, codegen for each
+    // store's kv and kc cache fills on point reads, codegen for each
     // query's plan, parquet footer caches) otherwise land in run 1 and
     // saturate that query's spread — r11's helix_get_point spread of
     // 163 was 21 cold per-probe jobs, not the steady-state query. After

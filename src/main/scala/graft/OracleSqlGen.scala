@@ -180,7 +180,7 @@ object OracleSqlGen {
 
   /** #188 — store-served point gets (decompress on → BOTH layers serve):
     * the probe predicate on the raw parquet; every probed entry must
-    * come back through routing, manifest, block decode and caches. */
+    * come back through routing, block decode and caches. */
   val helixGetPoint: String = {
     import graft.operators.HelixScan
     s"""SELECT user_id, event_id, epoch_us(ts) AS ts_us,

@@ -38,12 +38,11 @@ import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StructFiel
  *   <path>/_seqs/<n>   one atomically-created file per claimed write seq
  *   <path>/r-<g>/...   rick (row) layer, generation g
  *   <path>/b-<g>/...   block ("SSTable") layer, generation g
- *   <path>/m-<g>/...   min/max-key manifest for the block layer
  * }}}
  * Compactions write complete NEW generation directories, then commit by
- * atomically replacing `_current` (rows, blocks and manifest flip
- * together), then bury the old generations in `_graveyard`, from which
- * `vacuum()` deletes them once the retention window has passed. A crash
+ * atomically replacing `_current` (rows and blocks flip together), then
+ * bury the old generations in `_graveyard`, from which `vacuum()`
+ * deletes them once the retention window has passed. A crash
  * at any point leaves either the old pointer (new dirs are unreferenced
  * orphans, rolled back by `open()`) or the new pointer (old dirs not yet
  * buried are orphans, likewise removed) — committed data is never lost
@@ -152,12 +151,6 @@ final case class StoreOptions(
       * kcCacheSize × this, entry count alone bounds nothing when one
       * key's blocks are huge. */
     kcCacheThresholdBytes: Long = 8L << 20,
-    /** Manifest rows above which the driver-side collected prune map is
-      * abandoned (the collect would not be driver-bounded); point reads
-      * then skip manifest pruning and read each pair's block dir as a
-      * store without a manifest would — still in process, with no
-      * Spark job, and with the same results. */
-    manifestPruneMaxEntries: Long = 100000L,
     /** Ingest fan-out: writer tasks (≈ parquet files) each put spreads
       * one (shard, bucket) partition across — the tuning surface the
       * reference exposes as write-batch sizing (src/option.rs
@@ -227,6 +220,14 @@ object HelixStore {
       a.length - b.length
     }
   }
+
+  /** The store's one last-write-wins order over (seq, subseq, value):
+    * the greatest wins. The Spark reads' rank window sorts by the same
+    * columns descending, and the value tiebreak is Spark's BinaryType
+    * order, so every read and the compaction pick the same winner. A
+    * member of the object, so a task closure using it captures no store. */
+  private[core] val LwwOrdering: Ordering[(Long, Long, Array[Byte])] =
+    Ordering.Tuple3(Ordering.Long, Ordering.Long, BytesOrdering)
 
   /** Compressed block: one key's run within one (shard, bucket), ts
     * delta-encoded from t0 with the max ts carried as t1 (so BOTH time
@@ -298,11 +299,6 @@ object HelixStore {
   private[graft] val InProcessScanMaxBytes: Long = 1L << 20
   /** Block layer: one [[BinBlock]] per row. */
   val BlockSchema: StructType = BinBlockEncoder.schema
-  /** Block manifest: one min/max-key row per (shard, bucket). */
-  val ManifestSchema: StructType = StructType(Seq(
-    StructField("shard", IntegerType), StructField("bucket", LongType),
-    StructField("min_key", BinaryType), StructField("max_key", BinaryType),
-    StructField("n_blocks", LongType)))
 
   /** The partition columns of the rick and block layers: their
     * `shard=<s>/bucket=<b>` directories. */
@@ -660,16 +656,10 @@ final class HelixStore private (
     * of deleting files under in-flight readers; physical reclaim
     * happens at the next compaction and via vacuum. */
   private final case class Pointer(
-      gen: Long, rows: String, blocks: Option[String], manifest: Option[String],
+      gen: Long, rows: String, blocks: Option[String],
       seqhw: Long = -1L, minb: Long = Long.MinValue)
 
-  /** The collected block manifest: (shard, bucket) → (min key, max key). */
-  private type Manifest = Map[(Int, Long), (Array[Byte], Array[Byte])]
-
   @volatile private var ptr: Pointer = initPointer()
-  /** The last pointer's manifest, tagged with that pointer, so a read
-    * never prunes one generation's blocks by another's manifest. */
-  @volatile private var manifestCache: (Pointer, Option[Manifest]) = null
   /** High-water mark of claimed write seqs; -1 = not yet initialized. */
   @volatile private var seqHw: Long = -1L
 
@@ -679,7 +669,7 @@ final class HelixStore private (
     Files.createDirectories(root)
     Files.createDirectories(seqsDir)
     if (!Files.exists(pointerFile)) {
-      val p = Pointer(0L, "r-0", None, None)
+      val p = Pointer(0L, "r-0", None)
       Files.createDirectories(root.resolve(p.rows))
       writePointer(p)
       p
@@ -688,9 +678,11 @@ final class HelixStore private (
       // unreferenced, un-graveyarded generation dir is a crashed swap's
       // half-written output — roll it back. Graveyarded dirs are
       // superseded-but-retained (lazily-running reader plans may still
-      // reference them) and fall to age-based vacuum instead.
+      // reference them) and fall to age-based vacuum instead. `m-<g>` is
+      // the block manifest of older stores, which no pointer references
+      // now: an old store's manifest dir goes the same way.
       val p = readPointer()
-      val live = Set(Some(p.rows), p.blocks, p.manifest).flatten
+      val live = Set(Some(p.rows), p.blocks).flatten
       val buried = readGraveyard().map(_._1).toSet
       listDir(root)
         .filter { d =>
@@ -750,12 +742,13 @@ final class HelixStore private (
     if (dead.nonEmpty || Files.exists(graveyardFile)) writeGraveyard(live)
   }
 
+  /** The committed pointer. A key it does not know is ignored, such as
+    * the `manifest=` line older stores wrote. */
   private def readPointer(): Pointer = {
     val kv = new String(Files.readAllBytes(pointerFile)).split('\n')
       .map(_.trim).filter(_.contains("="))
       .map { l => val Array(k, v) = l.split("=", 2); k -> v }.toMap
-    Pointer(kv("gen").toLong, kv("rows"),
-      kv.get("blocks").filter(_.nonEmpty), kv.get("manifest").filter(_.nonEmpty),
+    Pointer(kv("gen").toLong, kv("rows"), kv.get("blocks").filter(_.nonEmpty),
       kv.get("seqhw").map(_.toLong).getOrElse(-1L),
       kv.get("minb").map(_.toLong).getOrElse(Long.MinValue))
   }
@@ -763,7 +756,7 @@ final class HelixStore private (
   /** Atomic commit: write a temp file, then rename over `_current`. */
   private def writePointer(p: Pointer): Unit = {
     val body = (Seq(s"gen=${p.gen}", s"rows=${p.rows}") ++
-      p.blocks.map(b => s"blocks=$b") ++ p.manifest.map(m => s"manifest=$m") ++
+      p.blocks.map(b => s"blocks=$b") ++
       (if (p.seqhw >= 0L) Seq(s"seqhw=${p.seqhw}") else Nil) ++
       (if (p.minb != Long.MinValue) Seq(s"minb=${p.minb}") else Nil))
       .mkString("", "\n", "\n")
@@ -817,8 +810,7 @@ final class HelixStore private (
   private def allocGen(cur: Pointer): Long = {
     var g = cur.gen + 1
     while (true) {
-      val taken = Seq("r", "b", "m")
-        .exists(pfx => Files.exists(root.resolve(s"$pfx-$g")))
+      val taken = Seq("r", "b").exists(pfx => Files.exists(root.resolve(s"$pfx-$g")))
       if (!taken) {
         try { Files.createDirectory(root.resolve(s"r-$g")); return g }
         catch { case _: java.nio.file.FileAlreadyExistsException => () }
@@ -844,7 +836,6 @@ final class HelixStore private (
     refreshPointer()
     ptr.blocks.exists(b => listLayer(dirOf(b)).nonEmpty)
   }
-  private[graft] def hasManifestLayer: Boolean = { refreshPointer(); ptr.manifest.isDefined }
 
   // ---- write sequence (LWW total order) -------------------------------
 
@@ -906,45 +897,6 @@ final class HelixStore private (
     throw new IllegalStateException("unreachable")
   }
 
-  /** Per-(shard, bucket) min/max key manifest of `p`'s block layer — the
-    * reference's sstable index block (src/file/sstable.rs
-    * IndexBlockBuilder): point reads consult it driver-side and skip
-    * block partitions that cannot contain the key. None when `p` has no
-    * manifest, or one above [[StoreOptions.manifestPruneMaxEntries]]:
-    * point reads then read the pair without pruning. */
-  private def manifest(p: Pointer): Option[Manifest] = {
-    val cached = manifestCache
-    if (cached != null && cached._1 == p) return cached._2
-    val m = p.manifest.flatMap { name =>
-      // size guard: an unbounded read of a huge manifest would not be
-      // driver-bounded; give up pruning instead of crashing. The read
-      // stops at limit+1 rows and checks the overflow row.
-      val lim = math.min(opts.manifestPruneMaxEntries, Int.MaxValue - 2L).toInt
-      val o = manifestFiles.ordinal
-      val rows = manifestFiles.rows(dataFiles(dirOf(name)), InternalRow.empty, lim + 1)(_ => true)
-      if (rows.length > lim) None
-      else Some(rows.map { r =>
-        (r.getInt(o("shard")), r.getLong(o("bucket"))) ->
-          ((r.getBinary(o("min_key")), r.getBinary(o("max_key"))))
-      }.toMap)
-    }
-    // cache only the committed pointer's manifest: a read still on an
-    // older snapshot must not evict the one every later read uses
-    if (ptr == p) manifestCache = (p, m)
-    m
-  }
-
-  /** True when `p`'s block layer might hold `key` in (shard, bucket) —
-    * false only on manifest proof of absence. */
-  private def blockMayContain(p: Pointer, shard: Long, bucket: Long,
-      key: Array[Byte]): Boolean =
-    p.blocks.isDefined && manifest(p).forall(_.get((shard.toInt, bucket)) match {
-      case None => false // manifest is complete: partition absent = no data
-      case Some((lo, hi)) =>
-        java.util.Arrays.compareUnsigned(key, lo) >= 0 &&
-          java.util.Arrays.compareUnsigned(key, hi) <= 0
-    })
-
   /** List a directory with the stream closed (Files.list leaks an fd
     * per call otherwise). */
   private def listDir(p: Path): List[Path] = {
@@ -997,8 +949,8 @@ final class HelixStore private (
 
   /** The store's one parquet query: every read that builds a DataFrame
     * (scan, toDF, latest, compaction, seq recovery) goes through here;
-    * point reads, the manifest load and scans under the broadcast
-    * threshold use [[PartitionReader]] instead.
+    * point reads and scans of at most [[HelixStore.InProcessScanMaxBytes]]
+    * use [[PartitionReader]] instead.
     * The relation is built directly on a [[LayerIndex]] over `parts`,
     * the partitions the caller listed from one pointer snapshot, with
     * the layer's fixed schema: no data source resolution, no listing of
@@ -1010,49 +962,43 @@ final class HelixStore private (
     reader.baseRelationToDataFrame(HadoopFsRelation(new LayerIndex(layer, parts),
       PartitionSchema, dataColumnsOf(schema), None, new ParquetFileFormat, Map.empty)(reader))
 
-  /** The store's one in-process parquet read, for point reads, the
-    * manifest load and small scans: the rows of a few known files, read
-    * on the calling thread by Spark's own parquet reader, one
-    * `PartitionedFile` per data file. A get reads a few KB from one known
-    * dir; a query would pay the planner and a job for it. Row groups are
-    * not skipped: a compacted
-    * partition holds its keys in arbitrary order, so every row group's
-    * key range spans the pair's range, which the manifest has already
-    * tested. Output rows are `dataCols` followed by `partCols` (filled
-    * from the values a read passes), looked up through [[ordinal]].
-    * Built once per store and file kind: building the reader broadcasts
+  /** The store's one in-process parquet read, for point reads and small
+    * scans: the rows of a few known files of one layer, read on the
+    * calling thread by Spark's own parquet reader, one `PartitionedFile`
+    * per data file. A get reads a few KB from one known dir; a query
+    * would pay the planner and a job for it. Row groups are not skipped:
+    * a compacted partition holds its keys in arbitrary order, so every
+    * row group's key range spans nearly the whole pair's. Output rows are
+    * `dataCols` followed by the (shard, bucket) a read passes, looked up
+    * through [[ordinal]].
+    * Built once per store and layer: building the reader broadcasts
     * the Hadoop conf. That conf turns parquet's vectored IO off, so each
     * row group is read on the calling thread rather than handed to an
     * async pool the caller then waits on; Spark tasks keep the session
     * default. */
-  private final class PartitionReader(dataCols: StructType, partCols: StructType) {
-    val ordinal: Map[String, Int] = (dataCols ++ partCols).map(_.name).zipWithIndex.toMap
+  private final class PartitionReader(dataCols: StructType) {
+    val ordinal: Map[String, Int] = (dataCols ++ PartitionSchema).map(_.name).zipWithIndex.toMap
     private val read = {
       val conf = spark.sessionState.newHadoopConf()
       conf.setBoolean(ParquetInputFormat.HADOOP_VECTORED_IO_ENABLED, false)
       new ParquetFileFormat().buildReaderWithPartitionValues(
-        spark, dataCols, partCols, dataCols, Nil,
+        spark, dataCols, PartitionSchema, dataCols, Nil,
         Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
     }
 
-    /** Up to `limit` rows of `files` that `keep` accepts, with partition
-      * values `values`, copied (the reader reuses its row objects); each
-      * file opened is closed. */
-    def rows(files: Seq[Path], values: InternalRow, limit: Int = Int.MaxValue)(
+    /** The rows of `files` that `keep` accepts, with partition values
+      * `values`, copied (the reader reuses its row objects); each file
+      * opened is closed. */
+    def rows(files: Seq[Path], values: InternalRow)(
         keep: InternalRow => Boolean): Seq[InternalRow] = {
       val out = Vector.newBuilder[InternalRow]
-      var n = 0
-      for (f <- files if n < limit) {
+      for (f <- files) {
         val attrs = Files.readAttributes(f, classOf[BasicFileAttributes])
         val it = read(PartitionedFile(values,
           SparkPath.fromPath(new HPath(f.toUri)), 0L, attrs.size(),
           Array.empty[String], attrs.lastModifiedTime().toMillis, attrs.size()))
-        try {
-          while (n < limit && it.hasNext) {
-            val r = it.next()
-            if (keep(r)) { out += r.copy(); n += 1 }
-          }
-        } finally it match { case c: AutoCloseable => c.close(); case _ => () }
+        try it.foreach(r => if (keep(r)) out += r.copy())
+        finally it match { case c: AutoCloseable => c.close(); case _ => () }
       }
       out.result()
     }
@@ -1063,12 +1009,8 @@ final class HelixStore private (
         keep: InternalRow => Boolean): Seq[InternalRow] =
       rows(dataFiles(partitionDir(layer, shard, bucket)), InternalRow(shard.toInt, bucket))(keep)
   }
-  private lazy val rickPartitions =
-    new PartitionReader(dataColumnsOf(RickSchema), PartitionSchema)
-  private lazy val blockPartitions =
-    new PartitionReader(dataColumnsOf(BlockSchema), PartitionSchema)
-  /** The manifest is one unpartitioned file: shard and bucket are data. */
-  private lazy val manifestFiles = new PartitionReader(ManifestSchema, StructType(Nil))
+  private lazy val rickPartitions = new PartitionReader(dataColumnsOf(RickSchema))
+  private lazy val blockPartitions = new PartitionReader(dataColumnsOf(BlockSchema))
 
   private def partitionDir(layer: Path, shard: Long, bucket: Long): Path =
     layer.resolve(s"shard=$shard").resolve(s"bucket=$bucket")
@@ -1295,30 +1237,31 @@ final class HelixStore private (
 
   /** The point reads of ONE (shard, bucket) pair in pointer snapshot
     * `p`, the one path behind get, directGet and multiGet: each probe's
-    * block candidate from the blocks `blocksOf` returns for the keys the
-    * manifest cannot rule out, then the rick rows at exactly the probes'
-    * (key, ts) from one read of the pair's rick dir, LWW-merged by
-    * [[cmpLww]]. Both layers and the retention cutoff come from `p`, so
-    * a compaction committing mid-read cannot pair one generation's
-    * blocks with the next one's emptied rick (superseded dirs stay
-    * readable in the graveyard until vacuum). A missing partition dir
-    * reads as no rows. */
+    * block candidate from the blocks `blocksOf` returns for the probes'
+    * keys, asked only when the pair has a block dir, then the rick rows
+    * at exactly the probes' (key, ts) from one read of the pair's rick
+    * dir, LWW-merged by [[HelixStore.LwwOrdering]]. Under xxhash
+    * sharding a pair's blocks span nearly its shard's whole key range,
+    * so the dir is the one test that skips a block read. Both layers and
+    * the retention cutoff come from `p`, so a compaction committing
+    * mid-read cannot pair one generation's blocks with the next one's
+    * emptied rick (superseded dirs stay readable in the graveyard until
+    * vacuum). A missing partition dir reads as no rows. */
   private def pairReads(p: Pointer, shard: Long, bucket: Long,
       probes: Seq[(Array[Byte], Long)], decompress: Boolean)(
       blocksOf: Seq[Array[Byte]] => Map[ByteBuffer, Seq[BinBlock]]): Seq[Option[Array[Byte]]] = {
     // logical retention: an outdated bucket is invisible in BOTH layers
     // (toDFWithPartitions lists queries' buckets from the same cutoff)
     if (bucket < p.minb) return probes.map(_ => None)
-    val keys = if (!decompress) Nil
-      else probes.map(_._1).distinctBy(ByteBuffer.wrap).filter(blockMayContain(p, shard, bucket, _))
-    val blocks = if (keys.isEmpty) Map.empty[ByteBuffer, Seq[BinBlock]] else blocksOf(keys)
+    val readBlocks = decompress &&
+      p.blocks.exists(b => Files.isDirectory(partitionDir(dirOf(b), shard, bucket)))
+    val blocks = if (!readBlocks) Map.empty[ByteBuffer, Seq[BinBlock]]
+      else blocksOf(probes.map(_._1).distinctBy(ByteBuffer.wrap))
     val at = probes.map { case (k, ts) => (ByteBuffer.wrap(k), ts) }
     val blockHits = at.map { case (k, ts) => blocks.get(k).flatMap(blockPointLookup(_, ts)) }
     val rick = rickRows(p, shard, bucket, at.toSet)
     at.zip(blockHits).map { case (kts, blockHit) =>
-      (blockHit ++ rick.getOrElse(kts, Nil))
-        .reduceOption((a, b) => if (cmpLww(a, b) >= 0) a else b)
-        .map(_._3)
+      (blockHit ++ rick.getOrElse(kts, Nil)).maxOption(LwwOrdering).map(_._3)
     }
   }
 
@@ -1406,8 +1349,7 @@ final class HelixStore private (
   }
 
   /** An uncached get: [[pairReads]] with one probe, its block read going
-    * through the kc cache. Like every point read it runs no Spark job:
-    * the manifest loads in process too (once per commit). */
+    * through the kc cache. Like every point read it runs no Spark job. */
   private def getInShardUncached(p: Pointer, shard: Long, key: Array[Byte], ts: Long,
       decompress: Boolean): Option[Array[Byte]] = {
     // Spark SQL `div` truncates toward zero; use the same semantics here
@@ -1470,18 +1412,7 @@ final class HelixStore private (
       ts: Long): Option[(Long, Long, Array[Byte])] =
     blocks.iterator.flatMap(blockEntries(_, opts.codecs, _ == ts))
       .map(e => (e.seq, e.subseq, e.value))
-      .reduceOption((a, b) => if (cmpLww(a, b) >= 0) a else b)
-
-  /** The LWW ordering the Spark reads' rank window sorts by — (seq
-    * desc, subseq desc, value desc) — as a driver-side comparator. */
-  private def cmpLww(a: (Long, Long, Array[Byte]),
-      b: (Long, Long, Array[Byte])): Int = {
-    val c1 = java.lang.Long.compare(a._1, b._1)
-    if (c1 != 0) return c1
-    val c2 = java.lang.Long.compare(a._2, b._2)
-    if (c2 != 0) return c2
-    BytesOrdering.compare(a._3, b._3)
-  }
+      .maxOption(LwwOrdering)
 
   /** Time-range × key-range scan, globally ordered by (key, ts) —
     * the reference's mux-merged iterator (src/db.rs:67, iterator.rs),
@@ -1558,8 +1489,7 @@ final class HelixStore private (
     // stay for the entries a surviving block carries outside the range
     val entries = inProcess.getOrElse(toDFWithPartitions(listed, reader,
         pruneKey = Some((k0, k1)), pruneTsLt = Some(t1), pruneTsGe = Some(t0))
-      .filter(col("bucket").between(b0, b1) && col("ts") >= t0 && col("ts") < t1 &&
-        col("key") >= lit(k0) && col("key") < lit(k1))
+      .filter(col("ts") >= t0 && col("ts") < t1 && col("key") >= lit(k0) && col("key") < lit(k1))
       .select(EntryColumns.map(col): _*))
     // ordered=false is the reference's NoOrderComparator scan (util.rs):
     // skip the global sort when the consumer doesn't need key order.
@@ -1587,10 +1517,10 @@ final class HelixStore private (
     * [[PartitionReader]], with no Spark job: the rick rows inside the
     * rectangle, and the entries inside it of the blocks that can hold
     * one (`t0 < t1`, `t1 >= t0` on the block's bounds, key in range),
-    * merged last-write-wins per (shard, key, ts) by [[cmpLww]], the
-    * rank window's order, into one map as they are read. Returned as a
-    * local relation of the entry columns: the rows are read here, not
-    * when the frame runs. The relation is one partition, as the rows
+    * merged last-write-wins per (shard, key, ts) by
+    * [[HelixStore.LwwOrdering]] into one map as they are read. Returned
+    * as a local relation of the entry columns: the rows are read here,
+    * not when the frame runs. The relation is one partition, as the rows
     * already sit on the driver: a sort or a count above it then runs as
     * one task, with no exchange and no range-sampling job. None once
     * the winners' key and value bytes pass [[InProcessScanMaxBytes]]
@@ -1608,7 +1538,7 @@ final class HelixStore private (
       val k = (e.shard, ByteBuffer.wrap(e.key), e.ts)
       val prev = winners.get(k)
       if (prev == null) { winners.put(k, e); held += e.key.length + e.value.length }
-      else if (cmpLww(lww(e), lww(prev)) > 0) {
+      else if (LwwOrdering.gt(lww(e), lww(prev))) {
         winners.put(k, e); held += e.value.length - prev.value.length
       }
     }
@@ -1686,9 +1616,8 @@ final class HelixStore private (
       // this equals a global (key, ts) rank, and for shard-addressed
       // directPut data each shard keeps its own winner — exactly what
       // the block-only fast path above yields, so both paths agree.
-      // `bucket` is redundant in the keys (a pure function of ts); as a
-      // window key it lets scan()'s bucket-range filter push below the
-      // window, down to the rick's file index.
+      // `bucket` is redundant in the keys (a pure function of ts) and
+      // changes no winner.
       val w = Window.partitionBy("shard", "bucket", "key", "ts")
         .orderBy(col("seq").desc, col("subseq").desc, col("value").desc)
       raw.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
@@ -1739,11 +1668,11 @@ final class HelixStore private (
 
   /** Fold BOTH layers into fresh compressed block ("SSTable") files —
     * per (key, shard, bucket) one delta-encoded block (reference:
-    * src/level.rs:356-470 + fn_registry.rs compress_entries) — plus a
-    * rebuilt min/max-key manifest and an empty rick generation. All
-    * three flip in ONE atomic pointer commit; the absorbed old
-    * generations are buried only after the commit (vacuum deletes them
-    * later), so a crash mid-compaction never loses committed entries.
+    * src/level.rs:356-470 + fn_registry.rs compress_entries) — and an
+    * empty rick generation. Both flip in ONE atomic pointer commit; the
+    * absorbed old generations are buried only after the commit (vacuum
+    * deletes them later), so a crash mid-compaction never loses
+    * committed entries.
     * One groupByKey shuffle; block size is bounded by the bucket. */
   def blockCompact(): Unit = compactionMutex.synchronized { withMutex {
     compactionsRun.incrementAndGet()
@@ -1757,7 +1686,6 @@ final class HelixStore private (
     if (rick.nonEmpty || blocksNow.nonEmpty) {
     val g = allocGen(cur)
     val newBlocks = s"b-$g"
-    val newManifest = s"m-$g"
     val newRows = s"r-$g"
     val rickSnapshot = rick.flatMap(_.files)
     // UDCF dispatch: registry + fn pulled into locals so the task
@@ -1773,13 +1701,10 @@ final class HelixStore private (
       .as(RawEntryEncoder)
       .groupByKey(r => (r.key, r.shard, r.bucket))(BlockKeyEncoder)
       .mapGroups { (k: (Array[Byte], Int, Long), it: Iterator[RawEntry]) =>
-        // LWW inside the block: max (seq, subseq, value-bytes) entry per
-        // ts — the value tiebreak uses the SAME unsigned-lexicographic
-        // order as Spark's BinaryType, so this path picks the identical
-        // winner as the window/orderBy LWW sites
+        // LWW inside the block: the store's one LWW order picks each
+        // ts's entry, the same winner as every read
         val byTs = it.toArray.groupBy(_.ts).valuesIterator
-          .map(_.maxBy(r => (r.seq, r.subseq, r.value))(
-            Ordering.Tuple3(Ordering.Long, Ordering.Long, HelixStore.BytesOrdering)))
+          .map(_.maxBy(r => (r.seq, r.subseq, r.value))(HelixStore.LwwOrdering))
           .toArray.sortBy(_.ts)
         val t0 = byTs.head.ts
         val deltas = new Array[Long](byTs.length)
@@ -1801,34 +1726,20 @@ final class HelixStore private (
       .write.mode("overwrite").partitionBy("shard", "bucket")
       .parquet(dirOf(newBlocks).toString)
     // a fully-outdated store compacts to ZERO blocks (logical retention
-    // filtered everything): commit an empty store rather than reading a
-    // fileless dir for the manifest
-    val written = listLayer(dirOf(newBlocks))
-    val wroteBlocks = written.nonEmpty
-    if (wroteBlocks) {
-      // manifest derives from the freshly-written (still uncommitted) blocks
-      readLayer(BlockSchema, dirOf(newBlocks), written)
-        .groupBy("shard", "bucket")
-        .agg(min("key").as("min_key"), max("key").as("max_key"),
-          count(lit(1)).as("n_blocks"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(dirOf(newManifest).toString)
-    }
+    // filtered everything): commit a store without a block layer
+    val wroteBlocks = listLayer(dirOf(newBlocks)).nonEmpty
     // allocGen already claimed r-<g> as the fresh rick layer; entries
     // put during the build move into it inside the commit window
     crashHook("blockCompact:staged")
     withPutsExcluded {
       copyLeftovers(dirOf(cur.rows), rickSnapshot.toSet, dirOf(newRows))
       crashHook("blockCompact:leftovers-copied")
-      commit(Pointer(g, newRows,
-        if (wroteBlocks) Some(newBlocks) else None,
-        if (wroteBlocks) Some(newManifest) else None,
-        minb = cur.minb))
+      commit(Pointer(g, newRows, Option.when(wroteBlocks)(newBlocks), minb = cur.minb))
     }
     crashHook("blockCompact:committed")
     // deferred deletion of the absorbed generations: in-flight readers
     // keep resolving against them until vacuum's retention expires
-    bury(Seq(cur.rows) ++ cur.blocks ++ cur.manifest)
+    bury(Seq(cur.rows) ++ cur.blocks)
     if (!wroteBlocks) deleteRecursively(dirOf(newBlocks)) // fileless, uncommitted
     }
   }}

@@ -174,10 +174,10 @@ object HelixScan {
 
   /** #188 — POINT GETS through the store (reference db.rs:54): each
     * probe runs the full read path in process, with no Spark job —
-    * shard routing, retention cutoff, per-key manifest check
-    * (blockMayContain), the pair's block dir through the kc cache and
-    * decode for the compacted half, the pair's rick dir for the fresh
-    * half, kv cache on repeats. decompress=true, so both layers serve;
+    * shard routing, retention cutoff, the pair's block dir (when it
+    * exists) through the kc cache and decode for the compacted half,
+    * the pair's rick dir for the fresh half, kv cache on repeats.
+    * decompress=true, so both layers serve;
     * the oracle is the same probe predicate on the raw parquet — every
     * probe MUST come back, byte-exact. */
   def getPoint(s: SparkSession, dir: String): DataFrame = {

@@ -132,7 +132,7 @@ class HelixStoreSpec extends SparkTestBase {
   }
 
   /** The committed pointer of the store at `dir`: its `name=value` lines
-    * (`rows`, `blocks`, `manifest`, ...). */
+    * (`rows`, `blocks`, `seqhw`, ...). */
   private def pointerOf(dir: String): Map[String, String] =
     new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, "_current")))
       .linesIterator.map(_.split("=", 2)).collect { case Array(k, v) => k -> v }.toMap
@@ -164,8 +164,9 @@ class HelixStoreSpec extends SparkTestBase {
     store.vacuum(0L)
     val gens = new java.io.File(dir).listFiles().map(_.getName)
       .filter(_.matches("^[rbm]-[0-9]+$")).toSet
-    assert(gens == Set(live("rows"), live("blocks"), live("manifest")),
-      s"only the live generations survive vacuum(0): $gens")
+    // a compaction writes two layers and nothing beside them
+    assert(gens == Set(live("rows"), live("blocks")),
+      s"only the live rick and block generations survive vacuum(0): $gens")
     assert(store.toDF.count() == 50, "vacuum must not touch live data")
   }
 
@@ -338,15 +339,14 @@ class HelixStoreSpec extends SparkTestBase {
     assert(store.toDF.count() == 0)
   }
 
-  test("block manifest proves absence without breaking present-key reads") {
-    val dir = tmpDir("hs-manifest")
+  test("point reads after blockCompact: present keys hit, absent keys and pairs miss") {
+    val dir = tmpDir("hs-absent")
     val store = HelixStore.open(spark, dir, StoreOptions(numShards = 2, bucketSize = 10))
     store.put(entriesDF(Seq(("mmm", 1L, "v1"), ("nnn", 2L, "v2"))))
     store.blockCompact()
-    assert(store.hasManifestLayer)
     assert(store.get("mmm".getBytes, 1L).map(new String(_)).contains("v1"))
     assert(store.get("nnn".getBytes, 2L).map(new String(_)).contains("v2"))
-    // keys outside the manifest key range / absent partitions
+    // keys outside the blocks' key range, and a pair with no block dir
     assert(store.get("aaa".getBytes, 1L).isEmpty)
     assert(store.get("zzz".getBytes, 1L).isEmpty)
     assert(store.get("mmm".getBytes, 999L).isEmpty)
@@ -355,18 +355,14 @@ class HelixStoreSpec extends SparkTestBase {
     assert(store.get("aaa".getBytes, 3L).map(new String(_)).contains("fresh"))
   }
 
-  test("oversize manifest: get and multiGet stay correct and run no job") {
-    val dir = tmpDir("hs-manifest-big")
-    // threshold 0 forces every manifest onto the too-big-to-collect path
-    val store = HelixStore.open(spark, dir,
-      StoreOptions(numShards = 2, bucketSize = 10, manifestPruneMaxEntries = 0))
+  test("get and multiGet over blocks and later rick puts stay correct and run no job") {
+    val dir = tmpDir("hs-point-jobless")
+    val store = HelixStore.open(spark, dir, StoreOptions(numShards = 2, bucketSize = 10))
     store.put(entriesDF(Seq(("mmm", 1L, "v1"), ("nnn", 2L, "v2"))))
     store.blockCompact()
-    assert(store.hasManifestLayer)
-    // the first read after the commit loads the manifest in process and
-    // finds it too big; every read skips pruning and runs no job
+    // the first reads after the commit: hits read, absences miss, and
+    // none runs a job
     val (_, getJobs) = withJobs {
-      // same results as with the collected map: hits read, absences miss
       assert(store.get("mmm".getBytes, 1L).map(new String(_)).contains("v1"))
       assert(store.get("nnn".getBytes, 2L).map(new String(_)).contains("v2"))
       assert(store.get("aaa".getBytes, 1L).isEmpty)
@@ -375,8 +371,8 @@ class HelixStoreSpec extends SparkTestBase {
     }
     assert(getJobs.isEmpty, s"gets ran Spark jobs: $getJobs")
     store.put(entriesDF(Seq(("aaa", 3L, "fresh"))))
-    // the batch path on the same too-big manifest: block hits, rick hits
-    // and absences in one batch
+    // the batch path on the same store: block hits, rick hits and
+    // absences in one batch
     val (batch, readJobs) = withJobs {
       assert(store.get("aaa".getBytes, 3L).map(new String(_)).contains("fresh"))
       store.multiGet(Seq[(Array[Byte], Long)](
@@ -1265,8 +1261,8 @@ class HelixStoreSpec extends SparkTestBase {
       assert(v.map(new String(_)) == expect, what)
       assert(jobs.isEmpty, s"$what must run no Spark job: $jobs")
     }
-    // the first get after each compaction loads the block manifest, in
-    // process; every get below is a kv-cache miss: each (key, ts) is new
+    // the first get after each compaction reads its pair's dirs and
+    // nothing else; every get below is a kv-cache miss: each (key, ts) is new
     jobless("the first get after a compaction", store.get("j00".getBytes, 0L), Some("b0"))
     jobless("the first get after a compaction with kcCacheSize = 0",
       noKc.get("j00".getBytes, 0L), Some("b0"))
@@ -1527,6 +1523,14 @@ class HelixStoreSpec extends SparkTestBase {
     val emptyRead = src.indexOf("private def emptyEntriesWithMeta")
     within("createDataFrame(", 3, (emptyRead, src.indexOf("\n\n", emptyRead)),
       body("private def routeShards("), body("private def scanInProcess("))
+    // no second index beside the block layer: a point read finds a key's
+    // blocks by its (shard, bucket) dir, and a compaction writes no
+    // `m-<g>` generation. The two in-process readers are the rick's and
+    // the blocks'.
+    for (gone <- Seq("ManifestSchema", "manifestPruneMaxEntries", "blockMayContain", "\"m-$"))
+      assert(!src.contains(gone), s"HelixStore still has $gone")
+    assert(hits("new PartitionReader(").size == 2,
+      s"new PartitionReader( at ${hits("new PartitionReader(")}")
   }
 }
 

@@ -71,7 +71,7 @@ class StoreCrashSpec extends SparkTestBase {
     val kv = new String(Files.readAllBytes(Paths.get(dir, "_current")))
       .split('\n').map(_.trim).filter(_.contains("="))
       .map { l => val Array(k, v) = l.split("=", 2); k -> v }.toMap
-    Set(kv.get("rows"), kv.get("blocks"), kv.get("manifest")).flatten
+    Set(kv.get("rows"), kv.get("blocks")).flatten
   }
 
   private def buriedNames(dir: String): Set[String] = {
@@ -231,5 +231,53 @@ class StoreCrashSpec extends SparkTestBase {
     assert(stateOf(re) == withFresh)
     assert(re.get("ghost".getBytes, 5L).isEmpty)
     st.close(); re.close()
+  }
+
+  test("a store with an older layout's block manifest opens, reads the same, and drops it") {
+    // older stores kept a per-(shard, bucket) min/max-key manifest in an
+    // `m-<g>` dir named by a `manifest=` pointer line; this store is built
+    // by the current code, then given both by hand as such a store had them
+    val dir = tmpDir("hs-old-manifest")
+    val opts = StoreOptions(numShards = 2, bucketSize = BucketSize)
+    val st = HelixStore.open(spark, dir, opts)
+    genBatches(seed = 0xFACE).foreach(b => st.put(entriesDF(b)))
+    st.blockCompact()
+    st.put(entriesDF(Seq(("k0", 7L, "after"), ("k9", 120L, "fresh"))))
+    val probes = stateOf(st).toSeq.map { case (k, t, _) => (k.getBytes, t) } ++
+      (0 to 9).flatMap(k => Seq(7L, 42L, 99L, 120L).map(t => (s"k$k".getBytes, t)))
+    def reads(s: HelixStore) = (
+      stateOf(s),
+      probes.map { case (k, t) => s.get(k, t).map(new String(_)) },
+      s.multiGet(probes).map(_.map(new String(_))),
+      s.scan((0L, 200L), ("k".getBytes, "l".getBytes)).collect().toSeq.map { r =>
+        (new String(r.getAs[Array[Byte]]("key")), r.getAs[Long]("ts"),
+          new String(r.getAs[Array[Byte]]("value")))
+      })
+    val before = reads(st)
+    assert(before._2.flatten.nonEmpty && before._4.nonEmpty, "the probes found nothing")
+    st.close()
+
+    val pointer = Paths.get(dir, "_current")
+    val lines = new String(Files.readAllBytes(pointer)).split('\n').toSeq
+    def field(k: String): String =
+      lines.collectFirst { case l if l.startsWith(s"$k=") => l.stripPrefix(s"$k=") }.get
+    val manifest = s"m-${field("gen")}"
+    import org.apache.spark.sql.{functions => F}
+    spark.read.parquet(Paths.get(dir, field("blocks")).toString)
+      .groupBy("shard", "bucket")
+      .agg(F.min("key").as("min_key"), F.max("key").as("max_key"), F.count("*").as("n_blocks"))
+      .coalesce(1).write.mode("overwrite").parquet(Paths.get(dir, manifest).toString)
+    Files.write(pointer, (lines :+ s"manifest=$manifest").mkString("", "\n", "\n").getBytes)
+    assert(genDirs(dir).contains(manifest))
+
+    val re = HelixStore.open(spark, dir, opts)
+    assert(!Files.exists(Paths.get(dir, manifest)), "open left the old manifest dir")
+    assert(reads(re) == before, "the older layout reads differently")
+    // the next commit writes a pointer without the manifest line
+    re.blockCompact()
+    assert(!new String(Files.readAllBytes(pointer)).contains("manifest="))
+    assert(genDirs(dir).filter(_.startsWith("m-")).isEmpty)
+    assert(reads(re)._1 == before._1)
+    re.close()
   }
 }
