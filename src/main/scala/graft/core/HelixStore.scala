@@ -5,15 +5,14 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.parquet.hadoop.ParquetInputFormat
 import org.apache.spark.paths.SparkPath
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Expression, Predicate}
-import org.apache.spark.sql.execution.datasources.{FileFormat, FileIndex, HadoopFsRelation, PartitionDirectory, PartitionedFile}
+import org.apache.spark.sql.execution.datasources.{FileFormat, PartitionedFile}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StructField, StructType}
 
@@ -56,10 +55,20 @@ import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StructFiel
  * partitions below it (O(partitions) metadata, no data rewrite) — the
  * Outdate timestamp action.
  *
+ * == Reads ==
+ * Every read of the layers is one (shard, bucket) pair at a time, the
+ * reference's per-shard iterator over its rick and SSTable files
+ * (src/db.rs:67-74, src/iterator.rs): `HelixStore.pairEntries` reads
+ * the pair's rick and block files through Spark's own parquet reader
+ * ([[HelixStore.PartitionReader]]) and merges them last-write-wins.
+ * Point reads and small scans run it on the driver; larger scans,
+ * `toDF`, `latest`, seq recovery and compaction run it inside Spark
+ * tasks that each take whole pairs.
+ *
  * At cluster scale the same layout holds: shards spread writes across
  * executors, buckets bound the data any time-ranged query touches, and
- * compaction is an embarrassingly parallel per-partition rewrite whose
- * commit is one metadata rename.
+ * compaction is an embarrassingly parallel per-pair rewrite, with no
+ * shuffle, whose commit is one metadata rename.
  */
 /** User-defined compress function (UDCF) over a block's value payload —
   * the reference's headline custom-compression surface (reference:
@@ -182,16 +191,18 @@ final case class StoreOptions(
   * input-split sizing and output parallelism rather than one ring
   * buffer, so the analogue is two knobs:
   *  - `maxPartitionBytes`: bytes per scan task for THIS scan only
-  *    (smaller → more, smaller read units — the prefetch-buffer dial).
-  *    Honored by planning the scan through a cloned session so the
-  *    rest of the session's conf is untouched. Setting it puts the
-  *    scan on the Spark read path whatever the range's size: split
-  *    sizing means nothing to an in-process read (see `HelixStore.scan`).
+  *    (smaller → more, smaller read units — the prefetch-buffer dial),
+  *    in place of the session's `spark.sql.files.maxPartitionBytes`
+  *    when the store packs the range's (shard, bucket) pairs into
+  *    tasks. A task always takes whole pairs, so a value below one
+  *    pair's files gives one task per pair. Setting it puts the scan
+  *    on the task path whatever the range's size: split sizing means
+  *    nothing to a read on the driver (see `HelixStore.scan`).
   *  - `targetPartitions`: output partition count of the scan (0 =
   *    leave to the optimizer/AQE). Ordered scans range-partition on
   *    (key, ts) into exactly this many partitions, preserving global
-  *    order; unordered scans round-robin. It applies on either read
-  *    path. */
+  *    order; unordered scans round-robin. It applies to a scan read
+  *    on the driver and to one read in tasks alike. */
 final case class ScanOptions(
     targetPartitions: Int = 0,
     maxPartitionBytes: Option[Long] = None,
@@ -206,8 +217,8 @@ object HelixStore {
   val EntryColumns: Seq[String] = Seq("key", "ts", "value")
 
   /** Unsigned-lexicographic byte-array ordering — exactly Spark SQL's
-    * BinaryType comparison, so driver/executor Scala code (mapGroups
-    * LWW) picks the same winner as the Catalyst orderBy sites. */
+    * BinaryType comparison, so the store's key ranges and LWW value
+    * tiebreak order bytes the way a Catalyst orderBy does. */
   private[core] object BytesOrdering extends Ordering[Array[Byte]] {
     def compare(a: Array[Byte], b: Array[Byte]): Int = {
       val n = math.min(a.length, b.length)
@@ -222,17 +233,15 @@ object HelixStore {
   }
 
   /** The store's one last-write-wins order over (seq, subseq, value):
-    * the greatest wins. The Spark reads' rank window sorts by the same
-    * columns descending, and the value tiebreak is Spark's BinaryType
-    * order, so every read and the compaction pick the same winner. A
-    * member of the object, so a task closure using it captures no store. */
+    * the greatest wins, in every read and in compaction. A member of the
+    * object, so a task closure using it captures no store. */
   private[core] val LwwOrdering: Ordering[(Long, Long, Array[Byte])] =
     Ordering.Tuple3(Ordering.Long, Ordering.Long, BytesOrdering)
 
   /** Compressed block: one key's run within one (shard, bucket), ts
-    * delta-encoded from t0 with the max ts carried as t1 (so BOTH time
-    * bounds of a ranged scan prune at the parquet scan before the
-    * decode — the reference's SSTable block-meta time range), per-entry
+    * delta-encoded from t0 with the max ts carried as t1 (so a read
+    * skips a block whose [t0, t1] misses its time range before decoding
+    * it — the reference's SSTable block-meta time range), per-entry
     * seq preserved for LWW, values packed into one `payload` blob by
     * the named UDCF `codec` — the SSTable+UDCF unit (reference:
     * src/file/sstable.rs + fn_registry.rs compress_entries). */
@@ -243,7 +252,9 @@ object HelixStore {
   /** One raw (pre-LWW) entry as the reads emit it, in the column order
     * of [[RickSchema]]. */
   private[core] final case class RawEntry(key: Array[Byte], ts: Long, value: Array[Byte],
-      seq: Long, subseq: Long, shard: Int, bucket: Long)
+      seq: Long, subseq: Long, shard: Int, bucket: Long) {
+    def lww: (Long, Long, Array[Byte]) = (seq, subseq, value)
+  }
 
   /** The store's one block decoder: the entries of `b` whose ts
     * `keepTs` accepts, walked lazily off the delta-encoded timestamps;
@@ -265,12 +276,8 @@ object HelixStore {
   }
 
   // Product encoders are derived by Scala reflection; derived once here
-  // rather than by an implicit import on every read of the blocks.
+  // rather than on every compaction.
   private val BinBlockEncoder: Encoder[BinBlock] = Encoders.product[BinBlock]
-  private val RawEntryEncoder: Encoder[RawEntry] = Encoders.product[RawEntry]
-  /** The (key, shard, bucket) a block groups its entries by. */
-  private val BlockKeyEncoder: Encoder[(Array[Byte], Int, Long)] =
-    Encoders.tuple(Encoders.BINARY, Encoders.scalaInt, Encoders.scalaLong)
 
   // Every layer is written by the store itself, so its schema is a
   // constant: reads pass it instead of running a schema-inference job.
@@ -283,19 +290,16 @@ object HelixStore {
     StructField("shard", IntegerType), StructField("bucket", LongType)))
   /** The entry columns, as a scan returns them. */
   private val EntrySchema: StructType = StructType(EntryColumns.map(RickSchema(_)))
-  /** The largest scan read in process (see `HelixStore.scan`): its
+  /** The largest scan read on the driver (see `HelixStore.scan`): its
     * listed files, and the key and value bytes of the entries it
-    * decodes, each total at most this. Measured: single threaded, the
-    * in-process read costs about 5 µs per row plus 1 ms per file, while
-    * the Spark read has a floor of about 100–170 ms, 270–350 ms when the
-    * LWW window runs. On 4 cores, in store_serve's shape (8 shards,
-    * 10-ts buckets, 31 key and value bytes per entry), ranges of 16–24
-    * files holding rick files read in 97–169 ms in process against
-    * 273–346 ms on Spark; block-only ranges of 16–48 files and
-    * 10,000–25,000 rows in 105–154 against 105–134 ms; 64 files
-    * (2.2 MB, 80,000 rows) in 431 against 200 ms, and 320 files (11 MB)
-    * in 2.5 s against 0.4 s. The decoded half also bounds what the
-    * driver holds when the files compress far better than that. */
+    * keeps, each total at most this. Past it the scan's pairs are read
+    * in Spark tasks. The kept half also bounds what the driver holds
+    * when the files compress far better than that. Measured on 4 cores
+    * (8 shards, 10-ts buckets, 32 key and value bytes per entry, medians
+    * of 11 scans with their count, driver against tasks): 2,400 rows in
+    * 16 files 50–66 against 54–69 ms, 10,000 rows in 8 files 49 against
+    * 45 ms, 30,000 rows in 24 files (about 1 MB kept) 101 against 55 ms.
+    * So the tasks already win below this bound. */
   private[graft] val InProcessScanMaxBytes: Long = 1L << 20
   /** Block layer: one [[BinBlock]] per row. */
   val BlockSchema: StructType = BinBlockEncoder.schema
@@ -308,43 +312,155 @@ object HelixStore {
   private def dataColumnsOf(schema: StructType): StructType =
     StructType(schema.filterNot(f => PartitionSchema.fieldNames.contains(f.name)))
 
-  /** One (shard, bucket) partition dir of a layer and its data files. */
-  private final case class LayerPart(shard: Int, bucket: Long, files: Seq[Path])
+  /** One data file of a layer, stat'ed once by the listing: its URI,
+    * size and mtime, which the listing's byte total, the task packing
+    * and the file's `PartitionedFile` all use. */
+  private[core] final case class DataFile(path: SparkPath, size: Long, mtime: Long)
 
-  /** The file index of one layer read: exactly the partitions the store
-    * listed for it (see `listLayer`), so planning neither lists the
-    * layer again nor infers anything. `listFiles` evaluates the partition
-    * filters Catalyst hands it on each partition's (shard, bucket): Spark
-    * does not re-apply them after the scan. A snapshot: `refresh` keeps
-    * the listing. */
-  private final class LayerIndex(root: Path, parts: Seq[LayerPart]) extends FileIndex {
-    private val dirs: Seq[PartitionDirectory] = parts.map { pt =>
-      PartitionDirectory(InternalRow(pt.shard, pt.bucket), pt.files.map { f =>
-        val a = Files.readAttributes(f, classOf[BasicFileAttributes])
-        new FileStatus(a.size(), false, 1, a.size(), a.lastModifiedTime().toMillis,
-          new HPath(f.toUri))
-      }.toArray)
-    }
-    // the layer dir itself: a directory's URI ends in `/`, which would
-    // leave the path without a name
-    def rootPaths: Seq[HPath] = Seq(new HPath(root.toUri.toString.stripSuffix("/")))
-    def listFiles(partitionFilters: Seq[Expression],
-        dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-      if (partitionFilters.isEmpty) dirs
-      else {
-        val keep = Predicate.createInterpreted(partitionFilters.reduce(And).transform {
-          case a: AttributeReference =>
-            val i = PartitionSchema.fieldNames.indexWhere(_.equalsIgnoreCase(a.name))
-            BoundReference(i, PartitionSchema(i).dataType, nullable = false)
-        })
-        keep.initialize(0)
-        dirs.filter(d => keep.eval(d.values))
-      }
-    def inputFiles: Array[String] = dirs.flatMap(_.files.map(_.getPath.toString)).toArray
-    def refresh(): Unit = ()
-    def sizeInBytes: Long = dirs.flatMap(_.files).map(_.getLen).sum
-    def partitionSchema: StructType = PartitionSchema
+  /** One (shard, bucket) partition dir of a layer and its data files. */
+  private final case class LayerPart(shard: Int, bucket: Long, files: Seq[DataFile])
+
+  /** One (shard, bucket) pair of a read and its files in both layers:
+    * the unit a read never splits, as its LWW merge needs all of them. */
+  private[core] final case class Pair(shard: Int, bucket: Long,
+      rick: Seq[DataFile], blocks: Seq[DataFile]) {
+    def files: Seq[DataFile] = rick ++ blocks
   }
+
+  /** The pairs of a rick and a block listing, sorted. */
+  private def pairsOf(rick: Seq[LayerPart], blocks: Seq[LayerPart]): Seq[Pair] = {
+    def byPair(l: Seq[LayerPart]) = l.map(pt => (pt.shard, pt.bucket) -> pt.files).toMap
+    val (r, b) = (byPair(rick), byPair(blocks))
+    (r.keySet ++ b.keySet).toSeq.sorted.map { case k @ (shard, bucket) =>
+      Pair(shard, bucket, r.getOrElse(k, Nil), b.getOrElse(k, Nil))
+    }
+  }
+
+  /** The rectangle a read keeps: ts in [tLo, tHi], both inclusive so a
+    * whole-store read needs no sentinel, and key in [k0, k1), with no
+    * upper key bound when `k1` is None. */
+  private[core] final case class Rect(tLo: Long, tHi: Long, k0: Array[Byte],
+      k1: Option[Array[Byte]]) {
+    def hasTs(ts: Long): Boolean = ts >= tLo && ts <= tHi
+    def hasKey(k: Array[Byte]): Boolean =
+      BytesOrdering.compare(k, k0) >= 0 && k1.forall(BytesOrdering.compare(k, _) < 0)
+    /** Whether a block whose entries span [t0, t1] can hold one inside. */
+    def meets(t0: Long, t1: Long): Boolean = t0 <= tHi && t1 >= tLo
+  }
+  private[core] val Everything = Rect(Long.MinValue, Long.MaxValue, Array.emptyByteArray, None)
+
+  /** The store's one parquet read: the rows of known data files of one
+    * layer, read by Spark's own parquet reader, one `PartitionedFile` per
+    * data file, on the calling thread, be it the driver's (point reads,
+    * small scans) or a task's. A get reads a few KB from one known dir;
+    * a query would pay the planner and a job for it. Row groups are not
+    * skipped: a compacted partition holds its keys in arbitrary order,
+    * so every row group's key range spans nearly the whole pair's.
+    * Output rows are `dataCols` followed by the (shard, bucket) a read
+    * passes, looked up through [[ordinal]].
+    * Built once per store and layer on the driver: building the reader
+    * broadcasts the Hadoop conf. The reader is the same serializable
+    * function Spark's own file scan ships to its tasks, and `spark` is
+    * used only to build it, so a task closure can hold this reader.
+    * The conf turns parquet's vectored IO off, so each row group is read
+    * on the calling thread rather than handed to an async pool the
+    * caller then waits on. */
+  private[core] final class PartitionReader(spark: SparkSession, dataCols: StructType)
+      extends Serializable {
+    val ordinal: Map[String, Int] = (dataCols ++ PartitionSchema).map(_.name).zipWithIndex.toMap
+    private val read: PartitionedFile => Iterator[InternalRow] = {
+      val conf = spark.sessionState.newHadoopConf()
+      conf.setBoolean(ParquetInputFormat.HADOOP_VECTORED_IO_ENABLED, false)
+      new ParquetFileFormat().buildReaderWithPartitionValues(
+        spark, dataCols, PartitionSchema, dataCols, Nil,
+        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
+    }
+
+    /** The rows of `files` that `keep` accepts, with partition values
+      * (shard, bucket), copied (the reader reuses its row objects). Each
+      * file is read whole when the iterator reaches it, and closed. */
+    def rows(files: Seq[DataFile], shard: Int, bucket: Long)(
+        keep: InternalRow => Boolean): Iterator[InternalRow] = {
+      val values = InternalRow(shard, bucket)
+      files.iterator.flatMap { f =>
+        val out = Vector.newBuilder[InternalRow]
+        val it = read(PartitionedFile(values, f.path, 0L, f.size,
+          Array.empty[String], f.mtime, f.size))
+        try it.foreach(r => if (keep(r)) out += r.copy())
+        finally it match { case c: AutoCloseable => c.close(); case _ => () }
+        out.result()
+      }
+    }
+  }
+
+  /** A row the block reader `blocks` returned, as a [[BinBlock]]. */
+  private[core] def binBlockOf(blocks: PartitionReader, r: InternalRow): BinBlock = {
+    val o = blocks.ordinal
+    BinBlock(r.getBinary(o("key")), r.getInt(o("shard")), r.getLong(o("bucket")),
+      r.getLong(o("t0")), r.getLong(o("t1")), r.getArray(o("deltas")).toLongArray(),
+      r.getArray(o("seqs")).toLongArray(), r.getUTF8String(o("codec")).toString,
+      r.getBinary(o("payload")))
+  }
+
+  /** The store's one range read: the live entries of `pair` inside `r`,
+    * the same on the driver and in a task, as its closure holds only the
+    * two readers, the codecs and plain values. The rick rows inside the
+    * rectangle and the entries inside it of the blocks that can hold one
+    * are merged last-write-wins per (key, ts) by [[LwwOrdering]]. A pair
+    * is one shard, so the merge is scoped per shard, like the reference's
+    * independent shard trees: a directPut entry keeps its own winner. A
+    * pair with no rick file streams its block entries with no merge, as
+    * a compaction already left one winner per (key, ts) in its blocks. */
+  private[core] def pairEntries(rick: PartitionReader, blocks: PartitionReader,
+      codecs: Map[String, BlockCodec], pair: Pair, r: Rect): Iterator[RawEntry] = {
+    val bo = blocks.ordinal
+    val (bKey, bT0, bT1) = (bo("key"), bo("t0"), bo("t1"))
+    val fromBlocks = blocks.rows(pair.blocks, pair.shard, pair.bucket) { row =>
+      r.meets(row.getLong(bT0), row.getLong(bT1)) && r.hasKey(row.getBinary(bKey))
+    }.flatMap(row => blockEntries(binBlockOf(blocks, row), codecs, r.hasTs))
+    if (pair.rick.isEmpty) fromBlocks
+    else {
+      val ro = rick.ordinal
+      val (rKey, rTs, rValue, rSeq, rSub) = (ro("key"), ro("ts"), ro("value"), ro("seq"), ro("subseq"))
+      val winners = new java.util.HashMap[(ByteBuffer, Long), RawEntry]()
+      def merge(e: RawEntry): Unit =
+        winners.merge((ByteBuffer.wrap(e.key), e.ts), e,
+          (a, b) => if (LwwOrdering.gt(b.lww, a.lww)) b else a): Unit
+      rick.rows(pair.rick, pair.shard, pair.bucket) { row =>
+        r.hasTs(row.getLong(rTs)) && r.hasKey(row.getBinary(rKey))
+      }.foreach(row => merge(RawEntry(row.getBinary(rKey), row.getLong(rTs),
+        row.getBinary(rValue), row.getLong(rSeq), row.getLong(rSub), pair.shard, pair.bucket)))
+      fromBlocks.foreach(merge)
+      winners.values.iterator.asScala
+    }
+  }
+
+  /** The blocks a compaction writes for `pair`: its live entries grouped
+    * by key, one [[BinBlock]] per key with its entries in ts order and
+    * its values packed by the codec `dispatch` names, in key order. A
+    * dispatch to an unregistered codec name fails the compaction loudly
+    * (reference FnRegistry::udcf errors, fn_registry.rs:96). */
+  private[core] def pairBlocks(rick: PartitionReader, blocks: PartitionReader,
+      codecs: Map[String, BlockCodec], dispatch: Array[Byte] => String,
+      pair: Pair): Iterator[BinBlock] =
+    pairEntries(rick, blocks, codecs, pair, Everything).toArray
+      .groupBy(e => ByteBuffer.wrap(e.key)).valuesIterator.map { es =>
+        val byTs = es.sortBy(_.ts)
+        val t0 = byTs.head.ts
+        val deltas = new Array[Long](byTs.length)
+        var prev = t0
+        var i = 0
+        while (i < byTs.length) {
+          deltas(i) = byTs(i).ts - prev; prev = byTs(i).ts; i += 1
+        }
+        val keyBytes = byTs.head.key
+        val codecName = dispatch(keyBytes)
+        val codec = codecs.getOrElse(codecName, throw new IllegalArgumentException(
+          s"codec dispatch returned unregistered name '$codecName' " +
+            s"(registered: ${codecs.keys.mkString(", ")})"))
+        BinBlock(keyBytes, pair.shard, pair.bucket, t0, byTs.last.ts, deltas,
+          byTs.map(_.seq), codecName, codec.encode(byTs.map(_.value)))
+      }.toArray.sortBy(_.key)(BytesOrdering).iterator
 
   def open(spark: SparkSession, path: String,
       opts: StoreOptions = StoreOptions()): HelixStore =
@@ -862,17 +978,15 @@ final class HelixStore private (
       // ones intact, no commit since): those seqs live only in rick
       // rows, and reminting one would let an old batch beat a newer
       // write at LWW. Blocks never need scanning — every commit stamps
-      // seqhw at or above everything it absorbed. Cost: one max() over
-      // the rick parquet, once per instance, at its first mint.
+      // seqhw at or above everything it absorbed. Cost: one Spark job
+      // over the rick's pairs, once per instance, at its first mint; it
+      // takes the max over each pair's LWW winners, and the row holding
+      // a pair's top seq wins its (key, ts).
       val fromFiles = scanSeqFiles()
       val fromPtr = math.max(ptr.seqhw, 0L)
-      val rick = listLayer(dirOf(ptr.rows))
+      val rick = pairsOf(listLayer(dirOf(ptr.rows)), Nil)
       val fromRick =
-        if (rick.isEmpty) 0L
-        else {
-          val r = readLayer(RickSchema, dirOf(ptr.rows), rick).agg(max("seq")).head()
-          if (r.isNullAt(0)) 0L else r.getLong(0)
-        }
+        if (rick.isEmpty) 0L else entryRdd(rick, Everything, None).map(_.seq).fold(0L)(math.max)
       seqHw = math.max(math.max(fromFiles, fromPtr), fromRick)
     }
     // Another instance may have minted and COMMITTED seqs above our
@@ -910,15 +1024,21 @@ final class HelixStore private (
     * files under `_temporary/` (in flight, or left by a dead driver),
     * `_SUCCESS` and `.crc` checksums, so the store's own listings see
     * exactly what a Spark read of the same dir sees. */
-  private def dataFiles(dir: Path): Seq[Path] = {
-    def walk(d: Path): List[Path] = listDir(d)
-      .filterNot { c => val n = c.getFileName.toString; n.startsWith("_") || n.startsWith(".") }
-      .flatMap { c =>
-        if (Files.isDirectory(c)) walk(c)
-        else if (c.getFileName.toString.endsWith(".parquet")) List(c)
+  private def dataFiles(dir: Path): Seq[DataFile] = {
+    def walk(d: Path): List[DataFile] = listDir(d).flatMap { c =>
+      val n = c.getFileName.toString
+      if (n.startsWith("_") || n.startsWith(".")) Nil
+      else {
+        // the one stat of the file: its kind, size and mtime
+        val a = Files.readAttributes(c, classOf[BasicFileAttributes])
+        if (a.isDirectory) walk(c)
+        else if (n.endsWith(".parquet"))
+          List(DataFile(SparkPath.fromPath(new HPath(c.toUri)), a.size(),
+            a.lastModifiedTime().toMillis))
         else Nil
       }
-    if (Files.isDirectory(dir)) walk(dir).sortBy(_.toString) else Seq.empty
+    }
+    if (Files.isDirectory(dir)) walk(dir).sortBy(_.path.urlEncoded) else Seq.empty
   }
 
   /** The (shard, bucket) partitions of `layer` whose bucket lies in
@@ -944,123 +1064,60 @@ final class HelixStore private (
     } yield LayerPart(shard, bucket, files)).sortBy(pt => (pt.shard, pt.bucket))
   }
 
-  private def emptyEntriesWithMeta: DataFrame =
-    spark.createDataFrame(java.util.Collections.emptyList[Row](), RickSchema)
-
-  /** The store's one parquet query: every read that builds a DataFrame
-    * (scan, toDF, latest, compaction, seq recovery) goes through here;
-    * point reads and scans of at most [[HelixStore.InProcessScanMaxBytes]]
-    * use [[PartitionReader]] instead.
-    * The relation is built directly on a [[LayerIndex]] over `parts`,
-    * the partitions the caller listed from one pointer snapshot, with
-    * the layer's fixed schema: no data source resolution, no listing of
-    * the whole layer and no schema inference. `reader` is the session
-    * whose conf plans the scan (a scan's split sizing). A file that
-    * vanishes after the listing fails the read. */
-  private def readLayer(schema: StructType, layer: Path, parts: Seq[LayerPart],
-      reader: SparkSession = spark): DataFrame =
-    reader.baseRelationToDataFrame(HadoopFsRelation(new LayerIndex(layer, parts),
-      PartitionSchema, dataColumnsOf(schema), None, new ParquetFileFormat, Map.empty)(reader))
-
-  /** The store's one in-process parquet read, for point reads and small
-    * scans: the rows of a few known files of one layer, read on the
-    * calling thread by Spark's own parquet reader, one `PartitionedFile`
-    * per data file. A get reads a few KB from one known dir; a query
-    * would pay the planner and a job for it. Row groups are not skipped:
-    * a compacted partition holds its keys in arbitrary order, so every
-    * row group's key range spans nearly the whole pair's. Output rows are
-    * `dataCols` followed by the (shard, bucket) a read passes, looked up
-    * through [[ordinal]].
-    * Built once per store and layer: building the reader broadcasts
-    * the Hadoop conf. That conf turns parquet's vectored IO off, so each
-    * row group is read on the calling thread rather than handed to an
-    * async pool the caller then waits on; Spark tasks keep the session
-    * default. */
-  private final class PartitionReader(dataCols: StructType) {
-    val ordinal: Map[String, Int] = (dataCols ++ PartitionSchema).map(_.name).zipWithIndex.toMap
-    private val read = {
-      val conf = spark.sessionState.newHadoopConf()
-      conf.setBoolean(ParquetInputFormat.HADOOP_VECTORED_IO_ENABLED, false)
-      new ParquetFileFormat().buildReaderWithPartitionValues(
-        spark, dataCols, PartitionSchema, dataCols, Nil,
-        Map(FileFormat.OPTION_RETURNING_BATCH -> "false"), conf)
-    }
-
-    /** The rows of `files` that `keep` accepts, with partition values
-      * `values`, copied (the reader reuses its row objects); each file
-      * opened is closed. */
-    def rows(files: Seq[Path], values: InternalRow)(
-        keep: InternalRow => Boolean): Seq[InternalRow] = {
-      val out = Vector.newBuilder[InternalRow]
-      for (f <- files) {
-        val attrs = Files.readAttributes(f, classOf[BasicFileAttributes])
-        val it = read(PartitionedFile(values,
-          SparkPath.fromPath(new HPath(f.toUri)), 0L, attrs.size(),
-          Array.empty[String], attrs.lastModifiedTime().toMillis, attrs.size()))
-        try it.foreach(r => if (keep(r)) out += r.copy())
-        finally it match { case c: AutoCloseable => c.close(); case _ => () }
-      }
-      out.result()
-    }
-
-    /** The rows of `layer`'s (shard, bucket) dir that `keep` accepts. A
-      * missing dir has no rows. */
-    def pair(layer: Path, shard: Long, bucket: Long)(
-        keep: InternalRow => Boolean): Seq[InternalRow] =
-      rows(dataFiles(partitionDir(layer, shard, bucket)), InternalRow(shard.toInt, bucket))(keep)
-  }
-  private lazy val rickPartitions = new PartitionReader(dataColumnsOf(RickSchema))
-  private lazy val blockPartitions = new PartitionReader(dataColumnsOf(BlockSchema))
+  private lazy val rickPartitions = new PartitionReader(spark, dataColumnsOf(RickSchema))
+  private lazy val blockPartitions = new PartitionReader(spark, dataColumnsOf(BlockSchema))
 
   private def partitionDir(layer: Path, shard: Long, bucket: Long): Path =
     layer.resolve(s"shard=$shard").resolve(s"bucket=$bucket")
 
-  /** Every raw entry (pre-LWW) of the listed partitions of `p`'s layers:
-    * rick rows + decompressed blocks, all carrying (key, ts, value, seq,
-    * subseq, shard, bucket). The listings decide the files read: the
-    * callers list only the buckets in their range and at or above the
-    * retention cutoff, so no bucket filter is needed here, and a file put
-    * after the listing is not read (compaction moves such files into its
-    * new generation at commit). */
-  private def rawEntries(p: Pointer, rick: Seq[LayerPart], blocks: Seq[LayerPart],
-      reader: SparkSession = spark,
-      pruneKey: Option[(Array[Byte], Array[Byte])] = None,
-      pruneTsLt: Option[Long] = None,
-      pruneTsGe: Option[Long] = None): DataFrame = {
-    // Range pruning BEFORE the block-decode flatMap (r20, reference
-    // analogue: SSTable block-meta pruning): Catalyst cannot push a
-    // predicate through the typed flatMap, so without these a key- or
-    // time-ranged scan decodes EVERY listed block and discards most
-    // entries after the fact — and orderBy's range-partitioner sampling
-    // pass pays that decode a second time. A block holds one key with
-    // ascending timestamps from t0 to t1, so [k0, k1) applies to blocks
-    // exactly, `t0 < hi` is a sound upper prune (every entry of a t0 ≥ hi
-    // block is ≥ hi) and `t1 ≥ lo` a sound lower prune (every entry of a
-    // t1 < lo block is < lo). The rick side carries raw entry rows, so
-    // the predicates push to its parquet scan as-is. Sound under the LWW
-    // window too: it partitions by (…, key, ts), and pruning never
-    // removes a row of a surviving (key, ts) group.
-    // `firstTs`/`lastTs` name the columns holding a row's first and last
-    // entry ts. One filter per layer, and none without a bound: every
-    // Dataset step is analyzed on the driver before the scan's first job.
-    def prune(df: DataFrame, firstTs: String, lastTs: String): DataFrame =
-      (pruneKey.map { case (k0, k1) => col("key") >= lit(k0) && col("key") < lit(k1) } ++
-        pruneTsLt.map(hi => col(firstTs) < hi) ++ pruneTsGe.map(lo => col(lastTs) >= lo))
-        .reduceOption(_ && _).fold(df)(df.filter)
-    // the rick's columns are already in the entry order
-    val rows = Option.when(rick.nonEmpty) {
-      prune(readLayer(RickSchema, dirOf(p.rows), rick, reader), "ts", "ts")
+  /** The rows of `layer`'s (shard, bucket) dir that `keep` accepts,
+    * read on the calling thread. A missing dir has no rows. */
+  private def pairRows(reader: PartitionReader, layer: Path, shard: Long, bucket: Long)(
+      keep: InternalRow => Boolean): Seq[InternalRow] =
+    reader.rows(dataFiles(partitionDir(layer, shard, bucket)), shard.toInt, bucket)(keep).toSeq
+
+  /** `pairs` packed into Spark tasks, one RDD partition per task, each
+    * holding whole pairs: a pair is never split, as its LWW merge needs
+    * all of its files. The split size is Spark's own for a file scan,
+    * min(maxBytes, max(openCostInBytes, listed / defaultParallelism)),
+    * where a file counts its bytes plus openCostInBytes and `maxBytes`
+    * defaults to the session's `spark.sql.files.maxPartitionBytes`; the
+    * pairs are packed largest first, as Spark packs files. The rows are
+    * read when a job runs the RDD: a file that vanished by then fails
+    * the read. */
+  private def pairTasks(pairs: Seq[Pair], maxBytes: Option[Long]): RDD[Pair] = {
+    val conf = spark.sessionState.conf
+    def cost(pr: Pair): Long = pr.files.map(_.size + conf.filesOpenCostInBytes).sum
+    val split = math.min(maxBytes.getOrElse(conf.filesMaxPartitionBytes),
+      math.max(conf.filesOpenCostInBytes,
+        pairs.map(cost).sum / spark.sparkContext.defaultParallelism))
+    val tasks = Vector.newBuilder[Vector[Pair]]
+    var (task, taskBytes) = (Vector.empty[Pair], 0L)
+    for (pr <- pairs.sortBy(-cost(_))) {
+      if (task.nonEmpty && taskBytes + pr.files.map(_.size).sum > split) {
+        tasks += task; task = Vector.empty; taskBytes = 0L
+      }
+      task :+= pr; taskBytes += cost(pr)
     }
-    val decoded = p.blocks.filter(_ => blocks.nonEmpty).map { dir =>
-      // local vals only inside the closure: the task must never
-      // capture the store instance (SparkSession isn't serializable)
-      val codecsByName = opts.codecs
-      prune(readLayer(BlockSchema, dirOf(dir), blocks, reader), "t0", "t1")
-        .as(BinBlockEncoder)
-        .flatMap(b => HelixStore.blockEntries(b, codecsByName))(RawEntryEncoder).toDF()
-    }
-    (rows ++ decoded).reduceOption(_.unionByName(_)).getOrElse(emptyEntriesWithMeta)
+    if (task.nonEmpty) tasks += task
+    val packed = tasks.result()
+    spark.sparkContext.parallelize(packed, math.max(1, packed.size)).flatMap(identity)
   }
+
+  /** The live entries of `pairs` inside `r`, read by
+    * [[HelixStore.pairEntries]] in the tasks of [[pairTasks]]. */
+  private def entryRdd(pairs: Seq[Pair], r: Rect, maxBytes: Option[Long]): RDD[RawEntry] = {
+    // locals only inside the closure: the task must never capture the
+    // store instance (SparkSession isn't serializable)
+    val (rick, blocks, codecs) = (rickPartitions, blockPartitions, opts.codecs)
+    pairTasks(pairs, maxBytes).flatMap(pairEntries(rick, blocks, codecs, _, r))
+  }
+
+  /** The live entries of `pairs` inside `r` as a frame of the entry
+    * columns, read in Spark tasks when the frame runs. */
+  private def entryFrame(pairs: Seq[Pair], r: Rect, maxBytes: Option[Long] = None): DataFrame =
+    spark.createDataFrame(entryRdd(pairs, r, maxBytes).map(e => Row(e.key, e.ts, e.value)),
+      EntrySchema)
 
   /** Shard routing expression: custom ShardingKeyFn when registered. */
   private def shardExpr(key: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -1159,13 +1216,14 @@ final class HelixStore private (
     } finally endPut()
   }
 
-  /** All live entries (latest write wins per (key, ts)). */
-  def toDF: DataFrame = toDFWithPartitions().select(EntryColumns.map(col): _*)
+  /** All live entries (latest write wins per (key, ts)), read in Spark
+    * tasks when the frame runs. */
+  def toDF: DataFrame = entryFrame(listRange(), Everything)
 
   /** Register the store as a temp view so plain `spark.sql` can query
     * it. The view is a SNAPSHOT: it pins the generation set and file
-    * listing at registration (Spark caches the file index inside the
-    * plan), so re-register after writes/compactions to see them —
+    * listing at registration (the frame's RDD holds the listed pairs),
+    * so re-register after writes/compactions to see them —
     * the same REFRESH discipline as an external parquet table. */
   def createOrReplaceTempView(name: String): Unit =
     toDF.createOrReplaceTempView(name)
@@ -1251,7 +1309,7 @@ final class HelixStore private (
       probes: Seq[(Array[Byte], Long)], decompress: Boolean)(
       blocksOf: Seq[Array[Byte]] => Map[ByteBuffer, Seq[BinBlock]]): Seq[Option[Array[Byte]]] = {
     // logical retention: an outdated bucket is invisible in BOTH layers
-    // (toDFWithPartitions lists queries' buckets from the same cutoff)
+    // (listRange lists the scans' buckets from the same cutoff)
     if (bucket < p.minb) return probes.map(_ => None)
     val readBlocks = decompress &&
       p.blocks.exists(b => Files.isDirectory(partitionDir(dirOf(b), shard, bucket)))
@@ -1273,18 +1331,9 @@ final class HelixStore private (
     case Some(b) =>
       val want = keys.map(ByteBuffer.wrap).toSet
       val kO = blockPartitions.ordinal("key")
-      blockPartitions.pair(dirOf(b), shard, bucket)(r => want(ByteBuffer.wrap(r.getBinary(kO))))
-        .map(binBlockOf)
+      pairRows(blockPartitions, dirOf(b), shard, bucket)(r => want(ByteBuffer.wrap(r.getBinary(kO))))
+        .map(binBlockOf(blockPartitions, _))
         .groupBy(blk => ByteBuffer.wrap(blk.key))
-  }
-
-  /** A row the block reader returned, as a [[BinBlock]]. */
-  private def binBlockOf(r: InternalRow): BinBlock = {
-    val o = blockPartitions.ordinal
-    BinBlock(r.getBinary(o("key")), r.getInt(o("shard")), r.getLong(o("bucket")),
-      r.getLong(o("t0")), r.getLong(o("t1")), r.getArray(o("deltas")).toLongArray(),
-      r.getArray(o("seqs")).toLongArray(), r.getUTF8String(o("codec")).toString,
-      r.getBinary(o("payload")))
   }
 
   /** (seq, subseq, value) of every rick row at one of the `want`ed
@@ -1295,7 +1344,7 @@ final class HelixStore private (
     val o = rickPartitions.ordinal
     val (kO, tsO) = (o("key"), o("ts"))
     val wantTs = want.map(_._2)
-    rickPartitions.pair(dirOf(p.rows), shard, bucket) { r =>
+    pairRows(rickPartitions, dirOf(p.rows), shard, bucket) { r =>
         val ts = r.getLong(tsO)
         wantTs(ts) && want((ByteBuffer.wrap(r.getBinary(kO)), ts))
       }
@@ -1415,24 +1464,26 @@ final class HelixStore private (
       .maxOption(LwwOrdering)
 
   /** Time-range × key-range scan, globally ordered by (key, ts) —
-    * the reference's mux-merged iterator (src/db.rs:67, iterator.rs),
-    * expressed as a range-partitioned sort. Bounds follow the reference
-    * TimeRange semantics: [start, end) on ts, [low, high) on key.
+    * the reference's per-shard iterators (src/db.rs:67, iterator.rs):
+    * each (shard, bucket) pair of the range is read and LWW-merged by
+    * [[HelixStore.pairEntries]], and the pairs' entries are sorted.
+    * Bounds follow the reference TimeRange semantics: [start, end) on
+    * ts, [low, high) on key.
     *
-    * Two read paths, chosen after one listing of the range's partitions
-    * in both layers from one pointer snapshot:
-    *  - in process, when `maxPartitionBytes` is unset and the listed
+    * The range's pairs are listed once, in both layers, from one
+    * pointer snapshot, then read in one of two places:
+    *  - on the driver, when `maxPartitionBytes` is unset and the listed
     *    (compressed) files total at most [[HelixStore.InProcessScanMaxBytes]]:
-    *    the rows are read and merged last-write-wins on the calling
-    *    thread, here at `scan()`, and the frame is a local relation that
-    *    later mutations and vacuums cannot change (see [[scanInProcess]]).
-    *    If the entries it decodes pass that many key and value bytes,
-    *    the read stops and the range takes the Spark path;
-    *  - otherwise a Spark query over exactly the listed files, read
-    *    when the frame runs; a plan built before a compaction or an
-    *    outdate still reads its generation until vacuum removes it.
+    *    the pairs are read here at `scan()`, and the frame is a local
+    *    relation that later mutations and vacuums cannot change (see
+    *    [[scanInProcess]]). If the entries it keeps pass that many key
+    *    and value bytes, the read stops and the range goes to tasks;
+    *  - otherwise in Spark tasks that each read whole pairs (see
+    *    [[pairTasks]]), when the frame runs; a frame built before a
+    *    compaction or an outdate still reads its generation until
+    *    vacuum removes it.
     * The ordering, comparator, `targetPartitions` and `ordered = false`
-    * apply alike to either path.
+    * apply alike to either place.
     *
     * User-defined ordering — the reference's `Comparator` trait
     * (src/util.rs:21; LexicalComparator and NoOrderComparator are the
@@ -1453,44 +1504,17 @@ final class HelixStore private (
       "comparator requires ordered=true (ordered=false IS the NoOrderComparator scan)")
     val (t0, t1) = tsRange
     val (k0, k1) = keyRange
-    // truncating division matches put()'s `ts div bucketSize` and is
-    // monotone, so [bucket(t0), bucket(t1-1)] covers the range exactly
-    val b0 = t0 / opts.bucketSize
-    val b1 = (t1 - 1) / opts.bucketSize
-    // per-scan split sizing (ScanOption.prefetch_buf_size analogue):
-    // the parquet relations must be BUILT under a session carrying the
-    // override — split planning reads the conf of the session that
-    // created the relation, so a clone scopes it to this scan only
-    val reader = scanOpts.maxPartitionBytes match {
-      case Some(b) =>
-        val s = spark.newSession()
-        // newSession starts from the CONTEXT conf only — copy the
-        // parent's runtime conf first (shuffle partitions, timezone,
-        // AQE toggles set via spark.conf.set after startup), so the
-        // clone differs from every other read in exactly one knob.
-        // Static/immutable entries refuse the set; skip them.
-        spark.conf.getAll.foreach { case (k, v) =>
-          try s.conf.set(k, v) catch { case _: Exception => () }
-        }
-        s.conf.set("spark.sql.files.maxPartitionBytes", b.toString)
-        s
-      case None => spark
-    }
-    // only the buckets [b0, b1] are listed and read, from one pointer
-    // snapshot; a small range is read in process
-    val listed = listRange((b0, b1))
-    val inProcess =
-      if (scanOpts.maxPartitionBytes.isEmpty && listed.bytes <= InProcessScanMaxBytes)
-        scanInProcess(listed, t0, t1, k0, k1)
-      else None
-    // key range + BOTH ts bounds also prune BELOW the block-decode
-    // flatMap (see rawEntries: t0 < hi on the block start, t1 >= lo on
-    // the block max written at compaction) — the per-entry filters here
-    // stay for the entries a surviving block carries outside the range
-    val entries = inProcess.getOrElse(toDFWithPartitions(listed, reader,
-        pruneKey = Some((k0, k1)), pruneTsLt = Some(t1), pruneTsGe = Some(t0))
-      .filter(col("ts") >= t0 && col("ts") < t1 && col("key") >= lit(k0) && col("key") < lit(k1))
-      .select(EntryColumns.map(col): _*))
+    // only the buckets [bucket(t0), bucket(t1 - 1)] are listed and read,
+    // from one pointer snapshot: truncating division matches put()'s
+    // `ts div bucketSize` and is monotone, so they cover the range
+    // exactly. An empty range lists nothing.
+    val listed =
+      if (t1 <= t0) Nil else listRange((t0 / opts.bucketSize, (t1 - 1) / opts.bucketSize))
+    val r = Rect(t0, t1 - 1, k0, Some(k1))
+    val listedBytes = listed.iterator.flatMap(_.files).map(_.size).sum
+    val entries = Option.when(scanOpts.maxPartitionBytes.isEmpty &&
+        listedBytes <= InProcessScanMaxBytes)(scanInProcess(listed, r)).flatten
+      .getOrElse(entryFrame(listed, r, scanOpts.maxPartitionBytes))
     // ordered=false is the reference's NoOrderComparator scan (util.rs):
     // skip the global sort when the consumer doesn't need key order.
     // A user comparator prepends its sort-key expression; (key, ts)
@@ -1512,55 +1536,25 @@ final class HelixStore private (
     }
   }
 
-  /** The live entries of the rectangle [t0, t1) × [k0, k1) in listing
-    * `l`, read in process on the calling thread by the point reads'
-    * [[PartitionReader]], with no Spark job: the rick rows inside the
-    * rectangle, and the entries inside it of the blocks that can hold
-    * one (`t0 < t1`, `t1 >= t0` on the block's bounds, key in range),
-    * merged last-write-wins per (shard, key, ts) by
-    * [[HelixStore.LwwOrdering]] into one map as they are read. Returned
-    * as a local relation of the entry columns: the rows are read here,
-    * not when the frame runs. The relation is one partition, as the rows
-    * already sit on the driver: a sort or a count above it then runs as
-    * one task, with no exchange and no range-sampling job. None once
-    * the winners' key and value bytes pass [[InProcessScanMaxBytes]]
-    * (checked after each partition): the caller then reads the range
-    * through Spark, so the merge never holds more than that plus one
-    * partition's rows. */
-  private def scanInProcess(l: Listing, t0: Long, t1: Long, k0: Array[Byte],
-      k1: Array[Byte]): Option[DataFrame] = {
-    def inKeys(k: Array[Byte]): Boolean =
-      BytesOrdering.compare(k, k0) >= 0 && BytesOrdering.compare(k, k1) < 0
-    def lww(e: RawEntry) = (e.seq, e.subseq, e.value)
-    val winners = new java.util.HashMap[(Int, ByteBuffer, Long), RawEntry]()
+  /** The live entries of `pairs` inside `r`, read on the driver by
+    * [[HelixStore.pairEntries]], pair by pair, with no Spark job.
+    * Returned as a local relation of the entry columns: the rows are
+    * read here, not when the frame runs. The relation is one partition,
+    * as the rows already sit on the driver: a sort or a count above it
+    * then runs as one task, with no exchange and no range-sampling job.
+    * None once the kept entries' key and value bytes pass
+    * [[InProcessScanMaxBytes]] (checked after each pair): the caller then
+    * reads the range in tasks, so the driver never holds more than that
+    * plus one pair's entries. */
+  private def scanInProcess(pairs: Seq[Pair], r: Rect): Option[DataFrame] = {
+    val rows = Vector.newBuilder[Row]
     var held = 0L
-    def merge(e: RawEntry): Unit = {
-      val k = (e.shard, ByteBuffer.wrap(e.key), e.ts)
-      val prev = winners.get(k)
-      if (prev == null) { winners.put(k, e); held += e.key.length + e.value.length }
-      else if (LwwOrdering.gt(lww(e), lww(prev))) {
-        winners.put(k, e); held += e.value.length - prev.value.length
+    for (pair <- pairs if held <= InProcessScanMaxBytes)
+      pairEntries(rickPartitions, blockPartitions, opts.codecs, pair, r).foreach { e =>
+        rows += Row(e.key, e.ts, e.value); held += e.key.length + e.value.length
       }
-    }
-    val ro = rickPartitions.ordinal
-    val (rKey, rTs) = (ro("key"), ro("ts"))
-    for (pt <- l.rick if held <= InProcessScanMaxBytes)
-      rickPartitions.rows(pt.files, InternalRow(pt.shard, pt.bucket)) { r =>
-        val ts = r.getLong(rTs)
-        ts >= t0 && ts < t1 && inKeys(r.getBinary(rKey))
-      }.foreach(r => merge(RawEntry(r.getBinary(rKey), r.getLong(rTs), r.getBinary(ro("value")),
-        r.getLong(ro("seq")), r.getLong(ro("subseq")), pt.shard, pt.bucket)))
-    val bo = blockPartitions.ordinal
-    val (bKey, bT0, bT1) = (bo("key"), bo("t0"), bo("t1"))
-    for (pt <- l.blocks if held <= InProcessScanMaxBytes)
-      blockPartitions.rows(pt.files, InternalRow(pt.shard, pt.bucket)) { r =>
-        r.getLong(bT0) < t1 && r.getLong(bT1) >= t0 && inKeys(r.getBinary(bKey))
-      }.foreach(r => blockEntries(binBlockOf(r), opts.codecs, ts => ts >= t0 && ts < t1)
-        .foreach(merge))
-    if (held > InProcessScanMaxBytes) None
-    else Some(spark.createDataFrame(
-      winners.values.asScala.map(e => Row(e.key, e.ts, e.value)).toSeq.asJava, EntrySchema)
-      .coalesce(1))
+    Option.when(held <= InProcessScanMaxBytes)(
+      spark.createDataFrame(rows.result().asJava, EntrySchema).coalesce(1))
   }
 
   /** Continuous ingestion: attach a streaming entries source (key BINARY,
@@ -1574,71 +1568,31 @@ final class HelixStore private (
       .foreachBatch { (batch: DataFrame, _: Long) => put(batch) }
       .start()
 
-  /** Both layers' partitions of one bucket range, listed from one
-    * pointer snapshot `p`: what a read of that range scans. */
-  private final case class Listing(p: Pointer, rick: Seq[LayerPart], blocks: Seq[LayerPart]) {
-    def bytes: Long = (rick ++ blocks).iterator.flatMap(_.files).map(Files.size).sum
-  }
-
-  /** The buckets in `buckets` (inclusive) of the committed pointer's
-    * layers, each layer listed once, only in that range and at or above
-    * the retention cutoff. */
-  private def listRange(buckets: (Long, Long) = (Long.MinValue, Long.MaxValue)): Listing = {
+  /** Both layers' (shard, bucket) pairs of the buckets in `buckets`
+    * (inclusive), listed from one snapshot of the committed pointer,
+    * each layer once, only in that range and at or above the retention
+    * cutoff: what a read of that range reads. */
+  private def listRange(buckets: (Long, Long) = (Long.MinValue, Long.MaxValue)): Seq[Pair] = {
     refreshPointer()
     val p = ptr
     // retention is LOGICAL: buckets below the committed cutoff are
     // invisible even while their files await vacuum
     val (b0, b1) = (math.max(buckets._1, p.minb), buckets._2)
-    Listing(p, listLayer(dirOf(p.rows), b0, b1),
+    pairsOf(listLayer(dirOf(p.rows), b0, b1),
       p.blocks.fold(Seq.empty[LayerPart])(b => listLayer(dirOf(b), b0, b1)))
   }
 
-  /** The live entries of listing `l` with their shard and bucket, as a
-    * Spark query over exactly the listed files. */
-  private def toDFWithPartitions(l: Listing = listRange(),
-      reader: SparkSession = spark,
-      pruneKey: Option[(Array[Byte], Array[Byte])] = None,
-      pruneTsLt: Option[Long] = None,
-      pruneTsGe: Option[Long] = None): DataFrame = {
-    val Listing(p, rick, blocks) = l
-    val raw = rawEntries(p, rick, blocks, reader, pruneKey, pruneTsLt, pruneTsGe)
-    // Block-only fast path: with no rick file in the range, the block
-    // layer is the only source and blockCompact already resolved LWW per
-    // (key, ts) — same key → same shard, same ts → same bucket, so
-    // uniqueness is global. Skipping the rank window removes a full
-    // shuffle from every read of compacted buckets (the common state —
-    // at 100 TB the read-amplification win is the whole point of
-    // compacting), also while newer buckets still sit in the rick.
-    if (rick.isEmpty) raw
-    else {
-      // LWW scoped per shard (like the reference, whose shards are
-      // independent trees): for routed writes key determines shard so
-      // this equals a global (key, ts) rank, and for shard-addressed
-      // directPut data each shard keeps its own winner — exactly what
-      // the block-only fast path above yields, so both paths agree.
-      // `bucket` is redundant in the keys (a pure function of ts) and
-      // changes no winner.
-      val w = Window.partitionBy("shard", "bucket", "key", "ts")
-        .orderBy(col("seq").desc, col("subseq").desc, col("value").desc)
-      raw.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-    }
-  }
-
-  /** Latest value per key at or before `asOf` (TimeIterator newest-wins). */
-  def latest(asOf: Long): DataFrame = {
-    val w = Window.partitionBy("key").orderBy(col("ts").desc)
-    // asOf bounds the buckets listed (truncating division is monotone,
-    // so every ts ≤ asOf has bucket ≤ asOf's) and prunes below the block
-    // decode too (t0 ≤ asOf blocks only — sound: the per-key window only
-    // ever KEEPS entries with ts ≤ asOf, and those live in blocks with
-    // t0 ≤ ts ≤ asOf)
-    toDFWithPartitions(listRange((Long.MinValue, asOf / opts.bucketSize)),
-        pruneTsLt = if (asOf == Long.MaxValue) None else Some(asOf + 1))
-      .select(EntryColumns.map(col): _*)
-      .filter(col("ts") <= asOf)
-      .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-      .select(EntryColumns.map(col): _*)
-  }
+  /** Latest value per key at or before `asOf` (TimeIterator newest-wins):
+    * the buckets up to asOf's are read in tasks (truncating division is
+    * monotone, so every ts ≤ asOf has bucket ≤ asOf's), and one
+    * aggregate keeps each key's greatest (ts, value). The value breaks a
+    * tie on ts, which only directPut entries of one key in two shards
+    * can make. */
+  def latest(asOf: Long): DataFrame =
+    entryFrame(listRange((Long.MinValue, asOf / opts.bucketSize)),
+        Rect(Long.MinValue, asOf, Array.emptyByteArray, None))
+      .groupBy("key").agg(max(struct(col("ts"), col("value"))).as("w"))
+      .select(col("key"), col("w.ts").as("ts"), col("w.value").as("value"))
 
   /** COPY every parquet file under `from` that is NOT in `snapshot` into
     * the same relative location under `to` — the entries put while a
@@ -1654,11 +1608,12 @@ final class HelixStore private (
     * is buried (which happens only after the commit), so a crash at any
     * step leaves one complete generation; the duplicate copies are
     * never visible twice because the pointer selects exactly one dir. */
-  private def copyLeftovers(from: Path, snapshot: Set[Path], to: Path): Unit =
-    dataFiles(from).filterNot(snapshot).foreach { f =>
-      val dest = to.resolve(from.relativize(f))
+  private def copyLeftovers(from: Path, snapshot: Set[SparkPath], to: Path): Unit =
+    dataFiles(from).filterNot(f => snapshot(f.path)).foreach { f =>
+      val file = Paths.get(f.path.toUri)
+      val dest = to.resolve(from.toAbsolutePath.relativize(file))
       Files.createDirectories(dest.getParent)
-      Files.copy(f, dest, StandardCopyOption.REPLACE_EXISTING)
+      Files.copy(file, dest, StandardCopyOption.REPLACE_EXISTING)
     }
 
   /** Serializes this instance's compactions (the cross-process mutex is
@@ -1673,7 +1628,10 @@ final class HelixStore private (
     * absorbed old generations are buried only after the commit (vacuum
     * deletes them later), so a crash mid-compaction never loses
     * committed entries.
-    * One groupByKey shuffle; block size is bounded by the bucket. */
+    * One pass with no shuffle: each task reads whole (shard, bucket)
+    * pairs (see [[pairTasks]]) and writes each pair's blocks
+    * ([[HelixStore.pairBlocks]]) into one file of the pair's dir, so a
+    * task holds one pair's winners at a time. */
   def blockCompact(): Unit = compactionMutex.synchronized { withMutex {
     compactionsRun.incrementAndGet()
     refreshPointer()
@@ -1687,42 +1645,17 @@ final class HelixStore private (
     val g = allocGen(cur)
     val newBlocks = s"b-$g"
     val newRows = s"r-$g"
-    val rickSnapshot = rick.flatMap(_.files)
+    val rickSnapshot = rick.flatMap(_.files).map(_.path).toSet
     // UDCF dispatch: registry + fn pulled into locals so the task
-    // closure captures plain Serializable values, not `this`. A dispatch
-    // to an unregistered codec name fails the compaction loudly
-    // (reference FnRegistry::udcf errors, fn_registry.rs:96).
-    val codecsByName = opts.codecs
+    // closure captures plain Serializable values, not `this`
+    val (rickReader, blockReader, codecs) = (rickPartitions, blockPartitions, opts.codecs)
     val dispatch = opts.codecDispatch.getOrElse((_: Array[Byte]) => NoopCodec.name)
     // physical reclaim of logically-outdated buckets happens here: the
-    // reads leave out the buckets below the retention cutoff
-    val live = (pt: LayerPart) => pt.bucket >= cur.minb
-    val blocks = rawEntries(cur, rick.filter(live), blocksNow.filter(live))
-      .as(RawEntryEncoder)
-      .groupByKey(r => (r.key, r.shard, r.bucket))(BlockKeyEncoder)
-      .mapGroups { (k: (Array[Byte], Int, Long), it: Iterator[RawEntry]) =>
-        // LWW inside the block: the store's one LWW order picks each
-        // ts's entry, the same winner as every read
-        val byTs = it.toArray.groupBy(_.ts).valuesIterator
-          .map(_.maxBy(r => (r.seq, r.subseq, r.value))(HelixStore.LwwOrdering))
-          .toArray.sortBy(_.ts)
-        val t0 = byTs.head.ts
-        val deltas = new Array[Long](byTs.length)
-        var prev = t0
-        var i = 0
-        while (i < byTs.length) {
-          deltas(i) = byTs(i).ts - prev; prev = byTs(i).ts; i += 1
-        }
-        val keyBytes = k._1
-        val codecName = dispatch(keyBytes)
-        val codec = codecsByName.getOrElse(codecName, throw new IllegalArgumentException(
-          s"codec dispatch returned unregistered name '$codecName' " +
-            s"(registered: ${codecsByName.keys.mkString(", ")})"))
-        HelixStore.BinBlock(keyBytes, k._2, k._3, t0, byTs.last.ts, deltas,
-          byTs.map(_.seq), codecName, codec.encode(byTs.map(_.value)))
-      }(BinBlockEncoder)
-      .toDF()
-    blocks.repartition(col("shard"), col("bucket"))
+    // read leaves out the pairs below the retention cutoff
+    val live = pairsOf(rick, blocksNow).filter(_.bucket >= cur.minb)
+    val blocks = pairTasks(live, None)
+      .flatMap(pairBlocks(rickReader, blockReader, codecs, dispatch, _))
+    spark.createDataset(blocks)(BinBlockEncoder)
       .write.mode("overwrite").partitionBy("shard", "bucket")
       .parquet(dirOf(newBlocks).toString)
     // a fully-outdated store compacts to ZERO blocks (logical retention
@@ -1732,7 +1665,7 @@ final class HelixStore private (
     // put during the build move into it inside the commit window
     crashHook("blockCompact:staged")
     withPutsExcluded {
-      copyLeftovers(dirOf(cur.rows), rickSnapshot.toSet, dirOf(newRows))
+      copyLeftovers(dirOf(cur.rows), rickSnapshot, dirOf(newRows))
       crashHook("blockCompact:leftovers-copied")
       commit(Pointer(g, newRows, Option.when(wroteBlocks)(newBlocks), minb = cur.minb))
     }

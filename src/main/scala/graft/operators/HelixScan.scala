@@ -232,9 +232,9 @@ object HelixScan {
 
   /** #190 — LATEST VALUE PER KEY as of T, SERVED BY THE STORE (the
     * reference TimeIterator's newest-wins merge, iterator.rs): one
-    * store read (compacted fast path — no LWW rank shuffle) + one
-    * per-key argmax window; the oracle is the same row_number
-    * selection on the raw parquet. */
+    * store read (compacted pairs stream their blocks with no LWW merge)
+    * + one per-key max(struct(ts, value)) aggregate; the oracle is the
+    * row_number selection on the raw parquet. */
   def latest(s: SparkSession, dir: String): DataFrame = {
     val st = storeAt(s, ensureLatest(s, dir))
     st.latest(LatestAsOfUs)
@@ -267,10 +267,10 @@ object HelixScan {
   }
 
   /** #191 — RETENTION SCAN: everything live in the outdated store. The
-    * dropped buckets are invisible via the committed cutoff (a
-    * partition-pruned filter, not a scan-and-discard) and the store is
-    * fully compacted, so the plan is a block parquet scan with bucket
-    * pruning and no LWW window; the oracle keeps raw-parquet rows at or
+    * dropped buckets are invisible via the committed cutoff (left out
+    * of the store's listing, not a scan-and-discard) and the store is
+    * fully compacted, so each task streams its pairs' blocks with no
+    * LWW merge; the oracle keeps raw-parquet rows at or
     * past the cutoff — if retention dropped too much or too little, the
     * hashes diverge. */
   def outdateScan(s: SparkSession, dir: String): DataFrame = {

@@ -167,7 +167,7 @@ class BenchLineSpec extends AnyFunSuite {
   }
 
   test("previousBest reads per-query bests from a bench_full dump; corrupt file disables the guard") {
-    val dir = java.nio.file.Files.createTempDirectory("benchprev")
+    val dir = java.nio.file.Paths.get(SparkTestBase.tmpDir("benchprev"))
     val ok = dir.resolve("bench_full.json")
     java.nio.file.Files.writeString(ok,
       """{"sf":"x","total":1.0,"queries":{"q1":{"sec":0.40,"spread":0.1},"q2":{"sec":1.20,"spread":0.0}},"errors":{}}""")

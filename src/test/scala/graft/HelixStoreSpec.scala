@@ -632,12 +632,11 @@ class HelixStoreSpec extends SparkTestBase {
     // within-batch ties resolve by content hash — capture the winner
     // rather than assuming input order decides
     val winner = store.get("fa".getBytes, 1L).map(new String(_)).get
-    val before = store.toDF.queryExecution.executedPlan.toString
-    assert(before.contains("Window"), "rick data needs the LWW rank window")
-    store.blockCompact()
-    val after = store.toDF.queryExecution.executedPlan.toString
-    assert(!after.contains("Window"),
-      "block-only reads must skip the LWW window (blocks are pre-resolved)")
+    // a read merges LWW inside each pair's task: rick rows need no rank
+    // window and no shuffle either
+    for (plan <- Seq(store.toDF.queryExecution.executedPlan.toString, {
+        store.blockCompact(); store.toDF.queryExecution.executedPlan.toString }))
+      assert(!plan.contains("Window") && !plan.contains("Exchange"), plan)
     // semantics unchanged: LWW winner survives, count is deduped
     assert(store.get("fa".getBytes, 1L).map(new String(_)).contains(winner))
     assert(store.toDF.count() == 2)
@@ -978,7 +977,7 @@ class HelixStoreSpec extends SparkTestBase {
         new String(r.getAs[Array[Byte]]("value"))))
     val pre = (0 until 12).map(k => (f"p$k%02d", 3L * k, s"v$k"))
     val df = store.scan((0L, 40L), ("p".getBytes, "q".getBytes))
-    assert(df.inputFiles.isEmpty, "a small range reads its rows at scan()")
+    assert(sourceOf(df) == "LocalRelation", "a small range reads its rows at scan()")
     store.put(entriesDF(Seq(("p11", 33L, "new"))))
     store.blockCompact()
     store.outdate(20L)
@@ -1007,12 +1006,12 @@ class HelixStoreSpec extends SparkTestBase {
     }
     assert(fileBytes <= HelixStore.InProcessScanMaxBytes, s"listing of $fileBytes bytes")
     val all = store.scan((0L, n.toLong), ("z".getBytes, "{".getBytes))
-    assert(all.inputFiles.nonEmpty, "past the decoded-bytes bound the scan reads through Spark")
+    assert(sourceOf(all) == "LogicalRDD", "past the decoded-bytes bound the scan reads in tasks")
     assert(all.count() == n)
     assert(all.collect().forall(r => new String(r.getAs[Array[Byte]]("value")) == value))
     // a key range holding fewer entries stays in process
     val few = store.scan((0L, n.toLong), ("z".getBytes, "z0010".getBytes))
-    assert(few.inputFiles.isEmpty && few.count() == 10)
+    assert(sourceOf(few) == "LocalRelation" && few.count() == 10)
     store.close()
   }
 
@@ -1108,24 +1107,23 @@ class HelixStoreSpec extends SparkTestBase {
     val unord = store.scan(full._1, full._2, ordered = false,
       scanOpts = graft.core.ScanOptions(targetPartitions = 2))
     assert(unord.rdd.getNumPartitions == 2)
-    // maxPartitionBytes: a tiny per-scan split size must fan the block
-    // parquet into more input partitions than the session default (the
-    // block-only read path has no shuffle, so output partitions = splits).
-    // Setting it takes the Spark read path; the session's default split
-    // size is set explicitly for that reason, as the range would
-    // otherwise read in process.
+    // maxPartitionBytes: a tiny per-scan split size must pack the pairs
+    // into more tasks than the session default (an unordered read has
+    // no shuffle, so output partitions = tasks). Setting it takes the
+    // task path; the session's default split size is set explicitly for
+    // that reason, as the range would otherwise read on the driver.
     store.blockCompact()
     val p0 = store.scan(full._1, full._2, ordered = false, scanOpts = sparkScanPath)
       .rdd.getNumPartitions
     val split = store.scan(full._1, full._2, ordered = false,
       scanOpts = graft.core.ScanOptions(maxPartitionBytes = Some(64L)))
-    assert(split.inputFiles.nonEmpty, "maxPartitionBytes must take the Spark read path")
+    assert(sourceOf(split) == "LogicalRDD", "maxPartitionBytes must take the task path")
     val p1 = split.rdd.getNumPartitions
     assert(p1 > p0, s"tiny maxPartitionBytes must add splits: $p1 <= $p0")
     // and rows are identical either way, also read in process
     assert(split.count() == 40)
     val inProcess = store.scan(full._1, full._2, ordered = false)
-    assert(inProcess.inputFiles.isEmpty, "a small range reads in process")
+    assert(sourceOf(inProcess) == "LocalRelation", "a small range reads on the driver")
     assert(inProcess.count() == 40)
     def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toSeq.map(r =>
       (new String(r.getAs[Array[Byte]]("key")), r.getAs[Long]("ts"),
@@ -1307,42 +1305,41 @@ class HelixStoreSpec extends SparkTestBase {
     store.close(); noKc.close()
   }
 
-  test("a scan of compacted buckets beside a rick in another bucket lists only its buckets, with no LWW window") {
-    val store = HelixStore.open(spark, tmpDir("hs-scan-listing"),
-      StoreOptions(numShards = 2, bucketSize = 10))
-    // blocks in buckets 0-2, then a rick holding bucket 3 only
-    store.put(entriesDF((0 until 12).map(k => (f"s$k%02d", 2L * k, s"b$k"))))
+  test("a scan of compacted buckets beside a rick in another bucket reads only its buckets") {
+    val dir = tmpDir("hs-scan-listing")
+    val store = HelixStore.open(spark, dir, StoreOptions(numShards = 2, bucketSize = 10))
+    // blocks in buckets 0-4, then a rick holding bucket 3 only, one of
+    // its entries over a block entry; bucket 0 outdated
+    val blockRows = (0 until 21).map(k => (f"s$k%02d", 2L * k + 2, s"b$k"))
+    val rickRows = (0 until 4).map(k => (f"s$k%02d", 30L + k, s"r$k")) :+ (("s14", 30L, "r-over"))
+    store.put(entriesDF(blockRows))
     store.blockCompact()
-    store.put(entriesDF((0 until 4).map(k => (f"s$k%02d", 30L + k, s"r$k"))))
-    object Plans extends org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-    def windows(df: org.apache.spark.sql.DataFrame) =
-      Plans.collect(df.queryExecution.executedPlan) {
-        case w: org.apache.spark.sql.execution.window.WindowExec => w }
-    def bucketsRead(df: org.apache.spark.sql.DataFrame): Set[Long] =
-      df.inputFiles.map(f => """/bucket=(-?\d+)/""".r.findFirstMatchIn(f)
-        .getOrElse(fail(s"no bucket dir in $f")).group(1).toLong).toSet
+    store.put(entriesDF(rickRows))
+    store.outdate(10L)
+    // non-parquet bytes in the sub-cutoff block bucket (0) and in a block
+    // bucket past the ranges read (4): a scan that read either would fail
+    val blocks = java.nio.file.Paths.get(dir, pointerOf(dir)("blocks"))
+    val garbage = {
+      import scala.jdk.CollectionConverters._
+      val w = java.nio.file.Files.walk(blocks)
+      try w.iterator().asScala.filter(f => f.toString.endsWith(".parquet") &&
+        Set("bucket=0", "bucket=4")(f.getParent.getFileName.toString)).toList
+      finally w.close()
+    }
+    assert(garbage.nonEmpty)
+    garbage.foreach(f => java.nio.file.Files.write(f, "not parquet".getBytes))
     def rows(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, String)] =
       df.collect().toSeq.map(r => (new String(r.getAs[Array[Byte]]("key")), r.getAs[Long]("ts"),
         new String(r.getAs[Array[Byte]]("value"))))
-    // the plan shape is the Spark read path's; the in-process twin of
-    // each range must return the same rows
-    def inProcessTwin(df: org.apache.spark.sql.DataFrame, range: (Long, Long)): Unit = {
-      val twin = store.scan(range, ("s".getBytes, "t".getBytes))
-      assert(twin.inputFiles.isEmpty && windows(twin).isEmpty, "a small range reads in process")
-      assert(rows(twin) == rows(df))
+    val live = (blockRows ++ rickRows).map { case (k, t, v) => (k, t) -> v }.toMap
+    // a block-only range and one across both layers, each on both paths
+    for ((t0, t1) <- Seq((0L, 30L), (20L, 40L)); (opts, source) <- Seq(
+        graft.core.ScanOptions() -> "LocalRelation", sparkScanPath -> "LogicalRDD")) {
+      val df = store.scan((t0, t1), ("s".getBytes, "t".getBytes), scanOpts = opts)
+      assert(sourceOf(df) == source, s"[$t0, $t1)")
+      assert(rows(df) == live.toSeq.collect { case ((k, t), v) if t >= math.max(t0, 10L) && t < t1 =>
+        (k, t, v) }.sorted, s"[$t0, $t1) read from $source")
     }
-    val blockOnly = store.scan((0L, 20L), ("s".getBytes, "t".getBytes), scanOpts = sparkScanPath)
-    assert(windows(blockOnly).isEmpty, "a block-only range must skip the LWW window")
-    assert(bucketsRead(blockOnly) == Set(0L, 1L), blockOnly.inputFiles.mkString(", "))
-    assert(rows(blockOnly) == (0 until 10).map(k => (f"s$k%02d", 2L * k, s"b$k")))
-    inProcessTwin(blockOnly, (0L, 20L))
-    // a range touching the rick keeps the window and reads its bucket
-    val mixed = store.scan((20L, 40L), ("s".getBytes, "t".getBytes), scanOpts = sparkScanPath)
-    assert(windows(mixed).nonEmpty, "a range holding rick files must rank by LWW")
-    assert(bucketsRead(mixed) == Set(2L, 3L), mixed.inputFiles.mkString(", "))
-    assert(rows(mixed) == (0 until 4).map(k => (f"s$k%02d", 30L + k, s"r$k")) ++
-      Seq(("s10", 20L, "b10"), ("s11", 22L, "b11")))
-    inProcessTwin(mixed, (20L, 40L))
     store.close()
   }
 
@@ -1455,7 +1452,7 @@ class HelixStoreSpec extends SparkTestBase {
     store.close()
   }
 
-  test("every parquet read in HelixStore goes through readLayer (fixed schema, scoped listing)") {
+  test("every parquet read in HelixStore goes through PartitionReader (fixed schema, scoped listing)") {
     val src = java.nio.file.Files.readString(
       java.nio.file.Paths.get("src", "main", "scala", "graft", "core", "HelixStore.scala"))
     /** The body of the first definition `head` opens: up to its closing
@@ -1477,18 +1474,16 @@ class HelixStoreSpec extends SparkTestBase {
     // or infer what the store already knows
     assert("""\.read\s*\.""".r.findAllMatchIn(src).isEmpty, "a DataFrameReader read")
     assert(!src.contains("spark.implicits"), "an encoder derived per call")
-    // the one relation builder: every DataFrame read of a layer is a
-    // HadoopFsRelation over the store's own file index, built in readLayer
-    val helper = body("private def readLayer(")
-    within("HadoopFsRelation(", 1, helper)
-    within("baseRelationToDataFrame", 1, helper)
-    // the one in-process read: the only parquet reader HelixStore builds
-    // itself lives in PartitionReader
-    val inProc = body("private final class PartitionReader(")
+    // the one reader: every parquet read of a layer, on the driver or in
+    // a task, goes through the one parquet reader HelixStore builds, in
+    // PartitionReader; no relation, file index or rank window beside it
+    val inProc = body("private[core] final class PartitionReader(")
     assert("class PartitionReader".r.findAllMatchIn(src).size == 1)
-    within("new ParquetFileFormat", 2, helper, inProc)
-    for (token <- Seq("buildReader", "PartitionedFile("))
+    for (token <- Seq("new ParquetFileFormat", "buildReaderWithPartitionValues", "PartitionedFile("))
       within(token, 1, inProc)
+    for (gone <- Seq("HadoopFsRelation", "baseRelationToDataFrame", "FileIndex", "Window.",
+        "groupByKey", "newSession", "pruneKey", "pruneTsLt", "pruneTsGe", "readLayer", "rawEntries"))
+      assert(!src.contains(gone), s"HelixStore still has $gone")
     for (other <- Seq("ParquetFileReader", "HadoopInputFile", "ParquetReadSupport",
         "OrcFileFormat", "InMemoryFileIndex", "DataSource("))
       assert(!src.contains(other), s"a second read path: $other")
@@ -1508,29 +1503,85 @@ class HelixStoreSpec extends SparkTestBase {
     }
     for (name <- Seq("shard=", "bucket="); i <- hits(name) if inCode(i) && !inListing(i))
       assert(src.startsWith("s\"", i - 2), s"$name parsed outside listLayer at $i")
-    // the layer listing, not a walk of the layout, decides what a scan
-    // reads, whether it needs the LWW window, and what outdate buries
+    // the layer listing, not a walk of the layout, decides what a scan,
+    // a task and outdate read or bury
     for (reader <- Seq("def scan(", "private def scanInProcess(", "private def listRange(",
-        "private def toDFWithPartitions(", "private def rawEntries(", "def outdate(")) {
+        "private def pairTasks(", "private def entryRdd(", "private[core] def pairEntries(",
+        "def outdate(")) {
       val (a, b) = body(reader)
       for (walk <- Seq("listDir(", "dataFiles(", "Files.list", "Files.walk"))
         assert(!src.substring(a, b).contains(walk), s"$reader lists the layout through $walk")
     }
     assert(src.substring(body("def outdate(")._1, body("def outdate(")._2).contains("listLayer("))
     assert(src.substring(body("def scan(")._1, body("def scan(")._2).contains("listRange("))
-    // local relations: the empty read, the routing frame of a custom
-    // sharding function, and the in-process scan, the one that holds rows
-    val emptyRead = src.indexOf("private def emptyEntriesWithMeta")
-    within("createDataFrame(", 3, (emptyRead, src.indexOf("\n\n", emptyRead)),
-      body("private def routeShards("), body("private def scanInProcess("))
+    // frames built from rows: the routing frame of a custom sharding
+    // function, the scan read on the driver (a local relation) and the
+    // read in tasks (an RDD)
+    val taskFrame = src.indexOf("private def entryFrame(")
+    within("createDataFrame(", 3, body("private def routeShards("),
+      body("private def scanInProcess("), (taskFrame, src.indexOf("\n\n", taskFrame)))
     // no second index beside the block layer: a point read finds a key's
     // blocks by its (shard, bucket) dir, and a compaction writes no
-    // `m-<g>` generation. The two in-process readers are the rick's and
-    // the blocks'.
+    // `m-<g>` generation. The two readers are the rick's and the blocks'.
     for (gone <- Seq("ManifestSchema", "manifestPruneMaxEntries", "blockMayContain", "\"m-$"))
       assert(!src.contains(gone), s"HelixStore still has $gone")
     assert(hits("new PartitionReader(").size == 2,
       s"new PartitionReader( at ${hits("new PartitionReader(")}")
+  }
+
+  /** `f`'s result, the stages its jobs ran and the shuffle bytes they
+    * wrote. */
+  private def withShuffle[T](f: => T): (T, Int, Long) = {
+    val sc = spark.sparkContext
+    val tag = "graft.spec.shuffle"
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val written = new java.util.concurrent.atomic.AtomicLong(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty(tag) != null)
+          j.stageIds.foreach(stages.add)
+      override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (stages.contains(t.stageId) && t.taskMetrics != null)
+          written.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten): Unit
+    }
+    org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc, 10000)
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty(tag, "1")
+      val out = try f finally sc.setLocalProperty(tag, null)
+      org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc, 10000)
+      (out, stages.size, written.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("blockCompact reads and writes whole pairs in one pass with no shuffle") {
+    val dir = tmpDir("hs-compact-noshuffle")
+    val store = HelixStore.open(spark, dir, StoreOptions(numShards = 2, bucketSize = 10))
+    val keys = (0 until 8).map(k => f"n$k%02d")
+    // blocks in buckets 0-3, then rick rows over them: new entries, and
+    // two puts of one (key, ts) already in the blocks
+    store.put(entriesDF(for (k <- keys; t <- 0L until 40L by 7) yield (k, t, s"b$k$t")))
+    store.blockCompact()
+    store.put(entriesDF(for (k <- keys) yield (k, 3L, s"r$k")))
+    store.put(entriesDF(Seq(("n01", 7L, "once"))))
+    store.put(entriesDF(Seq(("n01", 7L, "twice"))))
+    val expected = (for (k <- keys; t <- 0L until 40L by 7) yield (k, t) -> s"b$k$t").toMap ++
+      keys.map(k => (k, 3L) -> s"r$k") + (("n01", 7L) -> "twice")
+    def state = store.toDF.collect().map(r => (new String(r.getAs[Array[Byte]]("key")),
+      r.getAs[Long]("ts")) -> new String(r.getAs[Array[Byte]]("value"))).toMap
+    assert(state == expected)
+    val (_, stages, shuffled) = withShuffle(store.blockCompact())
+    assert(stages > 0, "the compaction ran no job")
+    assert(shuffled == 0L, s"the compaction wrote $shuffled shuffle bytes")
+    assert(state == expected)
+    // one file per (shard, bucket) pair of the new block layer
+    import scala.jdk.CollectionConverters._
+    val w = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, pointerOf(dir)("blocks")))
+    val files = try w.iterator().asScala.filter(_.toString.endsWith(".parquet")).toList
+      finally w.close()
+    val perPair = files.groupBy(_.getParent).values.map(_.size)
+    assert(perPair.size == 8 && perPair.forall(_ == 1), s"files per pair: $perPair")
+    store.close()
   }
 }
 

@@ -91,9 +91,9 @@ class StagingSpec extends AnyFunSuite {
     val builds = scala.collection.mutable.Map[String, Int]().withDefaultValue(0)
     // distinct lengths, so the two sources can never share a fingerprint
     val Seq(a, b) = Seq("a", "bb").map { content =>
-      val d = Files.createTempDirectory("graft-restage-spec")
-      Files.writeString(d.resolve("t.parquet"), content)
-      d.toString
+      val d = SparkTestBase.tmpDir("graft-restage-spec")
+      Files.writeString(java.nio.file.Paths.get(d, "t.parquet"), content)
+      d
     }
     val art = Staging.Artifact("Spec", prefix, "t", (_, dir) =>
       Staging.ensure(prefix, Staging.fingerprint(dir, "t.parquet")) { tmp =>

@@ -2,9 +2,7 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
 import graft.core.{HelixStore, ScanOptions, StoreOptions}
@@ -16,7 +14,7 @@ import graft.core.{HelixStore, ScanOptions, StoreOptions}
   * reference's scan scaffold (src/db.rs) generalized to arbitrary
   * interleavings — compaction and retention must be invisible to
   * readers except through the outdate cutoff. */
-class StoreModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
+class StoreModelSpec extends SparkTestBase {
 
   private val entrySchema = StructType(Seq(
     StructField("key", BinaryType), StructField("ts", LongType),
@@ -158,8 +156,7 @@ class StoreModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
   /** multiGet on a batch whose pairs all lack a rick partition reads
     * blocks only. One shard makes a pair's rick presence visible through
     * rickFileCount, so each step probes a mixed batch and its block-only
-    * part; both must equal the windowed toDF path, which must equal the
-    * model. */
+    * part; both must equal toDF, which must equal the model. */
   private def runMultiGetBatchScenario(seed: Int): Unit = {
     val rnd = new scala.util.Random(seed)
     val bucketSize = 10L
@@ -171,7 +168,7 @@ class StoreModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     for (step <- 0 until 10) {
       if (step % 3 == 2) store.blockCompact()
       else putRandomBatch(store, rnd, keys, tsRange = 80, step, model)
-      val windowed = stateOf(store).map { case (k, t, v) => (k, t) -> v }.toMap
+      val viaToDF = stateOf(store).map { case (k, t, v) => (k, t) -> v }.toMap
       val probes = (0 until 8).map(_ =>
         (keys(rnd.nextInt(keys.length)), rnd.nextInt(80).toLong))
       val blockOnly = probes.filter { case (_, t) =>
@@ -179,10 +176,10 @@ class StoreModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       if (blockOnly.nonEmpty && store.hasRickRows) blockOnlyBesideRick += 1
       for (batch <- Seq(probes, blockOnly) if batch.nonEmpty) {
         val got = store.multiGet(batch.map { case (k, t) => (k.getBytes, t) })
-        assert(got.map(_.map(new String(_))) == batch.map(windowed.get),
+        assert(got.map(_.map(new String(_))) == batch.map(viaToDF.get),
           s"seed=$seed step=$step: multiGet diverged from toDF on $batch")
       }
-      assert(windowed == model.toMap, s"seed=$seed step=$step: toDF diverged from model")
+      assert(viaToDF == model.toMap, s"seed=$seed step=$step: toDF diverged from model")
     }
     assert(blockOnlyBesideRick > 0, s"seed=$seed never probed a block-only batch beside rick rows")
     store.close()
@@ -204,11 +201,11 @@ class StoreModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
       s"$tag-${rnd.nextInt(1000)}"))
 
   /** Checks `st.scan` over [t0, t1) × [k0, k1) against `model`'s live
-    * entries in (key, ts) order. On the Spark read path (`sparkPath`)
-    * its plan must rank by LWW exactly when `window`; a scan read in
-    * process reads no file after the call and ranks in no window. */
+    * entries in (key, ts) order. A scan on the task path (`sparkPath`)
+    * reads from an RDD of the range's pairs; one read on the driver is a
+    * local relation, whose rows were read at the call. */
   private def assertScan(st: HelixStore, model: collection.Map[(String, Long), String],
-      minBucket: Long, bucketSize: Long, t0: Long, t1: Long, window: Boolean,
+      minBucket: Long, bucketSize: Long, t0: Long, t1: Long,
       where: String, k0: String = "", k1: String = "~", sparkPath: Boolean = false): Unit = {
     val df = st.scan((t0, t1), (k0.getBytes, k1.getBytes),
       scanOpts = if (sparkPath) sparkScanPath else ScanOptions())
@@ -221,48 +218,76 @@ class StoreModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     assert(got == expected, s"$where: scan [$t0, $t1) × [$k0, $k1) diverged from the model")
     assert(df.schema.map(f => (f.name, f.dataType)) == entrySchema.map(f => (f.name, f.dataType)),
       s"$where: scan schema ${df.schema}")
-    val windows = collect(df.queryExecution.executedPlan) { case w: WindowExec => w }
-    if (sparkPath)
-      assert(windows.nonEmpty == window,
-        s"$where: scan [$t0, $t1) expected ${if (window) "an" else "no"} LWW window")
-    else
-      assert(windows.isEmpty && df.inputFiles.isEmpty,
-        s"$where: scan [$t0, $t1) must read in process")
+    assert(sourceOf(df) == (if (sparkPath) "LogicalRDD" else "LocalRelation"),
+      s"$where: scan [$t0, $t1) read ${if (sparkPath) "on the driver" else "in tasks"}")
   }
 
-  /** A scan reads only the listed partitions of its bucket range, and
-    * ranks by LWW only when a rick file lies in that range: blocks in
-    * buckets 0-3, rick files in buckets 4-5 (two puts, so LWW across
-    * them), bucket 0 outdated. Each range must equal the model. */
+  /** The data files of `gen`'s (shard, bucket) dirs whose bucket
+    * `pick` accepts, under the store at `dir`. */
+  private def bucketFiles(dir: String, gen: String)(pick: Long => Boolean): Seq[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    val w = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, gen))
+    try w.iterator().asScala.filter { f =>
+      f.getFileName.toString.endsWith(".parquet") &&
+        pick(f.getParent.getFileName.toString.stripPrefix("bucket=").toLong)
+    }.toList finally w.close()
+  }
+
+  /** The generation dir the committed pointer of the store at `dir`
+    * names for `layer` (`rows` or `blocks`). */
+  private def liveGen(dir: String, layer: String): String =
+    new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(dir, "_current")))
+      .linesIterator.collectFirst { case l if l.startsWith(layer + "=") =>
+        l.stripPrefix(layer + "=") }.get
+
+  /** A scan reads only the listed pairs of its bucket range, and the
+    * same rows on both read paths: blocks in buckets 0-3, rick files in
+    * buckets 4-5 (three puts, two of them of one (key, ts), so LWW
+    * across them), bucket 0 outdated. Each range must equal the model;
+    * then non-parquet bytes in a sub-cutoff and an out-of-range bucket
+    * must leave the scans that list neither unchanged. */
   private def runScanRangeScenario(seed: Int, sparkPath: Boolean): Unit = {
     val rnd = new scala.util.Random(seed)
     val bucketSize = 10L
-    val store = HelixStore.open(spark, tmpDir(s"hs-scanrange-$seed"),
-      StoreOptions(numShards = 2, bucketSize = bucketSize))
+    val dir = tmpDir(s"hs-scanrange-$seed")
+    val store = HelixStore.open(spark, dir, StoreOptions(numShards = 2, bucketSize = bucketSize))
     val model = mutable.Map[(String, Long), String]()
     val keys = (0 until 6).map(i => s"r$i")
     for (b <- 0 until 3) putBatch(store, randomRows(rnd, keys, 0, 40, 12, s"b$b"), model)
     store.blockCompact()
     for (b <- 0 until 2) putBatch(store, randomRows(rnd, keys, 40, 60, 8, s"r$b"), model)
+    // two puts of one (key, ts) in the rick: the later one wins
+    for (v <- Seq("twice-1", "twice-2")) putBatch(store, Seq(("r2", 47L, v)), model)
     store.outdate(10L)
-    val minBucket = 1L
-    def check(t0: Long, t1: Long, window: Boolean, what: String,
-        k0: String = "", k1: String = "~"): Unit =
-      assertScan(store, model, minBucket, bucketSize, t0, t1, window,
+    var minBucket = 1L
+    def check(t0: Long, t1: Long, what: String, k0: String = "", k1: String = "~"): Unit =
+      assertScan(store, model, minBucket, bucketSize, t0, t1,
         s"seed=$seed sparkPath=$sparkPath $what", k0, k1, sparkPath)
-    check(10, 40, window = false, "entirely in blocks")
-    check(12, 37, window = false, "entirely in blocks, key range", "r1", "r4")
-    check(30, 50, window = true, "touching the rick")
-    check(5, 55, window = true, "across the cutoff and both layers")
-    check(0, 10, window = false, "wholly below the outdate cutoff")
-    check(100, 200, window = false, "holding no pair")
-    // a put into the block range brings the window back for that range,
-    // and its entries win over the blocks they overwrite
+    check(10, 40, "entirely in blocks")
+    check(12, 37, "entirely in blocks, key range", "r1", "r4")
+    check(30, 50, "touching the rick")
+    check(5, 55, "across the cutoff and both layers")
+    check(0, 10, "wholly below the outdate cutoff")
+    check(100, 200, "holding no pair")
+    // a put into the block range: its entries win over the blocks they
+    // overwrite
     putBatch(store, randomRows(rnd, keys, 10, 40, 6, "o"), model)
-    check(10, 40, window = true, "blocks under fresh rick entries")
+    check(10, 40, "blocks under fresh rick entries")
     store.blockCompact()
-    check(10, 40, window = false, "re-compacted blocks")
-    check(5, 55, window = false, "all blocks after the second compaction")
+    check(10, 40, "re-compacted blocks")
+    check(5, 55, "all blocks after the second compaction")
+    // bucket 1 drops below the cutoff but keeps its files until a
+    // compaction; garbage there and in bucket 5 must go unread by scans
+    // that list neither
+    store.outdate(20L)
+    minBucket = 2L
+    val blocks = liveGen(dir, "blocks")
+    val garbage = bucketFiles(dir, blocks)(b => b == 1L || b == 5L)
+    assert(garbage.map(_.getParent.getFileName.toString).toSet == Set("bucket=1", "bucket=5"))
+    garbage.foreach(f => java.nio.file.Files.write(f, "not parquet".getBytes))
+    check(20, 50, "beside a garbage out-of-range bucket")
+    check(0, 50, "across a garbage sub-cutoff bucket", "r1", "r5")
+    check(10, 20, "wholly in a garbage sub-cutoff bucket")
     store.close()
   }
 
@@ -297,16 +322,16 @@ class StoreModelSpec extends SparkTestBase with AdaptiveSparkPlanHelper {
     putBatch(a, randomRows(rnd, keys, 0, 20, 10, "a"), model)
     a.blockCompact()
     // A loads the pointer and lists a block-only range
-    assertScan(a, model, Long.MinValue, bucketSize, 0, 20, window = false, "A before B's put",
+    assertScan(a, model, Long.MinValue, bucketSize, 0, 20, "A before B's put",
       sparkPath = sparkPath)
     // B's put lands in the rick of that range, overwriting one entry
     val (k, t) = model.keys.head
     putBatch(b, Seq((k, t, "from-b"), ("f9", 5L, "new-from-b")), model)
-    assertScan(a, model, Long.MinValue, bucketSize, 0, 20, window = true, "A after B's put",
+    assertScan(a, model, Long.MinValue, bucketSize, 0, 20, "A after B's put",
       sparkPath = sparkPath)
     b.blockCompact()
-    assertScan(a, model, Long.MinValue, bucketSize, 0, 20, window = false,
-      "A after B's compaction", sparkPath = sparkPath)
+    assertScan(a, model, Long.MinValue, bucketSize, 0, 20, "A after B's compaction",
+      sparkPath = sparkPath)
     a.close(); b.close()
   }
 
