@@ -6,7 +6,9 @@ import java.nio.file.attribute.BasicFileAttributes
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
+import org.apache.hadoop.mapred.JobConf
 import org.apache.parquet.hadoop.ParquetInputFormat
+import org.apache.spark.graftbridge.InputMetricsBridge
 import org.apache.spark.paths.SparkPath
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
@@ -61,7 +63,8 @@ import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StructFiel
  * (src/db.rs:67-74, src/iterator.rs): `HelixStore.pairEntries` reads
  * the pair's rick and block files through Spark's own parquet reader
  * ([[HelixStore.PartitionReader]]) and merges them last-write-wins.
- * Point reads and small scans run it on the driver; larger scans,
+ * Point reads and small scans run it on the driver, a call of two or
+ * more pairs on the store's pair-read pool; larger scans,
  * `toDF`, `latest`, seq recovery and compaction run it inside Spark
  * tasks that each take whole pairs.
  *
@@ -295,11 +298,17 @@ object HelixStore {
     * keeps, each total at most this. Past it the scan's pairs are read
     * in Spark tasks. The kept half also bounds what the driver holds
     * when the files compress far better than that. Measured on 4 cores
-    * (8 shards, 10-ts buckets, 32 key and value bytes per entry, medians
-    * of 11 scans with their count, driver against tasks): 2,400 rows in
-    * 16 files 50–66 against 54–69 ms, 10,000 rows in 8 files 49 against
-    * 45 ms, 30,000 rows in 24 files (about 1 MB kept) 101 against 55 ms.
-    * So the tasks already win below this bound. */
+    * with the driver's pairs read on the pair-read pool (8 shards,
+    * 10-ts buckets of compacted blocks, 16-byte keys and values, medians
+    * of 11 scans with their count, driver against tasks, alternated):
+    * 2,400 rows in 16 files 52 against 62 ms (the driver won 9 of 11),
+    * 10,000 rows in 8 files 46 against 49 ms (6 of 11), 20,000 rows in
+    * 16 files 71 against 47 ms (0 of 11) and 30,000 rows in 24 files
+    * (960 KB kept) 85 against 44 ms (0 of 11). On store_serve (2,400
+    * rows in 16–24 files) the driver read won `rows_per_s` in 8 of 8
+    * pairs against a copy that sent every scan to tasks. So the
+    * crossover lies near 10,000 rows, well below this bound; the bound
+    * stays until a workload above it can judge a lower one. */
   private[graft] val InProcessScanMaxBytes: Long = 1L << 20
   /** Block layer: one [[BinBlock]] per row. */
   val BlockSchema: StructType = BinBlockEncoder.schema
@@ -351,9 +360,10 @@ object HelixStore {
 
   /** The store's one parquet read: the rows of known data files of one
     * layer, read by Spark's own parquet reader, one `PartitionedFile` per
-    * data file, on the calling thread, be it the driver's (point reads,
-    * small scans) or a task's. A get reads a few KB from one known dir;
-    * a query would pay the planner and a job for it. Row groups are not
+    * data file, on the thread that asks, be it the driver's (a get), a
+    * pair-read pool thread's (a multiGet or a small scan of two or more
+    * pairs) or a task's. A get reads a few KB from one known dir; a
+    * query would pay the planner and a job for it. Row groups are not
     * skipped: a compacted partition holds its keys in arbitrary order,
     * so every row group's key range spans nearly the whole pair's.
     * Output rows are `dataCols` followed by the (shard, bucket) a read
@@ -362,14 +372,25 @@ object HelixStore {
     * broadcasts the Hadoop conf. The reader is the same serializable
     * function Spark's own file scan ships to its tasks, and `spark` is
     * used only to build it, so a task closure can hold this reader.
-    * The conf turns parquet's vectored IO off, so each row group is read
-    * on the calling thread rather than handed to an async pool the
-    * caller then waits on. */
+    *
+    * The conf is one `JobConf`, shared by every file this reader reads
+    * in this JVM. Spark's reader wraps it in a `TaskAttemptContextImpl`
+    * per file, and that copies any conf that is not already a `JobConf`
+    * (`new JobConf(conf)`), which was 18% of a multiGet's CPU. Sharing
+    * it is safe only because this reader passes no filters: with none,
+    * `ParquetInputFormat.setFilterPredicate` never writes to the conf,
+    * and every other per-file use only reads it. A reader that pushes a
+    * filter down must copy the conf per file again. The conf also turns
+    * parquet's vectored IO off, so each row group is read on the calling
+    * thread rather than handed to an async pool the caller then waits on.
+    *
+    * Inside a task, each file's size counts as the task's input bytes,
+    * as Spark's own file scan counts them. */
   private[core] final class PartitionReader(spark: SparkSession, dataCols: StructType)
       extends Serializable {
     val ordinal: Map[String, Int] = (dataCols ++ PartitionSchema).map(_.name).zipWithIndex.toMap
     private val read: PartitionedFile => Iterator[InternalRow] = {
-      val conf = spark.sessionState.newHadoopConf()
+      val conf = new JobConf(spark.sessionState.newHadoopConf())
       conf.setBoolean(ParquetInputFormat.HADOOP_VECTORED_IO_ENABLED, false)
       new ParquetFileFormat().buildReaderWithPartitionValues(
         spark, dataCols, PartitionSchema, dataCols, Nil,
@@ -388,6 +409,7 @@ object HelixStore {
           Array.empty[String], f.mtime, f.size))
         try it.foreach(r => if (keep(r)) out += r.copy())
         finally it match { case c: AutoCloseable => c.close(); case _ => () }
+        InputMetricsBridge.addBytesRead(f.size)
         out.result()
       }
     }
@@ -1067,6 +1089,54 @@ final class HelixStore private (
   private lazy val rickPartitions = new PartitionReader(spark, dataColumnsOf(RickSchema))
   private lazy val blockPartitions = new PartitionReader(spark, dataColumnsOf(BlockSchema))
 
+  /** Threads of the pair-read pool: one per shard, up to the cores. */
+  private val pairReadWidth = math.min(opts.numShards, Runtime.getRuntime.availableProcessors)
+  /** The store's pair-read pool, the reference's per-shard io workers
+    * (io_worker.rs): a multiGet or a driver scan that touches two or
+    * more pairs reads them here, one pair per job (see [[inPairOrder]]).
+    * Its daemon threads start with the first such call and then stay, so
+    * no later read starts a thread; [[close]] shuts it down. */
+  private val pairReadPool = {
+    val started = new java.util.concurrent.atomic.AtomicInteger(0)
+    java.util.concurrent.Executors.newFixedThreadPool(pairReadWidth, (r: Runnable) => {
+      val t = new Thread(r, s"graft-pair-read-${root.getFileName}-${started.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+  }
+
+  /** `read` of each of `items`, handed to `use` in item order. Two or
+    * more items are read on the pair-read pool, at most its width at a
+    * time: taking one result starts the next item's read, so a `use`
+    * that stops early leaves at most the width read ahead. A single item
+    * is read on the calling thread, with no hand-off. A failed read
+    * rethrows its own exception when `use` reaches it; once `use`
+    * returns or throws, the reads not yet started are cancelled and
+    * those running finish unseen. `read` must not use the pool itself. */
+  private def inPairOrder[A, B, R](items: Seq[A])(read: A => B)(use: Iterator[B] => R): R =
+    if (items.lengthCompare(2) < 0) use(items.iterator.map(read))
+    else {
+      val rest = items.iterator
+      val inFlight = new java.util.ArrayDeque[java.util.concurrent.Future[B]]()
+      def submitNext(): Unit = if (rest.hasNext) {
+        val a = rest.next()
+        inFlight.add(pairReadPool.submit(new java.util.concurrent.Callable[B] {
+          def call(): B = read(a)
+        }))
+      }
+      while (inFlight.size < pairReadWidth && rest.hasNext) submitNext()
+      val results = new Iterator[B] {
+        def hasNext: Boolean = !inFlight.isEmpty
+        def next(): B = {
+          val f = inFlight.remove()
+          submitNext()
+          try f.get()
+          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+        }
+      }
+      try use(results) finally inFlight.forEach(_.cancel(false))
+    }
+
   private def partitionDir(layer: Path, shard: Long, bucket: Long): Path =
     layer.resolve(s"shard=$shard").resolve(s"bucket=$bucket")
 
@@ -1262,11 +1332,14 @@ final class HelixStore private (
     * loop over one pointer snapshot: the probes route driver-side and
     * group by (shard, bucket), and each pair's block and rick dirs are
     * read once, in process, by the same [[pairReads]] as [[get]], so a
-    * batch runs no Spark job. A probe only ever sees its routed pair,
+    * batch runs no Spark job. A batch of two or more pairs reads them on
+    * the pair-read pool, as the reference's per-shard io workers do
+    * (see [[inPairOrder]]); a failed pair read rethrows its own
+    * exception. A probe only ever sees its routed pair,
     * so its result never depends on which other probes share its batch
     * (a foreign-shard directPut entry stays invisible, as for get). The
     * batch bypasses the kv and kc caches. Results align with the probe
-    * order; misses are None. */
+    * order, whatever order the pairs finish in; misses are None. */
   def multiGet(probes: Seq[(Array[Byte], Long)],
       decompress: Boolean = true): Seq[Option[Array[Byte]]] = {
     refreshPointer()
@@ -1275,10 +1348,10 @@ final class HelixStore private (
     val ps = probes.toIndexedSeq
     val pairOf = routeShards(ps.map(_._1)).zip(ps)
       .map { case (shard, (_, ts)) => (shard, ts / opts.bucketSize) }
-    val hits = ps.indices.groupBy(pairOf).flatMap { case ((shard, bucket), at) =>
+    val hits = inPairOrder(ps.indices.groupBy(pairOf).toSeq) { case ((shard, bucket), at) =>
       at.zip(pairReads(p, shard, bucket, at.map(ps), decompress)(
         blockRows(p, shard, bucket, _)))
-    }
+    }(_.flatten.toMap)
     ps.indices.map(hits)
   }
 
@@ -1294,7 +1367,10 @@ final class HelixStore private (
   }
 
   /** The point reads of ONE (shard, bucket) pair in pointer snapshot
-    * `p`, the one path behind get, directGet and multiGet: each probe's
+    * `p`, the one path behind get, directGet and multiGet, on the thread
+    * that calls it: the caller's for a get, a pair-read pool thread's for
+    * each pair of a multiGet of two or more pairs. It never uses the pool
+    * itself. Each probe's
     * block candidate from the blocks `blocksOf` returns for the probes'
     * keys, asked only when the pair has a block dir, then the rick rows
     * at exactly the probes' (key, ts) from one read of the pair's rick
@@ -1537,22 +1613,29 @@ final class HelixStore private (
   }
 
   /** The live entries of `pairs` inside `r`, read on the driver by
-    * [[HelixStore.pairEntries]], pair by pair, with no Spark job.
+    * [[HelixStore.pairEntries]] with no Spark job: two or more pairs on
+    * the pair-read pool, at most its width at a time (see
+    * [[inPairOrder]]), their rows kept in pair order, so an unordered
+    * scan returns what a one-pair-at-a-time read would.
     * Returned as a local relation of the entry columns: the rows are
     * read here, not when the frame runs. The relation is one partition,
     * as the rows already sit on the driver: a sort or a count above it
     * then runs as one task, with no exchange and no range-sampling job.
     * None once the kept entries' key and value bytes pass
-    * [[InProcessScanMaxBytes]] (checked after each pair): the caller then
-    * reads the range in tasks, so the driver never holds more than that
-    * plus one pair's entries. */
+    * [[InProcessScanMaxBytes]] (checked after each pair is kept, when no
+    * further pair is started): the caller then reads the range in tasks,
+    * so the driver never holds more than that plus the pool's width of
+    * pairs' entries. A failed pair read rethrows its own exception. */
   private def scanInProcess(pairs: Seq[Pair], r: Rect): Option[DataFrame] = {
+    val (rick, blocks, codecs) = (rickPartitions, blockPartitions, opts.codecs)
     val rows = Vector.newBuilder[Row]
     var held = 0L
-    for (pair <- pairs if held <= InProcessScanMaxBytes)
-      pairEntries(rickPartitions, blockPartitions, opts.codecs, pair, r).foreach { e =>
-        rows += Row(e.key, e.ts, e.value); held += e.key.length + e.value.length
-      }
+    inPairOrder(pairs)(pairEntries(rick, blocks, codecs, _, r).toVector) { read =>
+      while (held <= InProcessScanMaxBytes && read.hasNext)
+        read.next().foreach { e =>
+          rows += Row(e.key, e.ts, e.value); held += e.key.length + e.value.length
+        }
+    }
     Option.when(held <= InProcessScanMaxBytes)(
       spark.createDataFrame(rows.result().asJava, EntrySchema).coalesce(1))
   }
@@ -1828,6 +1911,10 @@ final class HelixStore private (
       // queued has drained above, and the heartbeat must keep touching
       // the lock for as long as any of them could hold it
       lockHeartbeat.shutdown()
+      // idle pair-read threads exit at once; a read still running on
+      // another caller's behalf finishes first
+      pairReadPool.shutdown()
+      pairReadPool.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS): Unit
     }
   }
 

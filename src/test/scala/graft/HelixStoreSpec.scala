@@ -1452,6 +1452,91 @@ class HelixStoreSpec extends SparkTestBase {
     store.close()
   }
 
+  test("warm multi-pair scans and multiGets start no thread; close() stops the pair-read pool") {
+    val dir = tmpDir("hs-pair-pool")
+    val store = HelixStore.open(spark, dir, StoreOptions(numShards = 4, bucketSize = 10))
+    // 16 keys over buckets 0-3 in blocks, then a rick entry per key: each
+    // call below touches many (shard, bucket) pairs of both layers
+    val blocks = for (k <- 0 until 16; t <- 0L until 40L by 3) yield (f"t$k%02d", t, s"b$k-$t")
+    val rick = (0 until 16).map(k => (f"t$k%02d", 1L + 2 * k, s"r$k"))
+    store.put(entriesDF(blocks))
+    store.blockCompact()
+    store.put(entriesDF(rick))
+    val live = (blocks ++ rick).map { case (k, t, v) => (k, t) -> v }.toMap
+    val probes = live.keys.toSeq.sorted.grouped(3).map(_.head).toSeq
+    def scan() = store.scan((0L, 40L), ("t".getBytes, "u".getBytes), ordered = false)
+    def multiGet() = store.multiGet(probes.map { case (k, t) => (k.getBytes: Array[Byte], t) })
+      .map(_.map(new String(_)))
+    // the first call of each starts the pool's threads
+    val warm = scan()
+    assert(sourceOf(warm) == "LocalRelation" && warm.count() == live.size)
+    assert(multiGet() == probes.map(p => Some(live(p))))
+    // JVM-wide count: Spark's own background threads (its block
+    // manager's asks when the cleaner drops an old broadcast) may start
+    // in any window, a read that starts threads does so in every one
+    val threads = java.lang.management.ManagementFactory.getThreadMXBean
+    val started = (0 until 5).map { _ =>
+      val before = threads.getTotalStartedThreadCount
+      for (_ <- 0 until 3) {
+        scan()
+        assert(multiGet() == probes.map(p => Some(live(p))))
+      }
+      threads.getTotalStartedThreadCount - before
+    }
+    assert(started.min == 0, s"windows of 3 warm scans and multiGets started $started threads")
+    def poolThreads = {
+      import scala.jdk.CollectionConverters._
+      val prefix = s"graft-pair-read-${java.nio.file.Paths.get(dir).getFileName}-"
+      Thread.getAllStackTraces.keySet.asScala.filter(t => t.isAlive && t.getName.startsWith(prefix))
+    }
+    assert(poolThreads.nonEmpty, "the multi-pair reads ran on no pair-read thread")
+    store.close()
+    assert(poolThreads.isEmpty, s"alive after close(): ${poolThreads.map(_.getName)}")
+  }
+
+  test("a codec failing in one pair fails scan and multiGet with its own exception; the next calls succeed") {
+    val store = HelixStore.open(spark, tmpDir("hs-pair-fail"),
+      StoreOptions(numShards = 4, bucketSize = 10, codecs = Map(FailingCodec.name -> FailingCodec),
+        codecDispatch = Some((_: Array[Byte]) => FailingCodec.name)))
+    val rows = for (k <- 0 until 12; t <- 0L until 40L by 5) yield (f"c$k%02d", t, s"v$k-$t")
+    // the one block holding the trigger value fails to decode
+    store.put(entriesDF(rows :+ (("c99", 17L, FailingCodec.Trigger))))
+    store.blockCompact()
+    def probes(rs: Seq[(String, Long, String)]) = rs.map { case (k, t, _) => (k.getBytes: Array[Byte], t) }
+    intercept[FailingCodec.Failure] { store.scan((0L, 40L), ("c".getBytes, "d".getBytes)) }
+    intercept[FailingCodec.Failure] { store.multiGet(probes(rows :+ (("c99", 17L, "")))) }
+    // the same pairs without the failing key's block read as before
+    val df = store.scan((0L, 40L), ("c".getBytes, "c99".getBytes))
+    assert(df.collect().map(r => (new String(r.getAs[Array[Byte]]("key")), r.getAs[Long]("ts"),
+      new String(r.getAs[Array[Byte]]("value")))).toSeq == rows.sortBy(r => (r._1, r._2)))
+    assert(store.multiGet(probes(rows)).map(_.map(new String(_))) == rows.map(r => Some(r._3)))
+    store.close()
+  }
+
+  test("a task-path scan counts the bytes of its listed files as its tasks' input") {
+    val dir = tmpDir("hs-task-input")
+    val store = HelixStore.open(spark, dir, StoreOptions(numShards = 2, bucketSize = 10))
+    val blocks = for (k <- 0 until 10; t <- 0L until 30L by 4) yield (f"i$k%02d", t, s"b$k-$t")
+    store.put(entriesDF(blocks))
+    store.blockCompact()
+    store.put(entriesDF((0 until 10).map(k => (f"i$k%02d", 3L * k, s"r$k"))))
+    // the range covers every bucket: each data file of both live layers is listed
+    val listed = {
+      import scala.jdk.CollectionConverters._
+      Seq("rows", "blocks").map { layer =>
+        val w = java.nio.file.Files.walk(java.nio.file.Paths.get(dir, pointerOf(dir)(layer)))
+        try w.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+          .map(java.nio.file.Files.size).sum
+        finally w.close()
+      }.sum
+    }
+    val (n, _, tasks) = withTasks(store.scan((0L, 30L), ("i".getBytes, "j".getBytes),
+      ordered = false, scanOpts = sparkScanPath).count())
+    assert(n == (blocks.map(r => (r._1, r._2)) ++ (0 until 10).map(k => (f"i$k%02d", 3L * k))).distinct.size)
+    assert(tasks.map(_.inputMetrics.bytesRead).sum == listed)
+    store.close()
+  }
+
   test("every parquet read in HelixStore goes through PartitionReader (fixed schema, scoped listing)") {
     val src = java.nio.file.Files.readString(
       java.nio.file.Paths.get("src", "main", "scala", "graft", "core", "HelixStore.scala"))
@@ -1527,22 +1612,36 @@ class HelixStoreSpec extends SparkTestBase {
       assert(!src.contains(gone), s"HelixStore still has $gone")
     assert(hits("new PartitionReader(").size == 2,
       s"new PartitionReader( at ${hits("new PartitionReader(")}")
+    // one reader conf: the session's Hadoop conf is taken once, by
+    // PartitionReader, as a JobConf that Spark's per-file task context
+    // then shares instead of copying
+    within("newHadoopConf", 1, inProc)
+    assert(src.contains("new JobConf(spark.sessionState.newHadoopConf())"),
+      "PartitionReader's conf is not wrapped in a JobConf")
+    // four thread pools, each a named member: the lock heartbeat, the
+    // compact prompt, the compaction executor and the pair-read pool
+    val pools = hits("Executors.new").map { i =>
+      val at = src.lastIndexOf("\n  private ", i) + 1
+      val member = src.substring(at, src.indexOf('\n', at))
+      "val (\\w+)".r.findFirstMatchIn(member).fold(member)(_.group(1))
+    }
+    assert(pools.sorted == Seq("compactExec", "compactPrompt", "lockHeartbeat", "pairReadPool"),
+      s"Executors.new* in $pools")
   }
 
-  /** `f`'s result, the stages its jobs ran and the shuffle bytes they
-    * wrote. */
-  private def withShuffle[T](f: => T): (T, Int, Long) = {
+  /** `f`'s result, the stages its jobs ran and the metrics of their
+    * tasks. */
+  private def withTasks[T](f: => T): (T, Int, Seq[org.apache.spark.executor.TaskMetrics]) = {
     val sc = spark.sparkContext
-    val tag = "graft.spec.shuffle"
+    val tag = "graft.spec.tasks"
     val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
-    val written = new java.util.concurrent.atomic.AtomicLong(0)
+    val tasks = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.executor.TaskMetrics]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
         if (j.properties != null && j.properties.getProperty(tag) != null)
           j.stageIds.foreach(stages.add)
       override def onTaskEnd(t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-        if (stages.contains(t.stageId) && t.taskMetrics != null)
-          written.addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten): Unit
+        if (stages.contains(t.stageId) && t.taskMetrics != null) tasks.add(t.taskMetrics): Unit
     }
     org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc, 10000)
     sc.addSparkListener(listener)
@@ -1550,7 +1649,7 @@ class HelixStoreSpec extends SparkTestBase {
       sc.setLocalProperty(tag, "1")
       val out = try f finally sc.setLocalProperty(tag, null)
       org.apache.spark.graftbridge.ListenerBridge.waitUntilEmpty(sc, 10000)
-      (out, stages.size, written.get)
+      (out, stages.size, tasks.toArray(Array.empty[org.apache.spark.executor.TaskMetrics]).toSeq)
     } finally sc.removeSparkListener(listener)
   }
 
@@ -1570,7 +1669,8 @@ class HelixStoreSpec extends SparkTestBase {
     def state = store.toDF.collect().map(r => (new String(r.getAs[Array[Byte]]("key")),
       r.getAs[Long]("ts")) -> new String(r.getAs[Array[Byte]]("value"))).toMap
     assert(state == expected)
-    val (_, stages, shuffled) = withShuffle(store.blockCompact())
+    val (_, stages, tasks) = withTasks(store.blockCompact())
+    val shuffled = tasks.map(_.shuffleWriteMetrics.bytesWritten).sum
     assert(stages > 0, "the compaction ran no job")
     assert(shuffled == 0L, s"the compaction wrote $shuffled shuffle bytes")
     assert(state == expected)
@@ -1615,5 +1715,19 @@ object PausingCodec extends graft.core.BlockCodec {
       gate._3.await()
     }
     graft.core.NoopCodec.decode(blob)
+  }
+}
+
+/** Test codec: [[graft.core.NoopCodec]] whose decode throws
+  * [[FailingCodec.Failure]] for a block holding the value [[FailingCodec.Trigger]]. */
+object FailingCodec extends graft.core.BlockCodec {
+  final class Failure extends RuntimeException("a block holds the trigger value")
+  val name = "failing"
+  val Trigger = "fail-on-decode"
+  def encode(vals: Array[Array[Byte]]): Array[Byte] = graft.core.NoopCodec.encode(vals)
+  def decode(blob: Array[Byte]): Array[Array[Byte]] = {
+    val vals = graft.core.NoopCodec.decode(blob)
+    if (vals.exists(v => new String(v) == Trigger)) throw new Failure
+    vals
   }
 }

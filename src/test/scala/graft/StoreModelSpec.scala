@@ -306,6 +306,68 @@ class StoreModelSpec extends SparkTestBase {
     runScanRangeScenario(1010, sparkPath = true)
   }
 
+  test("a many-pair range whose kept bytes pass InProcessScanMaxBytes reads in tasks and equals the model") {
+    val bucketSize = 10L
+    val dir = tmpDir("hs-scan-bound")
+    val store = HelixStore.open(spark, dir, StoreOptions(numShards = 4, bucketSize = bucketSize))
+    val model = mutable.Map[(String, Long), String]()
+    // 4 KB values that compress to almost nothing: the files stay far
+    // under the bound while the kept entries pass it, spread over
+    // 4 shards x 8 buckets of blocks with rick entries over them
+    val pad = "x" * 4096
+    val n = (HelixStore.InProcessScanMaxBytes / pad.length + 40).toInt
+    val rows = (0 until n).map(i => (f"w${i % 37}%02d", (i % 80).toLong, s"$i-$pad"))
+    putBatch(store, rows.take(n / 2), model)
+    store.blockCompact()
+    putBatch(store, rows.drop(n / 2), model)
+    putBatch(store, rows.take(20).map { case (k, t, _) => (k, t, s"over-$k-$t") }, model)
+    val fileBytes = bucketFiles(dir, liveGen(dir, "rows"))(_ => true).map(java.nio.file.Files.size).sum +
+      bucketFiles(dir, liveGen(dir, "blocks"))(_ => true).map(java.nio.file.Files.size).sum
+    assert(fileBytes <= HelixStore.InProcessScanMaxBytes, s"listing of $fileBytes bytes")
+    def got(df: org.apache.spark.sql.DataFrame): Seq[(String, Long, String)] =
+      df.collect().map(r => (new String(r.getAs[Array[Byte]]("key")), r.getAs[Long]("ts"),
+        new String(r.getAs[Array[Byte]]("value")))).toSeq
+    val all = store.scan((0L, 80L), ("w".getBytes, "x".getBytes))
+    assert(sourceOf(all) == "LogicalRDD", "past the kept-bytes bound the range reads in tasks")
+    assert(got(all) == model.toSeq.map { case ((k, t), v) => (k, t, v) }.sortBy(e => (e._1, e._2)))
+    // under the bound the same pairs stay on the driver
+    assertScan(store, model, Long.MinValue, bucketSize, 0, 80, "a few keys of every pair", "w00", "w03")
+    store.close()
+  }
+
+  test("a multi-pair unordered driver scan returns its pairs' rows in the order a one-pair read does") {
+    val bucketSize = 10L
+    val store = HelixStore.open(spark, tmpDir("hs-scan-order"),
+      StoreOptions(numShards = 4, bucketSize = bucketSize))
+    val model = mutable.Map[(String, Long), String]()
+    val rnd = new scala.util.Random(1111)
+    val keys = (0 until 9).map(i => s"o$i")
+    // every entry in shard 0: a bucket is one pair, so a one-bucket scan
+    // reads its pair on the calling thread, and the whole range's eight
+    // pairs go to the pair-read pool
+    def directBatch(rows: Seq[(String, Long, String)]): Unit = {
+      val lastPer = rows.groupBy(e => (e._1, e._2)).map(_._2.last).toSeq
+      store.directPut(0, entriesDF(lastPer))
+      lastPer.foreach { case (k, t, v) => model((k, t)) = v }
+    }
+    directBatch(randomRows(rnd, keys, 0, 80, 60, "b"))
+    store.blockCompact()
+    directBatch(randomRows(rnd, keys, 0, 80, 30, "r"))
+    directBatch(randomRows(rnd, keys, 40, 80, 10, "s"))
+    def unordered(t0: Long, t1: Long): (String, Seq[(String, Long, String)]) = {
+      val df = store.scan((t0, t1), ("".getBytes, "~".getBytes), ordered = false)
+      (sourceOf(df), df.collect().map(r => (new String(r.getAs[Array[Byte]]("key")),
+        r.getAs[Long]("ts"), new String(r.getAs[Array[Byte]]("value")))).toSeq)
+    }
+    val (source, whole) = unordered(0L, 80L)
+    assert(source == "LocalRelation")
+    val pairByPair = (0L until 8L).flatMap(b => unordered(b * bucketSize, (b + 1) * bucketSize)._2)
+    assert(whole == pairByPair)
+    assert(whole.sortBy(e => (e._1, e._2)) ==
+      model.toSeq.map { case ((k, t), v) => (k, t, v) }.sortBy(e => (e._1, e._2)))
+    store.close()
+  }
+
   test("a scan sees another instance's puts into its range after its own pointer load") {
     for (sparkPath <- Seq(false, true)) scanSeesOtherInstance(sparkPath)
   }
