@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.Tables
+
 /**
  * Catalog views over the operator registry and the source tables —
  * the second half of the SQL surface (verdict r18 #6; the first is
@@ -17,12 +19,6 @@ import org.apache.spark.sql.SparkSession
  * registration (the same once-per-corpus cost the Scala path pays).
  */
 object SqlSurface {
-
-  /** The ten source tables as temp views over `dir`. */
-  def registerTables(spark: SparkSession, dir: String): Unit =
-    for (t <- Seq("region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings"))
-      spark.read.parquet(s"$dir/$t.parquet").createOrReplaceTempView(t)
 
   /** Temp views for the named registry queries (default: all). Returns
     * the names that failed to register (construction threw), so a
@@ -42,7 +38,7 @@ object SqlSurface {
 
   /** Tables + the full registry. */
   def register(spark: SparkSession, dir: String): Seq[String] = {
-    registerTables(spark, dir)
+    Tables.registerAll(spark, dir)
     registerQueries(spark, dir)
   }
 }

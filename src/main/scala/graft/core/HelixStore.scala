@@ -1,8 +1,10 @@
 package graft.core
 
 import java.nio.ByteBuffer
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.channels.FileChannel
+import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption}
 import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.{ConcurrentHashMap, Semaphore}
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
@@ -60,13 +62,16 @@ import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StructFiel
  * == Reads ==
  * Every read of the layers is one (shard, bucket) pair at a time, the
  * reference's per-shard iterator over its rick and SSTable files
- * (src/db.rs:67-74, src/iterator.rs): `HelixStore.pairEntries` reads
- * the pair's rick and block files through Spark's own parquet reader
- * ([[HelixStore.PartitionReader]]) and merges them last-write-wins.
- * Point reads and small scans run it on the driver, a call of two or
- * more pairs on the store's pair-read pool; larger scans,
- * `toDF`, `latest`, seq recovery and compaction run it inside Spark
- * tasks that each take whole pairs.
+ * (src/db.rs:67-74, src/iterator.rs), through Spark's own parquet
+ * reader ([[HelixStore.PartitionReader]]). Scans, `toDF`, `latest`, seq
+ * recovery and compaction read a pair with `HelixStore.pairEntries`,
+ * which merges its rick and block files last-write-wins. Point reads
+ * (get, directGet, multiGet) read a pair with `pairReads`: the probed
+ * keys' blocks from `blockRows`, then the rick rows at exactly the
+ * probed (key, ts) from `rickRows`. Point reads and small scans run on
+ * the driver, a call of two or more pairs on the store's pair-read
+ * pool; larger scans, `toDF`, `latest`, seq recovery and compaction run
+ * inside Spark tasks that each take whole pairs.
  *
  * At cluster scale the same layout holds: shards spread writes across
  * executors, buckets bound the data any time-ranged query touches, and
@@ -130,9 +135,6 @@ final case class StoreOptions(
       * reader plans time to finish against swapped-out generations —
       * the snapshot-retention idea from log-structured table formats. */
     graveyardRetentionMs: Long = 10 * 60 * 1000L,
-    /** Age (ms) after which a cross-process mutation lock is presumed
-      * abandoned (holder crashed) and may be broken. */
-    lockStaleMs: Long = 10 * 60 * 1000L,
     /** Point-read LRU capacity — the reference's kv_cache
       * (cache.rs CacheConfig.kv_cache_size, default 256). 0 disables.
       * Safe under concurrent writers: the cache epoch is (pointer,
@@ -217,6 +219,12 @@ final case class ScanOptions(
 }
 
 object HelixStore {
+  /** The JVM's gate per store root (by real path) in front of the OS
+    * lock on its `_mutex`. A Semaphore, not a lock: the thread that
+    * drops an instance's hold count to 0 releases it, and that need not
+    * be the thread that took it. */
+  private val mutexGates = new ConcurrentHashMap[Path, Semaphore]()
+
   val EntryColumns: Seq[String] = Seq("key", "ts", "value")
 
   /** Unsigned-lexicographic byte-array ordering — exactly Spark SQL's
@@ -498,12 +506,6 @@ final class HelixStore private (
   require(opts.codecs.nonEmpty, "at least one codec must be registered")
   require(opts.putWritersPerPartition >= 0,
     s"putWritersPerPartition must be >= 0: ${opts.putWritersPerPartition}")
-  // The heartbeat touches a held lock every max(250ms, lockStaleMs/3);
-  // a staleness window at or below the heartbeat period would let a
-  // LIVE lock be presumed stale between touches, silently voiding the
-  // guarantee. Keep the window comfortably above the minimum period.
-  require(opts.lockStaleMs > 1000L,
-    s"lockStaleMs must exceed 1000ms (heartbeat floor is 250ms): ${opts.lockStaleMs}")
   require(opts.taskBufferSize >= 1,
     s"taskBufferSize must be >= 1: ${opts.taskBufferSize}")
   require(opts.compactPromptIntervalMs.forall(_ > 0),
@@ -522,55 +524,37 @@ final class HelixStore private (
   private val pointerFile: Path = root.resolve("_current")
   private val mutexFile: Path = root.resolve("_mutex")
   private val graveyardFile: Path = root.resolve("_graveyard")
-  /** Identifies this instance's cross-process lock ownership. */
-  private val instanceId: String = java.util.UUID.randomUUID().toString
 
   // ---- cross-process mutation lock ------------------------------------
   // Every MUTATION (put, blockCompact, outdate, vacuum, open-
-  // time orphan cleanup) runs under an exclusive on-disk lock claimed by
-  // atomically creating `_mutex` — so another process's put can never
-  // interleave with this process's compaction swap (the lost-write and
-  // deleted-uncommitted-output races). The lock is reentrant PER
-  // INSTANCE (hold count), which is what lets a put proceed while this
-  // same instance's background compaction holds the lock — intra-
-  // instance interleaving is governed by the finer putGate below. A lock
-  // whose file is older than opts.lockStaleMs is presumed abandoned by a
-  // crashed process and broken. At cluster scale this role is played by
-  // a catalog/metastore transaction lock; a lock FILE works for any
-  // filesystem with atomic create (not S3 — document before porting).
+  // time orphan cleanup) runs under an exclusive OS advisory lock on
+  // `_mutex` — so another process's put can never interleave with this
+  // process's compaction swap (the lost-write and deleted-uncommitted-
+  // output races). The kernel frees the lock when its holder exits,
+  // crashed or not, so no lock is ever presumed abandoned. The lock is
+  // reentrant PER INSTANCE (hold count), which is what lets a put
+  // proceed while this same instance's background compaction holds the
+  // lock — intra-instance interleaving is governed by the finer putGate
+  // below. At cluster scale this role is played by a catalog/metastore
+  // transaction lock; an OS file lock needs a filesystem that honours
+  // POSIX locks (not S3 — document before porting).
+  //
+  // A JVM holds one lock per file, and closing ANY channel to the file
+  // may drop it: the file is opened only here, never written, read or
+  // deleted, and instances of one JVM on one store (a streaming sink
+  // beside a batch writer) first take the store's gate in `mutexGates`,
+  // so only the gate holder opens the channel.
   private val lockState = new Object
   private var lockHolds = 0
-
-  /** Touches the held lock file periodically so a LIVE long mutation is
-    * never presumed stale: without the heartbeat, any compaction longer
-    * than lockStaleMs would have its lock broken mid-flight by a
-    * waiting process and two mutators would interleave — the exact race
-    * the lock exists to prevent. */
-  private val lockHeartbeat =
-    java.util.concurrent.Executors.newSingleThreadScheduledExecutor(r => {
-      val t = new Thread(r, "graft-lock-heartbeat"); t.setDaemon(true); t
-    })
-  locally {
-    val period = math.max(250L, opts.lockStaleMs / 3)
-    lockHeartbeat.scheduleWithFixedDelay(() => lockState.synchronized {
-      if (lockHolds > 0) {
-        try {
-          if (new String(Files.readAllBytes(mutexFile)) == instanceId)
-            Files.setLastModifiedTime(mutexFile,
-              java.nio.file.attribute.FileTime.fromMillis(
-                System.currentTimeMillis()))
-        } catch { case _: java.io.IOException => () }
-      }
-    }, period, period, java.util.concurrent.TimeUnit.MILLISECONDS): Unit
-  }
+  private var lockChannel: FileChannel = null
+  // lazy: the root's real path exists once initPointer has made it
+  private lazy val mutexGate =
+    mutexGates.computeIfAbsent(root.toRealPath(), _ => new Semaphore(1))
 
   // periodic compaction prompt (reference compact_prompt_interval,
   // option.rs:124): while un-blocked rick rows exist, nudge the deduped
-  // background scheduler. DEDICATED daemon timer — the probe does a
-  // pointer read + rick dir listing, which on a slow filesystem could
-  // outlast the heartbeat period; sharing the heartbeat thread would
-  // delay lock touches and let a waiter presume a LIVE lock stale. The
-  // compaction itself runs on compactExec, never here.
+  // background scheduler from a daemon timer. The compaction itself
+  // runs on compactExec, never here.
   private val compactPrompt = opts.compactPromptIntervalMs.map { iv =>
     val ex = java.util.concurrent.Executors.newSingleThreadScheduledExecutor(r => {
       val t = new Thread(r, "graft-compact-prompt"); t.setDaemon(true); t
@@ -582,168 +566,25 @@ final class HelixStore private (
     ex
   }
 
-  private def acquireMutex(): Unit = {
-    // Cross-iteration stale-confirmation state: (lock bytes, mtime,
-    // first-observed-at). Staleness is confirmed by TWO observations of
-    // the SAME bytes+mtime at least one heartbeat period apart — a live
-    // holder touches mtime every period. Carrying the first observation
-    // across loop iterations means each waiter pays the confirm delay
-    // AT MOST ONCE per distinct lock state: a waiter that just lost the
-    // break race to another process sees the winner's FRESH bytes,
-    // resets this, and goes back to fast 5 ms spins instead of
-    // serializing one full confirm-sleep per waiter per retry.
-    var staleObs: Option[(String, Long, Long)] = None
-    while (true) {
-      // re-checked EVERY iteration: if another thread of this instance
-      // won the file while we spun, we must join its hold count — not
-      // keep spinning until release (and never stale-break our own
-      // instance's live lock)
-      lockState.synchronized {
-        if (lockHolds > 0) { lockHolds += 1; return }
-      }
+  private def acquireMutex(): Unit = lockState.synchronized {
+    // other threads of this instance wait on lockState meanwhile, then
+    // join the hold count
+    if (lockHolds == 0) {
+      mutexGate.acquire()
       try {
-        Files.write(mutexFile, instanceId.getBytes,
-          java.nio.file.StandardOpenOption.CREATE_NEW)
-        lockState.synchronized { lockHolds += 1 }
-        return
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          // stale-break: holder crashed without releasing
-          try {
-            val staleContent =
-              try Some(new String(Files.readAllBytes(mutexFile)))
-              catch { case _: java.io.IOException => None }
-            val staleMtime = Files.getLastModifiedTime(mutexFile).toMillis
-            val age = System.currentTimeMillis() - staleMtime
-            val ownedByUs = staleContent.contains(instanceId)
-            // Staleness must survive a CONFIRMING re-observation one
-            // heartbeat period later before anyone breaks the lock: a
-            // live holder touches mtime every period, so the same
-            // bytes+mtime seen across >= one period means the holder is
-            // really gone (or frozen past its entire staleness budget).
-            // This shrinks the misjudge window from "one delayed touch"
-            // to "holder stalled for lockStaleMs + a full period". The
-            // two observations are loop iterations against the cached
-            // staleObs, not an inline sleep, so the wait interleaves
-            // with the CREATE_NEW attempts above and resets the moment
-            // the lock changes hands. The observe→move gap below is the
-            // documented RESIDUAL race; the tombstone bytes+mtime check
-            // and the restore loop handle a fresh lock captured inside
-            // it.
-            val confirmDelay = math.max(250L, opts.lockStaleMs / 3)
-            val overAge = !ownedByUs && staleContent.isDefined &&
-              age > opts.lockStaleMs
-            val confirmedStale = overAge && {
-              val cur = (staleContent.get, staleMtime)
-              val now = System.currentTimeMillis()
-              staleObs match {
-                case Some((c, m, t0)) if (c, m) == cur =>
-                  now - t0 >= confirmDelay
-                case _ =>
-                  staleObs = Some((cur._1, cur._2, now)); false
-              }
-            }
-            if (!overAge) staleObs = None
-            if (confirmedStale) {
-              // ATOMIC break: rename the stale file to a tombstone only
-              // one waiter can win. A bare delete races — two waiters
-              // could both pass the age check, the first re-acquire,
-              // and the second's delete would then remove the FRESH
-              // lock, letting two mutators run concurrently.
-              val tomb = root.resolve(s"_mutex.stale.$instanceId")
-              try {
-                Files.move(mutexFile, tomb,
-                  java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-                // The age check and the move are still two steps:
-                // another waiter may have broken the same stale lock
-                // in between and its new owner re-created a FRESH
-                // `_mutex` — which our move just captured. Only delete
-                // the tombstone if it holds EXACTLY the bytes+mtime we
-                // judged stale (rename preserves both); otherwise hand
-                // the fresh lock back and keep waiting.
-                val tombContent =
-                  try Some(new String(Files.readAllBytes(tomb)))
-                  catch { case _: java.io.IOException => None }
-                val tombMtime =
-                  try Files.getLastModifiedTime(tomb).toMillis
-                  catch { case _: java.io.IOException => -1L }
-                if (tombContent == staleContent && tombMtime == staleMtime) {
-                  Files.deleteIfExists(tomb): Unit
-                } else {
-                  // captured a live lock — restore it. A third waiter
-                  // could create `_mutex` inside this window; spin a
-                  // bounded retry rather than deleting a live lock.
-                  var restored = false
-                  var attempts = 0
-                  var overlapFlagged = false
-                  while (!restored && attempts < 200) {
-                    try {
-                      Files.move(tomb, mutexFile,
-                        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-                      restored = true
-                    } catch {
-                      case _: java.nio.file.FileAlreadyExistsException =>
-                        // a THIRD waiter acquired while the live lock sat
-                        // captured in our tombstone — the captured owner
-                        // and that waiter may have overlapped. Flag it
-                        // for operator forensics; the restore still
-                        // proceeds once the third waiter releases.
-                        if (!overlapFlagged) {
-                          overlapFlagged = true
-                          System.err.println(
-                            s"[helixstore] WARNING: lock break captured a live lock " +
-                              s"and a third waiter acquired during the capture window " +
-                              s"($mutexFile); mutator overlap possible in that window")
-                        }
-                        attempts += 1; Thread.sleep(5)
-                      case _: java.io.IOException =>
-                        restored = true // tombstone gone — nothing to restore
-                    }
-                  }
-                  // Giving up silently would leave the captured owner
-                  // believing it holds a lock that no longer exists on
-                  // disk while another waiter acquired — the exact
-                  // two-mutators outcome. FAIL LOUDLY: this waiter's
-                  // mutation aborts, and the stranded tombstone keeps
-                  // the evidence for operator forensics.
-                  if (!restored)
-                    throw new IllegalStateException(
-                      s"lock break captured a live lock and could not restore it " +
-                        s"(tombstone: $tomb); aborting rather than risking two mutators")
-                }
-              } catch { case _: java.io.IOException => () } // lost the break race
-            }
-            // Awaiting a stale confirmation, poll gently (the lock can
-            // only change hands, which resets the observation); in live
-            // contention, spin fast to win the release promptly.
-            else Thread.sleep(if (overAge) math.min(confirmDelay, 250L) else 5)
-          } catch { case _: java.nio.file.NoSuchFileException => () }
-      }
+        val ch = FileChannel.open(mutexFile, StandardOpenOption.CREATE, StandardOpenOption.WRITE)
+        try ch.lock() catch { case t: Throwable => ch.close(); throw t }
+        lockChannel = ch
+      } catch { case t: Throwable => mutexGate.release(); throw t }
     }
+    lockHolds += 1
   }
 
   private def releaseMutex(): Unit = lockState.synchronized {
     lockHolds -= 1
     if (lockHolds == 0) {
-      // Only keep the file on positive proof another process now owns
-      // it (a stale-break while we overstayed — the heartbeat makes
-      // that near-impossible). A file that is GONE means there is
-      // nothing of ours to clean up — deleting after a breaker's
-      // mid-move window could remove the breaker's re-created fresh
-      // lock. Other read failures must still delete: leaking our own
-      // lock would wedge this instance behind the full staleness
-      // window with no escape (the stale-break guard never fires on a
-      // file holding our own id).
-      val stillOurs =
-        try new String(Files.readAllBytes(mutexFile)) == instanceId
-        catch {
-          case _: java.nio.file.NoSuchFileException => false
-          case _: java.io.IOException => true
-        }
-      if (stillOurs) {
-        try Files.deleteIfExists(mutexFile): Unit
-        catch { case _: java.io.IOException => () }
-      }
+      // closing the channel frees the OS lock
+      try lockChannel.close() finally { lockChannel = null; mutexGate.release() }
     }
   }
 
@@ -1866,51 +1707,19 @@ final class HelixStore private (
   }
 
   def close(): Unit = {
-    // The compact prompt stops FIRST, and close() waits until the
-    // prompt has FULLY terminated before draining: a probe still
-    // in flight when awaitCompactions() runs could enqueue a compaction
-    // AFTER the drain, and that compaction would run during shutdown —
-    // after the heartbeat stops, so it would hold _mutex with no
-    // touches and, past lockStaleMs, another instance could
-    // stale-break it mid-swap (the exact two-mutators hazard the
-    // heartbeat exists to prevent). A probe is one cheap rick-rows
-    // existence check, so the loop normally exits on its first wait;
-    // it warns each minute if a probe is wedged on a slow filesystem
-    // rather than silently accepting that hazard. Residual window: a
-    // close() interrupted mid-wait gives up the guarantee (flagged
-    // loudly below) — the caller chose to abandon the wait.
-    compactPrompt.foreach { ex =>
-      ex.shutdown()
-      var terminated = false
-      var interrupted = false
-      while (!terminated && !interrupted) {
-        try {
-          terminated = ex.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS)
-          if (!terminated)
-            System.err.println("[helixstore] WARNING: compact prompt still " +
-              s"stopping after 60s ($root); waiting so no compaction can " +
-              "outlive the lock heartbeat")
-        } catch {
-          case _: InterruptedException =>
-            Thread.currentThread().interrupt()
-            interrupted = true
-            if (!ex.isTerminated)
-              System.err.println("[helixstore] WARNING: close() interrupted " +
-                s"before the compact prompt stopped ($root); an in-flight " +
-                "probe may enqueue a compaction that outlives the heartbeat")
-        }
-      }
-    }
     // shutdown in finally: awaitCompactions rethrows a background
-    // compaction failure, and that must not leak the executor thread
-    // (or the lock heartbeat) in a long-lived driver
-    try awaitCompactions()
-    finally {
+    // compaction failure, and that (or an interrupted wait) must not
+    // leak the executor threads in a long-lived driver
+    try {
+      // the compact prompt stops first, so no probe queues a compaction
+      // after the drain
+      compactPrompt.foreach { ex =>
+        ex.shutdown()
+        ex.awaitTermination(60, java.util.concurrent.TimeUnit.SECONDS): Unit
+      }
+      awaitCompactions()
+    } finally {
       if (compactExecStarted) compactExec.shutdown()
-      // heartbeat stops LAST: every compaction the prompt could have
-      // queued has drained above, and the heartbeat must keep touching
-      // the lock for as long as any of them could hold it
-      lockHeartbeat.shutdown()
       // idle pair-read threads exit at once; a read still running on
       // another caller's behalf finishes first
       pairReadPool.shutdown()

@@ -56,12 +56,12 @@ object HelixScan {
     base.resolve("store").toString
   }
 
-  // One OPEN read-only store per staged path: HelixStore.open starts a
-  // lock-heartbeat daemon, so opening per query invocation leaked one
-  // executor+thread per run. The staged store is immutable after
-  // ensure(), so a single cached handle (whose kv/kc caches then also
-  // persist across point reads) serves every consumer; closed on JVM
-  // exit and by clear().
+  // One OPEN read-only store per staged path: an open handle holds its
+  // pair-read pool's threads until close(), so opening per query
+  // invocation would leak a pool per run. The staged store is immutable
+  // after ensure(), so a single cached handle (whose kv/kc caches then
+  // also persist across point reads) serves every consumer; closed on
+  // JVM exit and by clear().
   private val openStores =
     scala.collection.mutable.LinkedHashMap.empty[(SparkSession, String), HelixStore]
   private def storeAt(s: SparkSession, path: String): HelixStore =
@@ -95,21 +95,24 @@ object HelixScan {
     openStores.clear()
   }
 
-  /** #170 — time × key rectangle scan SERVED BY THE STORE (same bounds
-    * as ts_scan_range: users 10–50, 2024-01-05 ≤ ts < 2024-01-12). */
-  def scanRange(s: SparkSession, dir: String): DataFrame = {
-    val st = storeFor(s, dir)
-    val lo = java.time.Instant.parse("2024-01-05T00:00:00Z")
-      .toEpochMilli * 1000L
-    val hi = java.time.Instant.parse("2024-01-12T00:00:00Z")
-      .toEpochMilli * 1000L
-    st.scan((lo, hi), ("000010-".getBytes, "000050~".getBytes))
+  /** Composite-key entries ([[entriesOf]]) decoded back to typed
+    * columns: user_id, event_id, ts_us, cents. */
+  private def decoded(entries: DataFrame): DataFrame =
+    entries
       .withColumn("k", col("key").cast("string"))
       .select(
         substring(col("k"), 1, 6).cast("long").as("user_id"),
         substring(col("k"), 8, 10).cast("long").as("event_id"),
         col("ts").as("ts_us"),
         col("value").cast("string").cast("long").as("cents"))
+
+  /** #170 — time × key rectangle scan SERVED BY THE STORE (same bounds
+    * as ts_scan_range: users 10–50, 2024-01-05 ≤ ts < 2024-01-12). */
+  def scanRange(s: SparkSession, dir: String): DataFrame = {
+    val st = storeFor(s, dir)
+    val lo = Tables.dayUs("2024-01-05")
+    val hi = Tables.dayUs("2024-01-12")
+    decoded(st.scan((lo, hi), ("000010-".getBytes, "000050~".getBytes)))
   }
 
   // ---- point reads through the store (reference db.rs:54 get) ---------
@@ -120,8 +123,7 @@ object HelixScan {
     * and the decompress=false option (reference ReadOption,
     * option.rs:131: skip the compressed block layer) has an observable,
     * oracle-checkable effect: only rick-resident entries are served. */
-  val PointCutUs: Long =
-    java.time.Instant.parse("2024-01-16T00:00:00Z").toEpochMilli * 1000L
+  val PointCutUs: Long = Tables.dayUs("2024-01-16")
   /** Probe-set predicate: event_id ≡ 0 (mod modulus) below a FIXED id
     * bound, so the probe count is a constant (≤ bound/modulus + 1) at
     * every scale factor — a point-read workload's cost is per probe,
@@ -206,8 +208,7 @@ object HelixScan {
 
   /** As-of instant for the latest-value query (mid-corpus, so later
     * writes exist and must be excluded). */
-  val LatestAsOfUs: Long =
-    java.time.Instant.parse("2024-01-20T00:00:00Z").toEpochMilli * 1000L
+  val LatestAsOfUs: Long = Tables.dayUs("2024-01-20")
 
   /** USER-keyed entries — many timestamps per key, the layout where
     * "latest value per key" is a real merge (the reference
@@ -248,8 +249,7 @@ object HelixScan {
   /** Bucket-aligned retention cutoff (bucketSize = 1 day, midnight
     * UTC): outdate drops whole buckets, so an aligned cutoff makes the
     * surviving set exactly `ts >= cut` — oracle-expressible. */
-  val OutdateCutUs: Long =
-    java.time.Instant.parse("2024-01-10T00:00:00Z").toEpochMilli * 1000L
+  val OutdateCutUs: Long = Tables.dayUs("2024-01-10")
 
   /** Build the compacted-then-outdated store at most once per corpus:
     * put → blockCompact → outdate (the reference's full lifecycle,
@@ -275,13 +275,7 @@ object HelixScan {
     * hashes diverge. */
   def outdateScan(s: SparkSession, dir: String): DataFrame = {
     val st = storeAt(s, ensureOutdated(s, dir))
-    st.toDF
-      .withColumn("k", col("key").cast("string"))
-      .select(
-        substring(col("k"), 1, 6).cast("long").as("user_id"),
-        substring(col("k"), 8, 10).cast("long").as("event_id"),
-        col("ts").as("ts_us"),
-        col("value").cast("string").cast("long").as("cents"))
+    decoded(st.toDF)
   }
 
   // ---- user-comparator scan (reference Comparator trait, util.rs:21) --
@@ -302,26 +296,18 @@ object HelixScan {
     * property-tested against driver-side sorts in the store specs. */
   def customOrderScan(s: SparkSession, dir: String): DataFrame = {
     val st = storeFor(s, dir)
-    val lo = java.time.Instant.parse("2024-01-05T00:00:00Z")
-      .toEpochMilli * 1000L
-    val hi = java.time.Instant.parse("2024-01-12T00:00:00Z")
-      .toEpochMilli * 1000L
-    val decoded = st.scan((lo, hi), ("000010-".getBytes, "000050~".getBytes),
+    val lo = Tables.dayUs("2024-01-05")
+    val hi = Tables.dayUs("2024-01-12")
+    val rows = decoded(st.scan((lo, hi), ("000010-".getBytes, "000050~".getBytes),
       ordered = true,
       scanOpts = graft.core.ScanOptions(comparator =
-        Some(k => substring(k.cast("string"), 8, 10).cast("long"))))
-      .withColumn("k", col("key").cast("string"))
-      .select(
-        substring(col("k"), 1, 6).cast("long").as("user_id"),
-        substring(col("k"), 8, 10).cast("long").as("event_id"),
-        col("ts").as("ts_us"),
-        col("value").cast("string").cast("long").as("cents"))
+        Some(k => substring(k.cast("string"), 8, 10).cast("long")))))
     // single-partition window is fine here: the frame is the scan's
     // key×time RECTANGLE (a few hundred rows at any corpus scale), not
     // the corpus
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("event_id"), col("user_id"), col("ts_us"))
-    decoded.withColumn("ord", row_number().over(w).cast("long"))
+    rows.withColumn("ord", row_number().over(w).cast("long"))
   }
 
   // ---- streaming-ingested store (streamingPut + lifecycle reviewer) ---
@@ -392,16 +378,8 @@ object HelixScan {
     * diverges the hash. */
   def streamScan(s: SparkSession, dir: String): DataFrame = {
     val st = storeAt(s, ensureStream(s, dir))
-    val lo = java.time.Instant.parse("2024-01-08T00:00:00Z")
-      .toEpochMilli * 1000L
-    val hi = java.time.Instant.parse("2024-01-20T00:00:00Z")
-      .toEpochMilli * 1000L
-    st.scan((lo, hi), ("000060-".getBytes, "000120~".getBytes))
-      .withColumn("k", col("key").cast("string"))
-      .select(
-        substring(col("k"), 1, 6).cast("long").as("user_id"),
-        substring(col("k"), 8, 10).cast("long").as("event_id"),
-        col("ts").as("ts_us"),
-        col("value").cast("string").cast("long").as("cents"))
+    val lo = Tables.dayUs("2024-01-08")
+    val hi = Tables.dayUs("2024-01-20")
+    decoded(st.scan((lo, hi), ("000060-".getBytes, "000120~".getBytes)))
   }
 }

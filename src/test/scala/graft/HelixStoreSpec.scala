@@ -240,7 +240,7 @@ class HelixStoreSpec extends SparkTestBase {
       store.scan((0L, 5L), ("k".getBytes, "l".getBytes), ordered = false,
         scanOpts = graft.core.ScanOptions(comparator = Some(suffixCmp)))
     }
-    } finally store.close() // open handle = leaked lock-heartbeat daemon
+    } finally store.close() // open handle = leaked pair-read pool threads
   }
 
   test("comparator property: scan order equals the driver-side sort for random keys and transforms") {
@@ -280,7 +280,7 @@ class HelixStoreSpec extends SparkTestBase {
       assert(got.toSeq == expected,
         s"comparator case $i diverged from the driver-side sort")
     }
-    } finally store.close() // open handle = leaked lock-heartbeat daemon
+    } finally store.close() // open handle = leaked pair-read pool threads
   }
 
   test("streamingPut ingests a stream of entries into the store") {
@@ -1131,11 +1131,101 @@ class HelixStoreSpec extends SparkTestBase {
     assert(rows(inProcess) == rows(split))
   }
 
-  test("StoreOptions rejects a lockStaleMs at or below the heartbeat floor") {
-    intercept[IllegalArgumentException] {
-      HelixStore.open(spark, tmpDir("hs-stalefloor"),
-        StoreOptions(lockStaleMs = 500L))
+  test("the store lock is one OS lock on _mutex: one channel, never read, written, moved or deleted") {
+    val src = java.nio.file.Files.readString(
+      java.nio.file.Paths.get("src", "main", "scala", "graft", "core", "HelixStore.scala"))
+    def hits(token: String): Seq[Int] =
+      java.util.regex.Pattern.quote(token).r.findAllMatchIn(src).map(_.start).toSeq
+    def span(head: String): (Int, Int) = {
+      val at = src.indexOf(head)
+      assert(at >= 0, s"$head not found")
+      (at, src.indexOf("\n  }", at))
     }
+    // closing ANY other channel to the file may drop the JVM's lock, so
+    // the path is named once and used once: as the file of the one
+    // FileChannel, which acquireMutex opens
+    assert(hits("\"_mutex\"").size == 1, "a second name for the lock file")
+    val decl = src.indexOf("private val mutexFile: Path = root.resolve(\"_mutex\")")
+    val open = src.indexOf("FileChannel.open(mutexFile,")
+    assert(decl >= 0 && open >= 0)
+    assert(hits("mutexFile") == Seq(decl + "private val ".length, open + "FileChannel.open(".length),
+      s"mutexFile used beyond its one channel, at ${hits("mutexFile")}")
+    assert(hits("FileChannel.open(") == Seq(open), "a second FileChannel")
+    val (a, b) = span("private def acquireMutex(")
+    assert(open > a && open < b, "the lock file is opened outside acquireMutex")
+    assert(hits(".lock()").size == 1 && hits(".lock()").forall(i => i > a && i < b))
+    val (ra, rb) = span("private def releaseMutex(")
+    assert(hits("lockChannel.close()").nonEmpty &&
+      hits("lockChannel.close()").forall(i => (i > a && i < b) || (i > ra && i < rb)))
+    for (gone <- Seq("lockStaleMs", "instanceId", "lockHeartbeat", "_mutex.stale", "CREATE_NEW"))
+      assert(!src.contains(gone), s"HelixStore still has $gone")
+  }
+
+  test("a put waits while another process holds _mutex and proceeds once that process is killed") {
+    val dir = tmpDir("hs-xproc-lock")
+    val store = HelixStore.open(spark, dir, StoreOptions(numShards = 2, bucketSize = 10))
+    store.put(entriesDF(Seq(("a", 1L, "v1"))))
+    val batch = entriesDF(Seq(("b", 2L, "v2")))
+    val javaBin = java.nio.file.Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val child = new ProcessBuilder(javaBin, "-Xmx32m", "-cp", System.getProperty("java.class.path"),
+      "graft.MutexHolder", dir)
+      .redirectError(ProcessBuilder.Redirect.INHERIT).start()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val result = new java.util.concurrent.atomic.AtomicReference[scala.util.Try[Unit]]()
+    val writer = new Thread(() => { result.set(scala.util.Try(store.put(batch))); done.countDown() })
+    try {
+      val line = new java.io.BufferedReader(
+        new java.io.InputStreamReader(child.getInputStream)).readLine()
+      assert(line == "locked", s"the child did not take the lock: $line")
+      writer.start()
+      assert(!done.await(3, java.util.concurrent.TimeUnit.SECONDS),
+        "a put returned while another process held _mutex")
+      // SIGKILL: the holder never releases; the kernel frees its lock
+      child.destroyForcibly().waitFor()
+      assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "the put still waits after the lock holder was killed")
+    } finally child.destroyForcibly()
+    assert(result.get == scala.util.Success(()))
+    assert(store.get("a".getBytes, 1L).map(new String(_)).contains("v1"))
+    assert(store.get("b".getBytes, 2L).map(new String(_)).contains("v2"))
+    store.close()
+  }
+
+  test("two instances on one path in one JVM: a put waits for the other instance's compaction") {
+    val dir = tmpDir("hs-jvm-gate")
+    val opts = StoreOptions(numShards = 1, bucketSize = 10,
+      codecs = Map(PausingCodec.name -> PausingCodec),
+      codecDispatch = Some((_: Array[Byte]) => PausingCodec.name))
+    val a = HelixStore.open(spark, dir, opts)
+    a.put(entriesDF(Seq(("k", 1L, "a1"))))
+    a.blockCompact() // blocks to decode, so A's next compaction passes PausingCodec
+    val b = HelixStore.open(spark, dir, opts)
+    a.put(entriesDF(Seq(("k", 2L, "a2"))))
+    val batch = entriesDF(Seq(("j", 3L, "b3")))
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val compacted = new java.util.concurrent.atomic.AtomicReference[scala.util.Try[Unit]]()
+    val put = new java.util.concurrent.atomic.AtomicReference[scala.util.Try[Unit]]()
+    val putDone = new java.util.concurrent.CountDownLatch(1)
+    val compactor = new Thread(() => compacted.set(scala.util.Try(a.blockCompact())))
+    val writer = new Thread(() => { put.set(scala.util.Try(b.put(batch))); putDone.countDown() })
+    PausingCodec.pauseOn = (null, entered, release) // the compaction task's thread
+    try {
+      compactor.start()
+      assert(entered.await(120, java.util.concurrent.TimeUnit.SECONDS),
+        "A's compaction never decoded a block")
+      writer.start()
+      assert(!putDone.await(3, java.util.concurrent.TimeUnit.SECONDS),
+        s"B's put returned (${put.get}) while A's compaction held the store lock")
+    } finally { PausingCodec.pauseOn = null; release.countDown() }
+    assert(putDone.await(120, java.util.concurrent.TimeUnit.SECONDS), "B's put never ran")
+    compactor.join(120000)
+    assert(compacted.get == scala.util.Success(()))
+    assert(put.get == scala.util.Success(()))
+    val want = Seq(("k", 1L, "a1"), ("k", 2L, "a2"), ("j", 3L, "b3"))
+    for (st <- Seq(a, b); (k, ts, v) <- want)
+      assert(st.get(k.getBytes, ts).map(new String(_)).contains(v), s"($k, $ts) lost")
+    a.close(); b.close()
   }
 
   test("compact prompt interval compacts the rick automatically (compact_prompt_interval)") {
@@ -1618,14 +1708,14 @@ class HelixStoreSpec extends SparkTestBase {
     within("newHadoopConf", 1, inProc)
     assert(src.contains("new JobConf(spark.sessionState.newHadoopConf())"),
       "PartitionReader's conf is not wrapped in a JobConf")
-    // four thread pools, each a named member: the lock heartbeat, the
-    // compact prompt, the compaction executor and the pair-read pool
+    // three thread pools, each a named member: the compact prompt, the
+    // compaction executor and the pair-read pool
     val pools = hits("Executors.new").map { i =>
       val at = src.lastIndexOf("\n  private ", i) + 1
       val member = src.substring(at, src.indexOf('\n', at))
       "val (\\w+)".r.findFirstMatchIn(member).fold(member)(_.group(1))
     }
-    assert(pools.sorted == Seq("compactExec", "compactPrompt", "lockHeartbeat", "pairReadPool"),
+    assert(pools.sorted == Seq("compactExec", "compactPrompt", "pairReadPool"),
       s"Executors.new* in $pools")
   }
 
@@ -1698,10 +1788,10 @@ object XorCodec extends graft.core.BlockCodec {
 }
 
 /** Test codec: [[graft.core.NoopCodec]] whose decode, on the one thread
-  * `pauseOn` names, counts down its first latch and waits on its second,
-  * once — a hook that holds a point read between its block decode and
-  * its rick read. Compaction tasks decode on other threads and never
-  * wait. */
+  * `pauseOn` names (any thread when it names none), counts down its
+  * first latch and waits on its second, once — a hook that holds a point
+  * read between its block decode and its rick read, or a compaction
+  * inside its task. */
 object PausingCodec extends graft.core.BlockCodec {
   val name = "pausing"
   @transient @volatile var pauseOn: (Thread, java.util.concurrent.CountDownLatch,
@@ -1709,7 +1799,7 @@ object PausingCodec extends graft.core.BlockCodec {
   def encode(vals: Array[Array[Byte]]): Array[Byte] = graft.core.NoopCodec.encode(vals)
   def decode(blob: Array[Byte]): Array[Array[Byte]] = {
     val gate = pauseOn
-    if (gate != null && (gate._1 eq Thread.currentThread())) {
+    if (gate != null && (gate._1 == null || (gate._1 eq Thread.currentThread()))) {
       pauseOn = null
       gate._2.countDown()
       gate._3.await()
@@ -1729,5 +1819,19 @@ object FailingCodec extends graft.core.BlockCodec {
     val vals = graft.core.NoopCodec.decode(blob)
     if (vals.exists(v => new String(v) == Trigger)) throw new Failure
     vals
+  }
+}
+
+/** Holds the OS lock on `<store dir>/_mutex` (args(0)) for a spec: takes
+  * it, prints `locked`, and keeps it until its stdin closes or it is
+  * killed. Run as a child JVM on the test classpath. */
+object MutexHolder {
+  def main(args: Array[String]): Unit = {
+    val ch = java.nio.channels.FileChannel.open(java.nio.file.Paths.get(args(0), "_mutex"),
+      java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
+    ch.lock()
+    println("locked")
+    System.out.flush()
+    while (System.in.read() >= 0) ()
   }
 }

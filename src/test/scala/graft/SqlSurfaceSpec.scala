@@ -68,9 +68,12 @@ class SqlSurfaceSpec extends SparkTestBase {
   }
 
   test("catalog views: tables + representative operators are plain FROM targets") {
-    SqlSurface.registerTables(spark, Sf)
+    graft.core.Tables.registerAll(spark, Sf)
     val failed = SqlSurface.registerQueries(spark, Sf, Representatives)
     assert(failed.isEmpty, s"views failed to register: $failed")
+    // the views are the engine's own tables: `events` has its ts as the
+    // TIMESTAMP the operators read, not the parquet file's TIMESTAMP_NTZ
+    assert(spark.table("events").schema == graft.core.Tables.events(spark, Sf).schema)
     assert(spark.sql("SELECT count(*) FROM documents").collect()
       .head.getLong(0) > 0)
     Representatives.foreach { name =>

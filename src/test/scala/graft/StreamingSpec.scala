@@ -45,7 +45,7 @@ class StreamingSpec extends SparkTestBase {
         (new String(r.getAs[Array[Byte]]("key")), r.getLong(1),
           new String(r.getAs[Array[Byte]]("value")))).toSet
       assert(out == (0 until 40).map(i => (f"rk$i%02d", i.toLong, s"rv$i")).toSet)
-    } finally store.close() // an open store leaks its lock-heartbeat daemon
+    } finally store.close() // an open store leaks its compaction and pair-read threads
   }
 
   test("streaming windowed top-k: ranked drained counts equal the batch twin") {
