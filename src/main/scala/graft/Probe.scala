@@ -74,9 +74,12 @@ object Probe {
 
   /** Job / stage / task counts and summed task metrics of one run —
     * the split that says whether a slow query is scheduling-bound (many
-    * tiny tasks and stages) or compute-bound (task time ~ wall x cores). */
+    * tiny tasks and stages) or compute-bound (task time ~ wall x cores).
+    * `schemaJobs` counts the jobs whose first stage is `parquet at ...`:
+    * a parquet read that inferred its schema by running a job. */
   private class Counters extends SparkListener {
     val jobs = new AtomicInteger
+    val schemaJobs = new AtomicInteger
     val stages = new AtomicInteger
     val tasks = new AtomicInteger
     val taskTimeMs = new AtomicLong
@@ -84,7 +87,11 @@ object Probe {
     val shufReadB = new AtomicLong
     val shufWriteB = new AtomicLong
     val inputB = new AtomicLong
-    override def onJobStart(j: SparkListenerJobStart): Unit = { jobs.incrementAndGet(): Unit }
+    override def onJobStart(j: SparkListenerJobStart): Unit = {
+      jobs.incrementAndGet()
+      if (j.stageInfos.sortBy(_.stageId).headOption.exists(_.name.startsWith("parquet at")))
+        schemaJobs.incrementAndGet(): Unit
+    }
     override def onStageCompleted(s: SparkListenerStageCompleted): Unit = { stages.incrementAndGet(): Unit }
     override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
       tasks.incrementAndGet()
@@ -111,7 +118,7 @@ object Probe {
       case TopN(n) => Bench.previousBest().toSeq.sortBy(-_._2).take(n.toInt).map(_._1)
       case _ => which.split(",").toSeq
     }
-    println(f"${"query"}%-30s ${"build_ms"}%9s ${"plan_ms"}%8s ${"exec_s"}%7s ${"wall_s"}%7s ${"jobs"}%5s ${"stages"}%7s ${"tasks"}%6s ${"task_s"}%7s ${"gc_s"}%5s ${"shufR_MB"}%9s ${"shufW_MB"}%9s ${"in_MB"}%7s")
+    println(f"${"query"}%-30s ${"build_ms"}%9s ${"plan_ms"}%8s ${"exec_s"}%7s ${"wall_s"}%7s ${"jobs"}%5s ${"schema_jobs"}%11s ${"stages"}%7s ${"tasks"}%6s ${"task_s"}%7s ${"gc_s"}%5s ${"shufR_MB"}%9s ${"shufW_MB"}%9s ${"in_MB"}%7s")
     for (n <- names) try {
       val fn = SparkEntry.queries(n)
       fn(spark, dir).queryExecution.toRdd.count(): Unit // warmup + staging
@@ -134,7 +141,7 @@ object Probe {
         ((t1 - t0) / 1e6, (t2 - t1) / 1e6, (t3 - t2) / 1e9, (t3 - t0) / 1e9, c)
       }
       val (build, plan, exec, wall, c) = samples.minBy(_._4)
-      println(f"$n%-30s $build%9.1f $plan%8.1f $exec%7.2f $wall%7.2f ${c.jobs.get}%5d ${c.stages.get}%7d ${c.tasks.get}%6d ${c.taskTimeMs.get / 1e3}%7.2f ${c.gcMs.get / 1e3}%5.2f ${c.shufReadB.get / 1e6}%9.2f ${c.shufWriteB.get / 1e6}%9.2f ${c.inputB.get / 1e6}%7.2f  runs ${samples.map(s => f"${s._4}%.2f").mkString(" ")}")
+      println(f"$n%-30s $build%9.1f $plan%8.1f $exec%7.2f $wall%7.2f ${c.jobs.get}%5d ${c.schemaJobs.get}%11d ${c.stages.get}%7d ${c.tasks.get}%6d ${c.taskTimeMs.get / 1e3}%7.2f ${c.gcMs.get / 1e3}%5.2f ${c.shufReadB.get / 1e6}%9.2f ${c.shufWriteB.get / 1e6}%9.2f ${c.inputB.get / 1e6}%7.2f  runs ${samples.map(s => f"${s._4}%.2f").mkString(" ")}")
     } catch { case e: Throwable => println(s"$n FAILED: ${e.toString.take(120)}") }
     0
   }

@@ -52,11 +52,11 @@ object Sweeps {
     val li = Tables.lineitem(spark, base)
     write("lineitem", g.rest)(i =>
       li.withColumn("l_orderkey", col("l_orderkey") + lit(i * 100000000L)))
-    val ord = spark.read.parquet(s"$base/orders.parquet")
+    val ord = Tables.orders(spark, base)
     write("orders", g.rest)(i =>
       ord.withColumn("o_orderkey", col("o_orderkey") + lit(i * 100000000L)))
     for (t <- Seq("region", "nation", "customer", "supplier", "part"))
-      spark.read.parquet(s"$base/$t.parquet")
+      Tables(spark, base, t)
         .write.mode("overwrite").parquet(s"${g.dir}/$t.parquet")
     Files.writeString(readyMarker, "ok"): Unit
   }

@@ -1,13 +1,60 @@
 package graft.core
 
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
-/** Loaders for the driver-generated test tables (TESTDATA.md). */
+/** Loaders for the driver-generated test tables (TESTDATA.md), and the
+  * one parquet reader every table and staged artifact goes through. */
 object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** The parquet file or dataset dir at `path`, read with the data
+    * schema its own footer holds, so no schema-inference job runs (a
+    * read without a schema runs one, `parquet at ...`, to read that same
+    * footer). The schema is resolved on every call under the
+    * session's conf as it is then, so a restaged artifact or a flipped
+    * nanos conf is never read through a stale schema. Partition columns
+    * of `k=v` dirs are still discovered by Spark's listing, as before. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+
+  /** The data schema Spark's inference would give `path` (mergeSchema
+    * off): from a `_common_metadata` or `_metadata` summary when there is
+    * one, else from the first data file in path order, read in process. */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    val leaves = leafFiles(fs, fs.getFileStatus(root)).sortBy(_.getPath.toString)
+    def named(n: String) = leaves.find(_.getPath.getName == n)
+    val summaries = Seq("_common_metadata", "_metadata")
+    val st = summaries.flatMap(named).headOption
+      .orElse(leaves.find(f => !summaries.contains(f.getPath.getName)))
+      .getOrElse(throw new IllegalArgumentException(
+        s"Unable to infer schema for Parquet at $path: it holds no data file"))
+    val footer = ParquetFooterReader.readFooter(HadoopInputFile.fromStatus(st, conf),
+      ParquetMetadataConverter.NO_FILTER)
+    ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+  }
+
+  /** The files Spark's listing keeps under `st`: names starting with `_`
+    * or `.` are skipped, except the summary files and `k=v` dirs. */
+  private def leafFiles(fs: FileSystem, st: FileStatus): Seq[FileStatus] =
+    if (!st.isDirectory) Seq(st)
+    else fs.listStatus(st.getPath).toSeq.filter { c =>
+      val n = c.getPath.getName
+      val hidden = (n.startsWith("_") && !n.contains("=")) || n.startsWith(".") ||
+        n.endsWith("._COPYING_")
+      !hidden || n.startsWith("_common_metadata") || n.startsWith("_metadata")
+    }.flatMap(leafFiles(fs, _))
 
   /** events.parquet stores TIMESTAMP(NANOS) which Spark 4 only reads as a
     * long (nanos) under the legacy conf; normalize back to a timestamp

@@ -32,5 +32,5 @@ object BasketIndex {
 
   /** The staged frame as a DataFrame. */
   def frame(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(ensure(s, dir))
+    Tables.parquet(s, ensure(s, dir))
 }

@@ -186,7 +186,7 @@ object Dedup {
     // shuffles). Each consumer re-reads the (column-pruned) staged
     // parquet, so no cached frame outlives the query.
     //   prefixLen = n - ceil(t*n) + 1, ceil(8n/10) = (8n + 9) div 10
-    val docs = s.read.parquet(DedupIndex.ensure(s, dir).rset)
+    val docs = Tables.parquet(s, DedupIndex.ensure(s, dir).rset)
       .withColumn("prefixLen",
         expr(s"n - ((n * $ThreshNum + $ThreshDen - 1) div $ThreshDen) + 1"))
       .select(col("doc_id"), col("n"), col("set"),
@@ -271,7 +271,7 @@ object Dedup {
     // grouping windows are index build; each consumer re-reads the
     // column-pruned staged parquet (shortlist and member joins never
     // touch the set arrays)
-    val dr = s.read.parquet(SetGroupIndex.ensure(s, dir))
+    val dr = Tables.parquet(s, SetGroupIndex.ensure(s, dir))
     val g = dr.filter(col("rn") === 1)
       .select(col("rep").as("doc_id"), col("n"), col("set"))
     val gpSym = symmetrize(ppJaccardScored(g),
@@ -306,7 +306,7 @@ object Dedup {
     * (over [[shingleHash]]ed shingles, mirrored by the oracle). */
   def containment(s: SparkSession, dir: String): DataFrame = {
     // staged rset, per-query prefix slice: see ngramJaccard
-    val docs = s.read.parquet(DedupIndex.ensure(s, dir).rset)
+    val docs = Tables.parquet(s, DedupIndex.ensure(s, dir).rset)
       .withColumn("prefixLen",
         expr(s"n - ((n * $ContainNum + $ContainDen - 1) div $ContainDen) + 1"))
       .select(col("doc_id"), col("n"), col("set"),
@@ -361,7 +361,7 @@ object Dedup {
   def containmentCapped(s: SparkSession, dir: String): DataFrame = {
     val m = PairCapM
     // staged group table: see ngramJaccardCapped
-    val dr = s.read.parquet(SetGroupIndex.ensure(s, dir))
+    val dr = Tables.parquet(s, SetGroupIndex.ensure(s, dir))
     val g = dr.filter(col("rn") === 1)
       .select(col("rep").as("doc_id"), col("n"), col("set"))
     val gdir = ppContainScored(g)
@@ -437,7 +437,7 @@ object Dedup {
     * through one task, the exact failure the cap guards against. After
     * the cap, self-join fanout is bounded by WinDfCap² per fp. */
   def substringPairs(s: SparkSession, dir: String): DataFrame = {
-    val fps = s.read.parquet(DedupIndex.ensure(s, dir).fps)
+    val fps = Tables.parquet(s, DedupIndex.ensure(s, dir).fps)
     val hot = fps.groupBy("fp").agg(count(lit(1)).as("df"))
       .filter(col("df") > WinDfCap).select("fp")
     val sel = fps.join(hot, Seq("fp"), "left_anti")
@@ -469,7 +469,7 @@ object Dedup {
     * per doc) for the lag + running-sum island windows — partitions
     * bounded by per-doc window counts, never corpus-wide. */
   def substringSpans(s: SparkSession, dir: String): DataFrame = {
-    val fpos = s.read.parquet(DedupIndex.ensure(s, dir).fpos)
+    val fpos = Tables.parquet(s, DedupIndex.ensure(s, dir).fpos)
     val docFps = fpos.select("doc_id", "fp").distinct()
     val shared = docFps.groupBy("fp").agg(count(lit(1)).as("df"))
       .filter(col("df") >= 2 && col("df") <= WinDfCap)
@@ -620,8 +620,8 @@ object Dedup {
     * re-reads the column-pruned staged parquet. */
   def minhashLsh(s: SparkSession, dir: String): DataFrame = {
     val st = DedupIndex.ensure(s, dir)
-    val bands = s.read.parquet(st.bands)
-    val hset = s.read.parquet(st.hset)
+    val bands = Tables.parquet(s, st.bands)
+    val hset = Tables.parquet(s, st.hset)
     verifyJaccard(bandCandidates(bands), hset, hset, "doc_id1", "doc_id2")
   }
 
@@ -649,11 +649,11 @@ object Dedup {
     // explode), so no member is dropped.
     val m = PairCapM
     val st = DedupIndex.ensure(s, dir)
-    val dr = s.read.parquet(SetGroupIndex.ensure(s, dir))
+    val dr = Tables.parquet(s, SetGroupIndex.ensure(s, dir))
       .select("doc_id", "rn", "rep")
     val reps = dr.filter(col("rn") === 1).select(col("rep").as("doc_id"))
-    val repHset = s.read.parquet(st.hset).join(reps, "doc_id")
-    val repBands = s.read.parquet(st.bands).join(reps, "doc_id")
+    val repHset = Tables.parquet(s, st.hset).join(reps, "doc_id")
+    val repBands = Tables.parquet(s, st.bands).join(reps, "doc_id")
     val gpSym = symmetrize(
       verifyJaccardScored(bandCandidates(repBands), repHset, repHset,
         "doc_id1", "doc_id2"),
@@ -687,8 +687,8 @@ object Dedup {
     * mirrored divisions. */
   def minhashEstimate(s: SparkSession, dir: String): DataFrame = {
     val st = DedupIndex.ensure(s, dir)
-    val bands = s.read.parquet(st.bands)
-    val hset = s.read.parquet(st.hset)
+    val bands = Tables.parquet(s, st.bands)
+    val hset = Tables.parquet(s, st.hset)
     val cand = bandCandidates(bands)
     val sig = hset.select(col("doc_id"),
       graft.functions.VectorFunctions.minhashSig(col("hs"), NumHashes, MinhashP)
@@ -724,8 +724,8 @@ object Dedup {
     * which is exactly the population a threshold change would serve. */
   def jaccardHistogram(s: SparkSession, dir: String): DataFrame = {
     val st = DedupIndex.ensure(s, dir)
-    val bands = s.read.parquet(st.bands)
-    val hset = s.read.parquet(st.hset)
+    val bands = Tables.parquet(s, st.bands)
+    val hset = Tables.parquet(s, st.hset)
     val j = bandCandidates(bands)
       .join(hset.select(col("doc_id").as("doc_id1"),
         col("hs").as("h1"), col("n").as("n1")), "doc_id1")
@@ -752,7 +752,7 @@ object Dedup {
     * pairs materialized. */
   def bandStats(s: SparkSession, dir: String): DataFrame = {
     val st = DedupIndex.ensure(s, dir)
-    s.read.parquet(st.bands)
+    Tables.parquet(s, st.bands)
       .groupBy("band", "bkey").agg(count(lit(1)).as("sz"))
       .groupBy("band")
       .agg(count(lit(1)).as("n_buckets"),
@@ -786,10 +786,10 @@ object Dedup {
   def incremental(s: SparkSession, dir: String): DataFrame = {
     val st = DedupIndex.ensure(s, dir)
     val isNew = col("doc_id") % IncrMod === IncrRem
-    val oldBands = s.read.parquet(st.bands).filter(!isNew)
-    val oldHset = s.read.parquet(st.hset).filter(!isNew)
-    val newHset = s.read.parquet(st.hset).filter(isNew)
-    val cand = s.read.parquet(st.bands).filter(isNew)
+    val oldBands = Tables.parquet(s, st.bands).filter(!isNew)
+    val oldHset = Tables.parquet(s, st.hset).filter(!isNew)
+    val newHset = Tables.parquet(s, st.hset).filter(isNew)
+    val cand = Tables.parquet(s, st.bands).filter(isNew)
       .select(col("doc_id").as("new_doc_id"), col("band"), col("bkey"))
       .join(oldBands.select(col("doc_id").as("old_doc_id"), col("band"), col("bkey")),
         Seq("band", "bkey"))
@@ -864,8 +864,8 @@ object Dedup {
     val st = DedupIndex.ensure(s, dir)
     val isNew = col("doc_id") % IncrMod === IncrRem
     incrementalPairsOf(Tables.documents(s, dir).filter(isNew),
-      s.read.parquet(st.bands).filter(!isNew),
-      s.read.parquet(st.hset).filter(!isNew))
+      Tables.parquet(s, st.bands).filter(!isNew),
+      Tables.parquet(s, st.hset).filter(!isNew))
   }
 
   /** The shared membership key of #209: the [[prefixDups]] boilerplate
@@ -911,7 +911,7 @@ object Dedup {
   private def bloomMightContain(s: SparkSession, dir: String): Column = {
     import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
     import org.apache.spark.sql.graftbridge.ColumnBridge
-    val bloom = s.read.parquet(BloomIndex.ensure(s, dir))
+    val bloom = Tables.parquet(s, BloomIndex.ensure(s, dir))
       .head().getAs[Array[Byte]]("bloom")
     ColumnBridge.column(BloomFilterMightContain(
       Literal.create(bloom, org.apache.spark.sql.types.BinaryType),
@@ -945,7 +945,7 @@ object Dedup {
     * and parameter-free; the tokenization and bit aggregation are index
     * build, the same split as wfp/ and the phash store). */
   private def simhashFrame(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(DedupIndex.ensure(s, dir).sim)
+    Tables.parquet(s, DedupIndex.ensure(s, dir).sim)
       .select("doc_id", "simhash")
 
   /** #19 — 32-bit SimHash fingerprint from per-token md5 bits, plus
@@ -1121,7 +1121,7 @@ object Dedup {
     * per corpus fingerprint by [[DedupIndex]] (the IvfIndex pattern —
     * pair mining is index BUILD, cluster resolution is the query). */
   def stagedPairs(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(DedupIndex.ensure(s, dir).pairs)
+    Tables.parquet(s, DedupIndex.ensure(s, dir).pairs)
 
   /** Convergence-round count of the last [[clusterDups]] run on this
     * JVM — profiling visibility for the O(log n) claim (a grown pair
@@ -1241,17 +1241,17 @@ object Dedup {
   private[graft] def clusterIncrementalReduced(
       s: SparkSession, dir: String): DataFrame = {
     val st = DedupIndex.ensure(s, dir)
-    val oldClus = s.read.parquet(OldClusterIndex.ensure(s, dir))
+    val oldClus = Tables.parquet(s, OldClusterIndex.ensure(s, dir))
     val isNew = col("doc_id") % IncrMod === IncrRem
-    val oldBands = s.read.parquet(st.bands).filter(!isNew)
-    val oldHset = s.read.parquet(st.hset).filter(!isNew)
+    val oldBands = Tables.parquet(s, st.bands).filter(!isNew)
+    val oldHset = Tables.parquet(s, st.hset).filter(!isNew)
     // the arrival slice's signatures are the staged store's isNew
     // slice (the corpus artifacts cover every doc — the same
     // filter-don't-restage move phashIncremental uses), so the timed
     // run probes columnar parquet on every leg instead of re-shingling
     // the arrival text per run
-    val newHset = s.read.parquet(st.hset).filter(isNew)
-    val newBands = s.read.parquet(st.bands).filter(isNew)
+    val newHset = Tables.parquet(s, st.hset).filter(isNew)
+    val newBands = Tables.parquet(s, st.bands).filter(isNew)
     val newOld = verifyJaccard(
       newBands.select(col("doc_id").as("new_doc_id"), col("band"), col("bkey"))
         .join(oldBands.select(col("doc_id").as("old_doc_id"),
@@ -1420,7 +1420,7 @@ object Dedup {
     // the STAGED vector-group table ([[VecGroupIndex]]): grouping
     // windows are index build; member/shortlist joins read pruned
     // (vec_id, rn, rep) slices without the vectors
-    val dr = s.read.parquet(VecGroupIndex.ensure(s, dir))
+    val dr = Tables.parquet(s, VecGroupIndex.ensure(s, dir))
     val g = dr.filter(col("rn") === 1)
       .select(col("rep").as("vec_id"), col("embedding"))
     val gpSym = symmetrize(embeddingCosineVerifiedOver(g),
@@ -1491,7 +1491,7 @@ object Dedup {
     * staged parquet and never re-tokenizes — the same index/query split
     * as fpos/ and the phash store. */
   def winnow(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(DedupIndex.ensure(s, dir).wfp)
+    Tables.parquet(s, DedupIndex.ensure(s, dir).wfp)
       .select("doc_id", "pos", "fp")
 
   /** Index-build producer for [[DedupIndex]] wfp/: the winnowing
@@ -1523,7 +1523,7 @@ object Dedup {
     * BEFORE pairing (anti-join against the tiny over-cap list, never a
     * per-fp window), so self-join fanout stays ≤ WinDfCap² per fp. */
   def winnowPairs(s: SparkSession, dir: String): DataFrame = {
-    val wfp = s.read.parquet(DedupIndex.ensure(s, dir).wfp)
+    val wfp = Tables.parquet(s, DedupIndex.ensure(s, dir).wfp)
       .select("doc_id", "fp").distinct()
     val hot = wfp.groupBy("fp").agg(count(lit(1)).as("df"))
       .filter(col("df") > WinDfCap).select("fp")

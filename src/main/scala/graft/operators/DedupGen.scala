@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.core.{Tables, WriteLock}
+
 /**
  * Committed GENERATIONS of the dedup signature index (verdict r18 #4):
  * [[DedupIndex]]/[[SetGroupIndex]] are rebuild-only — at 100 TB the
@@ -155,11 +157,11 @@ final class DedupGen(rootDir: String) {
   // ---- readers: base ∪ delta ---------------------------------------------
 
   private def baseRead(s: SparkSession, sub: String): DataFrame =
-    s.read.parquet(Paths.get(resolve(readPointer().base), sub).toString)
+    Tables.parquet(s, Paths.get(resolve(readPointer().base), sub).toString)
 
   private def deltaRead(s: SparkSession, sub: String): Option[DataFrame] =
     readPointer().delta.map(d =>
-      s.read.parquet(Paths.get(resolve(d), sub).toString))
+      Tables.parquet(s, Paths.get(resolve(d), sub).toString))
 
   private def unioned(s: SparkSession, sub: String, cols: Seq[String]): DataFrame = {
     val b = baseRead(s, sub).select(cols.map(col): _*)
@@ -259,7 +261,7 @@ final class DedupGen(rootDir: String) {
     * dirs are referenced, never rewritten; the delta re-carries prior
     * delta rows, so commit I/O is ∝ accumulated arrivals. */
   def commitArrivals(s: SparkSession, dir: String, isNew: Column): Pointer =
-    withWriteLock(root) {
+    WriteLock(root) {
       val cur = readPointer()
       val newGen = cur.gen + 1
       val gname = s"g-$newGen"
@@ -282,16 +284,16 @@ final class DedupGen(rootDir: String) {
       // the fresh slice read back from the written artifact: bands,
       // group-mapping and mining never recompute the shingle pass (the
       // id set comes from a column-pruned documents scan, not aFresh)
-      val freshIds = graft.core.Tables.documents(s, dir)
+      val freshIds = Tables.documents(s, dir)
         .filter(isNew).select("doc_id")
-      val aH = s.read.parquet(gdir.resolve("hset").toString)
+      val aH = Tables.parquet(s, gdir.resolve("hset").toString)
         .join(freshIds, "doc_id")
       val carryB = deltaRead(s, "bands")
         .map(_.select("doc_id", "band", "bkey"))
       val aBandsFresh = Dedup.bandsOf(aH)
       carryB.map(_.unionAll(aBandsFresh)).getOrElse(aBandsFresh)
         .write.parquet(gdir.resolve("bands").toString)
-      val aB = s.read.parquet(gdir.resolve("bands").toString)
+      val aB = Tables.parquet(s, gdir.resolve("bands").toString)
         .join(freshIds, "doc_id")
 
       // 2. group mapping: identical hash-sets join the existing group,
@@ -314,7 +316,7 @@ final class DedupGen(rootDir: String) {
 
       // 3. rep-pair mining for the NEW reps only: old × old is base
       // state; a matched arrival introduces no new rep, so no new pair
-      val newReps = s.read.parquet(gdir.resolve("gset").toString)
+      val newReps = Tables.parquet(s, gdir.resolve("gset").toString)
         .filter(col("cgen") === newGen && col("doc_id") === col("rep"))
         .select("doc_id")
       val nrBands = aB.join(newReps, "doc_id")
@@ -369,26 +371,6 @@ object DedupGen {
     * accumulated arrival state. */
   final case class Pointer(gen: Long, base: String, delta: Option[String])
 
-  /** Per-root monitors + a cross-process file lock serialize writers
-    * (the [[IvfGen.withWriteLock]] discipline). */
-  private val jvmLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
-
-  private def withWriteLock[T](root: Path)(f: => T): T = {
-    val monitor = jvmLocks.computeIfAbsent(root.toAbsolutePath.toString,
-      _ => new Object)
-    monitor.synchronized {
-      Files.createDirectories(root)
-      val ch = java.nio.channels.FileChannel.open(root.resolve("_wlock"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      try {
-        val lock = ch.lock()
-        try f finally lock.release()
-      } finally ch.close()
-    }
-  }
-
   /** Build the HISTORICAL (non-arrival) slice's signature store into
     * `out`: hset/bands (the [[DedupIndex]] layout over old docs),
     * gset (identical-hash-set groups) and the rep-level verified
@@ -397,7 +379,7 @@ object DedupGen {
     val isOld = col("doc_id") % Dedup.IncrMod =!= Dedup.IncrRem
     Dedup.minhashHset(s, dir, Some(isOld))
       .write.parquet(out.resolve("hset").toString)
-    val h = s.read.parquet(out.resolve("hset").toString)
+    val h = Tables.parquet(s, out.resolve("hset").toString)
     Dedup.bandsOf(h).write.parquet(out.resolve("bands").toString)
     val wOrd = Window.partitionBy("key").orderBy("doc_id")
     h.withColumn("key", array_sort(col("hs")))
@@ -406,9 +388,9 @@ object DedupGen {
       .withColumn("cgen", lit(1L))
       .select("doc_id", "rn", "rep", "cgen")
       .write.parquet(out.resolve("gset").toString)
-    val reps = s.read.parquet(out.resolve("gset").toString)
+    val reps = Tables.parquet(s, out.resolve("gset").toString)
       .filter(col("doc_id") === col("rep")).select("doc_id")
-    val repBands = s.read.parquet(out.resolve("bands").toString)
+    val repBands = Tables.parquet(s, out.resolve("bands").toString)
       .join(reps, "doc_id")
     Dedup.verifyJaccardScored(Dedup.bandCandidates(repBands), h, h,
       "doc_id1", "doc_id2")

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /**
  * Offline dedup SIGNATURE STORE, staged to parquet once per corpus
  * fingerprint — the artifact every production training-data pipeline
@@ -71,7 +73,7 @@ object DedupIndex {
         leg("bands")(Dedup.bandsOf(hset).write.parquet(tmp.resolve("bands").toString))
         // candidate self-join reads the just-written band table so the
         // signature computation doesn't run once per join side
-        val sb = s.read.parquet(tmp.resolve("bands").toString)
+        val sb = Tables.parquet(s, tmp.resolve("bands").toString)
         val cand = sb.alias("x")
           .join(sb.alias("y"), Seq("band", "bkey"))
           .filter(col("x.doc_id") < col("y.doc_id"))
@@ -89,7 +91,7 @@ object DedupIndex {
       // scratch dir is dropped before the atomic rename.
       val whDir = tmp.resolve("_wh_scratch")
       leg("wh_scratch")(Dedup.windowHashes(s, dir).write.parquet(whDir.toString))
-      val wh = s.read.parquet(whDir.toString)
+      val wh = Tables.parquet(s, whDir.toString)
       leg("fpos")(wh.filter(col("fp") % Dedup.WinSelMod === 0)
         .write.parquet(tmp.resolve("fpos").toString))
       leg("wfp")(Dedup.winnowSelection(wh).write.parquet(tmp.resolve("wfp").toString))
@@ -97,7 +99,7 @@ object DedupIndex {
       // fps/ is the doc-level distinct projection of fpos/ — derived
       // from the just-written artifact (a column-pruned parquet scan),
       // never a second corpus tokenization pass
-      leg("fps")(s.read.parquet(tmp.resolve("fpos").toString)
+      leg("fps")(Tables.parquet(s, tmp.resolve("fpos").toString)
         .select("doc_id", "fp").distinct()
         .write.parquet(tmp.resolve("fps").toString))
       leg("sim")(Dedup.simhashBuild(s, dir).write.parquet(tmp.resolve("sim").toString))
@@ -124,7 +126,7 @@ object SetGroupIndex {
   def ensure(s: SparkSession, dir: String): String = {
     val key = s"${Staging.fingerprint(dir, "documents.parquet")}-$LayoutVersion"
     val base = Staging.ensure("gset", key) { tmp =>
-      Dedup.setGroups(s.read.parquet(DedupIndex.ensure(s, dir).rset))
+      Dedup.setGroups(Tables.parquet(s, DedupIndex.ensure(s, dir).rset))
         .write.parquet(tmp.resolve("gset").toString)
     }
     base.resolve("gset").toString
@@ -145,7 +147,7 @@ object VecGroupIndex {
     val base = Staging.ensure("vgrp", key) { tmp =>
       val wOrd = org.apache.spark.sql.expressions.Window
         .partitionBy("embedding").orderBy("vec_id")
-      graft.core.Tables.embeddings(s, dir)
+      Tables.embeddings(s, dir)
         .select(col("vec_id"), col("embedding"))
         .withColumn("rn", row_number().over(wOrd))
         .withColumn("rep", min("vec_id").over(
@@ -210,7 +212,7 @@ object BloomIndex {
     val base = Staging.ensure("bloom", key) { tmp =>
       import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
       import org.apache.spark.sql.graftbridge.ColumnBridge
-      val old = graft.core.Tables.documents(s, dir)
+      val old = Tables.documents(s, dir)
         .filter(!(col("doc_id") % Dedup.IncrMod === Dedup.IncrRem))
         .select(xxhash64(Dedup.bloomKey).as("h64"))
       // size the bloom to the corpus-side cardinality — a count over a

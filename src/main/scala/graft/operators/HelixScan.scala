@@ -339,7 +339,7 @@ object HelixScan {
       val st = HelixStore.open(s, tmp.resolve("store").toString, opts)
       try {
         val entries = s.readStream
-          .schema(s.read.parquet(spool).schema)
+          .schema(Tables.parquet(s, spool).schema)
           .option("maxFilesPerTrigger", 2)
           .parquet(spool)
         val reviewer = new graft.core.SimpleTimestampReviewer(

@@ -5,7 +5,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Tables, WriteLock}
 
 /**
  * Committed GENERATIONS of the IVF index — the swap that makes the
@@ -50,28 +50,6 @@ final class IvfGen(rootDir: String,
   private val root = Paths.get(rootDir)
   private val pointerFile = root.resolve("_current")
   private val graveyardFile = root.resolve("_graveyard")
-
-  /** Cross-PROCESS single-writer guard (verdict r18 #7): commits take
-    * an exclusive file lock on `_wlock` for the whole protocol, so two
-    * committers racing from different JVMs serialize — exactly one
-    * wins each generation number and no half-written `g-N` dir is ever
-    * pointer-referenced. Within one JVM, FileChannel locks are
-    * process-wide (a second lock attempt throws, it doesn't block), so
-    * a per-root monitor serializes same-JVM writers FIRST. */
-  private def withWriteLock[T](f: => T): T = {
-    val monitor = jvmLocks.computeIfAbsent(root.toAbsolutePath.toString,
-      _ => new Object)
-    monitor.synchronized {
-      Files.createDirectories(root)
-      val ch = java.nio.channels.FileChannel.open(root.resolve("_wlock"),
-        java.nio.file.StandardOpenOption.CREATE,
-        java.nio.file.StandardOpenOption.WRITE)
-      try {
-        val lock = ch.lock() // blocks until any other process releases
-        try f finally lock.release()
-      } finally ch.close()
-    }
-  }
 
   /** Test hook: called between commit-protocol steps with the step
     * name; a throwing hook simulates a crash there (IvfGenSpec). */
@@ -192,7 +170,7 @@ final class IvfGen(rootDir: String,
 
   /** The committed generation's centroid table (clabel, cv, cn). */
   def centroids(s: SparkSession): DataFrame =
-    s.read.parquet(resolve(readPointer().centroids))
+    Tables.parquet(s, resolve(readPointer().centroids))
 
   /** The committed generation's inverted lists: base partitions minus
     * the dropped (re-homed) cells, union the delta lists, minus the
@@ -204,17 +182,17 @@ final class IvfGen(rootDir: String,
   def lists(s: SparkSession): DataFrame = {
     val p = readPointer()
     val cols = Seq(col("vec_id"), col("label"), col("v"), col("assigned_label"))
-    val base = s.read.parquet(resolve(p.base)).select(cols: _*)
+    val base = Tables.parquet(s, resolve(p.base)).select(cols: _*)
     val kept =
       if (p.dropped.isEmpty) base
       else base.filter(!col("assigned_label").isin(p.dropped: _*))
     val merged = p.delta match {
-      case Some(d) => kept.unionAll(s.read.parquet(resolve(d)).select(cols: _*))
+      case Some(d) => kept.unionAll(Tables.parquet(s, resolve(d)).select(cols: _*))
       case None => kept
     }
     p.tombs match {
       case Some(t) => merged.join(
-        broadcast(s.read.parquet(resolve(t)).select(col("vec_id"))),
+        broadcast(Tables.parquet(s, resolve(t)).select(col("vec_id"))),
         Seq("vec_id"), "left_anti")
       case None => merged
     }
@@ -234,7 +212,7 @@ final class IvfGen(rootDir: String,
     * atomic rename → bury superseded dirs (crash-hook named at each
     * step). Returns the committed pointer. */
   def commitRebalance(s: SparkSession, arrivals: DataFrame): Pointer =
-    withWriteLock {
+    WriteLock(root) {
       import graft.operators.Similarity.{RebDriftCells, assignByFold, cosine, l2norm}
       val cur = readPointer()
       val newGen = cur.gen + 1
@@ -287,13 +265,13 @@ final class IvfGen(rootDir: String,
       val rehomed = assignByFold(
         curLists.filter(inDrift).select(vcols: _*)
           .unionAll(arrAssigned.filter(inDrift).select(vcols: _*)),
-        s.read.parquet(gdir.resolve("centroids").toString))
+        Tables.parquet(s, gdir.resolve("centroids").toString))
         .select(col("vec_id"), col("label"), col("v"), col("assigned_label"))
       // new delta = prior delta rows in kept cells + non-drifted
       // arrivals + the re-homed drift mass (drift+arrival sized — the
       // base partitions of kept cells are never rewritten)
       val keptOldDelta = cur.delta match {
-        case Some(d) => s.read.parquet(resolve(d))
+        case Some(d) => Tables.parquet(s, resolve(d))
           .select(col("vec_id"), col("label"), col("v"), col("assigned_label"))
           .filter(!inDrift)
         case None => s.emptyDataFrame // never unioned (see below)
@@ -318,21 +296,21 @@ final class IvfGen(rootDir: String,
       // re-arms the bound, the LSM delta→base compaction.
       val vcolsAll = Seq(col("vec_id"), col("label"), col("v"),
         col("assigned_label"))
-      val deltaCnt = s.read.parquet(gdir.resolve("delta").toString).count()
+      val deltaCnt = Tables.parquet(s, gdir.resolve("delta").toString).count()
       val totalCnt =
         oldCounts.agg(sum(col("n_old"))).collect().head.getLong(0) +
           arrAssigned.count()
       val dropped2 = (cur.dropped ++ driftedIds).distinct.sorted
       val next = if (deltaCnt >= foldFrac * totalCnt) {
-        val keptBase0 = s.read.parquet(resolve(cur.base)).select(vcolsAll: _*)
+        val keptBase0 = Tables.parquet(s, resolve(cur.base)).select(vcolsAll: _*)
         val keptBase =
           if (dropped2.isEmpty) keptBase0
           else keptBase0.filter(!col("assigned_label").isin(dropped2: _*))
         val folded0 = keptBase.unionAll(
-          s.read.parquet(gdir.resolve("delta").toString).select(vcolsAll: _*))
+          Tables.parquet(s, gdir.resolve("delta").toString).select(vcolsAll: _*))
         val folded = cur.tombs match {
           case Some(t) => folded0.join(
-            broadcast(s.read.parquet(resolve(t)).select(col("vec_id"))),
+            broadcast(Tables.parquet(s, resolve(t)).select(col("vec_id"))),
             Seq("vec_id"), "left_anti")
           case None => folded0
         }
@@ -370,7 +348,7 @@ final class IvfGen(rootDir: String,
     * resets the list. Same protocol + crash hooks as
     * [[commitRebalance]]. */
   def commitDeletes(s: SparkSession, deletes: DataFrame): Pointer =
-    withWriteLock {
+    WriteLock(root) {
       val cur = readPointer()
       val newGen = cur.gen + 1
       val gname = s"g-$newGen"
@@ -379,7 +357,7 @@ final class IvfGen(rootDir: String,
       Files.createDirectories(gdir)
       val fresh = deletes.select(col("vec_id"))
       val merged = cur.tombs match {
-        case Some(t) => s.read.parquet(resolve(t)).select(col("vec_id"))
+        case Some(t) => Tables.parquet(s, resolve(t)).select(col("vec_id"))
           .unionAll(fresh).distinct()
         case None => fresh.distinct()
       }
@@ -430,11 +408,6 @@ object IvfGen {
     * path (one arrival commit ≈ 5% arrivals + drift mass) never folds,
     * early enough that delta can never exceed base. */
   val DefaultFoldFrac = 0.5
-
-  /** Per-root monitors serializing same-JVM writers (see
-    * [[IvfGen.withWriteLock]]). */
-  private val jvmLocks =
-    new java.util.concurrent.ConcurrentHashMap[String, Object]()
 
   /** Deterministic committed-delete slice for #ann_ivf_gen_delete:
     * vec_id ≡ GenTombRem (mod GenTombMod) — disjoint from the arrival

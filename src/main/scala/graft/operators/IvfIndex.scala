@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /**
  * Offline IVF index build, staged to parquet once per source dataset —
  * the inverted-file layout every real ANN system materializes ahead of
@@ -31,7 +33,7 @@ object IvfIndex {
   private def ensureBase(s: SparkSession, dir: String): java.nio.file.Path =
     Staging.ensure("ivf",
       s"${Staging.fingerprint(dir, "embeddings.parquet")}-$LayoutVersion") { tmp =>
-      val e = graft.core.Tables.embeddings(s, dir)
+      val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label"), Similarity.toDoubleVec(col("embedding")).as("v"))
       val cents = Similarity.centroidsOf(e)
       cents.coalesce(1).write.parquet(tmp.resolve("centroids").toString)
@@ -42,7 +44,7 @@ object IvfIndex {
       // search needs the filter column stored beside the vectors, so
       // the predicate reaches the cell-pruned scan as a parquet filter
       // instead of a post-scan join.
-      Similarity.assignByFold(e, s.read.parquet(tmp.resolve("centroids").toString))
+      Similarity.assignByFold(e, Tables.parquet(s, tmp.resolve("centroids").toString))
         .select(col("vec_id"), col("label"), col("v"), col("assigned_label"))
         .repartition(col("assigned_label"))
         .write.partitionBy("assigned_label")
@@ -51,7 +53,7 @@ object IvfIndex {
       // statistic a production index keeps beside its lists so a
       // FILTERED probe can size its cell set without scanning anything
       // (a build-time column-pruned pass over the lists, tiny on disk).
-      s.read.parquet(tmp.resolve("assigned").toString)
+      Tables.parquet(s, tmp.resolve("assigned").toString)
         .groupBy(col("assigned_label"), col("label"))
         .agg(count(lit(1)).as("n"))
         .coalesce(1).write.parquet(tmp.resolve("cellstats").toString)
@@ -80,12 +82,12 @@ object IvfIndex {
   def ensureIndexed(s: SparkSession, dir: String): (String, String) = {
     val base = Staging.ensure("ivfold",
       s"${Staging.fingerprint(dir, "embeddings.parquet")}-v1") { tmp =>
-      val e = graft.core.Tables.embeddings(s, dir)
+      val e = Tables.embeddings(s, dir)
         .filter(pmod(col("vec_id"), lit(IncrMod)) =!= IncrRem)
         .select(col("vec_id"), col("label"), Similarity.toDoubleVec(col("embedding")).as("v"))
       Similarity.centroidsOf(e)
         .coalesce(1).write.parquet(tmp.resolve("centroids").toString)
-      Similarity.assignByFold(e, s.read.parquet(tmp.resolve("centroids").toString))
+      Similarity.assignByFold(e, Tables.parquet(s, tmp.resolve("centroids").toString))
         .select(col("vec_id"), col("label"), col("v"), col("assigned_label"))
         .repartition(col("assigned_label"))
         .write.partitionBy("assigned_label")

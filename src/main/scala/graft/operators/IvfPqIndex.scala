@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /**
  * Offline IVF-PQ (IVFADC) index — the composition of the two staged
  * ANN halves into the layout every production-scale vector store uses
@@ -41,7 +43,7 @@ object IvfPqIndex {
   /** Residual sub-codebook as ONE broadcastable row holding the K seed
     * residuals in id order. */
   private def rcbRow(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path)
+    Tables.parquet(s, path)
       .agg(sort_array(collect_list(struct(col("vec_id"), col("r")))).as("cbs"))
 
   /** Fold-argmin PQ code of subspace `su` for the bound residual column
@@ -67,9 +69,9 @@ object IvfPqIndex {
         Staging.fingerprint(dir, "embeddings.parquet")) { tmp =>
       // residual = v − its cell's centroid: the tiny centroid table
       // broadcasts into a map-side zip_with over the staged assignment
-      val cents = s.read.parquet(centPath)
+      val cents = Tables.parquet(s, centPath)
         .select(col("clabel").as("assigned_label"), col("cv"))
-      val resid = s.read.parquet(assignedPath)
+      val resid = Tables.parquet(s, assignedPath)
         .join(broadcast(cents), "assigned_label")
         .select(col("vec_id"), col("assigned_label"),
           zip_with(col("v"), col("cv"), (a, b) => a - b).as("r"))
@@ -99,9 +101,9 @@ object IvfPqIndex {
     * rows only. */
   def annIvfPqTopk(s: SparkSession, dir: String): DataFrame = {
     val st = ensure(s, dir)
-    val q = graft.core.Tables.embeddings(s, dir).filter(col("vec_id") === 0)
+    val q = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
       .select(Similarity.toDoubleVec(col("embedding")).as("qv"))
-    val probeCells = s.read.parquet(st.centroids).crossJoin(broadcast(q))
+    val probeCells = Tables.parquet(s, st.centroids).crossJoin(broadcast(q))
       .withColumn("rcos", round(Similarity.cosine(col("cv"), col("qv")), 6))
       .orderBy(col("rcos").desc, col("clabel")).limit(NProbe)
       .select(col("clabel").as("assigned_label"), col("cv"))
@@ -119,14 +121,14 @@ object IvfPqIndex {
     val adc = (0 until Subs)
       .map(su => element_at(col(s"l$su"), (col(s"code$su") + 1).cast("int")))
       .reduce(_ + _)
-    val cand = s.read.parquet(st.codes)
+    val cand = Tables.parquet(s, st.codes)
       .join(broadcast(lut), "assigned_label") // inner join = cell pruning
       .filter(col("vec_id") =!= 0)
       .withColumn("adc", adc)
       .orderBy(col("adc"), col("vec_id"))
       .limit(PqIndex.Shortlist)
       .select("vec_id")
-    val e = graft.core.Tables.embeddings(s, dir)
+    val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), Similarity.toDoubleVec(col("embedding")).as("v"))
     e.join(broadcast(cand), "vec_id")
       .crossJoin(broadcast(q))

@@ -2,6 +2,8 @@ package graft.operators
 
 import org.apache.spark.sql.SparkSession
 
+import graft.core.Tables
+
 /**
  * Staged approximate k-NN graph over the embeddings table — the
  * bootstrap artifact NN-descent / graph-ANN refinement iterates on
@@ -61,6 +63,6 @@ object KcSeedIndex {
 
   /** The staged seed vectors in pick order — a KcK-row bounded read. */
   def seeds(s: SparkSession, dir: String): Seq[Seq[Double]] =
-    s.read.parquet(ensure(s, dir))
+    Tables.parquet(s, ensure(s, dir))
       .orderBy("rnd").collect().map(_.getSeq[Double](2)).toSeq
 }

@@ -648,7 +648,7 @@ object Multimodal {
         col("pos").as("band"), col("col").as("byte"))
 
   def phashPairs(s: SparkSession, dir: String): DataFrame = {
-    val bands = phashBands(s.read.parquet(PhashIndex.ensure(s, dir)))
+    val bands = phashBands(Tables.parquet(s, PhashIndex.ensure(s, dir)))
     val x = bands.select(col("band"), col("byte"),
       col("doc_id").as("doc_id1"), col("phash").as("p1"))
     val y = bands.select(col("band"), col("byte"),
@@ -673,7 +673,7 @@ object Multimodal {
     * bounded — payload bytes never shuffle and never re-hash. */
   def phashPairsCapped(s: SparkSession, dir: String): DataFrame =
     Dedup.cappedHamPairs(
-      s.read.parquet(PhashIndex.ensure(s, dir))
+      Tables.parquet(s, PhashIndex.ensure(s, dir))
         .select(col("doc_id"), col("phash").as("fp")),
       PhashMaxHam)
 
@@ -696,7 +696,7 @@ object Multimodal {
     * row. Output: duplicate chunk groups (hash, copies, blobs, bytes,
     * keeper). */
   def cdcChunks(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(CdcIndex.ensure(s, dir))
+    Tables.parquet(s, CdcIndex.ensure(s, dir))
       .groupBy("chunk_md5")
       .agg(count(lit(1)).as("n_copies"),
         countDistinct("doc_id").as("n_blobs"),
@@ -801,7 +801,7 @@ object Multimodal {
   /** The staged old-side distinct chunk hashes (the probe target of
     * #219/#221). */
   private[graft] def cdcOldHashes(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(CdcIndex.ensure(s, dir))
+    Tables.parquet(s, CdcIndex.ensure(s, dir))
       .filter(!(col("doc_id") % Dedup.IncrMod === Dedup.IncrRem))
       .select("chunk_md5").distinct()
       .withColumn("stored", lit(1L))
@@ -899,7 +899,7 @@ object Multimodal {
 
   def phashIncremental(s: SparkSession, dir: String): DataFrame = {
     val isNew = col("doc_id") % Dedup.IncrMod === Dedup.IncrRem
-    val ph = s.read.parquet(PhashIndex.ensure(s, dir))
+    val ph = Tables.parquet(s, PhashIndex.ensure(s, dir))
     val oldPh = ph.filter(!isNew)
     // the arrival slice's fingerprints are STAGED too: a phash is a
     // pure per-payload function, so the staged store's isNew slice is
@@ -1021,7 +1021,7 @@ object Multimodal {
     * the (stride, ham) rollup is bounded by 3 × 33 cells. All-integer
     * end to end. */
   def phashHist(s: SparkSession, dir: String): DataFrame = {
-    val ph = s.read.parquet(PhashIndex.ensure(s, dir))
+    val ph = Tables.parquet(s, PhashIndex.ensure(s, dir))
       .select(col("doc_id"), col("phash"))
     val roles = ph.select(explode(array(PhashHistStrides.flatMap { d =>
         Seq(struct((col("doc_id") + d).as("k"), lit(d).as("stride"),

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.Tables
+
 /**
  * Offline PRODUCT-QUANTIZATION index (Jégou et al., "Product
  * Quantization for Nearest Neighbor Search", TPAMI 2011 — public),
@@ -54,14 +56,14 @@ object PqIndex {
     * source fingerprint. */
   def ensure(s: SparkSession, dir: String): StagedPaths = {
     val base = Staging.ensure("pq", Staging.fingerprint(dir, "embeddings.parquet")) { tmp =>
-      val e = graft.core.Tables.embeddings(s, dir)
+      val e = Tables.embeddings(s, dir)
         .select(col("vec_id"), Similarity.toDoubleVec(col("embedding")).as("v"))
       e.filter(col("vec_id") < K)
         .coalesce(1).write.parquet(tmp.resolve("codebook").toString)
       // ONE broadcast row holding the 16 seed vectors in id order; each
       // corpus vector encodes all 8 subspaces by a fold-argmin over that
       // array — a pure map-side projection (no join fanout, no window).
-      val cbArr = s.read.parquet(tmp.resolve("codebook").toString)
+      val cbArr = Tables.parquet(s, tmp.resolve("codebook").toString)
         .agg(sort_array(collect_list(struct(col("vec_id"), col("v")))).as("cbs"))
       def distTo(su: Column, k: Column): Column =
         round(subDist(col("v"),
@@ -94,9 +96,9 @@ object PqIndex {
   private[operators] def adcShortlist(s: SparkSession, dir: String,
       c: Int = Shortlist): DataFrame = {
     val st = ensure(s, dir)
-    val q = graft.core.Tables.embeddings(s, dir).filter(col("vec_id") === 0)
+    val q = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
       .select(Similarity.toDoubleVec(col("embedding")).as("qv"))
-    val cbArr = s.read.parquet(st.codebook)
+    val cbArr = Tables.parquet(s, st.codebook)
       .agg(sort_array(collect_list(struct(col("vec_id"), col("v")))).as("cbs"))
     val lutRow = cbArr.crossJoin(broadcast(q))
       .select((0 until Subs).map(su =>
@@ -107,7 +109,7 @@ object PqIndex {
     val adc = (0 until Subs)
       .map(su => element_at(col(s"l$su"), (col(s"code$su") + 1).cast("int")))
       .reduce(_ + _)
-    s.read.parquet(st.codes)
+    Tables.parquet(s, st.codes)
       .filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(lutRow))
       .withColumn("adc", adc)
@@ -125,9 +127,9 @@ object PqIndex {
     * memory/IO trade PQ exists to make. */
   def annPqTopk(s: SparkSession, dir: String): DataFrame = {
     val cand = adcShortlist(s, dir).select("vec_id")
-    val q = graft.core.Tables.embeddings(s, dir).filter(col("vec_id") === 0)
+    val q = Tables.embeddings(s, dir).filter(col("vec_id") === 0)
       .select(Similarity.toDoubleVec(col("embedding")).as("qv"))
-    graft.core.Tables.embeddings(s, dir)
+    Tables.embeddings(s, dir)
       .select(col("vec_id"), Similarity.toDoubleVec(col("embedding")).as("v"))
       .join(broadcast(cand), "vec_id")
       .crossJoin(broadcast(q))

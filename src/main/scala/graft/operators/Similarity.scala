@@ -180,7 +180,7 @@ object Similarity {
   private def ivfProbe(s: SparkSession, dir: String, centPath: String,
       nprobe: Int): (DataFrame, DataFrame) = {
     val q = queryVec(s, dir)
-    val cells = scoredCells(s.read.parquet(centPath), q)
+    val cells = scoredCells(Tables.parquet(s, centPath), q)
       .orderBy(probeOrder: _*).limit(nprobe)
       .select(col("clabel").as("assigned_label"))
     (q, cells)
@@ -189,7 +189,7 @@ object Similarity {
   def annIvfTopk(s: SparkSession, dir: String): DataFrame = {
     val (centPath, assignedPath) = IvfIndex.ensure(s, dir)
     val (q, probeCells) = ivfProbe(s, dir, centPath, nprobe = 2)
-    rankedTopK(s.read.parquet(assignedPath)
+    rankedTopK(Tables.parquet(s, assignedPath)
       .join(broadcast(probeCells), "assigned_label")
       .filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
@@ -220,7 +220,7 @@ object Similarity {
   def annFilteredTopk(s: SparkSession, dir: String): DataFrame = {
     val (centPath, assignedPath) = IvfIndex.ensure(s, dir)
     val (q, probeCells) = ivfProbe(s, dir, centPath, nprobe = 2)
-    rankedTopK(s.read.parquet(assignedPath)
+    rankedTopK(Tables.parquet(s, assignedPath)
       .filter(col("label").isin(FilteredAnnLabels: _*))
       .join(broadcast(probeCells), "assigned_label")
       .filter(col("vec_id") =!= 0)
@@ -253,7 +253,7 @@ object Similarity {
     val (centPath, assignedPath) = IvfIndex.ensure(s, dir)
     val q = queryVec(s, dir)
     // filtered-row count per cell, from the staged stats (tiny frame)
-    val fcnt = s.read.parquet(IvfIndex.statsPath(s, dir))
+    val fcnt = Tables.parquet(s, IvfIndex.statsPath(s, dir))
       .filter(col("label").isin(FilteredAnnLabels: _*))
       .groupBy("assigned_label").agg(sum("n").as("fc"))
     // cells in probe-rank order; prefix whose PRECEDING cells' filtered
@@ -262,14 +262,14 @@ object Similarity {
     val wRank = org.apache.spark.sql.expressions.Window.orderBy(probeOrder: _*)
     val wCum = org.apache.spark.sql.expressions.Window
       .orderBy("rn").rowsBetween(Window.unboundedPreceding, -1)
-    val sel = scoredCells(s.read.parquet(centPath), q)
+    val sel = scoredCells(Tables.parquet(s, centPath), q)
       .withColumn("rn", row_number().over(wRank))
       .withColumnRenamed("clabel", "assigned_label")
       .join(fcnt, Seq("assigned_label"), "left")
       .withColumn("cum_prev", coalesce(sum("fc").over(wCum), lit(0L)))
       .filter(col("rn") <= 2 || col("cum_prev") < FilteredAdaptiveTarget)
       .select("assigned_label")
-    rankedTopK(s.read.parquet(assignedPath)
+    rankedTopK(Tables.parquet(s, assignedPath)
       .filter(col("label").isin(FilteredAnnLabels: _*))
       .join(broadcast(sel), "assigned_label")
       .filter(col("vec_id") =!= 0)
@@ -392,7 +392,7 @@ object Similarity {
     * (task, qid) map-side, so no corpus-wide rank window and no
     * corpus×nqueries shuffle exist anywhere in the coarse pass. */
   private def bqShortlistTop(s: SparkSession, dir: String, k: Int): DataFrame = {
-    val b = s.read.parquet(BqIndex.ensure(s, dir))
+    val b = Tables.parquet(s, BqIndex.ensure(s, dir))
     val q = b.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("bq").as("qbq"))
     b.filter(col("vec_id") >= 10)
@@ -469,17 +469,17 @@ object Similarity {
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), toDoubleVec(col("embedding")).as("qv"))
     val wProbe = Window.partitionBy("qid").orderBy(probeOrder: _*)
-    val probe = scoredCells(s.read.parquet(centPath), q)
+    val probe = scoredCells(Tables.parquet(s, centPath), q)
       .withColumn("rn", row_number().over(wProbe))
       .filter(col("rn") <= 2)
       .select(col("qid"), col("clabel").as("assigned_label"))
     // cell-pruned candidate ids: the lists scan reads (vec_id,
     // assigned_label) only — vectors stay on disk for unprobed cells
-    val candIds = s.read.parquet(assignedPath)
+    val candIds = Tables.parquet(s, assignedPath)
       .join(broadcast(probe), "assigned_label")
       .filter(col("vec_id") >= 10)
       .select(col("qid"), col("vec_id"))
-    val bq = s.read.parquet(BqIndex.ensure(s, dir))
+    val bq = Tables.parquet(s, BqIndex.ensure(s, dir))
     val qbq = bq.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("bq").as("qbq"))
     val shortlist = candIds
@@ -530,12 +530,12 @@ object Similarity {
     * (hop-0 frontier, frontier expansion, visited-node scoring). */
   private def graphProbeParts(s: SparkSession, dir: String):
       (DataFrame, DataFrame => DataFrame, DataFrame => DataFrame) = {
-    val g = s.read.parquet(KnnIndex.ensure(s, dir)).select("src", "dst")
+    val g = Tables.parquet(s, KnnIndex.ensure(s, dir)).select("src", "dst")
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
-    val seeds = s.read.parquet(KcSeedIndex.ensure(s, dir)).select("vec_id")
+    val seeds = Tables.parquet(s, KcSeedIndex.ensure(s, dir)).select("vec_id")
     // hop-0 frontier: the SAME staged seeds for every query (qids ×
     // KcK rows — both sides tiny; the seed side broadcasts)
     val f0 = q.select("qid").crossJoin(broadcast(seeds))
@@ -574,12 +574,12 @@ object Similarity {
     // frontier and vectors are fetched BY KEY — work ∝ beam × degree,
     // and the rounded-cosine scoring expression is the identical
     // Catalyst tree, so every (qid, vec_id) score is bit-equal.
-    val g = s.read.parquet(KnnIndex.ensure(s, dir)).select("src", "dst")
+    val g = Tables.parquet(s, KnnIndex.ensure(s, dir)).select("src", "dst")
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
     val q = e.filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
-    val seeds = s.read.parquet(KcSeedIndex.ensure(s, dir))
+    val seeds = Tables.parquet(s, KcSeedIndex.ensure(s, dir))
       .select("vec_id").collect().map(_.getAs[Number](0).longValue).toSeq
     // the ≤10 query vectors collect ONCE and fold back as array
     // literals (r21): each hop's scoring pass then joins e once (vector
@@ -691,12 +691,12 @@ object Similarity {
     val q = Tables.embeddings(s, dir).filter(col("vec_id") < 10)
       .select(col("vec_id").as("qid"), toDoubleVec(col("embedding")).as("qv"))
     val wProbe = Window.partitionBy("qid").orderBy(probeOrder: _*)
-    val probe = scoredCells(s.read.parquet(centPath), q)
+    val probe = scoredCells(Tables.parquet(s, centPath), q)
       .withColumn("rn", row_number().over(wProbe))
       .filter(col("rn") <= 2)
       .select(col("qid"), col("qv"), col("clabel").as("assigned_label"))
     val w = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-    s.read.parquet(assignedPath)
+    Tables.parquet(s, assignedPath)
       .join(broadcast(probe), "assigned_label")
       .filter(col("vec_id") >= 10)
       .withColumn("cos", cosine(col("v"), col("qv")))
@@ -745,7 +745,7 @@ object Similarity {
     import s.implicits._
     // one broadcast row: the clabel-ascending centroid array (tiny —
     // ncells rows; a serving tier keeps exactly this in memory)
-    val centArr = s.read.parquet(centPath)
+    val centArr = Tables.parquet(s, centPath)
       .agg(sort_array(collect_list(struct(col("clabel"), col("cv")))).as("cents"))
       .withColumn("jk", lit(1))
     // identical scalar tree to the batch probe's scoredCells rcos
@@ -788,7 +788,7 @@ object Similarity {
         explode(array_distinct(array(
           col("top2.b1.clabel"), col("top2.b2.clabel"))))
           .as("assigned_label"))
-    probed.join(s.read.parquet(assignedPath), "assigned_label")
+    probed.join(Tables.parquet(s, assignedPath), "assigned_label")
       .filter(col("vec_id") >= 10)
       .select(col("qid"), col("vec_id"), cosine(col("v"), col("qv")).as("cos"))
       .as[(Long, Long, Double)]
@@ -840,7 +840,7 @@ object Similarity {
   def annIvfIncremental(s: SparkSession, dir: String): DataFrame = {
     val (centPath, assignedPath) = IvfIndex.ensureIndexed(s, dir)
     val (q, probeCells) = ivfProbe(s, dir, centPath, nprobe = 2)
-    val indexed = s.read.parquet(assignedPath)
+    val indexed = Tables.parquet(s, assignedPath)
       .join(broadcast(probeCells), "assigned_label")
       .filter(col("vec_id") =!= 0)
       .crossJoin(broadcast(q))
@@ -872,7 +872,7 @@ object Similarity {
   def annIvfDelete(s: SparkSession, dir: String): DataFrame = {
     val (centPath, assignedPath) = IvfIndex.ensure(s, dir)
     val (q, probeCells) = ivfProbe(s, dir, centPath, nprobe = 2)
-    rankedTopK(s.read.parquet(assignedPath)
+    rankedTopK(Tables.parquet(s, assignedPath)
       .join(broadcast(probeCells), "assigned_label")
       .filter(col("vec_id") =!= 0)
       .filter(pmod(col("vec_id"), lit(TombMod.toLong)) =!= TombRem.toLong)
@@ -910,7 +910,7 @@ object Similarity {
     * (OperatorSpec). */
   def annIvfRebalance(s: SparkSession, dir: String): DataFrame = {
     val (centPath, assignedPath) = IvfIndex.ensureIndexed(s, dir)
-    val cents = s.read.parquet(centPath)
+    val cents = Tables.parquet(s, centPath)
     // arrivals since the stage (the fresh 5% tail), folded into cells
     // against the OLD centroids — the ann_ivf_incremental state
     val arrivals = assignByFold(
@@ -926,7 +926,7 @@ object Similarity {
         array((0 until 64).map(j => col(s"s$j")): _*).as("sa"))
     // per-cell list sizes: a scan that reads NO data columns (the cell
     // is the partition column; row counts come from parquet metadata)
-    val oldCounts = s.read.parquet(assignedPath)
+    val oldCounts = Tables.parquet(s, assignedPath)
       .groupBy(col("assigned_label").as("clabel"))
       .agg(count(lit(1)).as("n_old"))
     // K-row refreshed-centroid frame: ONE collect materializes it (the
@@ -959,7 +959,7 @@ object Similarity {
     val inDrift = col("assigned_label").isin(driftedIds: _*)
     // members of drifted cells ONLY — the lists partition-prune to the
     // drift set; the arrivals filter to it
-    val members = s.read.parquet(assignedPath)
+    val members = Tables.parquet(s, assignedPath)
       .select(col("vec_id"), col("v"), col("assigned_label"))
       .filter(inDrift)
       .unionAll(arrivals
@@ -1028,11 +1028,11 @@ object Similarity {
   def annIvfCommitReport(s: SparkSession, dir: String): DataFrame = {
     val g = IvfGen.ensureCommitted(s, dir)
     val p = g.pointer()
-    val base = s.read.parquet(g.resolve(p.base))
+    val base = Tables.parquet(s, g.resolve(p.base))
       .filter(!col("assigned_label").isin(p.dropped: _*))
       .groupBy(col("assigned_label").as("cell"))
       .agg(count(lit(1)).as("n_base"))
-    val delta = s.read.parquet(g.resolve(p.delta.get))
+    val delta = Tables.parquet(s, g.resolve(p.delta.get))
       .groupBy(col("assigned_label").as("cell"))
       .agg(count(lit(1)).as("n_delta"))
     base.join(delta, Seq("cell"), "full")
@@ -1351,7 +1351,7 @@ object Similarity {
     * zero data bytes) + a 1-row totals broadcast. */
   def ivfBalance(s: SparkSession, dir: String): DataFrame = {
     val (_, assigned) = IvfIndex.ensure(s, dir)
-    val per = s.read.parquet(assigned)
+    val per = Tables.parquet(s, assigned)
       .groupBy(col("assigned_label").cast("long").as("cell"))
       .agg(count(lit(1)).as("n_vecs"))
     val tot = per.agg(sum("n_vecs").as("total"), count(lit(1)).as("ncells"))
@@ -1389,7 +1389,7 @@ object Similarity {
     * (sub, code) count — ≤ 8·K result rows at any corpus size. */
   def pqCodeBalance(s: SparkSession, dir: String): DataFrame = {
     val st = PqIndex.ensure(s, dir)
-    val per = s.read.parquet(st.codes)
+    val per = Tables.parquet(s, st.codes)
       .select(posexplode(array(
         (0 until PqIndex.Subs).map(su => col(s"code$su")): _*)))
       .select(col("pos").cast("long").as("sub"),
@@ -1420,8 +1420,8 @@ object Similarity {
     val st = PqIndex.ensure(s, dir)
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
-    val codes = s.read.parquet(st.codes)
-    val cbArr = s.read.parquet(st.codebook)
+    val codes = Tables.parquet(s, st.codes)
+    val cbArr = Tables.parquet(s, st.codebook)
       .agg(sort_array(collect_list(struct(col("vec_id"), col("v")))).as("cbs"))
     def du(su: Int): Column = PqIndex.subDist(col("v"),
       element_at(col("cbs"), (col(s"code$su") + 1).cast("int")).getField("v"),
@@ -1516,7 +1516,7 @@ object Similarity {
     * query reads the staged edge parquet, the same index/query split
     * as dedup_winnow and the phash store. */
   def knnGraph(s: SparkSession, dir: String): DataFrame =
-    s.read.parquet(KnnIndex.ensure(s, dir))
+    Tables.parquet(s, KnnIndex.ensure(s, dir))
       .select("src", "rnk", "dst", "rcos")
 
   /** Index-build producer for [[KnnIndex]]: the banded bucket self-join
@@ -1547,7 +1547,7 @@ object Similarity {
     val e = Tables.embeddings(s, dir)
       .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
       .withColumn("nrm", l2norm(col("v")))
-    val g = s.read.parquet(KnnIndex.ensure(s, dir)).select("src", "dst")
+    val g = Tables.parquet(s, KnnIndex.ensure(s, dir)).select("src", "dst")
     val u = g.unionAll(g.select(col("dst").as("src"), col("src").as("dst")))
       .distinct()
     val twoHop = u.select(col("src"), col("dst").as("m"))
@@ -1623,12 +1623,12 @@ object Similarity {
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val wq = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(probeOrder: _*)
-    val probe = scoredCells(s.read.parquet(centPath), q)
+    val probe = scoredCells(Tables.parquet(s, centPath), q)
       .withColumn("rn", row_number().over(wq)).filter(col("rn") <= 2)
       .select(col("qid"), col("clabel").as("assigned_label"))
     val wr = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-    val ivf10 = s.read.parquet(assignedPath)
+    val ivf10 = Tables.parquet(s, assignedPath)
       .join(broadcast(probe), "assigned_label")
       .filter(col("vec_id") =!= col("qid"))
       .join(broadcast(q), "qid")
@@ -1672,12 +1672,12 @@ object Similarity {
     val q = e.filter(col("vec_id") < NprobeCurveQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
     val wq = Window.partitionBy("qid").orderBy(probeOrder: _*)
-    val probe = scoredCells(s.read.parquet(centPath), q)
+    val probe = scoredCells(Tables.parquet(s, centPath), q)
       .withColumn("pr", row_number().over(wq))
       .filter(col("pr") <= NprobeCurveMax)
       .select(col("qid"), col("clabel").as("assigned_label"), col("pr"))
     val wr = Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))
-    val cand = s.read.parquet(assignedPath)
+    val cand = Tables.parquet(s, assignedPath)
       .join(broadcast(probe), "assigned_label")
       .filter(col("vec_id") =!= col("qid"))
       .join(broadcast(q), "qid")
@@ -1730,7 +1730,7 @@ object Similarity {
     * in one fixed mirrored chain. Bottom-20 via TakeOrderedAndProject
     * ((mean asc, src) total order). */
   def knnOutliers(s: SparkSession, dir: String): DataFrame = {
-    s.read.parquet(KnnIndex.ensure(s, dir))
+    Tables.parquet(s, KnnIndex.ensure(s, dir))
       .select(col("src"), floor(col("rcos") * 1000000).cast("long").as("li"))
       .groupBy("src")
       .agg(count(lit(1)).as("n_edges"), sum("li").as("sl"))
@@ -1763,7 +1763,7 @@ object Similarity {
       .select(col("vec_id"), toDoubleVec(col("embedding")).as("v"))
     val q = e.filter(col("vec_id") < PqRecallQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"))
-    val cbArr = s.read.parquet(st.codebook)
+    val cbArr = Tables.parquet(s, st.codebook)
       .agg(sort_array(collect_list(struct(col("vec_id"), col("v")))).as("cbs"))
     val lut = q.crossJoin(broadcast(cbArr))
       .select(col("qid") +: (0 until PqIndex.Subs).map(su =>
@@ -1776,7 +1776,7 @@ object Similarity {
       .reduce(_ + _)
     val wq = org.apache.spark.sql.expressions.Window
       .partitionBy("qid").orderBy(col("adc"), col("vec_id"))
-    val short = s.read.parquet(st.codes)
+    val short = Tables.parquet(s, st.codes)
       .crossJoin(broadcast(lut))
       .filter(col("vec_id") =!= col("qid"))
       .withColumn("adc", adcExpr)
@@ -1815,7 +1815,7 @@ object Similarity {
     * (src, label) count, one combinable argmax, one accuracy rollup —
     * the corpus appears only as the (vec_id, label) projection. */
   def knnAccuracy(s: SparkSession, dir: String): DataFrame = {
-    val g = s.read.parquet(KnnIndex.ensure(s, dir)).select("src", "dst")
+    val g = Tables.parquet(s, KnnIndex.ensure(s, dir)).select("src", "dst")
     val lbl = Tables.embeddings(s, dir).select(col("vec_id"), col("label"))
     val votes = g
       .join(lbl.select(col("vec_id").as("dst"), col("label").as("nlabel")), "dst")
@@ -2129,7 +2129,7 @@ object Similarity {
     * textbook Pregel shape; the corpus is touched only for the node
     * list. */
   def pagerankKnn(s: SparkSession, dir: String): DataFrame = {
-    val edges = s.read.parquet(KnnIndex.ensure(s, dir)).select("src", "dst")
+    val edges = Tables.parquet(s, KnnIndex.ensure(s, dir)).select("src", "dst")
     val nodes = Tables.embeddings(s, dir).select(col("vec_id"))
     val outdeg = edges.groupBy(col("src").as("vec_id")).agg(count(lit(1)).as("odeg"))
     val nF = nodes.agg(count(lit(1)).as("nn"))
@@ -2303,7 +2303,7 @@ object Similarity {
     * mirrors the majority rule. */
   def ivfPurity(s: SparkSession, dir: String): DataFrame = {
     val (_, assignedPath) = IvfIndex.ensure(s, dir)
-    val pc = s.read.parquet(assignedPath)
+    val pc = Tables.parquet(s, assignedPath)
       .select(col("assigned_label").cast("long").as("cell"),
         col("label").cast("long").as("lbl"))
       .groupBy("cell", "lbl").agg(count(lit(1)).as("cnt"))

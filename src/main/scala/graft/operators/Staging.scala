@@ -91,6 +91,9 @@ object Staging {
     }.sum
   }
 
+  /** Every staged dir this process has ensured, in first-ensure order. */
+  private[graft] def stagedDirs: Seq[Path] = synchronized(touched.toSeq)
+
   private[graft] def deleteRecursively(p: Path): Unit = {
     if (Files.exists(p)) {
       val s = Files.walk(p)

@@ -408,15 +408,15 @@ object TextOps {
   def decontaminateFuzzy(s: SparkSession, dir: String): DataFrame = {
     val st = DedupIndex.ensure(s, dir)
     val isEval = col("doc_id") % EvalMod === 0
-    val evalBands = s.read.parquet(st.bands).filter(isEval)
+    val evalBands = Tables.parquet(s, st.bands).filter(isEval)
       .select(col("doc_id").as("eval_doc_id"), col("band"), col("bkey"))
-    val cand = s.read.parquet(st.bands).filter(!isEval)
+    val cand = Tables.parquet(s, st.bands).filter(!isEval)
       .select(col("doc_id"), col("band"), col("bkey"))
       .join(broadcast(evalBands), Seq("band", "bkey"))
       .select("doc_id", "eval_doc_id").distinct()
     Dedup.verifyJaccardScoredAt(cand,
-      s.read.parquet(st.hset).filter(!isEval),
-      s.read.parquet(st.hset).filter(isEval),
+      Tables.parquet(s, st.hset).filter(!isEval),
+      Tables.parquet(s, st.hset).filter(isEval),
       "doc_id", "eval_doc_id", FuzzyNum, FuzzyDen)
   }
 
@@ -722,7 +722,7 @@ object TextOps {
     // The per-doc profile is STAGED (TextIndex bgc/ — tokenization and
     // the corpus-sized (doc, bg) aggregate are index build); the query
     // derives the tiny add-1 model and scores, both over the profile.
-    val bgc = s.read.parquet(TextIndex.ensure(s, dir).bgc)
+    val bgc = Tables.parquet(s, TextIndex.ensure(s, dir).bgc)
     val m = bgc.groupBy("bg").agg(sum("c").as("cab"))
     val fc = m.groupBy(substring(col("bg"), 1, 1).as("a")).agg(sum("cab").as("ca"))
     val vz = m.agg(countDistinct(substring(col("bg"), 2, 1)).as("vsz"))
@@ -817,7 +817,7 @@ object TextOps {
     // the corpus-sized (doc, h) aggregate are index build; occurrence
     // sums recover exactly as Σ c (and Σ c·rfix for the score), so
     // every derived integer matches the from-scratch oracle.
-    val bgf = s.read.parquet(TextIndex.ensure(s, dir).dsir)
+    val bgf = Tables.parquet(s, TextIndex.ensure(s, dir).dsir)
     val counts = bgf.groupBy("h").agg(
       sum(when(isEval, col("c")).otherwise(0L)).as("t_h"),
       sum(when(isEval, 0L).otherwise(col("c"))).as("r_h"))
@@ -860,7 +860,7 @@ object TextOps {
     * doc_id-keyed count back. All-integer counts; the fraction is one
     * mirrored division. */
   def dupNgramFrac(s: SparkSession, dir: String): DataFrame = {
-    val sets = s.read.parquet(Dedup.tokensIndexRset(s, dir))
+    val sets = Tables.parquet(s, Dedup.tokensIndexRset(s, dir))
       .select(col("doc_id"), col("n"), explode(col("set")).as("h"))
     val df = sets.groupBy("h").agg(count(lit(1)).as("df"))
     sets.join(df, "h")

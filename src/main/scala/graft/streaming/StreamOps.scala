@@ -173,8 +173,8 @@ object StreamOps {
       graft.operators.Dedup.IncrRem
     graft.operators.Dedup.incrementalPairsOf(
       s.readStream.schema(schema).format("parquet").load(docsDir),
-      s.read.parquet(st.bands).filter(!isNew),
-      s.read.parquet(st.hset).filter(!isNew))
+      Tables.parquet(s, st.bands).filter(!isNew),
+      Tables.parquet(s, st.hset).filter(!isNew))
   }
 
   /** Per-window top-k size for #211. */

@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Staging
 
 /** Source scans that keep the measurement surface to one way of doing
-  * each thing: one session builder, one staged-artifact registry, and
-  * one probe CLI that rejects what it does not know. */
+  * each thing: one session builder, one parquet reader, one
+  * staged-artifact registry, and one probe CLI that rejects what it does
+  * not know. */
 class ProbeSpec extends AnyFunSuite {
 
   private val sources: Map[Path, String] = {
@@ -28,6 +29,18 @@ class ProbeSpec extends AnyFunSuite {
     }
     assert(sites == Seq("SessionTuning.scala"),
       s"every session must come from SessionTuning.measured(); builder sites: $sites")
+  }
+
+  test("a batch read in src/main passes a schema: Tables.parquet's footer schema or EntryIO's") {
+    def sites(re: String) = sources.toSeq.flatMap { case (p, src) =>
+      re.r.findAllIn(src).map(_ => p.getFileName.toString)
+    }
+    val inferring = sites("""\.read\s*\.\s*(parquet|format|load)\s*\(""")
+    assert(inferring.isEmpty, "a read without a schema runs a schema-inference job; " +
+      s"read through Tables.parquet instead: $inferring")
+    val fixed = sites("""\.read\s*\.\s*schema\s*\(""").distinct.sorted
+    assert(fixed == Seq("EntryIO.scala", "Tables.scala"),
+      s"schema-passing batch reads outside Tables.parquet and EntryIO: $fixed")
   }
 
   test("every Staging.ensure prefix literal matches exactly one registry entry, and back") {

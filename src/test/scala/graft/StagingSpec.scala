@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
+import graft.core.Tables
 import graft.operators.Staging
 
 /** The staged-artifact machinery five registered queries probe
@@ -12,7 +13,7 @@ import graft.operators.Staging
   * key, readiness marker, and source-fingerprint staleness. Keys are
   * namespaced per test so nothing here can race the operator suites'
   * real staged artifacts. */
-class StagingSpec extends AnyFunSuite {
+class StagingSpec extends SparkTestBase {
 
   test("ensure builds at most once per key and returns the same base") {
     var builds = 0
@@ -112,5 +113,19 @@ class StagingSpec extends AnyFunSuite {
       val never = Staging.Artifact("Never", prefix + "-x", "t", (_, _) => ())
       intercept[IllegalStateException](Staging.restage(never, null, a))
     } finally Seq(baseA, baseB).foreach(Staging.deleteRecursively)
+  }
+
+  test("every staged artifact's parquet dirs read with the schema Spark infers") {
+    Staging.stageAll(spark, Sf, "spec")
+    // each Spark write leaves _SUCCESS at its output root
+    val roots = Staging.stagedDirs.filter(Files.isDirectory(_)).flatMap { base =>
+      val walk = Files.walk(base)
+      try walk.iterator().asScala.filter(_.getFileName.toString == "_SUCCESS")
+        .map(_.getParent.toString).toSeq
+      finally walk.close()
+    }.distinct
+    assert(roots.size >= Staging.artifacts.size, s"too few staged parquet dirs: $roots")
+    for (p <- roots)
+      assert(Tables.parquet(spark, p).schema == spark.read.parquet(p).schema, p)
   }
 }
